@@ -14,11 +14,11 @@ import graft.text.TextFunctions
   *    group key (the hash), map-side partial aggregation; no driver state.
   *  - MinHash-LSH near-dup: shingle hashes and signatures are computed
   *    scan-side by single-pass native codegen expressions (no UDF);
-  *    banding turns the quadratic pair search into an equi-join on
-  *    (band, bandHash) — the classic LSH trick — so Spark shuffles only
-  *    band buckets, never the cross product. Exact Jaccard confirms
-  *    candidates, bounding false positives; band/row parameters trade
-  *    recall vs shuffle volume.
+  *    banding groups documents by (band, bandHash) — the classic LSH
+  *    trick — so Spark shuffles only band buckets, never the cross
+  *    product, and each bucket is confirmed in place by exact Jaccard
+  *    (graft.similarity.PairConfirm), bounding false positives;
+  *    band/row parameters trade recall vs shuffle volume.
   *  - SimHash near-dup: 64-bit fingerprints (native codegen expression),
   *    candidate generation by banding the fingerprint into 4×16-bit
   *    chunks (Hamming-distance ≤3 pairs share ≥1 chunk by pigeonhole).
@@ -108,25 +108,24 @@ object Dedup {
           filter, org.apache.spark.sql.types.BinaryType),
         GraftBridge.expression(xxhash64(value))))
 
-  /** Docs with their distinct shingle-hash set and MinHash signature,
-    * computed exactly once and persisted — every downstream reference
-    * (banding, both sides of the candidate self-join, the Jaccard confirm)
-    * reuses these arrays instead of re-deriving them from text. Without
-    * this the signature tree is re-evaluated per reference and the confirm
-    * re-shingles per candidate pair — the difference between seconds and
-    * minutes at sf0.1, and between feasible and not at 100 TB. Documents
-    * with no shingles (< k tokens) are dropped: they have no Jaccard
-    * similarity to anything and would otherwise all collide on the
-    * sentinel signature. Every public entry point RELEASES this cache
-    * before returning ([[materializeThenRelease]]) — the persist's
-    * lifetime is the call, never the session. */
+  /** Docs with their distinct word-shingle-hash set and MinHash
+    * signature, computed exactly once and persisted, for the callers with
+    * several consumers of them (banding, both sides of a candidate join,
+    * the Jaccard confirm) — without the cache the signature tree is
+    * re-evaluated per reference and the confirm re-shingles per
+    * candidate pair. Every public entry point RELEASES this cache before
+    * returning ([[materializeThenRelease]]) — the persist's lifetime is
+    * the call, never the session. */
   private def shingledDocs(df: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int): DataFrame =
-    hashedDocs(df, idCol, textCol, shingleHashes(_, k), numHashes)
+    hashedDocs(df, idCol, textCol, shingleHashes(_, k), numHashes).persist()
 
-  /** Same as [[shingledDocs]] for any gram hasher (word shingles, char
-    * n-grams, …) producing a sorted distinct `array<bigint>`. */
-  private[graft] def hashedDocs(df: DataFrame, idCol: String, textCol: String,
+  /** Docs `(_id, _sh, _sig)` with their sorted distinct gram-hash set
+    * (word shingles, char n-grams, …) and MinHash signature — LAZY, each
+    * kernel evaluated once per document. Documents with no grams (fewer
+    * than k tokens) are dropped: they have no Jaccard similarity to
+    * anything and would otherwise all collide on the sentinel signature. */
+  private def hashedDocs(df: DataFrame, idCol: String, textCol: String,
       gramHashes: Column => Column, numHashes: Int): DataFrame =
     // filterOnce: a plain .filter(size(_sh) > 0) is pushed through the
     // projection, substituting the gram-hash kernel into the predicate —
@@ -137,7 +136,6 @@ object Dedup {
           .select(col(idCol).as("_id"), gramHashes(col(textCol)).as("_sh")),
         size(col("_sh")) > 0)
       .withColumn("_sig", minhashSigOfHashes(col("_sh"), numHashes))
-      .persist()
       // NOTE(measured): a one-permutation (OPH) signature was tried here —
       // 128x fewer hash evals — but made the char-ngram path ~25% SLOWER
       // end to end: with ~8 grams per bin the slot estimator's variance
@@ -145,13 +143,16 @@ object Dedup {
       // collide far more often in 8-row bands, and the extra exact
       // confirms outweigh the cheaper signatures.
 
-  private def bandBuckets(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  /** The `bands` bucket hashes of a doc's `_sig`, one per band. */
+  private def bandHashes(numHashes: Int, bands: Int): Column = {
     val rows = numHashes / bands
-    docs.select(col("_id"), posexplode(
-      array((0 until bands).map(b =>
-        hash(slice(col("_sig"), b * rows + 1, rows), lit(b))): _*)))
-      .toDF("_id", "_band", "_bucket")
+    array((0 until bands).map(b =>
+      hash(slice(col("_sig"), b * rows + 1, rows), lit(b))): _*)
   }
+
+  private def bandBuckets(docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    docs.select(col("_id"), posexplode(bandHashes(numHashes, bands)))
+      .toDF("_id", "_band", "_bucket")
 
   /** LSH candidate pairs (idA < idB) from banding the MinHash signature:
     * docs sharing any band bucket become candidates. */
@@ -175,12 +176,15 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
   }
 
-  /** Near-duplicate pairs: LSH candidates, then exact-Jaccard confirm at
-    * `threshold` over the precomputed shingle sets.
-    * Output: (id_a, id_b, jaccard). */
+  /** Near-duplicate pairs over word-`k`-shingle Jaccard: MinHash-LSH
+    * banding, then an exact-Jaccard confirm at `threshold` inside each
+    * band bucket ([[nearDupOfHashedDocs]]). `idCol` must be integral (int
+    * or long). Output: (id_a, id_b, jaccard), id_a < id_b, ids in the
+    * input's type. */
   def nearDupMinhash(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, k: Int = 3, numHashes: Int = 32, bands: Int = 16): DataFrame =
-    nearDupOfHashedDocs(shingledDocs(df, idCol, textCol, k, numHashes),
+    nearDupOfHashedDocs(df, idCol,
+      hashedDocs(df, idCol, textCol, shingleHashes(_, k), numHashes),
       threshold, numHashes, bands)
 
   /** Character-n-gram Jaccard near-dup — same MinHash-LSH shape as
@@ -188,15 +192,16 @@ object Dedup {
     * word shingles are too coarse. Output: (id_a, id_b, jaccard). */
   def nearDupCharNgram(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, numHashes: Int = 128, bands: Int = 16): DataFrame =
-    nearDupOfHashedDocs(
+    nearDupOfHashedDocs(df, idCol,
       hashedDocs(df, idCol, textCol, charNgramHashes(_, n), numHashes),
       threshold, numHashes, bands)
 
   /** Exact Jaccard of two SORTED-DISTINCT gram-hash arrays — the Scala
     * twin of the `sortedIntersectCount` expression followed by
     * `inter / (|a| + |b| - inter)`: same merge walk, same int→double
-    * division, so both confirm regimes produce bit-identical jaccards. */
-  private[graft] val jaccardSortedHashes: (Array[Long], Array[Long]) => Double =
+    * division, so the bucket confirm's jaccards are bit-identical to the
+    * SQL formulation (and to the DuckDB oracle's). */
+  private val jaccardSortedHashes: (Array[Long], Array[Long]) => Double =
     (a, b) => {
       var i = 0; var j = 0; var c = 0
       while (i < a.length && j < b.length) {
@@ -208,77 +213,22 @@ object Dedup {
       c.toDouble / (a.length + b.length - c)
     }
 
-  /** Banded-row cutover to the bucket-local confirm (below). n·bands fat
-    * rows carry each doc's gram-hash set exactly ONCE per band — past
-    * this volume the join-attach confirm's pair-replicated shuffle and
-    * sort-spill dwarf that cost (r15 sf10 profile: 10 GB shuffle +
-    * 103 GB spill for q_dedup_ngram where the fat frame is ~2 GB).
-    * Below it the extra fat shuffle is pure overhead (sf0.1 A/B). */
-  private val BucketLocalBandedRows: Long = 2000000L
-
-  /** LSH banding → candidate pairs → exact-Jaccard confirm over the
-    * precomputed gram-hash sets. Two confirm regimes, pair-identical:
-    * small corpora attach the gram-hash sets to the distinct candidate
-    * pairs by join; past [[BucketLocalBandedRows]] (integral-id corpora
-    * only) the confirm goes BUCKET-LOCAL — the same §8 shape as
-    * [[nearDupEmbeddingLsh]]'s: each doc's hash set travels once per
-    * band (n·bands rows, ONE shuffle) instead of once per candidate
-    * pair, and each (band, bucket) group is scored pairwise through
-    * byte-budgeted tiles (TiledConfirm — heap stays one tile + one
-    * streamed set no matter how skewed a bucket is). A true pair
-    * re-found in k buckets emits k identical (id_a, id_b, jaccard)
-    * triples; the closing distinct collapses them — exactly the rows
-    * the join-attach confirm produces. */
-  private[graft] def nearDupOfHashedDocs(docs: DataFrame, threshold: Double,
-      numHashes: Int, bands: Int,
-      bucketLocalCutover: Long = BucketLocalBandedRows): DataFrame = {
-    // LongType only: the bucket-local path round-trips ids through a
-    // Dataset encoder as Long — a narrower integral type would WIDEN the
-    // output schema relative to the join-attach regime, and a string id
-    // cannot take this path at all (both keep the join-attach confirm)
-    val integralId =
-      docs.schema("_id").dataType == org.apache.spark.sql.types.LongType
-    // hashedDocs persisted `docs`; the count both materializes the cache
-    // (AQE cache-stampede guard) and sizes the regime choice exactly.
-    val n = docs.count()
-    if (integralId && n * bands > bucketLocalCutover) {
-      System.err.println(s"[neardup-minhash] n=$n x $bands bands exceeds " +
-        s"the join-attach cutover — bucket-local tiled confirm engaged")
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val rows = numHashes / bands
-      val fat = docs.select(col("_id"), col("_sh"), posexplode(
-          array((0 until bands).map(b =>
-            hash(slice(col("_sig"), b * rows + 1, rows), lit(b))): _*))
-          .as(Seq("_band", "_bucket")))
-        .select(col("_band").cast("long").as("_1"),
-          col("_bucket").cast("long").as("_2"),
-          col("_id").cast("long").as("_3"), col("_sh").as("_4"))
-        .as[(Long, Long, Long, Array[Long])]
-      import graft.similarity.TiledConfirm
-      val confirmed = fat.groupByKey(t => (t._1, t._2))
-        .flatMapSortedGroups(col("_3")) { (_, it) =>
-          TiledConfirm.pairs(it.map(t => (t._3, t._4)),
-            jaccardSortedHashes, threshold, TiledConfirm.LongIO)
-        }.toDF("id_a", "id_b", "jaccard").distinct()
-      return materializeThenRelease(confirmed, docs)
-    }
-    val banded = bandBuckets(docs, numHashes, bands)
-    val a = banded.toDF("id_a", "band_a", "bucket_a")
-    val b = banded.toDF("id_b", "band_b", "bucket_b")
-    val cands = a.join(b,
-        a("band_a") === b("band_b") && a("bucket_a") === b("bucket_b") &&
-        a("id_a") < b("id_b"))
-      .select("id_a", "id_b").distinct()
-    val confirmed = cands
-      .join(docs.select(col("_id").as("id_a"), col("_sh").as("_sh_a")), "id_a")
-      .join(docs.select(col("_id").as("id_b"), col("_sh").as("_sh_b")), "id_b")
-      .withColumn("_inter", sortedIntersectCount(col("_sh_a"), col("_sh_b")))
-      .withColumn("jaccard", col("_inter").cast("double") /
-        (size(col("_sh_a")) + size(col("_sh_b")) - col("_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    materializeThenRelease(confirmed, docs)
+  /** LSH banding → exact-Jaccard confirm over the gram-hash sets of
+    * `docs` ([[hashedDocs]]), through the one group-local confirm
+    * ([[graft.similarity.PairConfirm.bandPairs]]): each doc's hash set
+    * travels once per band (n·bands rows, ONE shuffle) instead of once
+    * per candidate pair, and each (band, bucket) group is scored pairwise
+    * in byte-budgeted tiles — heap stays one tile + one streamed set no
+    * matter how skewed a bucket is. A true pair re-found in k buckets
+    * collapses in the closing distinct. `idCol` is the caller's id column
+    * of `df`, checked up front (it must be integral). */
+  private def nearDupOfHashedDocs(df: DataFrame, idCol: String, docs: DataFrame,
+      threshold: Double, numHashes: Int, bands: Int): DataFrame = {
+    graft.similarity.PairConfirm.requireIntegralId(df, idCol)
+    val pairs = graft.similarity.PairConfirm.bandPairs[Array[Long]](docs, "_id", col("_sh"),
+      bandHashes(numHashes, bands), jaccardSortedHashes, threshold,
+      graft.similarity.TiledConfirm.LongIO, "jaccard")
+    materializeThenRelease(pairs)
   }
 
   /** Incremental near-dup: match a DELTA batch against an existing corpus
@@ -541,148 +491,40 @@ object Dedup {
 
   /** Embedding-cosine near-dup, approximate at scale: `tables` independent
     * random-hyperplane signatures of `bits` bits each (AND within a table,
-    * OR across tables — the cosine analogue of MinHash banding); pairs
-    * sharing any table's bucket are candidates, confirmed by exact cosine.
+    * OR across tables — the cosine analogue of MinHash banding); rows
+    * sharing any table's bucket are scored by exact cosine inside that
+    * bucket ([[graft.similarity.PairConfirm.bandPairs]] — each vector is
+    * shuffled once per table, the candidate pair stream is never
+    * materialized, and a skewed bucket of m rows costs O(m²) local
+    * cosines in one tile of heap). Null elements score as 0.
     * Recall at similarity s: 1-(1-p^bits)^tables with p = 1-acos(s)/π.
     * `bits`/`tables` ≤ 0 ⇒ auto-size via [[lshParams]] from the corpus
-    * count (the default — fixed parameters are a measured scale cliff). */
+    * count (the default — fixed parameters are a measured scale cliff).
+    * `idCol` must be integral (int or long). Output: (id_a, id_b, cos),
+    * id_a < id_b, ids in the input's type. */
   def nearDupEmbeddingLsh(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, dim: Int, bits: Int = 0, tables: Int = 0,
-      confirmBroadcastMax: Long = 1500000L): DataFrame = {
-    val vecs = withMinParallelism(
-        df.select(col(idCol).as("_id"), col(vecCol).cast("array<float>").as("_v")))
-      .persist()
-    // eager materialization: sizes the banding below AND prevents the
-    // AQE cache-stampede (concurrent consumers of an unmaterialized
-    // persist each recompute it — the q_assoc_rules round-9 finding)
-    val n = vecs.count()
-    val (autoBits, autoTables) = lshParams(n, threshold)
-    val useBits = if (bits > 0) bits else autoBits
-    val useTables = if (tables > 0) tables else autoTables
-    // PAST the broadcast cutoff (n > 1.5M — the regime VERDICT r11 #3 is
-    // about) the confirm goes BUCKET-LOCAL and the candidate pair stream
-    // is never materialized: signatures are exploded WITH the vector
-    // attached (n·tables fat rows — corpus×tables bytes, ONE shuffle),
-    // each (table, sig) bucket is scored pairwise inside its group, and
-    // only survivors (true pairs, re-found once per colliding table)
-    // reach the closing distinct. The r12 fallback (distinct the
-    // candidates, then two shuffle joins attaching a vector to every
-    // pair) shuffled dim·4B per pair per side — at 2M vectors even a
-    // t=0.95 run carries ~6e8 random candidates ≈ 150+ GB of join
-    // shuffle for a 0.5 GB corpus; bucket-locality caps the confirm at
-    // n·tables·dim·4B regardless of collision count. Memory license
-    // (TILED since r14): one TILE buffered per task (TiledConfirm.
-    // DefaultTileBytes, 32 MB) + one streamed vector, independent of
-    // bucket size — the sizing rule targets ~16 random vectors per
-    // bucket, and a skewed bucket of m rows (one giant dup cluster)
-    // costs O(m²) local cosines plus O(m²/tile) bytes re-streamed from
-    // a task-local spill file, the operator's published complexity paid
-    // in compute + local I/O instead of heap.
-    if (n > confirmBroadcastMax) {
-      System.err.println(s"[neardup-lsh] n=$n exceeds the confirm broadcast " +
-        s"cutoff — bucket-local confirm engaged (bits=$useBits, tables=$useTables)")
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val fat = vecs.select(col("_id"), col("_v"), posexplode(
-          graft.similarity.Ann.lshSignatures(col("_v"), dim, useBits, useTables,
-            seed = 1000L)).as(Seq("_table", "_sig")))
-        .select(col("_table").cast("long").as("_1"), col("_sig").as("_2"),
-          col("_id").cast("long").as("_3"),
-          transform(col("_v"), x => coalesce(x, lit(0f))).as("_4"))
-        .as[(Long, Long, Long, Array[Float])]
-      // TILED confirm (VERDICT r13 #2): members stream id-sorted from
-      // Spark's external sort through byte-budgeted tiles (heap = one
-      // tile + one streamed vector; earlier tiles re-stream from a
-      // task-local spill file), and the matching pairs are emitted
-      // LAZILY — a mega bucket's O(m²) true pairs flow straight to the
-      // distinct without buffering. Pair set identical to the buffered
-      // formulation (every ordered pair visited exactly once).
-      import graft.similarity.TiledConfirm
-      val survivors = fat.groupByKey(t => (t._1, t._2))
-        .flatMapSortedGroups(col("_3")) { (_, it) =>
-          TiledConfirm.pairs(it.map(t => (t._3, t._4)),
-            graft.similarity.KMeans.cosArrF, threshold, TiledConfirm.FloatIO)
-        }.toDF("id_a", "id_b", "cos").distinct()
-      materializeThenRelease(survivors, vecs)
-    } else
-    nearDupEmbeddingLshSmall(vecs, n, threshold, dim, useBits, useTables)
-  }
-
-  /** The n ≤ 1.5M confirm shapes of [[nearDupEmbeddingLsh]] (banded
-    * self-join; broadcast map-side confirm past 32M banded rows, shuffle
-    * joins below it). */
-  private def nearDupEmbeddingLshSmall(vecs: DataFrame, n: Long,
-      threshold: Double, dim: Int, useBits: Int, useTables: Int): DataFrame = {
-    // Above the same cutoff that switches the join strategy, persist +
-    // eagerly count the banded frame: the hyperplane signatures
-    // (hundreds of dot products per vector) feed BOTH self-join sides,
-    // and without a materialized cache each exchange recomputes them
-    // (profiled at sf1: two ~1-1.7 s signature stages for identical
-    // work; A/B'd 8.0 → 7.2 s). Below the cutoff the persist+count
-    // round-trip costs MORE than the duplicate compute (A/B at sf0.1:
-    // 1.47 → 1.72 s regression when unconditional), so small corpora
-    // keep the plain double evaluation. The eager count is the AQE
-    // cache-stampede guard (q_assoc_rules round-9 finding).
-    val bandedBig = n * useTables > 1000000L
-    val banded0 = vecs.select(col("_id"), posexplode(
-        graft.similarity.Ann.lshSignatures(col("_v"), dim, useBits, useTables,
-          seed = 1000L)))
-      .toDF("_id", "_table", "_sig")
-    val banded = if (bandedBig) { val p = banded0.persist(); p.count(); p }
-                 else banded0
-    val a = banded.toDF("id_a", "table_a", "sig_a")
-    val b = banded.toDF("id_b", "table_b", "sig_b")
-    // shuffle_hash hint above ~1M banded rows: the banded frame is
-    // corpus×tables-sized, but Catalyst's size estimate propagates the
-    // (tiny) vector-cache leaf through the posexplode by width ratio and
-    // UNDERSTATES it — AQE then broadcast-joined the self-join and the
-    // driver spent 7 s of the 17 s wall building an 8M-row hash relation
-    // single-threaded at the 20 k-vector scale point (PLAN_r10.md's
-    // timeline profile). A banded corpus is never broadcastable at scale;
-    // below the cutoff the broadcast genuinely wins (A/B at 2 k vectors:
-    // forcing shuffle-hash cost ~0.25 s), so the plan switches on the
-    // KNOWN row count rather than trusting the derived estimate.
-    // ...and past ~32M banded rows, prefer SORT-MERGE: shuffle-hash
-    // builds per-partition hash maps that cannot spill, and at the
-    // 200k-vector gate (298M banded rows over 32 local tasks) the build
-    // OOM'd outright; merge join spills gracefully and the sort key
-    // (table, sig) is exactly the join key. On a real cluster the same
-    // reasoning holds per-executor.
-    val bandedRows = n * useTables
-    val bProbe = if (bandedRows > 32000000L) b.hint("merge")
-                 else if (bandedBig) b.hint("shuffle_hash") else b
-    val joined = a.join(bProbe, col("table_a") === col("table_b") &&
-        col("sig_a") === col("sig_b") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // Low thresholds make the raw collision stream the dominant cost:
-    // at 200k vectors / t=0.45 it is ~1.3e9 rows (the n^(1+ρ) curve),
-    // and `distinct` + two vector-lookup joins SHUFFLE all of it —
-    // measured >70 GB of spill, a single-box death. But the vector
-    // table itself is tiny (n·dim·4B ≈ 51 MB at 200k×64), so past the
-    // merge-join cutoff the exact-cosine confirm runs MAP-SIDE against
-    // broadcast vectors on the raw stream — duplicate collisions cost a
-    // recomputed cosine (~1.1× average), and only the true-pair-sized
-    // survivor set is ever shuffled (one small distinct). Above ~1.5M
-    // vectors the broadcast no longer fits — that regime never reaches
-    // this function (the bucket-local confirm in [[nearDupEmbeddingLsh]]
-    // handles it without materializing the pair stream at all).
-    val confirmed0 =
-      if (bandedRows > 32000000L) {
-        joined
-          .join(broadcast(vecs.select(col("_id").as("id_a"), col("_v").as("_va"))), "id_a")
-          .join(broadcast(vecs.select(col("_id").as("id_b"), col("_v").as("_vb"))), "id_b")
-          .withColumn("cos", graft.similarity.Ann.cosine(col("_va"), col("_vb")))
-          .filter(col("cos") >= threshold)
-          .select("id_a", "id_b", "cos").distinct()
-      } else {
-        joined.distinct()
-          .join(vecs.select(col("_id").as("id_a"), col("_v").as("_va")), "id_a")
-          .join(vecs.select(col("_id").as("id_b"), col("_v").as("_vb")), "id_b")
-          .withColumn("cos", graft.similarity.Ann.cosine(col("_va"), col("_vb")))
-          .filter(col("cos") >= threshold)
-          .select("id_a", "id_b", "cos")
+      threshold: Double, dim: Int, bits: Int = 0, tables: Int = 0): DataFrame = {
+    graft.similarity.PairConfirm.requireIntegralId(df, idCol)
+    // hyperplane signatures read null elements as 0 too, so one
+    // coalesced vector feeds both the signatures and the confirm
+    val vecs0 = withMinParallelism(df.select(col(idCol).as("_id"),
+      transform(col(vecCol).cast("array<float>"), x => coalesce(x, lit(0f))).as("_v")))
+    val sized = bits <= 0 || tables <= 0
+    // persisted only when lshParams needs the count: the count and the
+    // confirm then share one scan
+    val vecs = if (sized) vecs0.persist() else vecs0
+    val (useBits, useTables) =
+      if (!sized) (bits, tables)
+      else {
+        val (autoBits, autoTables) = lshParams(vecs.count(), threshold)
+        (if (bits > 0) bits else autoBits, if (tables > 0) tables else autoTables)
       }
-    materializeThenRelease(confirmed0, vecs, banded)
+    val pairs = graft.similarity.PairConfirm.bandPairs[Array[Float]](vecs, "_id", col("_v"),
+      graft.similarity.Ann.lshSignatures(col("_v"), dim, useBits, useTables,
+        seed = 1000L),
+      graft.similarity.KMeans.cosArrF, threshold,
+      graft.similarity.TiledConfirm.FloatIO, "cos")
+    materializeThenRelease(pairs, vecs)
   }
 
   /** Canonical-representative dedup: one row per distinct normalized

@@ -64,9 +64,10 @@ object KMeans {
     (array_max(array(scored: _*)).getField("ncid") * -1).cast("long")
   }
 
-  private def asDouble(emb: DataFrame, idCol: String, vecCol: String) =
-    emb.select(col(idCol).cast("long").as(idCol),
-      transform(col(vecCol), x => x.cast("double")).as("_v"))
+  private def asDouble(emb: DataFrame, idCol: String, vecCol: String,
+      extra: Column*) =
+    emb.select(Seq(col(idCol).cast("long").as(idCol),
+      transform(col(vecCol), x => x.cast("double")).as("_v")) ++ extra: _*)
 
   /** Exact per-cluster component means of an assigned frame
     * `(_c, _v: array<double>)`, collected as O(k·dim) PRIMITIVE doubles:
@@ -101,7 +102,15 @@ object KMeans {
     * Lloyd update, final assignment. Output: (idCol, cluster). Empty
     * clusters keep their seed centroid. */
   def assignClusters(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    asDouble(emb, idCol, vecCol)
+      .select(col(idCol), clusterOf(emb, idCol, vecCol, k).as("cluster"))
+
+  /** The final assignment of [[assignClusters]] as a column over the
+    * double vector `_v` of [[asDouble]]; fitting it (seed draw + one
+    * Lloyd update) runs the bounded model-fit jobs here. */
+  private def clusterOf(emb: DataFrame, idCol: String, vecCol: String,
+      k: Int): Column = {
     val e = asDouble(emb, idCol, vecCol)
     val seeds: Seq[(Long, Array[Double])] =
       e.orderBy(md5(col(idCol).cast("string").cast("binary")).asc,
@@ -112,13 +121,12 @@ object KMeans {
     val a1 = e.withColumn("_c", argmaxCos(col("_v"), seeds))
     val means = componentMeans(a1)
     val updated = seeds.map { case (cid, cv) => cid -> means.getOrElse(cid, cv) }
-    e.withColumn("cluster", argmaxCos(col("_v"), updated))
-      .select(col(idCol), col("cluster"))
+    argmaxCos(col("_v"), updated)
   }
 
   /** Exact cosine over primitive float arrays — arithmetic-identical to
-    * the broadcast confirm's native [[graft.functions.CosineSim]] kernel
-    * (`VectorUtil.cosineF`): sequential double accumulation over
+    * the native [[graft.functions.CosineSim]] expression (`Ann.cosine`,
+    * `VectorUtil.cosineF`): sequential double accumulation over
     * float→double casts, 0.0 on a zero norm. */
   private[graft] def cosArrF(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
@@ -151,182 +159,47 @@ object KMeans {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** The past-the-cutoff confirm: CLUSTER-LOCAL pairwise cosine. One
-    * shuffle of the n (id, cluster, vec) rows on `cluster`, then each
-    * cluster's pair set is scored entirely inside its group — the pair
-    * stream (O(n²/k) rows, ~n^1.5 at k ≈ √n) is never materialized,
-    * shuffled, or joined. The r12 fallback (two sort-merge joins
-    * attaching vectors to every pair) shuffled dim·8B per pair per side:
-    * at the 2M-vector point where the broadcast guard first engages that
-    * is ~10⁹ pairs × ~500 B ≈ 0.5 TB of shuffle for a 1 GB corpus —
-    * cluster-locality makes the fallback shuffle exactly the corpus
-    * once, which is the shape that survives 100 TB.
-    *
-    * Memory license (TILED since r14): one TILE buffered per task —
-    * [[TiledConfirm.DefaultTileBytes]] (32 MB) + one streamed vector,
-    * independent of cluster size; a pathologically skewed cluster of m
-    * rows costs O(m²) local cosines plus O(m²/tile) sequential bytes
-    * re-streamed from a task-local spill file — the operator's published
-    * complexity, paid in compute + local I/O instead of heap. Clusters
-    * under one tile (the k ≈ √n expected case: √n rows ≈ 1.4k vectors /
-    * ~1 MB at n=2M, dim=64) never touch the file.
-    *
-    * Drop rule (identical to the broadcast branch): member j is dropped
-    * iff ANY lower-id cluster-mate i (kept or dropped itself) has
-    * cos(i, j) ≥ threshold. */
-  private def clusterLocalSemDedup(a: DataFrame, ef: DataFrame,
-      idCol: String, isFloat: Boolean, threshold: Double): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    // null ELEMENTS → typed zero before decoding to primitive arrays:
-    // exactly cosineF/cosD-with-nulls-as-0 semantics, and keeps the
-    // primitive-array encoder total.
-    val safeVec =
-      if (isFloat) transform(col("_vf"), x => coalesce(x, lit(0f)))
-      else transform(col("_vf"), x => coalesce(x, lit(0d)))
-    val fat = a.join(ef.withColumnRenamed(idCol, "_eid"),
-        col(idCol) === col("_eid"))
-      .select(col("cluster").cast("long").as("_1"),
-        col(idCol).cast("long").as("_2"), safeVec.as("_3"))
-    // TILED confirm (VERDICT r13 #2): the group streams id-sorted from
-    // Spark's external sort (flatMapSortedGroups) through byte-budgeted
-    // tiles — heap caps at one tile + one streamed vector instead of the
-    // whole cluster, so a mega duplicate cluster spills to a task-local
-    // file instead of OOMing the task. Same drop rule, same kernels,
-    // pair-for-pair identical decisions (ClusterSpec ties the legs).
-    def dedupGroups[V](rows: org.apache.spark.sql.Dataset[(Long, Long, V)],
-        cos: (V, V) => Double, io: TiledConfirm.VecIO[V]): DataFrame =
-      rows.groupByKey(_._1).flatMapSortedGroups(col("_2")) { (cluster, it) =>
-        TiledConfirm.semDedup(it.map(t => (t._2, t._3)), cos, threshold, io)
-          .map { case (id, kept) => (id, cluster, kept) }
-      }.toDF("_oid", "cluster", "kept")
-    val out =
-      if (isFloat) dedupGroups[Array[Float]](
-        fat.as[(Long, Long, Array[Float])], cosArrF, TiledConfirm.FloatIO)
-      else dedupGroups[Array[Double]](
-        fat.as[(Long, Long, Array[Double])], cosArrD, TiledConfirm.DoubleIO)
-    out.withColumnRenamed("_oid", idCol).select(col(idCol), col("cluster"), col("kept"))
-  }
-
   /** SemDeDup: within each k-means cluster, drop every vector whose
-    * cosine to a LOWER-id cluster-mate reaches `threshold`. Pairs are
-    * scored inside clusters only — O(n²/k) instead of O(n²), which is
-    * the operator's entire point at scale (production runs pick
-    * k ≈ √n so cluster sizes stay bounded). Output:
-    * (idCol, cluster, kept). */
+    * cosine to a cluster-mate with a strictly LOWER id reaches
+    * `threshold`. Pairs are scored inside clusters only — O(n²/k)
+    * instead of O(n²), which is the operator's entire point at scale
+    * (production runs pick k ≈ √n so cluster sizes stay bounded).
+    *
+    * The confirm is the one group-local confirm
+    * ([[PairConfirm.groupDrops]]): the corpus is shuffled ONCE on
+    * `cluster` with its vectors attached and each cluster's pairs are
+    * scored inside the group, id-sorted, through byte-budgeted tiles —
+    * heap holds one tile + one streamed vector however large a cluster
+    * grows (a mega duplicate cluster costs O(m²) local cosines plus
+    * O(m²/tile) bytes re-streamed from a task-local spill file), and the
+    * pair stream is never materialized. Vectors keep their SOURCE
+    * element type: float inputs score with [[cosArrF]], double inputs
+    * with [[cosArrD]] — a float downcast could flip near-threshold
+    * pairs relative to the oracle's double fold. Null elements score as
+    * 0, a null vector as a zero vector. `idCol` must be integral (int or
+    * long). Output: (idCol: long, cluster, kept), one row per input row. */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      threshold: Double, broadcastConfirmMax: Long = 1500000L): DataFrame = {
-    val (a, result) = semDedupBuild(emb, idCol, vecCol, k, threshold,
-      broadcastConfirmMax)
-    // Materialize-then-release (the Dedup pattern): the persist's
-    // lifetime is this call, never the session. Bench times builder +
-    // action together, so the eager hop stays inside the measured span.
-    val out = result.localCheckpoint(true)
-    a.unpersist()
-    out
-  }
-
-  /** [[semDedup]] internals: the PERSISTED skinny assignment (the caller
-    * owns its release) and the LAZY result plan — exposed so plan-shape
-    * specs can assert the confirm's kernel/join strategy before
-    * materialization hides it behind a checkpoint scan. */
-  private[graft] def semDedupBuild(emb: DataFrame, idCol: String,
-      vecCol: String, k: Int, threshold: Double,
-      broadcastConfirmMax: Long): (DataFrame, DataFrame) = {
-    // The assignment is persisted and counted ONCE (ADVICE r12): n picks
-    // the confirm strategy, and the materialized skinny frame feeds the
-    // confirm's 2-3 consumers — the previous eager emb.count() paid a
-    // full extra input scan AND recomputed the assignment per consumer.
-    val a = assignClusters(emb, idCol, vecCol, k).persist()
-    val n = a.count()
+      threshold: Double): DataFrame = {
+    PairConfirm.requireIntegralId(emb, idCol)
     val isFloat = emb.schema(vecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) => true
       case _ => false
     }
-    // Vectors keep their SOURCE element type (ADVICE r11): float inputs
-    // use the native codegen CosineSim (sequential double accumulation
-    // over float→double casts — term-for-term the same IEEE math as
-    // cosD's HOF fold and the oracle's list_sum, ~10× faster per pair
-    // than the interpreted HOF eval); double inputs stay double, because
-    // a silent float downcast can flip near-threshold pairs relative to
-    // the oracle's double fold.
-    // Null ELEMENTS coalesce to 0 in the double branch (ADVICE r13):
-    // cosD's HOF fold yields NULL on a null element, so `cos >= t`
-    // silently KEPT such pairs in the broadcast confirm while the
-    // cluster-local confirm (and the float native kernel, which zeroes
-    // nulls internally) dropped them — the two regimes disagreed on
-    // corpora with null elements. Zero-coalescing here makes every
-    // branch score the same arithmetic.
-    val ef = emb.select(col(idCol),
-      (if (isFloat) col(vecCol)
-       else transform(col(vecCol), x => coalesce(x.cast("double"), lit(0d))))
-        .as("_vf"))
-    // Confirm-strategy cutoff, BYTE-aware (ADVICE r12 medium): the row
-    // cutoff was budgeted for float vectors (1.5M × 640 dim × 4 B ≈
-    // 3.8 GB); a double corpus at the same row count would broadcast
-    // ~7.7 GB per side — brushing Spark's 8 GB broadcast-table hard
-    // limit, the exact over-broadcast failure the guard exists to stop.
-    // The effective cutoff is min(rows, bytes/(dim·width)); dim comes
-    // from a 1-row probe (limit-1 scan).
-    val dim = emb.select(size(col(vecCol)).as("_d"))
-      .filter(col("_d") > 0).take(1)
-      .headOption.map(_.getInt(0)).getOrElse(640)
-    val byteBudget = 1500000L * 640L * 4L // the float-era budget, explicit
-    val effectiveMax =
-      math.min(broadcastConfirmMax, byteBudget / (dim.toLong * (if (isFloat) 4L else 8L)))
+    val payload =
+      if (isFloat) coalesce(transform(col(vecCol), x => coalesce(x, lit(0f))),
+        array().cast("array<float>"))
+      else coalesce(transform(col(vecCol), x => coalesce(x.cast("double"), lit(0d))),
+        array().cast("array<double>"))
+    val rows = asDouble(emb, idCol, vecCol, payload.as("_p"))
+      .withColumn("cluster", clusterOf(emb, idCol, vecCol, k))
     val result =
-      if (n <= effectiveMax) {
-        // Pair enumeration is SKINNY (id, cluster) only: carrying both
-        // vectors through the cluster self-join shuffles ~520 B per pair —
-        // at 200k vectors / k=8 that is 2.5e9 pairs ≈ 40+ GB per side
-        // (measured: the sf10e gate ground >16 min before being killed).
-        // With ids only the same join moves 16 B per pair, and the cosine
-        // runs map-side against the broadcast vector table.
-        // ...and SALTED: a join keyed on `cluster` alone has at most k
-        // distinct keys, so at the fixed-k oracle setting (k=8) all 2.5e9
-        // within-cluster pairs landed on 8 tasks of a 32-thread session.
-        // Bucketing the right side by id % S and exploding the left across
-        // the S buckets keeps every pair exactly once while spreading the
-        // work over k·S join keys — full parallelism at any k.
-        val S = 32
-        val left = a.select(col(idCol).as("id_a"), col("cluster"))
-          .withColumn("_b", explode(array((0 until S).map(lit(_)): _*)))
-          // EXPLICIT partition count: the join inputs are tiny (n·S skinny
-          // rows), so AQE coalesces the pre-join shuffle to a few partitions
-          // and the 2.5e9-pair EXPLOSION then runs ~8-way; a user-specified
-          // repartition is exempt from coalescing and keeps all cores busy
-          .repartition(256, col("cluster"), col("_b"))
-        val right = a.select(col(idCol).as("id_b"), col("cluster"),
-          pmod(col(idCol), lit(S)).cast("int").as("_b"))
-        def cos(x: Column, y: Column): Column =
-          if (isFloat) graft.similarity.Ann.cosine(x, y) else cosD(x, y)
-        val pairs = left.join(right, Seq("cluster", "_b"))
-          .filter(col("id_a") < col("id_b"))
-        // Exact-cosine confirm, map-side against the BROADCAST vector
-        // table (fits by the byte-aware cutoff above): only the
-        // survivor set is ever shuffled.
-        val confirmed = pairs
-          .join(broadcast(ef.select(col(idCol).as("id_a"), col("_vf").as("_va"))), "id_a")
-          .join(broadcast(ef.select(col(idCol).as("id_b"), col("_vf").as("_vb"))), "id_b")
-        val drops = confirmed
-          .filter(cos(col("_va"), col("_vb")) >= threshold)
-          .select(col("id_b").as(idCol)).distinct()
-          .withColumn("_dropped", lit(true))
-        a.join(drops, Seq(idCol), "left")
-          .select(col(idCol), col("cluster"), col("_dropped").isNull.as("kept"))
-      } else {
-        // PAST the cutoff the broadcast itself is the failure mode
-        // (VERDICT r11 #3: at 1B×64 it is ~512 GB and the operator dies
-        // at exactly the scale it exists for) — the confirm goes
-        // cluster-local: shuffle the corpus once on `cluster`, score
-        // each cluster's pairs inside the group, never materialize the
-        // pair stream (see [[clusterLocalSemDedup]]).
-        System.err.println(s"[semdedup] n=$n exceeds the confirm broadcast " +
-          s"cutoff (effective $effectiveMax rows at dim=$dim) — " +
-          "cluster-local confirm engaged")
-        clusterLocalSemDedup(a, ef, idCol, isFloat, threshold)
-      }
-    (a, result)
+      if (isFloat) PairConfirm.groupDrops[Array[Float]](rows, idCol, "cluster",
+        col("_p"), cosArrF, threshold, TiledConfirm.FloatIO)
+      else PairConfirm.groupDrops[Array[Double]](rows, idCol, "cluster",
+        col("_p"), cosArrD, threshold, TiledConfirm.DoubleIO)
+    // eager, like the dedup entry points: the caller gets materialized
+    // rows and the model-fit lineage is cut
+    result.localCheckpoint(true)
   }
 }

@@ -10,35 +10,25 @@ import java.io._
   * byte-budgeted tiles instead: heap = one tile + one streamed vector;
   * members of earlier tiles re-stream from a task-local spill file.
   * Answers are pair-for-pair identical — every ordered pair (i, j) with
-  * id_i < id_j is still visited exactly once (earlier-tile members all
-  * have lower ids than the current tile's by the sorted-input contract),
+  * id_i < id_j is still visited exactly once (earlier-tile members never
+  * have higher ids than the current tile's by the sorted-input contract),
   * and the semDedup drop rule's early exit only skips js that are
-  * already dropped, which cannot change any decision. Cost model: the
-  * group's vectors are written to disk once and re-read once per later
-  * tile — O(m²/tile) sequential bytes — so the untiled path's OOM risk
-  * becomes bounded-heap compute + streaming I/O, the operator's
-  * published O(m²) complexity unchanged. */
+  * already dropped, which cannot change any decision. Pair identity is
+  * by ID, never by position: members sharing an id (duplicate ids in
+  * the input, possibly straddling a tile boundary) are never compared
+  * with each other, so no (id, id) self-pair or self-drop can arise.
+  * Cost model: the group's vectors are written to disk once and re-read
+  * once per later tile — O(m²/tile) sequential bytes — so the untiled
+  * path's OOM risk becomes bounded-heap compute + streaming I/O, the
+  * operator's published O(m²) complexity unchanged. */
 private[graft] object TiledConfirm {
 
-  /** Default per-task tile budget. 32 MB keeps 32 concurrent tasks'
-    * tiles ~1 GB total on the bench heap while a dim-64 float corpus
-    * still fits ~120k members per tile (groups below that never touch
-    * the spill file at all — the normal, unskewed case costs exactly
-    * what the untiled path did). Env-overridable so a bounded-heap A/B
-    * (or a cluster with different task memory) can size it without a
-    * rebuild. */
-  val DefaultTileBytes: Long = sys.env.get("SPARK_GRAFT_CONFIRM_TILE_BYTES")
-    .map { raw =>
-      // a bare .toLong here would surface as ExceptionInInitializerError /
-      // NoClassDefFoundError deep inside executor tasks (ADVICE r14) —
-      // fall back loudly instead
-      scala.util.Try(raw.trim.toLong).filter(_ > 0).getOrElse {
-        System.err.println(
-          s"[graft] SPARK_GRAFT_CONFIRM_TILE_BYTES='$raw' is not a positive " +
-          "long — using the 32 MB default")
-        32L << 20
-      }
-    }.getOrElse(32L << 20)
+  /** Per-task tile budget. 32 MB keeps 32 concurrent tasks' tiles ~1 GB
+    * total on the bench heap while a dim-64 float corpus still fits ~120k
+    * members per tile (groups below that never touch the spill file at
+    * all — the normal, unskewed case costs exactly what an untiled pass
+    * would). The kernels' `tileBytes` argument overrides it in tests. */
+  val DefaultTileBytes: Long = 32L << 20
 
   trait VecIO[V] extends Serializable {
     def write(o: DataOutputStream, v: V): Unit
@@ -158,8 +148,9 @@ private[graft] object TiledConfirm {
     }
   }
 
-  /** SemDeDup drop decision per member: j is dropped iff ANY lower-id
-    * member i (kept or dropped itself) has cos(i, j) >= threshold.
+  /** SemDeDup drop decision per member: j is dropped iff ANY member i
+    * with a strictly lower id (kept or dropped itself) has
+    * cos(i, j) >= threshold.
     * `it` MUST be id-sorted ascending. Returns (id, kept) in id order.
     * Result size is 16 B/member — eager per group is fine even for a
     * mega-cluster (300k members = ~5 MB). */
@@ -183,11 +174,11 @@ private[graft] object TiledConfirm {
         // order-independent (any hit drops), so the reordering is safe.
         val liveIdx = Array.tabulate(n)(identity)
         var liveN = n
-        if (spill != null && spill.nonEmpty) spill.foreachWhile { (_, vi) =>
+        if (spill != null && spill.nonEmpty) spill.foreachWhile { (idI, vi) =>
           var p = 0
           while (p < liveN) {
             val j = liveIdx(p)
-            if (cos(vi, vecs(j)) >= threshold) {
+            if (idI < ids(j) && cos(vi, vecs(j)) >= threshold) {
               dropped(j) = true
               liveN -= 1
               liveIdx(p) = liveIdx(liveN)
@@ -198,8 +189,10 @@ private[graft] object TiledConfirm {
         var j = 0
         while (j < n) {
           if (!dropped(j)) {
+            // sorted input: the first i with ids(i) == ids(j) ends the
+            // strictly-lower-id prefix
             var i = 0
-            while (i < j && !dropped(j)) {
+            while (i < j && ids(i) < ids(j) && !dropped(j)) {
               if (cos(vecs(i), vecs(j)) >= threshold) dropped(j) = true
               i += 1
             }
@@ -217,7 +210,7 @@ private[graft] object TiledConfirm {
     out.iterator
   }
 
-  /** All ordered pairs (id_i, id_j, cos) with id_i < id_j and
+  /** All pairs (id_i, id_j, cos) with a STRICT id_i < id_j and
     * cos >= threshold. LAZY output — a mega-group emits O(m²) matching
     * pairs and must stream them without buffering. `it` MUST be
     * id-sorted ascending. Pair order within the group is
@@ -237,8 +230,10 @@ private[graft] object TiledConfirm {
         val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
         var j = 0
         while (j < ids.length) {
-          val c = cos(vi, vecs(j))
-          if (c >= threshold) buf += ((idI, ids(j), c))
+          if (idI < ids(j)) {
+            val c = cos(vi, vecs(j))
+            if (c >= threshold) buf += ((idI, ids(j), c))
+          }
           j += 1
         }
         buf.iterator
@@ -272,7 +267,8 @@ private[graft] object TiledConfirm {
           val filePass = spillIter.flatMap { case (idI, vi) => fileMemberMatches(idI, vi) }
           val n = ids.length
           val inTile = (1 until n).iterator.flatMap { j =>
-            (0 until j).iterator.flatMap { i =>
+            // sorted input: equal ids form the tail of the i range
+            (0 until j).iterator.takeWhile(i => ids(i) < ids(j)).flatMap { i =>
               val c = cos(vecs(i), vecs(j))
               if (c >= threshold) Iterator.single((ids(i), ids(j), c)) else Iterator.empty
             }

@@ -18,9 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - bounded model state (centroids, quantizers, vocab, anchor tables,
   *    per-key stats keyed on enum-sized domains);
   *  - query-side of ANN probes (queries ≪ corpus by contract);
-  *  - size-GUARDED corpus broadcasts with an explicit n-cutoff and a
-  *    shuffle fallback (Dedup.nearDupEmbeddingLsh n ≤ 1.5M,
-  *    KMeans.semDedup broadcastConfirmMax — the r12 fix). */
+  *  - size-GUARDED broadcasts with an exact row-count check and a
+  *    shuffle fallback (GraphOps.bcastIfSmall);
+  *  - capped exact-pair sides (the all-pairs ground-truth operators,
+  *    whose inputs are bounded by contract). */
 class BroadcastAuditSpec extends AnyFunSuite {
 
   // file -> audited broadcast( call-site count (comment lines excluded)
@@ -46,9 +47,8 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "graft/streaming/Streams.scala" -> 1, // static dim side of stream-static join
     "graft/text/Corpus.scala" -> 2, // benchmark gram set (eval-sized) + frequent lines
     "graft/text/Retrieval.scala" -> 5, // df table/postings (vocab-bounded) + scalars
-    "graft/dedup/Dedup.scala" -> 4, // 2 size-GUARDED (n<=1.5M, shuffle fallback) + 2 capped exact-pair sides
+    "graft/dedup/Dedup.scala" -> 2, // 2 capped exact-pair sides
     "graft/similarity/Ann.scala" -> 11, // query side of ANN probes (queries << corpus by contract)
-    "graft/similarity/KMeans.scala" -> 2, // size-GUARDED confirm (broadcastConfirmMax, cluster-local fallback)
     "graft/NaturalScale.scala" -> 3 // sampled-gate tables: rows = n/mod, bounded by the sampling modulus
   )
 
@@ -69,7 +69,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     val newSites = found.toSeq.filter { case (f, n) => audited.getOrElse(f, 0) < n }
     assert(newSites.isEmpty,
       s"UNAUDITED broadcast() sites (audit the input's bound — or add an " +
-      s"n-cutoff + shuffle fallback like KMeans.semDedup — then bump the " +
+      s"exact-size check + shuffle fallback like GraphOps.bcastIfSmall — then bump the " +
       s"count): ${newSites.map { case (f, n) => s"$f ($n, audited ${audited.getOrElse(f, 0)})" }.mkString("; ")}")
     val gone = audited.toSeq.filter { case (f, n) => found.getOrElse(f, 0) < n }
     assert(gone.isEmpty,

@@ -136,43 +136,68 @@ class ClusterSpec extends AnyFunSuite {
     assert(zero === 3L)
   }
 
+  /** The broadcast form of the SemDeDup drop rule: the whole corpus and
+    * its cluster assignment collected in one place, every vector dropped
+    * whose cosine to a lower-id cluster-mate reaches `t` (null elements
+    * as 0, float vectors scored as floats). */
+  private def broadcastSemDedup(emb: org.apache.spark.sql.DataFrame, k: Int,
+      t: Double): Seq[(Long, Long, Boolean)] = {
+    val isFloat = emb.schema("embedding").dataType match {
+      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, _) => true
+      case _ => false
+    }
+    val cluster = KMeans.assignClusters(emb, "vec_id", "embedding", k)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val vecs = emb.collect().map { r =>
+      val v = if (r.isNullAt(1)) Seq.empty[Any] else r.getSeq[Any](1)
+      r.getLong(0) -> v.map(x => if (x == null) 0.0 else x.asInstanceOf[Number].doubleValue)
+        .toArray
+    }.toSeq
+    def cos(a: Array[Double], b: Array[Double]) =
+      if (isFloat) KMeans.cosArrF(a.map(_.toFloat), b.map(_.toFloat))
+      else KMeans.cosArrD(a, b)
+    vecs.map { case (id, v) =>
+      val c = cluster(id)
+      val dropped = vecs.exists { case (i, u) =>
+        i < id && cluster(i) == c && cos(u, v) >= t
+      }
+      (id, c, !dropped)
+    }.sorted
+  }
+
+  private def clusterLocal(emb: org.apache.spark.sql.DataFrame, k: Int,
+      t: Double): Seq[(Long, Long, Boolean)] =
+    KMeans.semDedup(emb, "vec_id", "embedding", k = k, threshold = t)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
+
   test("semDedup cluster-local fallback equals the broadcast path") {
-    // VERDICT r11 #3 / r12 task 1: the confirm must not broadcast an
-    // unbounded corpus. Forcing the cutoff to 0 exercises the past-cutoff
-    // CLUSTER-LOCAL confirm (one corpus shuffle on `cluster`, pairs
-    // scored inside each group, never materialized); the answer must be
-    // identical to the guarded broadcast fast path.
+    // The confirm must not broadcast an unbounded corpus: it shuffles the
+    // corpus once on `cluster` and scores pairs inside each group. Its
+    // answer must be identical to the drop rule evaluated with the whole
+    // corpus in view, which is what a broadcast confirm computes.
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding")
-    def run(cutoff: Long) =
-      KMeans.semDedup(emb, "vec_id", "embedding", k = 8, threshold = 0.95,
-          broadcastConfirmMax = cutoff)
-        .collect().map(_.toString).sorted
-    val viaBroadcast = run(Long.MaxValue)
-    val viaShuffle = run(0L)
-    assert(viaShuffle.sameElements(viaBroadcast))
+    val viaBroadcast = broadcastSemDedup(emb, k = 8, t = 0.95)
+    val viaShuffle = clusterLocal(emb, k = 8, t = 0.95)
+    assert(viaShuffle == viaBroadcast,
+      s"diff: ${viaShuffle.diff(viaBroadcast).take(5)} vs ${viaBroadcast.diff(viaShuffle).take(5)}")
     assert(viaBroadcast.length > 0)
   }
 
   test("semDedup null vector elements: broadcast and cluster-local confirms agree") {
     import spark.implicits._
-    // ADVICE r13: cosD's HOF fold yields NULL on a null element, so the
-    // broadcast confirm silently KEPT a near-dup pair that the
-    // cluster-local confirm (nulls coalesced to 0) dropped. Both regimes
-    // must now make the same decision, and the pair must be DROPPED
-    // (null scores as 0, matching the float kernel's semantics).
+    // A HOF cosine fold yields NULL on a null element, which would KEEP a
+    // near-dup pair that a nulls-as-0 confirm drops. The cluster-local
+    // confirm must make the broadcast drop rule's decision, and the pair
+    // must be DROPPED (null scores as 0, matching the float kernel).
     val rows = Seq(
       (1L, Seq[java.lang.Double](1.0, 0.0, 0.0, 0.0)),
       (2L, Seq[java.lang.Double](1.0, null, 0.0, 0.0)), // near-dup of 1 modulo the null
       (3L, Seq[java.lang.Double](0.0, 1.0, 0.0, 0.0)),
       (4L, Seq[java.lang.Double](0.0, 0.0, 1.0, 0.0))
     ).toDF("vec_id", "embedding")
-    def run(cutoff: Long) = KMeans.semDedup(rows, "vec_id", "embedding",
-        k = 2, threshold = 0.9, broadcastConfirmMax = cutoff)
-      .select("vec_id", "kept").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val broad = run(Long.MaxValue)
-    val local = run(0L)
+    val broad = broadcastSemDedup(rows, k = 2, t = 0.9).map(r => r._1 -> r._3).toMap
+    val local = clusterLocal(rows, k = 2, t = 0.9).map(r => r._1 -> r._3).toMap
     assert(broad === local,
       s"confirm regimes disagree on null elements: broadcast=$broad local=$local")
     assert(broad(2L) === false,
@@ -236,32 +261,21 @@ class ClusterSpec extends AnyFunSuite {
 
   test("semDedup keeps double embeddings double in the confirm (no float downcast)") {
     import spark.implicits._
-    // ADVICE r11: a silent float downcast can flip near-threshold pairs
-    // vs the oracle's double fold. Double input ⇒ the plan must use the
-    // double HOF cosine, not the float-only native cosine_sim kernel.
-    val embD = Seq(
-      (1L, Array(1.0, 0.0, 0.0, 0.0)),
-      (2L, Array(0.96, 0.28, 0.0, 0.0)),
-      (3L, Array(0.0, 1.0, 0.0, 0.0))
-    ).toDF("vec_id", "embedding")
-    // the LAZY build plan — the public semDedup materializes behind a
-    // checkpoint scan, which hides the confirm's kernel from explain
-    val (aD, sdLazy) = KMeans.semDedupBuild(embD, "vec_id", "embedding",
-      k = 2, threshold = 0.9, broadcastConfirmMax = 1500000L)
-    val plan = sdLazy.queryExecution.executedPlan.toString
-    assert(!plan.contains("cosine_sim"),
-      s"double input must not route through the float kernel:\n${plan.take(1500)}")
-    aD.unpersist()
-    val sd = KMeans.semDedup(embD, "vec_id", "embedding", k = 2, threshold = 0.9)
-    assert(sd.count() == 3)
-    // float input keeps the fast native kernel
-    val embF = embD.select(col("vec_id"),
-      col("embedding").cast("array<float>").as("embedding"))
-    val (aF, sdF) = KMeans.semDedupBuild(embF, "vec_id", "embedding",
-      k = 2, threshold = 0.9, broadcastConfirmMax = 1500000L)
-    val planF = sdF.queryExecution.executedPlan.toString
-    assert(planF.contains("cosine_sim"), planF.take(1500))
-    aF.unpersist()
+    // A silent float downcast can flip near-threshold pairs vs the
+    // oracle's double fold. The threshold sits EXACTLY on the double
+    // cosine of vectors 1 and 2, and the fixture is chosen so the float
+    // cosine of the same vectors falls below it: the double confirm must
+    // drop 2, a float one would keep it.
+    val v1 = Array(1.0, 0.0, 0.0, 0.0)
+    val v2 = Array(1.0, 0.1, 0.0, 0.0)
+    val t = KMeans.cosArrD(v1, v2)
+    assert(KMeans.cosArrF(v1.map(_.toFloat), v2.map(_.toFloat)) < t,
+      "fixture must make a float downcast flip the decision")
+    val embD = Seq((1L, v1), (2L, v2)).toDF("vec_id", "embedding")
+    // k = 1: both vectors share the one cluster
+    val kept = KMeans.semDedup(embD, "vec_id", "embedding", k = 1, threshold = t)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(kept == Map(1L -> true, 2L -> false), s"got $kept")
   }
 
   test("persisted IVF index probes equal the in-line IVF answers") {

@@ -413,32 +413,6 @@ class OperatorPropertySpec extends AnyFunSuite {
       s"layouts ${invarianceLayouts} disagree: sizes ${results.map(_.size)}")
   }
 
-  test("r15 bucket-local minhash confirm is pair-identical to the join-attach confirm") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(47)
-    val vocab = Vector.tabulate(200)(i => s"w$i")
-    def sentence(n: Int): Vector[String] = Vector.fill(n)(vocab(rnd.nextInt(vocab.size)))
-    // near-dup pairs + one planted mega-group (6 copies) so a bucket
-    // holds >2 members and the tiled pair kernel's file pass runs
-    val mega = sentence(24).mkString(" ")
-    val docs = (0 until 30).flatMap { g =>
-      val base = sentence(18 + rnd.nextInt(8))
-      val nd = base.updated(rnd.nextInt(base.size), vocab(rnd.nextInt(vocab.size)))
-      Seq((g * 3L, base.mkString(" ")), (g * 3L + 1, nd.mkString(" ")),
-        (g * 3L + 2, sentence(20).mkString(" ")))
-    } ++ (0 until 6).map(i => (1000L + i, mega))
-    val hashed = () => graft.dedup.Dedup.hashedDocs(
-      docs.toDF("doc_id", "text").repartition(5), "doc_id", "text",
-      graft.dedup.Dedup.shingleHashes(_, 3), 32)
-    val joinAttach = canon(graft.dedup.Dedup.nearDupOfHashedDocs(
-      hashed(), 0.7, 32, 16, bucketLocalCutover = Long.MaxValue))
-    val bucketLocal = canon(graft.dedup.Dedup.nearDupOfHashedDocs(
-      hashed(), 0.7, 32, 16, bucketLocalCutover = 0L))
-    assert(joinAttach.nonEmpty, "fixture must plant confirmable near-dups")
-    assert(joinAttach == bucketLocal,
-      s"regimes disagree: ${joinAttach.size} vs ${bucketLocal.size} rows")
-  }
-
   test("spanStats is bit-identical under 1/7/32-partition inputs") {
     import spark.implicits._
     val rnd = new scala.util.Random(43)

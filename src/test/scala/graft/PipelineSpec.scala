@@ -186,13 +186,6 @@ class PipelineSpec extends AnyFunSuite {
         dim = 64, bits = 8, tables = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == Set((0L, 1L)))
-    // past-cutoff BUCKET-LOCAL confirm (tiled since r14): forcing the
-    // broadcast cutoff to 0 must route through the group-local tiled
-    // pair scorer and return the identical pair set
-    val lshLocal = Dedup.nearDupEmbeddingLsh(vecs, "vec_id", "embedding", 0.95,
-        dim = 64, bits = 8, tables = 16, confirmBroadcastMax = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lshLocal == Set((0L, 1L)))
   }
 
   test("lshParams: sub-quadratic candidate sizing that never sells the recall floor") {
