@@ -51,6 +51,7 @@ object NaturalScale {
         val t0 = System.nanoTime()
         val res = graft.similarity.KMeans
           .semDedup(emb, "vec_id", "embedding", k, t)
+          .localCheckpoint(true) // read by four count jobs: confirm once
         val dropped = res.filter(!col("kept")).count()
         val total = res.count()
         val wall = (System.nanoTime() - t0) / 1e9
@@ -79,6 +80,7 @@ object NaturalScale {
         val t0 = System.nanoTime()
         val found = graft.dedup.Dedup
           .nearDupEmbeddingLsh(emb, "vec_id", "embedding", t, dim = 64)
+          .localCheckpoint(true) // read by the count and the sample join: confirm once
         val nFound = found.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val sample = emb.filter(pmod(col("vec_id"), lit(mod)) === 0)

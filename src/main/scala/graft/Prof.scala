@@ -110,10 +110,11 @@ object Prof {
       .select(col("vec_id"),
         zip_with(col("_anchor"), col("embedding"),
           (a, e) => a * lit(1.0) + e * lit(0.35)).as("embedding"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // read by the exact top-k, the count and every sweep job
     val queries = emb.filter(col("vec_id") < 8)
     val exact = Ann.bruteForceTopK(emb, queries, k = 5)
-      .select("query_id", "neighbor_id").localCheckpoint(true)
+      .select("query_id", "neighbor_id")
+      .localCheckpoint(true) // read by every sweep job
     val n = emb.count()
     println(s"corpus n=$n dir=$d")
     for (ksub <- Seq(32, 256); cand <- Seq(50, 1000, 5000, 20000)) {

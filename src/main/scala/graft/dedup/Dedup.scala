@@ -67,24 +67,6 @@ object Dedup {
   private def withMinParallelism(df: DataFrame): DataFrame =
     graft.ops.Par.ensureMin(df)
 
-  /** Materialize `result` as an eager local checkpoint, then release the
-    * corpus-sized cached intermediates it derived from. The checkpoint
-    * stores the (bounded — candidate/confirmed pairs, never the corpus)
-    * result as executor RDD blocks OUTSIDE the SQL cache, so
-    * `sharedState.cacheManager` is empty after every dedup call
-    * (DedupHygieneSpec) and the blocks are freed by the context cleaner
-    * when the returned frame is garbage-collected — a library consumer
-    * running many dedup calls per session accumulates nothing. Lineage
-    * truncation also means downstream consumers re-read the materialized
-    * rows instead of re-deriving shingles/signatures per reference (the
-    * same reuse the persist bought, without the unbounded lifetime). */
-  private def materializeThenRelease(result: DataFrame,
-      toRelease: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
-    toRelease.foreach(_.unpersist())
-    out
-  }
-
   /** Serialized form of a sketch Bloom filter, for embedding as a plan
     * literal (the same bytes `BloomFilter.readFrom` accepts). */
   private def bloomBytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
@@ -110,12 +92,11 @@ object Dedup {
 
   /** Docs with their distinct word-shingle-hash set and MinHash
     * signature, computed exactly once and persisted, for the callers with
-    * several consumers of them (banding, both sides of a candidate join,
-    * the Jaccard confirm) — without the cache the signature tree is
-    * re-evaluated per reference and the confirm re-shingles per
-    * candidate pair. Every public entry point RELEASES this cache before
-    * returning ([[materializeThenRelease]]) — the persist's lifetime is
-    * the call, never the session. */
+    * several consumers of them (the delta/index paths: banding plus the
+    * Jaccard confirm's hash-set join) — without the cache the signature
+    * tree is re-evaluated per reference and the confirm re-shingles per
+    * candidate pair. Each caller unpersists it before returning, so the
+    * persist lives for the call, never the session. */
   private def shingledDocs(df: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int): DataFrame =
     hashedDocs(df, idCol, textCol, shingleHashes(_, k), numHashes).persist()
@@ -158,6 +139,8 @@ object Dedup {
     * docs sharing any band bucket become candidates. */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 32, bands: Int = 16): DataFrame = {
+    // persisted: exchange reuse shares only the input scan between the
+    // two join sides, so without it every document is shingled twice
     val sd = shingledDocs(df, idCol, textCol, k, numHashes)
     val banded = bandBuckets(sd, numHashes, bands)
     val a = banded.toDF("id_a", "band_a", "bucket_a")
@@ -166,7 +149,7 @@ object Dedup {
         a("band_a") === b("band_b") && a("bucket_a") === b("bucket_b") &&
         a("id_a") < b("id_b"))
       .select("id_a", "id_b").distinct()
-    materializeThenRelease(cands, sd)
+    graft.ops.Par.materializeThenRelease(cands, sd) // bounds sd's persist to this call
   }
 
   /** Exact Jaccard similarity of two docs' distinct word-`k`-shingle sets. */
@@ -221,14 +204,15 @@ object Dedup {
     * in byte-budgeted tiles — heap stays one tile + one streamed set no
     * matter how skewed a bucket is. A true pair re-found in k buckets
     * collapses in the closing distinct. `idCol` is the caller's id column
-    * of `df`, checked up front (it must be integral). */
+    * of `df`, checked up front (it must be integral). The result is a
+    * lazy plan: no job runs before the caller's action, and a caller that
+    * consumes the pairs more than once pins them itself. */
   private def nearDupOfHashedDocs(df: DataFrame, idCol: String, docs: DataFrame,
       threshold: Double, numHashes: Int, bands: Int): DataFrame = {
     graft.similarity.PairConfirm.requireIntegralId(df, idCol)
-    val pairs = graft.similarity.PairConfirm.bandPairs[Array[Long]](docs, "_id", col("_sh"),
+    graft.similarity.PairConfirm.bandPairs[Array[Long]](docs, "_id", col("_sh"),
       bandHashes(numHashes, bands), jaccardSortedHashes, threshold,
       graft.similarity.TiledConfirm.LongIO, "jaccard")
-    materializeThenRelease(pairs)
   }
 
   /** Incremental near-dup: match a DELTA batch against an existing corpus
@@ -245,10 +229,10 @@ object Dedup {
       bands: Int = 16): DataFrame = {
     val dd = shingledDocs(delta, idCol, textCol, k, numHashes)
     val cd = shingledDocs(corpus, idCol, textCol, k, numHashes)
-    materializeThenRelease(
+    graft.ops.Par.materializeThenRelease(
       deltaProbe(dd, cd.select("_id", "_sh"), bandBuckets(cd, numHashes, bands),
         threshold, numHashes, bands),
-      dd, cd)
+      dd, cd) // bounds dd's and cd's persists to this call
   }
 
   /** Probe join shared by the self-contained and indexed delta paths:
@@ -363,10 +347,10 @@ object Dedup {
       bands: Int = 16): DataFrame = {
     val spark = delta.sparkSession
     val dd = shingledDocs(delta, idCol, textCol, k, numHashes)
-    materializeThenRelease(
+    graft.ops.Par.materializeThenRelease(
       deltaProbe(dd, spark.read.parquet(s"$indexPath/docs"),
         spark.read.parquet(s"$indexPath/bands"), threshold, numHashes, bands),
-      dd)
+      dd) // bounds dd's persist to this call
   }
 
   /** Exact (verbatim) delta dedup against a [[buildCorpusIndex]] output —
@@ -412,13 +396,13 @@ object Dedup {
     * never duplicates (matching the EXISTS-on-normalized-text contract)
     * and are dropped up front.
     *
-    * NOTE — this call is EAGER (materialize-then-release): the distinct
-    * corpus hash set must be computed ONCE and reused by both the bloom
-    * build and the exact-confirm join — without the persist the corpus
-    * would scan three times (count + bloom + join). The corpus-sized
-    * cache is dropped before returning and the (bounded) result lives as
-    * a local checkpoint outside the SQL cache, so nothing needs a manual
-    * release. The membership probe is the native codegen'd
+    * NOTE — the distinct corpus hash set is persisted because the bloom
+    * build and the exact-confirm join both read it (without the persist
+    * the corpus would scan three times: count + bloom + join). That
+    * persist is what makes the call eager: the result is materialized
+    * and the persist released before returning
+    * ([[graft.ops.Par.materializeThenRelease]]), so nothing needs a
+    * manual release. The membership probe is the native codegen'd
     * BloomFilterMightContain expression riding the plan as a literal —
     * no UDF boxing on the delta scan, no broadcast handle to leak. */
   def exactDeltaBloom(delta: DataFrame, corpus: DataFrame, idCol: String,
@@ -434,7 +418,8 @@ object Dedup {
       .filter(mightContainNative(bloomBytes(bloom), col("content_hash")))
       .join(corpusHashes, "content_hash") // exact confirm: removes the fpp
       .select(col(idCol), col("content_hash"))
-    materializeThenRelease(out, corpusHashes)
+    // bounds corpusHashes' persist to this call
+    graft.ops.Par.materializeThenRelease(out, corpusHashes)
   }
 
   /** Embedding-cosine near-dup, exact: all pairs (idA < idB) with
@@ -499,32 +484,30 @@ object Dedup {
     * cosines in one tile of heap). Null elements score as 0.
     * Recall at similarity s: 1-(1-p^bits)^tables with p = 1-acos(s)/π.
     * `bits`/`tables` ≤ 0 ⇒ auto-size via [[lshParams]] from the corpus
-    * count (the default — fixed parameters are a measured scale cliff).
-    * `idCol` must be integral (int or long). Output: (id_a, id_b, cos),
-    * id_a < id_b, ids in the input's type. */
+    * count (the default — fixed parameters are a measured scale cliff);
+    * that count is the only job the call itself runs, the rest is a lazy
+    * plan. `idCol` must be integral (int or long). Output: (id_a, id_b,
+    * cos), id_a < id_b, ids in the input's type. */
   def nearDupEmbeddingLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, dim: Int, bits: Int = 0, tables: Int = 0): DataFrame = {
     graft.similarity.PairConfirm.requireIntegralId(df, idCol)
     // hyperplane signatures read null elements as 0 too, so one
     // coalesced vector feeds both the signatures and the confirm
-    val vecs0 = withMinParallelism(df.select(col(idCol).as("_id"),
+    val vecs = withMinParallelism(df.select(col(idCol).as("_id"),
       transform(col(vecCol).cast("array<float>"), x => coalesce(x, lit(0f))).as("_v")))
-    val sized = bits <= 0 || tables <= 0
-    // persisted only when lshParams needs the count: the count and the
-    // confirm then share one scan
-    val vecs = if (sized) vecs0.persist() else vecs0
     val (useBits, useTables) =
-      if (!sized) (bits, tables)
+      if (bits > 0 && tables > 0) (bits, tables)
       else {
-        val (autoBits, autoTables) = lshParams(vecs.count(), threshold)
+        // df.count() is a column-pruned scan with vecs' row count: the
+        // sizing job never reads the vectors
+        val (autoBits, autoTables) = lshParams(df.count(), threshold)
         (if (bits > 0) bits else autoBits, if (tables > 0) tables else autoTables)
       }
-    val pairs = graft.similarity.PairConfirm.bandPairs[Array[Float]](vecs, "_id", col("_v"),
+    graft.similarity.PairConfirm.bandPairs[Array[Float]](vecs, "_id", col("_v"),
       graft.similarity.Ann.lshSignatures(col("_v"), dim, useBits, useTables,
         seed = 1000L),
       graft.similarity.KMeans.cosArrF, threshold,
       graft.similarity.TiledConfirm.FloatIO, "cos")
-    materializeThenRelease(pairs, vecs)
   }
 
   /** Canonical-representative dedup: one row per distinct normalized
@@ -644,7 +627,8 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds - raise " +
           "maxIter for graphs with component diameter above it")
     }
-    materializeThenRelease(labels.withColumnRenamed("label", "component"), labels)
+    // bounds the last round's persist to this call
+    graft.ops.Par.materializeThenRelease(labels.withColumnRenamed("label", "component"), labels)
   }
 
   /** Full near-dup dedup: minhash near-dup pairs → connected components →
@@ -740,7 +724,7 @@ object Dedup {
       .select(col("id_a"), posexplode(col("_nn")))
       .select(col("id_a").as(idCol), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("nbr"))
-    materializeThenRelease(out, docs)
+    graft.ops.Par.materializeThenRelease(out, docs) // bounds docs' persist to this call
   }
 
   /** DIRECTIONAL containment dedup: pairs where |grams(a) ∩ grams(b)| ≥
@@ -782,7 +766,7 @@ object Dedup {
       .withColumn("n_a", size(col("_sh_a")).cast("long"))
       .filter(col("n_inter") * den >= col("n_a") * num)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"))
-    materializeThenRelease(out, docs)
+    graft.ops.Par.materializeThenRelease(out, docs) // bounds docs' persist to this call
   }
 
   /** Exactness gate for [[nearDupSimhash]]: the 4×16-bit chunk banding is
@@ -805,10 +789,10 @@ object Dedup {
     val nBand = nearDupSimhash(df, idCol, textCol, maxHamming)
       .agg(count(lit(1)).as("n_band"))
     val nDocs = fp.agg(count(lit(1)).as("n_docs"))
-    materializeThenRelease(
+    graft.ops.Par.materializeThenRelease(
       nDocs.crossJoin(nExact).crossJoin(nBand)
         .select(col("n_docs"), (col("n_exact") === col("n_band")).as("sets_match")),
-      fp)
+      fp) // bounds fp's persist to this call
   }
 
   /** SimHash fingerprints + near-dup candidate pairs within Hamming
@@ -865,7 +849,7 @@ object Dedup {
     // persist the (doc, gram-hash) pairs: both the gram stats and the
     // per-doc rollup consume them — without this each leg re-scans and
     // re-hashes the corpus text. Released before returning (the output
-    // is a few ints per doc, cheap to checkpoint eagerly).
+    // is a few ints per doc, cheap to materialize).
     val pg = docs.select(col(idCol).as("doc_id"),
         explode(shingleHashes(col(textCol), k)).as("g"))
       .persist()
@@ -887,9 +871,7 @@ object Dedup {
         (coalesce(col("n_shared_earlier"), lit(0L)) * 5 >=
           coalesce(col("n_grams"), lit(0L)) &&
           coalesce(col("n_grams"), lit(0L)) > 0).as("is_dup"))
-      .localCheckpoint(true)
-    pg.unpersist()
-    out
+    graft.ops.Par.materializeThenRelease(out, pg) // bounds pg's persist to this call
   }
 
   /** Exact-substring span REMOVAL — the cut half of the Lee et al. 2022

@@ -843,8 +843,6 @@ object Multimodal {
     * leaving cells empty). Output: (doc_id, dhash) with dhash LongType. */
   def imageDHash(df: DataFrame, idCol: String, payloadCol: String,
       batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("dhash", LongType)))
     val pre = df.select(col(idCol).cast("long"), col(payloadCol))
     pre.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
@@ -909,8 +907,14 @@ object Multimodal {
           Row(r.getLong(0), hash)
         }
       }
-    }(Encoders.row(outSchema))
+    }(Encoders.row(DHashSchema))
   }
+
+  /** The (doc_id, dhash) schema of [[imageDHash]] and of the index
+    * [[buildImageHashIndex]] writes — passed to the index read so the
+    * probe runs no schema-inference job. */
+  private val DHashSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("dhash", LongType)))
 
   /** Image near-duplicate pairs by dHash hamming distance — the visual
     * twin of the SimHash text path and the image-dedup stage of a
@@ -919,8 +923,12 @@ object Multimodal {
     * at least one of the four 16-bit chunks, so candidates come from four
     * chunk-keyed equi-joins (one shuffle on small integer keys — never an
     * all-pairs compare) and the exact `bit_count(xor)` confirm runs on
-    * candidates only. The hash frame is computed ONCE (persisted, then
-    * released eagerly — no cache left behind). Output:
+    * candidates only. The hash frame is persisted: both sides of the
+    * self-join read it, and exchange reuse shares only the payload scan
+    * below the decode, so a lazy plan would decode every image twice.
+    * That persist makes the call eager: the pairs are materialized and
+    * the persist released before returning
+    * ([[graft.ops.Par.materializeThenRelease]]). Output:
     * (id_a, id_b, hamming), id_a < id_b. */
   def imageNearDupDHash(df: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3): DataFrame =
@@ -949,9 +957,7 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
     if (!checkpoint) { fp.unpersist(); return pairs }
-    val out = pairs.localCheckpoint(true)
-    fp.unpersist()
-    out
+    graft.ops.Par.materializeThenRelease(pairs, fp) // bounds fp's persist to this call
   }
 
   /** Persist the corpus image-hash layer at `path`: DECODE + dHash paid
@@ -967,7 +973,9 @@ object Multimodal {
     * decodes ONLY the delta, bands both sides into the lossless 4×16-bit
     * chunks, equi-joins on chunk value, exact-hamming-confirms. Output:
     * (probe_id, corpus_id, hamming) with hamming ≤ maxHamming — sides
-    * are the caller's delta/corpus split, so no ordering filter. */
+    * are the caller's delta/corpus split, so no ordering filter. The
+    * result is a lazy plan: the delta's hashes have one consumer, and
+    * the index is read with its known schema, so the call runs no job. */
   def imageNearDupProbeIndexed(spark: SparkSession, path: String,
       delta: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3): DataFrame = {
@@ -980,10 +988,9 @@ object Multimodal {
             shiftrightunsigned(col("dhash"), i * 16).bitwiseAND(lit(0xFFFFL)).as("v"))): _*)))
         .select(col(id), col(h), col("col.chunk").as(s"_c_$id"),
           col("col.v").as(s"_v_$id"))
-    val fp = imageDHash(delta, idCol, payloadCol).persist()
-    val a = banded(fp, "probe_id", "h_a")
-    val b = banded(spark.read.parquet(path), "corpus_id", "h_b")
-    val pairs = a.join(b,
+    val a = banded(imageDHash(delta, idCol, payloadCol), "probe_id", "h_a")
+    val b = banded(spark.read.schema(DHashSchema).parquet(path), "corpus_id", "h_b")
+    a.join(b,
         col("_c_probe_id") === col("_c_corpus_id") &&
           col("_v_probe_id") === col("_v_corpus_id"))
       .select(col("probe_id"), col("corpus_id"), col("h_a"), col("h_b"))
@@ -991,8 +998,5 @@ object Multimodal {
       .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("probe_id", "corpus_id", "hamming")
-    val out = pairs.localCheckpoint(true)
-    fp.unpersist()
-    out
   }
 }

@@ -171,9 +171,7 @@ object AnalyticsOps {
       .where(col("inter") * 100 >= col("uni") * tPct)
       .select(col("a_id"), col("b_id"), col("inter"), col("uni"),
         expr("(inter * 10000) div uni").as("jacc_bp"))
-      .localCheckpoint(true)
-    ordered.unpersist()
-    out
+    Par.materializeThenRelease(out, ordered) // bounds ordered's persist to this call
   }
 
   private val SetSimOracle: String =
@@ -368,10 +366,10 @@ object AnalyticsOps {
   /** Bounded k-core peel: `rounds` synchronous rounds each dropping
     * nodes of degree < `k` (and the edges touching them) from the
     * undirected edge set `(s, d)`. Each round is one grouped degree
-    * count plus two semi-join filters on the (small, checkpointed)
-    * survivor set; rounds checkpoint eagerly so lineage stays linear
-    * (the BFS-loop device). Returns the surviving `(node, deg)` table —
-    * degrees measured IN the peeled subgraph. A fixed round budget is
+    * count plus two semi-join filters on the small survivor set (one
+    * shared exchange); each round checkpoints its edge set so lineage
+    * stays linear (the BFS-loop device). Returns the surviving
+    * `(node, deg)` table — degrees measured IN the peeled subgraph. A fixed round budget is
     * the scale-honest contract: full convergence is a driver-side loop
     * over the same primitive, and most graphs stabilize in a few
     * rounds. */
@@ -381,10 +379,12 @@ object AnalyticsOps {
     for (_ <- 1 to rounds) {
       val deg = e.select(col("s").as("n")).unionAll(e.select(col("d").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select("n").localCheckpoint(true)
+      // keep's two semi-joins share deg's exchange by reuse: no barrier
+      val keep = deg.where(col("deg") >= k).select("n")
       e = e.join(keep.select(col("n").as("s")), Seq("s"))
         .join(keep.select(col("n").as("d")), Seq("d"))
-        .select("s", "d").localCheckpoint(true)
+        .select("s", "d")
+        .localCheckpoint(true) // e is read three times a round: cut the growing lineage
     }
     e.select(col("s").as("n")).unionAll(e.select(col("d").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -396,16 +396,15 @@ object AnalyticsOps {
     * the most frequent label among its neighbours, ties toward the
     * SMALLEST label (the determinism that makes an engine-exact oracle
     * replay possible — classic async LPA is order-dependent). Each round
-    * is one edge-keyed join + two grouped aggregations; rounds checkpoint
-    * eagerly (the BFS-loop device) so lineage stays linear. Returns
-    * (node, community, community_size). */
+    * is one edge-keyed join + two grouped aggregations, and all rounds
+    * run as one lazy adaptive query with no barrier (see the loop).
+    * Returns (node, community, community_size). */
   def labelPropagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val dir = edges.select(col("s").as("n"), col("d").as("m"))
       .unionAll(edges.select(col("d").as("n"), col("s").as("m")))
-      .localCheckpoint(true)
     var lab = dir.select(col("n")).distinct()
-      .select(col("n"), col("n").as("lbl")).localCheckpoint(true)
+      .select(col("n"), col("n").as("lbl"))
     for (_ <- 1 to rounds) {
       val cnt = dir
         .join(lab.select(col("n").as("m"), col("lbl")), Seq("m"))
@@ -419,9 +418,9 @@ object AnalyticsOps {
       // doubles per round), `lab` is referenced exactly ONCE per round,
       // so the chain stays LINEAR left lazy. One adaptive query then runs
       // all rounds: the three serial driver sync points disappear and the
-      // per-round re-exchange of the checkpointed `dir` RDD dedupes via
-      // exchange reuse (r15 profile: wall 2.28 s -> 1.54 s, the three
-      // 0.19 s dir exchanges collapse into overlapped query stages).
+      // per-round re-exchange of `dir` dedupes via exchange reuse (r15
+      // profile: wall 2.28 s -> 1.54 s, the three 0.19 s dir exchanges
+      // collapse into overlapped query stages).
     }
     lab.select(col("n").as("node"), col("lbl").cast("long").as("community"),
       count(lit(1)).over(Window.partitionBy("lbl")).cast("long")
@@ -448,7 +447,8 @@ object AnalyticsOps {
           .as("pr"))
         .groupBy(col("pr.s").as("s"), col("pr.d").as("d"))
         .agg(count(lit(1)).as("w"))
-      topKAffinity(co, k = 8).localCheckpoint(true)
+      topKAffinity(co, k = 8)
+        .localCheckpoint(true) // memo read by four graph queries and every pass
     })
 
   /** Per-node triangle counts. Edges must arrive oriented low-id →
@@ -456,15 +456,14 @@ object AnalyticsOps {
     * classic two-join: paths (a→b→c) ⋈ closing edge (a→c). Both joins
     * are hash equi-joins; feed a bounded-degree graph ([[topKAffinity]])
     * so the path fan-out stays linear in nodes, not Σdeg². The edge set
-    * is materialized ONCE as an eager local checkpoint for its three
-    * uses — blocks outside the SQL cache, freed on GC, cacheManager
-    * stays empty in library use (GraphHygieneSpec contract).
+    * is read three times, by joins on different keys, so pass a
+    * materialized one (the graph queries pass the [[affinityEdges]]
+    * memo): the call adds no barrier of its own.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = edges.localCheckpoint(true)
-    val paths = e.as("e1").join(e.as("e2"), col("e1.d") === col("e2.s"))
+    val paths = edges.as("e1").join(edges.as("e2"), col("e1.d") === col("e2.s"))
       .select(col("e1.s").as("a"), col("e1.d").as("b"), col("e2.d").as("c"))
-    val tri = paths.join(e.as("e3"), col("a") === col("e3.s") && col("c") === col("e3.d"))
+    val tri = paths.join(edges.as("e3"), col("a") === col("e3.s") && col("c") === col("e3.d"))
       .select("a", "b", "c")
     tri.select(col("a").as("node"))
       .unionAll(tri.select(col("b").as("node")))

@@ -117,9 +117,7 @@ object CorpusOps {
       .select(col("a_id"), col("b_id"), col("n_shared"), col("nh_a"), col("nh_b"),
         expr("(n_shared * 1000000L) div least(nh_a, nh_b)").as("overlap_ppm"))
     if (!checkpoint) { hs.unpersist(); return joined }
-    val out = joined.localCheckpoint(true)
-    hs.unpersist()
-    out
+    Par.materializeThenRelease(joined, hs) // bounds hs's persist to this call
   }
 
   /** Persist the corpus side of incremental winnowing dedup at `path`:
@@ -174,9 +172,7 @@ object CorpusOps {
         col("nh_delta"), col("nh_corpus"),
         expr("(n_shared * 1000000L) div least(nh_delta, nh_corpus)")
           .as("overlap_ppm"))
-      .localCheckpoint(true)
-    hs.unpersist()
-    out
+    Par.materializeThenRelease(out, hs) // bounds hs's persist to this call
   }
 
   /** Versioned index dirs for q_winnow_index, staged once per dir. */

@@ -145,8 +145,11 @@ object FeatureOps {
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_inter,
         |  CAST(1 AS INT) AS est_ok
         |FROM p GROUP BY 1, 2""".stripMargin) { (s, d) =>
+      // feeds the sketches AND the exact verify join: reuse shares the
+      // distinct's shuffle but not its final aggregate (lazy measured
+      // ~20% slower at sf0.1), so it is pinned once
       val du = events(s, d).select(col("event_type"), col("user_id")).distinct()
-        .localCheckpoint(true) // feeds sketches AND the exact verify join
+        .localCheckpoint(true)
       val sk = du.groupBy("event_type")
         .agg(expr("hll_sketch_agg(user_id)").as("sk"),
           count(lit(1)).as("exact_n"))

@@ -23,14 +23,18 @@ object GraphOps {
     * use an explicit broadcast hint when you know a side is small." The
     * decision is size-based, not mode-based: 64 B/row is conservative
     * for a (long, long) HashedRelation row, and a billion-node graph
-    * stays sort-merge exactly as before. */
-  private def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
-    val conf = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    val thr =
-      if (conf.startsWith("-")) 0L
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-    if (rows >= 0 && rows * 64L < thr) broadcast(df) else df
+    * stays sort-merge exactly as before. `thr` is [[broadcastBudget]];
+    * `rows` is by name, so a disabled broadcast (`thr` ≤ 0) never runs
+    * the count. */
+  private[graft] def bcastIfSmall(df: DataFrame, rows: => Long, thr: Long): DataFrame =
+    if (thr > 0 && { val n = rows; n >= 0 && n * 64L < thr }) broadcast(df) else df
+
+  /** The session's broadcast budget in bytes, 0 when broadcast joins are
+    * disabled (a negative `spark.sql.autoBroadcastJoinThreshold`). */
+  private[graft] def broadcastBudget(spark: SparkSession): Long = {
+    val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    if (conf.startsWith("-")) 0L
+    else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
   }
 
   /** Weighted PageRank, `iters` synchronous iterations, damping 0.85,
@@ -56,9 +60,11 @@ object GraphOps {
     import org.apache.spark.sql.expressions.Window
     val ew = edges
       .withColumn("wout", sum(col("w")).over(Window.partitionBy("src")))
-      .localCheckpoint(true)
-    val nodes = ew.select(col("src")).distinct().localCheckpoint(true)
+      .localCheckpoint(true) // read by the node count job and every iteration
+    val nodes = ew.select(col("src")).distinct()
+      .localCheckpoint(true) // read by the count job and the rank seed
     val n = nodes.count()
+    val thr = broadcastBudget(edges.sparkSession)
     val r0 = 1000000000000L / n
     val base = r0 * 15L / 100L
     var r = nodes.select(col("src").as("node")).withColumn("rank", lit(r0))
@@ -67,7 +73,7 @@ object GraphOps {
     // iteration then SCANS the edge checkpoint with no exchange and no
     // sort, instead of re-shuffling edge-sized data per round.
     for (_ <- 1 to iters) {
-      r = ew.join(bcastIfSmall(r, n), col("src") === col("node"))
+      r = ew.join(bcastIfSmall(r, n, thr), col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(expr("(rank * w) div wout")).as("inflow"))
         .select(col("dst").as("node"),
@@ -94,17 +100,21 @@ object GraphOps {
     // cache — cacheManager stays empty, GraphHygieneSpec; the context
     // cleaner frees each round's node-sized blocks when the previous
     // frame goes unreachable): the BSP shape with zero persist residue.
-    var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint(true)
+    var dist = seeds.select(col("node"), lit(0L).as("dist"))
+      .localCheckpoint(true) // read twice per hop: cut the doubling lineage
+    val thr = broadcastBudget(edges.sparkSession)
     for (_ <- 1 to iters) {
       // counting the just-checkpointed frontier is a block-local job; the
       // exact count lets the hop join broadcast the node-sized side when
       // it provably fits instead of re-shuffling the edge list per hop
-      // (bcastIfSmall — static estimates see only the RDD scan)
-      val step = edges.join(bcastIfSmall(dist, dist.count()),
+      // (bcastIfSmall — static estimates see only the RDD scan). With
+      // broadcast disabled the count never runs.
+      val step = edges.join(bcastIfSmall(dist, dist.count(), thr),
           col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
       dist = dist.unionAll(step)
-        .groupBy("node").agg(min(col("dist")).as("dist")).localCheckpoint(true)
+        .groupBy("node").agg(min(col("dist")).as("dist"))
+        .localCheckpoint(true) // read twice per hop: cut the doubling lineage
     }
     dist
   }
@@ -124,15 +134,18 @@ object GraphOps {
     * over the same primitive. `edges` = (src, dst, w). */
   def ssspBounded(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var dist = seeds.select(col("node"), lit(0L).as("cost")).localCheckpoint(true)
+    var dist = seeds.select(col("node"), lit(0L).as("cost"))
+      .localCheckpoint(true) // read twice per round: cut the doubling lineage
+    val thr = broadcastBudget(edges.sparkSession)
     for (_ <- 1 to iters) {
       // same device as bfsHops: exact frontier count → broadcast the
       // node-sized side when it fits, never re-shuffle the edge list
-      val relax = edges.join(bcastIfSmall(dist, dist.count()),
+      val relax = edges.join(bcastIfSmall(dist, dist.count(), thr),
           col("src") === col("node"))
         .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
       dist = dist.unionAll(relax)
-        .groupBy("node").agg(min(col("cost")).as("cost")).localCheckpoint(true)
+        .groupBy("node").agg(min(col("cost")).as("cost"))
+        .localCheckpoint(true) // read twice per round: cut the doubling lineage
     }
     dist
   }
@@ -159,7 +172,7 @@ object GraphOps {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)) // memo read by q_pagerank, q_bfs_hops and every pass
 
   /** The 3-iteration oracle: DuckDB replays the identical integer
     * arithmetic CTE-by-CTE. */

@@ -509,9 +509,7 @@ object JourneyOps {
         .select(col("n_sessions"),
           col("pk.conc").as("max_concurrency"),
           (-col("pk.nus")).as("peak_first_us"))
-        .localCheckpoint(true) // 1 row; materialize so g can release
-      g.unpersist()
-      out
+      Par.materializeThenRelease(out, g) // 1 row; bounds g's persist to this query
     },
 
     // ---- life table / survival analysis (Kaplan-Meier counts) -------------

@@ -121,7 +121,7 @@ object MiningOps {
       val itemCnt = arr.select(explode(col("items")).as("item"))
         .groupBy("item").agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") >= 2)
-        .localCheckpoint(true)
+        .localCheckpoint(true) // two broadcast builds that AQE reuse does not share
       val pairs = arr.select(explode(expr(
           """flatten(transform(items, (x, i) ->
             |  transform(slice(items, i + 2, size(items)),

@@ -51,4 +51,19 @@ object Par {
       .filter(org.apache.spark.sql.functions
         .when(col("_graft_once") >= 0, pred).otherwise(false))
       .drop("_graft_once")
+
+  /** The one barrier shape for a result built from persisted inputs:
+    * materialize `result` as an eager local checkpoint, then unpersist
+    * `toRelease`, so the persist lives for the call and never the
+    * session. The checkpoint holds the result as executor RDD blocks
+    * outside the SQL cache (`sharedState.cacheManager` stays empty —
+    * DedupHygieneSpec) that the context cleaner frees once the returned
+    * frame is garbage-collected. Use it only when the result is bounded
+    * and something was persisted for it; a lazy plan with one consumer
+    * needs no barrier. */
+  def materializeThenRelease(result: DataFrame, toRelease: DataFrame*): DataFrame = {
+    val out = result.localCheckpoint(true)
+    toRelease.foreach(_.unpersist())
+    out
+  }
 }

@@ -361,7 +361,8 @@ object Scale {
         Row(r.get(0), v, o)
       }
     }
-    val out = spark.createDataFrame(rdd, schema).localCheckpoint(true)
+    val out = spark.createDataFrame(rdd, schema)
+      .localCheckpoint(true) // bounds sorted's persist and bc to this call
     sorted.unpersist()
     bc.destroy()
     out
@@ -424,7 +425,8 @@ object Scale {
       var r = bc.value(pid)
       it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
     }
-    val out = spark.createDataFrame(rdd, schema).localCheckpoint(true)
+    val out = spark.createDataFrame(rdd, schema)
+      .localCheckpoint(true) // bounds sorted's persist and bc to this call
     sorted.unpersist()
     bc.destroy()
     out

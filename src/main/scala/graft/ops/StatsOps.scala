@@ -373,7 +373,9 @@ object StatsOps {
         .groupBy("user_id")
         .agg(sum(when(col("ts") < split, fp4).otherwise(0L)).as("pre_fp"),
           sum(when(col("ts") >= split, fp4).otherwise(0L)).as("post_fp"))
-        .localCheckpoint(true) // feeds the global moments AND the variant frame
+        // feeds the global moments AND the variant frame: reuse shares the
+        // per-user shuffle but not its final aggregate (lazy measured slower)
+        .localCheckpoint(true)
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val t = u.agg(count(lit(1)).as("n_g"),
           sum(col("pre_fp")).as("s_pre_g"), sum(col("post_fp")).as("s_post_g"),
@@ -498,15 +500,15 @@ object StatsOps {
       val dPairs = m.groupBy(col("prev_type").as("a"), col("event_type").as("b"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("winner") === col("prev_type"), 1L).otherwise(0L)).as("wa"))
-        .localCheckpoint(true) // feeds g AND w; grid-sized
+        .localCheckpoint(true) // read by the g and wTbl checkpoint jobs; grid-sized
       val g = dPairs.select(col("a"), col("b"), col("n"))
         .unionAll(dPairs.select(col("b").as("a"), col("a").as("b"), col("n")))
         .groupBy("a", "b").agg(sum(col("n")).as("n"))
-        .localCheckpoint(true) // scanned once per iteration
+        .localCheckpoint(true) // read by every round's job
       val wTbl = dPairs.select(col("a").as("player"), col("wa").as("w"))
         .unionAll(dPairs.select(col("b").as("player"), (col("n") - col("wa")).as("w")))
         .groupBy("player").agg(sum(col("w")).as("w"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // read by every round's job and the final join
       var r = wTbl.select(col("player"), lit(1000000L).as("p"))
       for (_ <- 1 to 3) {
         val t = g.join(r.select(col("player").as("a"), col("p").as("pa")), Seq("a"))
@@ -516,7 +518,7 @@ object StatsOps {
         r = wTbl.join(t, col("player") === col("a"))
           .select(col("player"),
             expr("CASE WHEN t > 0 THEN (w * 1000000L) div t ELSE 0L END").as("p"))
-          .localCheckpoint(true)
+          .localCheckpoint(true) // read twice per round: cut the doubling lineage
       }
       r.join(wTbl, "player")
         .select(col("player"), col("w").as("wins"), col("p").as("rating_fp"))

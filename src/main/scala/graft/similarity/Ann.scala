@@ -254,13 +254,12 @@ object Ann {
     * (The previous single-table multi-probe variant measured recall ≈ 0
     * on the sf0.01 corpus — 1-bit probes cannot rescue a 12-bit AND.)
     *
-    * NOTE — this call is EAGER: the banded corpus must be persisted while
-    * the candidate join runs and must not outlive the call (repeated
-    * calls would accumulate corpus-sized caches), so the result — bounded
-    * at k rows per query — is materialized as a local checkpoint OUTSIDE
-    * the SQL cache before the corpus cache is released. Nothing needs a
-    * manual release: the checkpoint blocks free when the returned frame
-    * is garbage-collected. */
+    * NOTE — the corpus vectors are persisted because both the banded
+    * candidate join and the rerank join read them, and the two shuffle
+    * differently, so exchange reuse cannot share them. The persist must
+    * not outlive the call, so the result (at most k rows per query) is
+    * materialized and the persist released before returning
+    * ([[Par.materializeThenRelease]]); nothing needs a manual release. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       bits: Int = 4, tables: Int = 24, seed: Long = 42L): DataFrame = {
     val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
@@ -282,13 +281,7 @@ object Ann {
       .join(c, Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("q_vec"), col("c_vec")).as("cos"))
-    // c's persist must not outlive this call (repeated library calls would
-    // accumulate corpus-sized cached partitions): materialize the result —
-    // bounded at k rows per query — as an eager local checkpoint (outside
-    // the SQL cache; blocks free on GC), then release the corpus.
-    val out = rankTopK(scored, k).localCheckpoint(true)
-    c.unpersist()
-    out
+    Par.materializeThenRelease(rankTopK(scored, k), c) // bounds c's persist to this call
   }
 
   /** Recall gate for an approximate top-k result: per query, does `approx`

@@ -177,7 +177,10 @@ object KMeans {
     * with [[cosArrD]] — a float downcast could flip near-threshold
     * pairs relative to the oracle's double fold. Null elements score as
     * 0, a null vector as a zero vector. `idCol` must be integral (int or
-    * long). Output: (idCol: long, cluster, kept), one row per input row. */
+    * long). The call runs only the bounded model-fit jobs of the cluster
+    * assignment; the centroids enter the plan as literals, and the
+    * confirm is a lazy plan that runs at the caller's action. Output:
+    * (idCol: long, cluster, kept), one row per input row. */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       threshold: Double): DataFrame = {
     PairConfirm.requireIntegralId(emb, idCol)
@@ -193,13 +196,9 @@ object KMeans {
         array().cast("array<double>"))
     val rows = asDouble(emb, idCol, vecCol, payload.as("_p"))
       .withColumn("cluster", clusterOf(emb, idCol, vecCol, k))
-    val result =
-      if (isFloat) PairConfirm.groupDrops[Array[Float]](rows, idCol, "cluster",
-        col("_p"), cosArrF, threshold, TiledConfirm.FloatIO)
-      else PairConfirm.groupDrops[Array[Double]](rows, idCol, "cluster",
-        col("_p"), cosArrD, threshold, TiledConfirm.DoubleIO)
-    // eager, like the dedup entry points: the caller gets materialized
-    // rows and the model-fit lineage is cut
-    result.localCheckpoint(true)
+    if (isFloat) PairConfirm.groupDrops[Array[Float]](rows, idCol, "cluster",
+      col("_p"), cosArrF, threshold, TiledConfirm.FloatIO)
+    else PairConfirm.groupDrops[Array[Double]](rows, idCol, "cluster",
+      col("_p"), cosArrD, threshold, TiledConfirm.DoubleIO)
   }
 }

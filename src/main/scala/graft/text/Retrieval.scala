@@ -109,9 +109,8 @@ object Retrieval {
       .select(col("doc_id"),
         (col("score_fp") / 1000000.0).cast("double").as("score"),
         col("n_terms"))
-      .localCheckpoint(true) // ≤k rows; frees `base` for the caller
-    base.unpersist()
-    out
+    // ≤k rows; bounds base's persist to this call
+    graft.ops.Par.materializeThenRelease(out, base)
   }
 
   /** Persist the full-text index layers at `path`: the complete inverted

@@ -11,9 +11,12 @@ import graft.similarity.Ann
   * corpus-sized intermediate must release it before returning — a
   * consumer running many calls per session must accumulate NOTHING in
   * the SQL cache (round-4 finding: hashedDocs' persist leaked until the
-  * harness's clearCache). Results are materialized as local checkpoints
-  * (RDD blocks outside the cache manager, freed on GC), so the assert
-  * is simply: the cache manager is empty after the call returns. */
+  * harness's clearCache). The entry points either return a lazy plan
+  * that persists nothing (the near-dup families — LazyEntrySpec) or
+  * materialize their bounded result as a local checkpoint (RDD blocks
+  * outside the cache manager, freed on GC) and then release the persist
+  * (`Par.materializeThenRelease`), so the assert is simply: the cache
+  * manager is empty after the call returns. */
 class DedupHygieneSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {

@@ -82,4 +82,35 @@ class GraphOpsSpec extends AnyFunSuite {
       assert(withB == noB, s"broadcast hint changed results: $withB vs $noB")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
   }
+
+  test("bcastIfSmall cutover: bfs, sssp and pagerank rows identical at threshold -1 and default") {
+    import spark.implicits._
+    // two weighted triangles bridged by one edge, plus a pendant chain
+    val und = Seq((1L, 2L, 1L), (2L, 3L, 2L), (1L, 3L, 1L), (3L, 4L, 1L),
+      (4L, 5L, 3L), (5L, 6L, 1L), (4L, 6L, 2L), (6L, 7L, 4L), (7L, 8L, 1L))
+    val edges = und.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+      .toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    def run(): Seq[Set[String]] = {
+      val out = Seq(GraphOps.bfsHops(edges, seeds, iters = 4),
+          GraphOps.ssspBounded(edges, seeds, iters = 4), GraphOps.pageRank(edges, iters = 3))
+        .map(_.collect().map(_.toString).toSet)
+      spark.sqlContext.clearCache()
+      out
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val thr = spark.conf.get(key)
+    spark.conf.unset(key)
+    val withB = try run() finally spark.conf.set(key, thr)
+    assert(GraphOps.broadcastBudget(spark) > 0)
+    spark.conf.set(key, "-1")
+    try {
+      assert(GraphOps.broadcastBudget(spark) == 0L)
+      // a disabled broadcast never evaluates the by-name frontier count
+      val df = edges.select("src")
+      assert(GraphOps.bcastIfSmall(df, throw new AssertionError("counted"), 0L) eq df)
+      assert(run() == withB)
+    } finally spark.conf.set(key, thr)
+    assert(withB.map(_.size) == Seq(7, 7, 8)) // node 8 is five hops out
+  }
 }
