@@ -93,16 +93,21 @@ final class Context(val spark: SparkSession, val options: Map[String, String] = 
   }
 
   /** CSV source with sample-based inference (`FileInputOperator.cc:47-98`):
-    * header + per-column types via Spark's sampler over a bounded line
-    * sample (`csv.maxDetectionRows`), delimiter via our own small
-    * driver-side sniffer (Spark has no delimiter inference), explicit
-    * `typeHints`/`typeHintsAt` overriding inferred column types
-    * (`python/tuplex/context.py:321,344-346`), multiple null-value strings.
-    * Rows that don't parse against the inferred schema divert to the
+    * ONE driver-side head sample per call ([[CsvSniffer.sample]], at most
+    * `csv.maxDetectionRows` data lines) yields the delimiter (our own
+    * sniffer — Spark has no delimiter inference), the header decision and
+    * names, and the per-column types, which Spark's own `CSVInferSchema`
+    * computes on the driver over univocity-tokenized sample lines — the
+    * computation `spark.read.csv(Dataset[String])` runs inside its jobs,
+    * so the call submits no Spark job. `typeHints`/`typeHintsAt` override
+    * inferred types (`python/tuplex/context.py:321,344-346`); when they fix
+    * every field, typing is skipped. Multiple null-value strings are
+    * honored. Rows that don't parse against the schema divert to the
     * dual-mode error channel (`exceptionCounts`/`ignore`/`resolve`), and
     * repaired rows merge back at their original input positions (both
-    * channels split one scan and share a row-id space). Line-based:
-    * quoted fields with embedded newlines are not supported. */
+    * channels split one scan and share a row-id space; a first `resolve`
+    * runs inside that same scan). Line-based: quoted fields with embedded
+    * newlines are not supported. */
   def csv(
       pattern: String,
       columns: Seq[String] = Nil,
@@ -118,34 +123,20 @@ final class Context(val spark: SparkSession, val options: Map[String, String] = 
       System.err.println(s"[graft] csv: no input matches $pattern")
       return DataSet.fromDataFrame(this, spark.emptyDataFrame)
     }
-    val delim = delimiter.getOrElse(CsvSniffer.sniffDelimiter(spark, pattern))
-    val hasHeader = header.getOrElse(CsvSniffer.sniffHeader(spark, pattern, delim))
-    // schema inference from a BOUNDED sample (`csv.maxDetectionRows`,
-    // mirroring `FileInputOperator.cc:47-98`): Spark's inferSchema=true
-    // would parse every byte of the input twice — untenable when the glob
-    // is 100 TB. `limit` on the line stream stops the sample scan early.
-    // The sample holds DATA lines only (per-file header stripping by byte
-    // offset): letting other files' header lines into the sample would
-    // silently widen every column to string in a multi-file glob. Column
-    // names come from the sniffed header text instead.
+    // schema detection from a BOUNDED sample (`csv.maxDetectionRows`,
+    // mirroring `FileInputOperator.cc:47-98`): inferring over the whole
+    // input would parse every byte twice — untenable when the glob is
+    // 100 TB. The sample holds DATA lines only (each file's first line is
+    // stripped when there is a header): other files' header lines in the
+    // sample would silently widen every column to string in a multi-file
+    // glob. Column names come from the sniffed header text instead.
     val detectionRows = opt("csv.maxDetectionRows", "10000").toInt
-    val sample = dataLines(pattern, hasHeader).limit(detectionRows)
-    val inferred = {
-      val anon = spark.read.option("inferSchema", "true")
-        .option("samplingRatio", opt("csv.samplingRatio", "1.0"))
-        .option("mode", "PERMISSIVE")
-        .option("header", "false").option("sep", delim)
-        .option("quote", quotechar)
-        .option("nullValue", nullValues.headOption.orNull)
-        .csv(sample).schema
-      if (!hasHeader) anon
-      else {
-        val names = CsvSniffer.headerFields(spark, pattern, delim, quotechar)
-        StructType(anon.fields.zipWithIndex.map { case (f, i) =>
-          if (i < names.length) f.copy(name = names(i)) else f
-        })
-      }
-    }
+    val sample = CsvSniffer.sample(spark, pattern, detectionRows)
+    val delim = delimiter.getOrElse(CsvSniffer.sniffDelimiter(sample))
+    val hasHeader = header.getOrElse(CsvSniffer.sniffHeader(sample, delim))
+    val typer = new CsvSniffer.Typer(spark, delim, quotechar, nullValues.headOption.orNull)
+    val lines = sample.dataLines(hasHeader, detectionRows)
+    val width = typer.width(lines)
     // `columns` renames FIRST (the reference's order: columns= names are
     // what the user knows), then type hints override the sampled types IN
     // THE PARSE SCHEMA (not as post-read casts): a value that is valid
@@ -154,65 +145,49 @@ final class Context(val spark: SparkSession, val options: Map[String, String] = 
     // into the read schema keeps the good frame, the error channel, and
     // resolver reapplies on one consistent naming (csv schema matching is
     // positional under enforceSchema, so names never affect parsing).
-    val hinted = {
-      val named =
-        if (columns.nonEmpty) {
-          require(columns.length == inferred.length,
-            s"columns has ${columns.length} names for ${inferred.length} csv fields")
-          inferred.fields.zip(columns).map { case (f, n) => f.copy(name = n) }
-        } else inferred.fields
-      val byName = named.map(f =>
-        typeHints.get(f.name).map(t => f.copy(dataType = t)).getOrElse(f))
-      for ((idx, tpe) <- typeHintsAt) {
-        val i = if (idx < 0) byName.length + idx else idx
-        if (i >= 0 && i < byName.length) byName(i) = byName(i).copy(dataType = tpe)
-      }
-      StructType(byName)
+    val names = {
+      val headerNames = if (hasHeader) sample.headerFields(delim, quotechar) else Array.empty[String]
+      if (columns.nonEmpty) {
+        require(columns.length == width,
+          s"columns has ${columns.length} names for $width csv fields")
+        columns.toIndexedSeq
+      } else (0 until width).map(i => if (i < headerNames.length) headerNames(i) else s"_c$i")
     }
+    val hintAt = typeHintsAt.map { case (i, t) => (if (i < 0) width + i else i) -> t }
+    val pinned = names.indices.map(i => hintAt.get(i).orElse(typeHints.get(names(i))))
+    val types =
+      if (pinned.forall(_.isDefined)) pinned.map(_.get)
+      else pinned.zip(typer.infer(lines, width)).map { case (p, t) => p.getOrElse(t) }
+    val hinted = StructType(names.zip(types).map { case (n, t) => StructField(n, t, nullable = true) })
     // Rows that don't parse against the (hinted) schema — malformed line,
     // or a type the bounded sample never saw — are INPUT EXCEPTIONS, not
     // silent nulls, mirroring the reference's parse-errors-as-exceptions
-    // path (`PhysicalPlan.cc:202-208`). The main read DROPs malformed
-    // rows; the error channel re-derives them from the raw lines with a
-    // `from_csv` expression (Spark forbids corrupt-record-only scans, and
-    // this keeps the extra text read lazy — it only runs if the error
-    // channel is actually consumed via ignore/exceptionCounts).
-    // SINGLE-SCAN dual channel: every data line is parsed once under the
-    // hinted schema with a corrupt-record column; the good and error
-    // channels are two filters over the SAME plan, so the row ids assigned
-    // before the split are one consistent space — resolve()'d parse
-    // repairs merge back at their true input positions (two independent
-    // scans would number good and bad rows separately and interleave them
-    // arbitrarily on collect()). Known cost of this ordered-merge design:
-    // from_csv parses EVERY cell of every line (OptimizeCsvJsonExprs only
-    // prunes option-free from_csv calls), where the native csv source
-    // converted only required columns — on very wide CSVs where order and
-    // the error channel don't matter, read through spark.read.csv/parquet
-    // instead. Limitation (line-based): quoted fields with EMBEDDED
-    // NEWLINES are not supported (the reference's parser is line-based too).
-    val corruptCol = "_g_corrupt"
+    // path (`PhysicalPlan.cc:202-208`). SINGLE-SCAN dual channel: every
+    // data line is parsed once under the hinted schema with a
+    // corrupt-record column by a `from_csv` expression (Spark forbids
+    // corrupt-record-only scans); the good and error channels are two
+    // filters over the SAME plan, so the row ids assigned before the
+    // split are one consistent space — resolve()'d parse repairs merge
+    // back at their true input positions (two independent scans would
+    // number good and bad rows separately and interleave them arbitrarily
+    // on collect()). Known cost of this ordered-merge design: from_csv
+    // parses EVERY cell of every line (OptimizeCsvJsonExprs only prunes
+    // option-free from_csv calls), where the native csv source converted
+    // only required columns — on very wide CSVs where order and the error
+    // channel don't matter, read through spark.read.csv/parquet instead.
+    // Limitation (line-based): quoted fields with EMBEDDED NEWLINES are not
+    // supported (the reference's parser is line-based too).
     val parseOpts = Map(
       "sep" -> delim, "quote" -> quotechar,
       "nullValue" -> nullValues.headOption.getOrElse(""),
-      "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corruptCol)
+      "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> DataSet.CorruptCol)
     val parseSchema = StructType(hinted.fields :+
-      StructField(corruptCol, StringType, nullable = true))
+      StructField(DataSet.CorruptCol, StringType, nullable = true))
     val parsed = dataLines(pattern, hasHeader).toDF("value")
       .select(col("value").as(DataSet.RawLine),
-        from_csv(col("value"), parseSchema, parseOpts).as("_p"))
+        from_csv(col("value"), parseSchema, parseOpts).as(DataSet.Parsed))
       .withColumn(DataSet.RowId, monotonically_increasing_id())
-    var df = parsed.filter(col(s"_p.$corruptCol").isNull)
-      .select(col("_p.*") +: Seq(col(DataSet.RowId)): _*)
-      .drop(corruptCol)
-    val failed = parsed.filter(col(s"_p.$corruptCol").isNotNull)
-      .select(col("_p.*") +: Seq(col(DataSet.RawLine), col(DataSet.RowId)): _*)
-    // extra null-value strings beyond the first (Spark parses only one
-    // natively): honored as post-read substitution — full-fidelity for
-    // string columns; for typed columns a row whose cell holds a secondary
-    // null token cannot parse and diverts to the error channel instead
-    for (nv <- nullValues.drop(1); c <- hinted.fieldNames)
-      df = df.withColumn(c, when(col(c) === nv, lit(null)).otherwise(col(c)))
-    DataSet.fromDataFrameWithParseErrors(this, df, failed, hinted, parseOpts)
+    DataSet.fromCsvParse(this, parsed, hinted, parseOpts, nullValues.drop(1))
   }
 
   /** Non-blank DATA lines of a csv glob: with a header, the first line of
@@ -290,67 +265,138 @@ final class Context(val spark: SparkSession, val options: Map[String, String] = 
     ls(pattern).foreach { f => val p = new Path(f); fs(p).delete(p, true) }
 }
 
-/** Driver-side CSV dialect sniffing — the capability analogue of the
+/** Driver-side CSV detection — the capability analogue of the
   * reference's `CSVStatistic` sampling (`utils/include/CSVStatistic.h:37-88`):
-  * reads a small head sample of the first matching file and picks the
-  * delimiter whose per-line count is most consistent, then decides header
-  * presence by comparing first-line vs body numeric-ness. */
+  * one bounded head sample of the glob ([[sample]]) answers every question
+  * `Context.csv` asks before it plans the scan. The delimiter is the
+  * candidate whose per-line count is most consistent, header presence
+  * compares first-line vs body numeric-ness, and the column types come from
+  * Spark's `CSVInferSchema` run over the sample on the driver ([[Typer]]). */
 object CsvSniffer {
   private val Candidates = Seq(',', ';', '\t', '|')
+  /** Raw lines the delimiter and header sniffers look at. */
+  private val SniffLines = 64
 
-  private def sampleLines(spark: SparkSession, pattern: String, n: Int = 64): Seq[String] = {
-    // Driver-side head sample, like the reference's maxDetectionMemory
-    // read — but accumulated ACROSS glob files until `n` lines: at scale
-    // an empty shuffle partition routinely writes a header-only (or fully
-    // empty) part file, and a glob whose FIRST file is one of those must
-    // not blind the sniffer to the real data behind it (found live: the
-    // sf1-staged 311 fixture wrote part-00000 as a lone header line, the
-    // single-file sampler returned 1 line, header detection bailed to
-    // false, and every column came back _c0/_c1/_c2). The file probe is
-    // capped: each open is a driver round-trip, and a glob with thousands
-    // of empty parts should degrade to "no sample", not a driver stall.
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // globStatus already returns each file's length — skip zero-byte parts
-    // for free so the capped opens below are spent only on files that can
-    // contain lines (a glob whose first 64 parts are empty must still
-    // reach the data behind them)
-    val files = Option(fs.globStatus(p)).map(_.toSeq) match {
-      case Some(Nil) | None => Seq(p) // no glob expansion — try the literal
-      case Some(matched) => matched.filter(_.getLen > 0).map(_.getPath)
-    }
-    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(
-      spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
-    var got = 0
-    for (f <- files.take(64) if got < n) {
-      val raw = fs.open(f)
-      // compressed inputs (.gz/.bz2/…) must sniff DECOMPRESSED text — the
-      // same codec resolution Spark's own line reader applies per file
-      val codec = codecs.getCodec(f)
-      val in: java.io.InputStream =
-        if (codec == null) raw
-        else try codec.createInputStream(raw) catch {
-          case e: Throwable => raw.close(); throw e // don't leak the handle
-        }
-      try {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        src.getLines().take(n - got).foreach { l => out += l; got += 1 }
-      } finally in.close()
-    }
-    out.result()
+  /** Raw lines of the glob's files in name order, one entry per file that
+    * yielded any line. */
+  final case class Sample(files: Seq[Seq[String]]) {
+    /** The first [[SniffLines]] raw lines (headers included), non-blank. */
+    private[api] def sniffLines: Seq[String] =
+      files.iterator.flatten.take(SniffLines).filter(_.nonEmpty).toSeq
+
+    /** The sample's data lines: each file's first line dropped when there
+      * is a header — the same line discipline as the scan — and blank
+      * lines dropped, at most `n`. */
+    def dataLines(hasHeader: Boolean, n: Int): Seq[String] =
+      files.iterator.flatMap(f => if (hasHeader) f.drop(1) else f)
+        .filter(_.nonEmpty).take(n).toSeq
+
+    /** Column names from the first line of the first file with a line:
+      * quote-aware split — a quoted header field may contain the
+      * delimiter, and `""` inside quotes is an escaped quote. */
+    def headerFields(delim: String, quote: String): Array[String] =
+      files.iterator.flatten.nextOption() match {
+        case None => Array.empty
+        case Some(h) => splitQuoted(h, delim, quote.headOption.getOrElse('"'))
+      }
   }
 
-  /** Column names from the header line of the first NON-EMPTY file
-    * (driver-side read): quote-aware split — a quoted header field may
-    * contain the delimiter, and `""` inside quotes is an escaped quote.
-    * Empty input → empty. */
-  def headerFields(spark: SparkSession, pattern: String, delim: String,
-      quote: String): Array[String] =
-    sampleLines(spark, pattern, n = 1).headOption match {
-      case None => Array.empty
-      case Some(h) => splitQuoted(h, delim, quote.headOption.getOrElse('"'))
+  /** One driver-side head sample of a csv glob, like the reference's
+    * maxDetectionMemory read — accumulated ACROSS glob files in name order:
+    * at scale an empty shuffle partition routinely writes a header-only (or
+    * fully empty) part file, and a glob whose FIRST file is one of those
+    * must not blind detection to the real data behind it (found live: the
+    * sf1-staged 311 fixture wrote part-00000 as a lone header line, and
+    * every column came back _c0/_c1/_c2). Zero-byte parts are skipped from
+    * the glob listing's lengths without an open; compressed inputs
+    * (.gz/.bz2/…) are read DECOMPRESSED through the same codec resolution
+    * Spark's line reader applies per file. Reading stops once the sample
+    * holds `maxData` non-blank data lines under either header answer and
+    * at least [[SniffLines]] raw lines. */
+  def sample(spark: SparkSession, pattern: String, maxData: Int): Sample = {
+    val p = new Path(pattern)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    // a matched directory contributes its visible files, as in the scan's
+    // FileInputFormat listing
+    def visible(st: org.apache.hadoop.fs.FileStatus) =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter { c =>
+        val n = c.getPath.getName
+        c.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+    val files = Option(fs.globStatus(p)).map(_.toSeq) match {
+      case Some(Nil) | None => Seq(p) // no glob expansion — try the literal
+      case Some(matched) => matched.flatMap(visible).filter(_.getLen > 0).map(_.getPath)
     }
+    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    val out = Seq.newBuilder[Seq[String]]
+    var raw = 0
+    var data = 0 // non-blank lines past each file's first line
+    def enough = data >= maxData && raw >= SniffLines
+    for (f <- files.iterator.takeWhile(_ => !enough)) {
+      val in0 = fs.open(f)
+      val codec = codecs.getCodec(f)
+      val in: java.io.InputStream =
+        if (codec == null) in0
+        else try codec.createInputStream(in0) catch {
+          case e: Throwable => in0.close(); throw e // don't leak the handle
+        }
+      // InputStreamReader replaces malformed UTF-8 like Hadoop's Text does
+      val reader = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+      try {
+        val lines = Seq.newBuilder[String]
+        var line = reader.readLine()
+        var first = true
+        while (line != null) {
+          lines += line
+          raw += 1
+          if (!first && line.nonEmpty) data += 1
+          first = false
+          line = if (enough) null else reader.readLine()
+        }
+        val got = lines.result()
+        if (got.nonEmpty) out += got
+      } finally reader.close()
+    }
+    Sample(out.result())
+  }
+
+  /** Column typing over sample lines with Spark's own CSV inference: the
+    * options `spark.read.option("inferSchema", "true")` would build from
+    * the same dialect, univocity tokenization, then `CSVInferSchema`'s
+    * `inferRowType` folded over the lines and `toStructFields` — the
+    * aggregate the reader runs as Spark jobs (there `mergeRowTypes` joins
+    * the per-partition folds; one driver-side fold needs none), computed
+    * here under the session's SQL conf. */
+  final class Typer(spark: SparkSession, delim: String, quote: String, nullValue: String) {
+    import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+    import org.apache.spark.sql.internal.SQLConf
+
+    private val conf = spark.sessionState.conf
+    private def withConf[T](f: => T): T = SQLConf.withExistingConf(conf)(f)
+    private val options = withConf(new CSVOptions(
+      Map("inferSchema" -> "true", "mode" -> "PERMISSIVE", "header" -> "false",
+        "sep" -> delim, "quote" -> quote, "nullValue" -> nullValue),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone))
+    private lazy val parser = new com.univocity.parsers.csv.CsvParser(options.asParserSettings)
+
+    /** The reader's filter: blank (after trim) lines never reach inference. */
+    private def kept(lines: Seq[String]): Seq[String] = lines.filter(_.trim.nonEmpty)
+
+    /** Field count: the tokens of the first kept line (0 when none). */
+    def width(lines: Seq[String]): Int =
+      kept(lines).headOption.flatMap(l => Option(parser.parseLine(l))).map(_.length).getOrElse(0)
+
+    /** Inferred type of each of the `width` fields. */
+    def infer(lines: Seq[String], width: Int): Seq[DataType] = withConf {
+      val inference = new CSVInferSchema(options)
+      val types = kept(lines).iterator.map(parser.parseLine).filter(_ != null)
+        .foldLeft(Array.fill[DataType](width)(NullType))(inference.inferRowType)
+      inference.toStructFields(types, Array.tabulate(width)(i => s"_c$i")).map(_.dataType).toSeq
+    }
+  }
 
   private[api] def splitQuoted(line: String, delim: String, q: Char): Array[String] = {
     val out = Array.newBuilder[String]
@@ -376,8 +422,8 @@ object CsvSniffer {
     out.result().map(_.trim)
   }
 
-  def sniffDelimiter(spark: SparkSession, pattern: String): String = {
-    val lines = sampleLines(spark, pattern).filter(_.nonEmpty)
+  def sniffDelimiter(sample: Sample): String = {
+    val lines = sample.sniffLines
     if (lines.isEmpty) return ","
     val best = Candidates.maxBy { d =>
       val counts = lines.map(_.count(_ == d))
@@ -387,8 +433,8 @@ object CsvSniffer {
     best.toString
   }
 
-  def sniffHeader(spark: SparkSession, pattern: String, delim: String): Boolean = {
-    val lines = sampleLines(spark, pattern).filter(_.nonEmpty)
+  def sniffHeader(sample: Sample, delim: String): Boolean = {
+    val lines = sample.sniffLines
     if (lines.size < 2) return false
     def numericCells(l: String) =
       l.split(java.util.regex.Pattern.quote(delim), -1)

@@ -15,7 +15,10 @@ import org.apache.spark.sql.types._
   * `_g_cls` (exception class name), `_g_msg`. `reapply` re-runs a resolver
   * over matching rows and is defined only while this is the most recent
   * operator — Tuplex resolvers bind to the immediately preceding op
-  * (`dataset.py:163-167`); any further transform retires the batch. */
+  * (`dataset.py:163-167`); any further transform retires the batch.
+  * `fuse` builds the FIRST resolve inside the operator's own scan (UDF ops
+  * and the csv source's parse): it returns the merged good frame and the
+  * still-failed rows, and is dropped once the batch's row set changes. */
 private[api] final case class BadBatch(
     opId: Int,
     rows: DataFrame,
@@ -380,15 +383,15 @@ final class DataSet private (
     resolveName(GraftErr.clsName(code))(f)
 
   private def resolveName[A, B](cls: String)(f: A => B): DataSet = bad match {
-    // Pristine batch (first resolve after the failing op): SINGLE-SCAN
-    // COMPOSED merge — op function and resolver run inside ONE udf closure
-    // (normal-case specialization), so the merged good frame is one plan
-    // over one pass of the input instead of `good ∪ re-executed(bad)`,
-    // which duplicates the whole upstream subtree (scans, joins) per
-    // resolver — and a repaired row never materializes error strings or
-    // pays a second ScalaUDF round-trip. Chained resolves/ignores mutate
-    // the batch and fall back to the union path below (fuse is only valid
-    // against the untouched split).
+    // Pristine batch (first resolve after the failing op or csv parse):
+    // SINGLE-SCAN COMPOSED merge — op function (or parse) and resolver run
+    // in ONE projection (normal-case specialization), so the merged good
+    // frame is one plan over one pass of the input instead of
+    // `good ∪ re-executed(bad)`, which duplicates the whole upstream
+    // subtree (scans, joins) per resolver — and a repaired row never
+    // materializes error strings or pays a second ScalaUDF round-trip.
+    // Chained resolves/ignores mutate the batch and fall back to the union
+    // path below (fuse is only valid against the untouched split).
     case head :: rest if head.fuse.isDefined =>
       val (merged, newBad) = head.fuse.get(cls, f)
       new DataSet(ctx, merged,
@@ -700,72 +703,93 @@ object DataSet {
   private[api] def fromDataFrame(ctx: Context, df: DataFrame): DataSet =
     new DataSet(ctx, df.withColumn(RowId, monotonically_increasing_id()), Nil, 0)
 
-  /** Source with input-exception rows (CSV parse failures): the failed rows
-    * populate the error channel so `ignore`/`exceptionCounts`/`resolve` see
-    * them. Parse errors are resolvable like UDF exceptions — the reference
-    * feeds both through one resolver path (`PhysicalPlan.cc:202-208`,
-    * `ResolveTask.cc:268`): the reapply re-parses the carried raw line
-    * under the relaxed all-string schema and hands the resolver a
-    * `Row` of string cells; it returns a row of the dataset's typed
-    * schema (or throws, chaining into further resolvers). */
-  private[api] def fromDataFrameWithParseErrors(
-      ctx: Context, df: DataFrame, failed: DataFrame,
-      schema: StructType, parseOpts: Map[String, String]): DataSet = {
-    // both frames arrive CARRYING RowId from one shared id space (two
-    // filters of the same scan) — reassigning here would renumber each
-    // channel independently and break ordered merges. The corrupt-record
-    // column (raw line), when present, becomes the exception message.
-    require(df.columns.contains(RowId) && failed.columns.contains(RowId),
-      "parse-error source frames must share a pre-assigned row id")
-    val msg = if (failed.columns.contains("_g_corrupt")) col("_g_corrupt")
-      else lit("row did not parse against the inferred schema")
-    val failedRows = failed
-      .withColumn(ErrCls, lit(ParseErrorClass))
-      .withColumn(ErrMsg, msg)
-      .drop("_g_corrupt")
-    new DataSet(ctx, df,
-      List(BadBatch(0, failedRows, Some(csvParseReapply(schema, parseOpts)))), 0)
+  /** Corrupt-record column of a csv source's `from_csv` parse struct. */
+  private[api] val CorruptCol = "_g_corrupt"
+  /** The `from_csv` parse struct of a csv source's one projection. */
+  private[api] val Parsed = "_p"
+
+  /** Csv source over its ONE parse projection `parsed` (columns [[RawLine]],
+    * the [[Parsed]] struct of `schema` plus [[CorruptCol]], and a shared
+    * [[RowId]]): the good channel and the input-exception rows are two
+    * filters of it. Parse errors are resolvable like UDF exceptions — the
+    * reference feeds both through one resolver path (`PhysicalPlan.cc:202-208`,
+    * `ResolveTask.cc:268`): the resolver gets a `Row` of string cells
+    * re-parsed from the raw line under the relaxed all-string schema and
+    * returns a row of the typed `schema` (or throws, chaining into further
+    * resolvers). The first `resolve` is FUSED into the same scan: a
+    * `CaseWhen` runs [[csvFixUdf]] only on rows whose corrupt column is
+    * set, and the result splits into ok/still-failed with the UDF ops'
+    * filters — no `Union`, no second scan and parse of the input. Still-
+    * failed rows keep [[RawLine]] and [[RowId]], so a chained resolver (the
+    * reapply, on the union path) retries from the original line and merges
+    * in file order. `extraNulls` (null-value strings beyond the first —
+    * Spark parses only one natively) are substituted on the good channel
+    * only — for typed columns a row whose cell holds a secondary null
+    * token cannot parse and diverts to the error channel instead. */
+  private[api] def fromCsvParse(ctx: Context, parsed: DataFrame, schema: StructType,
+      parseOpts: Map[String, String], extraNulls: Seq[String]): DataSet = {
+    val p = col(Parsed)
+    val corrupt = p.getField(CorruptCol)
+    def cell(n: String): Column =
+      extraNulls.foldLeft(p.getField(n))((c, nv) => when(c === nv, lit(null)).otherwise(c))
+    val good = parsed.filter(corrupt.isNull)
+      .select(schema.fieldNames.map(n => cell(n).as(n)) :+ col(RowId): _*)
+    val failed = parsed.filter(corrupt.isNotNull)
+      .select(schema.fieldNames.map(n => p.getField(n).as(n)) ++ Seq(col(RawLine),
+        col(RowId), lit(ParseErrorClass).as(ErrCls), corrupt.as(ErrMsg)): _*)
+    def fix(fn: AnyRef): Column =
+      csvFixUdf(schema, fn.asInstanceOf[Row => Row])(relaxedCells(schema, parseOpts))
+    val reapply = (fn: AnyRef, rows: DataFrame) =>
+      splitFixed(rows.withColumn(Fix, fix(fn)), schema, n => col(Fix).getField(n))
+    val fuse = (cls: String, fn: AnyRef) =>
+      if (cls != ParseErrorClass) (good, failed) // the resolver matches no parse error
+      else splitFixed(parsed.withColumn(Fix, when(corrupt.isNotNull, fix(fn))), schema,
+        n => when(corrupt.isNull, cell(n)).otherwise(col(Fix).getField(n)))
+    new DataSet(ctx, good, List(BadBatch(0, failed, Some(reapply), Some(fuse))), 0)
   }
 
-  /** Resolver reapply for input parse errors: all-string re-parse of the
-    * raw line → user resolver `Row => Row` → typed row. The raw line is
-    * carried through still-failing rows so chained resolvers can retry
-    * from the original input, and the resolver's own exception class/
-    * message replace the parse error's for matching and reporting. */
-  private def csvParseReapply(schema: StructType,
-      parseOpts: Map[String, String]): (AnyRef, DataFrame) => (DataFrame, DataFrame) =
-    (fn, rows) => {
-      val f = fn.asInstanceOf[Row => Row]
-      val strSchema = StructType(schema.fields.map(x =>
-        StructField(x.name, StringType, nullable = true)))
-      // relaxed parse: no failure mode — every cell lands as a string
-      val relaxedOpts = parseOpts - "mode" - "columnNameOfCorruptRecord"
-      val nOut = schema.length
-      val outNullable = schema.fields.toSeq.map(_.copy(nullable = true))
-      val full = StructType(outNullable ++ Seq(
-        StructField(RawLine, StringType, nullable = true),
-        StructField(RowId, LongType, nullable = false),
-        StructField(ErrCls, StringType, nullable = true),
-        StructField(ErrMsg, StringType, nullable = true)))
-      val enc = org.apache.spark.sql.Encoders.row(full)
-      val pre = rows.select(
-        from_csv(col(RawLine), strSchema, relaxedOpts).as("_g_cells"),
-        col(RawLine), col(RowId))
-      val mapped = pre.mapPartitions { it =>
-        it.map { r =>
-          val cells = r.getStruct(0); val raw = r.getString(1); val id = r.getLong(2)
-          try Row.fromSeq(f(cells).toSeq ++ Seq(raw, id, null, null))
-          catch { case e: Throwable =>
-            Row.fromSeq(Seq.fill[Any](nOut)(null) ++
-              Seq(raw, id, errName(e), String.valueOf(e.getMessage)))
-          }
+  /** The [[csvFixUdf]] result column of a csv resolve. */
+  private val Fix = "_g_fix"
+
+  /** The relaxed re-parse a csv resolver sees: every cell of the raw line
+    * as a string, no failure mode. */
+  private def relaxedCells(schema: StructType, parseOpts: Map[String, String]): Column =
+    from_csv(col(RawLine),
+      StructType(schema.fields.map(x => StructField(x.name, StringType, nullable = true))),
+      parseOpts - "mode" - "columnNameOfCorruptRecord")
+
+  /** Try-UDF of a csv resolve: relaxed cells → the resolver's typed row
+    * plus null class/message, or null fields plus the resolver's own
+    * exception class/message (which replace the parse error's for matching
+    * and reporting). Nondeterministic like [[tryUdf]]: one evaluation per
+    * row, pinned in its projection. */
+  private def csvFixUdf(schema: StructType, f: Row => Row) = {
+    val n = schema.length
+    val out = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
+      StructField(ErrCls, StringType, nullable = true),
+      StructField(ErrMsg, StringType, nullable = true)))
+    udf(new org.apache.spark.sql.api.java.UDF1[Row, Row] {
+      def call(cells: Row): Row =
+        try Row.fromSeq(f(cells).toSeq ++ Seq(null, null))
+        catch { case e: Throwable =>
+          Row.fromSeq(Seq.fill[Any](n)(null) ++ Seq(errName(e), String.valueOf(e.getMessage)))
         }
-      }(enc)
-      val ok = mapped.filter(col(ErrCls).isNull)
-        .select(schema.fieldNames.map(col) :+ col(RowId): _*)
-      val stillBad = mapped.filter(col(ErrCls).isNotNull)
-      (ok, stillBad)
-    }
+    }, out).asNondeterministic()
+  }
+
+  /** Split a frame carrying the [[Fix]] column into the ok rows (`value`
+    * of each field, plus the row id) and the still-failed rows (raw line
+    * and row id kept, the resolver's class and message). */
+  private def splitFixed(fixed: DataFrame, schema: StructType,
+      value: String => Column): (DataFrame, DataFrame) = {
+    val fix = col(Fix)
+    val ok = fixed.filter(fix.getField(ErrCls).isNull)
+      .select(schema.fieldNames.map(n => value(n).as(n)) :+ col(RowId): _*)
+    val stillBad = fixed.filter(fix.getField(ErrCls).isNotNull)
+      .select(schema.fieldNames.map(n => fix.getField(n).as(n)) ++ Seq(col(RawLine),
+        col(RowId), fix.getField(ErrCls).as(ErrCls), fix.getField(ErrMsg).as(ErrMsg)): _*)
+    (ok, stillBad)
+  }
 
   /** Exception class used for input parse failures (exact-name matched by
     * `ignore`/`resolve`, like every other error-channel class). */

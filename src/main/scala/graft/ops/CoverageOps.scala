@@ -86,10 +86,7 @@ object CoverageOps {
       // beyond that (same sizing as q_csv_roundtrip) — scale-adaptive,
       // nothing pinned to local mode. r15 A/B at sf0.1: the 4-member
       // fixture serialized both codec legs over 4 of 32 cores.
-      val gzParts = ((li.queryExecution.optimizedPlan.stats.sizeInBytes
-          / (256L << 20)).max(s.sparkContext.defaultParallelism.toLong)
-        .min(10000L)).toInt
-      li.repartition(gzParts)
+      li.repartition(Scale.unsplittableParts(li))
         .write.option("header", "true").option("compression", "gzip")
         .mode("overwrite").csv(out)
       ctx.csv(s"$out/*.csv.gz").toDF.agg(

@@ -124,11 +124,37 @@ object Scale {
     * (the Long.MaxValue-ish sentinel) fall back to cores — never
     * undersize what might be huge, never explode the part count on a
     * sentinel. */
-  def sinkParts(df: DataFrame, floor: Int = 4): Int = {
-    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
+  def sinkParts(df: DataFrame, floor: Int = 4): Int =
+    knownSize(df) match {
+      case Some(sz) => sinkPartsOf(df.sparkSession, sz, floor)
+      case None => math.max(floor, df.sparkSession.sparkContext.defaultParallelism)
+    }
+
+  /** Member count of an UNSPLITTABLE (gzip) sink: the member count is the
+    * scan parallelism of every later read, so at least one member per
+    * session core at any size and ~256 MB of input per member beyond
+    * that. Unknown stats fall back to cores, never to the 10k cap. */
+  def unsplittableParts(df: DataFrame): Int = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (sz <= 0 || sz > (BigInt(1) << 50)) math.max(floor, cores)
-    else sinkPartsOf(df.sparkSession, sz.toLong, floor)
+    knownSize(df).fold(cores)(sz =>
+      math.min(10000L, math.max(sz / (256L << 20), cores.toLong)).toInt)
+  }
+
+  /** The optimizer's size estimate of `df`, or None when the statistics
+    * are unknown: the Long.MaxValue-ish `defaultSizeInBytes` sentinel a
+    * row-mapping UDF or an RDD leaf reports (its /256 MiB still wraps
+    * negative through `toInt`). */
+  private def knownSize(df: DataFrame): Option[Long] = {
+    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (sz <= 0 || sz > (BigInt(1) << 50)) None else Some(sz.toLong)
+  }
+
+  /** Bytes stored under `path` on its Hadoop filesystem (0 when absent) —
+    * sizing through `FileSystem`, so non-local paths do not size to 0. */
+  def pathBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
   /** [[sinkParts]] from a KNOWN input byte count (for sinks whose plan

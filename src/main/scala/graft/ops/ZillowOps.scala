@@ -193,12 +193,9 @@ object ZillowOps {
       // UDFs whose optimizer stats are the unknown sentinel (measured:
       // ~e19), while the fixture bytes upper-bound the output. 4 parts
       // at sf0.1 exactly as before; cores-wide once each writer has
-      // ≥16 MB to format. (The fixture is a local temp dir by
-      // construction, so java.io sizing is sound here.)
-      val inBytes = Option(new java.io.File(s"$listings/listings").listFiles())
-        .map(_.filter(_.getName.endsWith(".csv")).map(_.length()).sum)
-        .getOrElse(0L)
-      sink.tocsv(out, numParts = Scale.sinkPartsOf(s, inBytes))
+      // ≥16 MB to format. Sized through the Hadoop FileSystem, so the
+      // fixture may live on any filesystem.
+      sink.tocsv(out, numParts = Scale.sinkPartsOf(s, Scale.pathBytes(s, s"$listings/listings")))
 
       // read the sink back — the oracle hashes the finished artifact
       ctx.csv(s"$out/*.csv", header = Some(true), delimiter = Some(","),

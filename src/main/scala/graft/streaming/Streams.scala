@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +19,8 @@ import org.apache.spark.sql.types._
   * data — so a bounded replay would otherwise hold its final windows in
   * state forever. The staged source appends one SENTINEL row far in the
   * future (2100-01-01); it advances the watermark past every real window
-  * end, the no-data micro-batch then flushes all real state, and the
+  * end, the no-data micro-batch then flushes all real state (the dedup
+  * drains, which emit on arrival, skip that batch), and the
   * sentinel's own group (never finalized, or filtered by key) stays out
   * of the results. On a true unbounded stream the sentinel is simply
   * unnecessary — the operators are identical. */
@@ -109,9 +111,49 @@ object Streams {
       .withColumn("ts", timestamp_micros(col("ts")))
   }
 
-  /** Drain `q` into a parquet file sink and read the result back.
-    * `statePartitions` sizes the state store for this query's keyspace —
-    * each state partition costs a store instance + commit + checkpoint
+  /** Cloned sessions the drains run on, one per (parent session, state
+    * partitions, RocksDB state store, flush batch needed). Each is created
+    * once with its whole drain configuration and never reconfigured (the
+    * only later write is `Tables.events`' idempotent `nanosAsLong` flag),
+    * so concurrent drains — Verify runs the registry in parallel — share
+    * it without racing on a session-global mutate, and no call pays for a
+    * fresh `newSession()` (a clone shares the SparkContext but owns its
+    * SQLConf). Weakly keyed by the parent: a clone holds no reference back
+    * to it. */
+  private val drainSessions =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(Int, Boolean, Boolean), SparkSession]]()
+
+  /** The cloned session for one drain configuration (see [[drainSessions]]).
+    * `statePartitions` sizes the state store (and every shuffle) for the
+    * query's keyspace; `rocksDbState` picks the RocksDB provider — the
+    * production provider once state outgrows the executor heap (the
+    * default HDFS-backed provider keeps the working set in memory):
+    * spilling, incremental checkpoints, bounded memory, same plans and
+    * answers. `flush = false` turns off no-data micro-batches: a drain
+    * whose stateful operator emits each row on arrival (dedup) finishes in
+    * its one data batch, while window, session and timer drains need the
+    * flush batch the sentinel's watermark triggers to emit their state. */
+  private[graft] def drainSession(parent: SparkSession, statePartitions: Int,
+      rocksDbState: Boolean = false, flush: Boolean = true): SparkSession = {
+    val byConf = drainSessions.synchronized(
+      drainSessions.computeIfAbsent(parent, _ => new ConcurrentHashMap()))
+    byConf.computeIfAbsent((statePartitions, rocksDbState, flush), _ => {
+      val s = parent.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      if (rocksDbState) s.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      if (!flush) s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      // bounded replay: retaining the default 100 checkpoint batches is
+      // pure metadata-churn headroom we never use (2-4 batches per drain)
+      s.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
+      s
+    })
+  }
+
+  /** Drain `q` into a parquet file sink and read the result back, on the
+    * [[drainSession]] for (`statePartitions`, `rocksDbState`, `flush`).
+    * Each state partition costs a store instance + commit + checkpoint
     * files EVERY batch (including no-data flush batches), so a
     * low-cardinality grouping (e.g. window × event_type) should not pay
     * for the session-wide shuffle width. Round-5's warmed A/B favored 8
@@ -122,23 +164,12 @@ object Streams {
     * 2 (window-agg shape: 1.35 s at 8 → 1.06 s at 2 per query; the
     * no-data flush batch and sink commit shrink with the file count).
     * At production keyspaces this sizes UP with state volume; the knob
-    * is per-query for exactly that reason. The override lives on a CLONED
-    * session (`newSession()` shares the SparkContext but owns its
-    * SQLConf), so concurrent streaming queries — Verify runs the registry
-    * in parallel — never race on a session-global mutate. */
+    * is per-query for exactly that reason. */
   private def runToParquet(spark0: SparkSession, statePartitions: Int,
-      rocksDbState: Boolean = false)(
+      rocksDbState: Boolean = false, flush: Boolean = true)(
       build: (SparkSession, String) => DataFrame): DataFrame = {
     val root = scratchDir("graft_stream_out").toString
-    val spark = spark0.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // RocksDB state store: the production provider once state outgrows the
-    // executor heap (the default HDFS-backed provider keeps the working
-    // set in memory) — spilling, incremental checkpoints, bounded memory.
-    // Same query plans, same answers; only the state backend changes.
-    if (rocksDbState) spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = drainSession(spark0, statePartitions, rocksDbState, flush)
     // Trigger choice was A/B-measured (round 6): Trigger.AvailableNow()
     // + awaitTermination — the obvious "bounded drain" candidate — was
     // ~8% SLOWER over the 15-query stream tier at sf0.1 (27.3 s vs
@@ -146,9 +177,6 @@ object Streams {
     // up-front batch planning and end-of-stream bookkeeping cost more
     // than processAllAvailable()'s poll. Default trigger + explicit
     // drain stays.
-    // bounded replay: retaining the default 100 checkpoint batches is
-    // pure metadata-churn headroom we never use (2-4 batches per drain)
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
     val prof = sys.env.contains("SPARK_GRAFT_STREAM_PROF")
     def now() = System.nanoTime()
     val t0 = now()
@@ -281,10 +309,12 @@ object Streams {
     * Including the event-time column in the key is what lets Spark drop
     * state past the watermark; for time-agnostic keys use
     * `dropDuplicatesWithinWatermark` (unbounded-lateness dups then slip
-    * through at the watermark horizon). */
+    * through at the watermark horizon). The operator emits each first
+    * occurrence on arrival, so the drain runs without the no-data flush
+    * batch: one micro-batch per drain of the staged input. */
   def dedupStream(spark: SparkSession, dir: String, keyCols: Seq[String],
       watermark: String = "1 day", replays: Int = 1): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+    runToParquet(spark, statePartitions = 2, flush = false) { (s, _) =>
       stagedEventStream(s, dir, replays)
         .withWatermark("ts", watermark)
         .dropDuplicates(keyCols :+ "ts")
@@ -301,11 +331,12 @@ object Streams {
     * Contract: duplicates are guaranteed dropped only when they arrive
     * within `watermark` of the first occurrence — exactly the
     * at-least-once redelivery case (`replays` simulates it; redeliveries
-    * land within the same staged read, well inside any real delay). */
+    * land within the same staged read, well inside any real delay).
+    * Like [[dedupStream]], one micro-batch with no flush batch. */
   def dedupWithinWatermarkStream(spark: SparkSession, dir: String,
       keyCols: Seq[String], watermark: String = "1 day",
       replays: Int = 2): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+    runToParquet(spark, statePartitions = 2, flush = false) { (s, _) =>
       stagedEventStream(s, dir, replays)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keyCols)
@@ -467,8 +498,7 @@ object Streams {
       replays: Int = 2): DataFrame = {
     val root = scratchDir("graft_stream_upsert").toString
     val tbl = s"$root/table"
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = drainSession(spark, statePartitions = 8)
     val src = stagedEventStream(s, dir, replays, maxFilesPerTrigger = Some(1))
     val q = src.writeStream
       .option("checkpointLocation", s"$root/chk")
@@ -619,8 +649,7 @@ object Streams {
     * for keys whose final op is an upsert. */
   def cdcApplyStream(spark0: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s = spark0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = drainSession(spark0, statePartitions = 8)
     val watch = cdcAssets.computeIfAbsent(dir, _ => {
       val w = scratchDir("graft_cdc_in").toString
       graft.ops.Tables.events(s, dir)
@@ -694,8 +723,7 @@ object Streams {
     * new document. */
   def dedupIngestStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = drainSession(spark, statePartitions = 8)
     val (idxPath, watch) = ingestAssets.computeIfAbsent(dir, _ => {
       val idx = scratchDir("graft_ingest_idx").toString
       val docs = s.read.parquet(s"$dir/documents.parquet")

@@ -195,6 +195,31 @@ class ScaleSpec extends AnyFunSuite {
     } finally { cached.unpersist(): Unit }
   }
 
+  test("sink part counts: unknown stats fall back to cores, never to the cap") {
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft_scale_parts").toString
+    spark.range(100).write.mode("overwrite").parquet(s"$dir/t")
+    val known = spark.read.parquet(s"$dir/t")
+    // a KB-sized frame: one gzip member per core, the csv sink's floor of 4
+    assert(Scale.unsplittableParts(known) == cores)
+    assert(Scale.sinkParts(known) == 4)
+    // RDD-backed: the optimizer reports the Long.MaxValue-ish sentinel
+    val rddBacked = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType))))
+    assert(rddBacked.queryExecution.optimizedPlan.stats.sizeInBytes > (BigInt(1) << 50))
+    assert(Scale.unsplittableParts(rddBacked) == cores)
+    assert(Scale.sinkParts(rddBacked) == math.max(4, cores))
+    // input sizing through the Hadoop FileSystem: the parquet parts' bytes
+    // (Hadoop's checksum files are not counted), 0 for a missing path
+    val onDisk = new java.io.File(s"$dir/t").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    assert(onDisk > 0 && Scale.pathBytes(spark, s"$dir/t") == onDisk)
+    assert(Scale.pathBytes(spark, s"$dir/missing") == 0L)
+  }
+
   test("mergeUpsert: updates win, inserts land, NULL data columns stay honest") {
     import spark.implicits._
     val base = Seq((1L, Some("a")), (2L, Some("b")), (3L, None: Option[String]))
