@@ -143,10 +143,13 @@ final class Context(val spark: SparkSession, val options: Map[String, String] = 
     // under the hinted type must parse, not fall into the error channel
     // because the sample guessed a narrower type. Baking the final names
     // into the read schema keeps the good frame, the error channel, and
-    // resolver reapplies on one consistent naming (csv schema matching is
+    // the resolvers on one consistent naming (csv schema matching is
     // positional under enforceSchema, so names never affect parsing).
     val names = {
-      val headerNames = if (hasHeader) sample.headerFields(delim, quotechar) else Array.empty[String]
+      // the first line of the first file with a line, tokenized like the data
+      val headerNames =
+        if (!hasHeader) Array.empty[String]
+        else sample.files.iterator.flatten.nextOption().fold(Array.empty[String])(typer.header)
       if (columns.nonEmpty) {
         require(columns.length == width,
           s"columns has ${columns.length} names for $width csv fields")
@@ -290,15 +293,6 @@ object CsvSniffer {
     def dataLines(hasHeader: Boolean, n: Int): Seq[String] =
       files.iterator.flatMap(f => if (hasHeader) f.drop(1) else f)
         .filter(_.nonEmpty).take(n).toSeq
-
-    /** Column names from the first line of the first file with a line:
-      * quote-aware split — a quoted header field may contain the
-      * delimiter, and `""` inside quotes is an escaped quote. */
-    def headerFields(delim: String, quote: String): Array[String] =
-      files.iterator.flatten.nextOption() match {
-        case None => Array.empty
-        case Some(h) => splitQuoted(h, delim, quote.headOption.getOrElse('"'))
-      }
   }
 
   /** One driver-side head sample of a csv glob, like the reference's
@@ -363,7 +357,8 @@ object CsvSniffer {
     Sample(out.result())
   }
 
-  /** Column typing over sample lines with Spark's own CSV inference: the
+  /** Header names and column typing over sample lines with Spark's own
+    * CSV tokenizer and inference: the
     * options `spark.read.option("inferSchema", "true")` would build from
     * the same dialect, univocity tokenization, then `CSVInferSchema`'s
     * `inferRowType` folded over the lines and `toStructFields` — the
@@ -389,6 +384,14 @@ object CsvSniffer {
     def width(lines: Seq[String]): Int =
       kept(lines).headOption.flatMap(l => Option(parser.parseLine(l))).map(_.length).getOrElse(0)
 
+    /** Column names from a header line: its tokens trimmed, `_c<i>` for
+      * a null (empty) token. */
+    def header(line: String): Array[String] =
+      Option(parser.parseLine(line)).getOrElse(Array.empty[String]).zipWithIndex.map {
+        case (null, i) => s"_c$i"
+        case (f, _) => f.trim
+      }
+
     /** Inferred type of each of the `width` fields. */
     def infer(lines: Seq[String], width: Int): Seq[DataType] = withConf {
       val inference = new CSVInferSchema(options)
@@ -396,30 +399,6 @@ object CsvSniffer {
         .foldLeft(Array.fill[DataType](width)(NullType))(inference.inferRowType)
       inference.toStructFields(types, Array.tabulate(width)(i => s"_c$i")).map(_.dataType).toSeq
     }
-  }
-
-  private[api] def splitQuoted(line: String, delim: String, q: Char): Array[String] = {
-    val out = Array.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inQuotes = false
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuotes) {
-        if (c == q && i + 1 < line.length && line.charAt(i + 1) == q) {
-          cur += q; i += 1 // escaped quote
-        } else if (c == q) inQuotes = false
-        else cur += c
-      } else if (c == q && cur.toString.trim.isEmpty) {
-        cur.clear() // quote after only leading whitespace opens the field
-        inQuotes = true
-      } else if (line.startsWith(delim, i)) {
-        out += cur.result(); cur.clear(); i += delim.length - 1
-      } else cur += c
-      i += 1
-    }
-    out += cur.result()
-    out.result().map(_.trim)
   }
 
   def sniffDelimiter(sample: Sample): String = {

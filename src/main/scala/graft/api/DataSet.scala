@@ -6,24 +6,29 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** One `resolve`/`ignore` attached to a failable operator's error channel:
+  * a resolver for class `cls` (its function takes what the operator's
+  * function takes) or an ignore of `cls`. */
+private[api] sealed trait Step
+private[api] final case class Resolve(cls: String, fn: AnyRef) extends Step
+private[api] final case class Ignore(cls: String) extends Step
+
 /** One batch of rows that raised inside a failable operator, pending
   * `resolve`/`ignore` (reference semantics: `core/src/logical/
   * ResolveOperator.cc`, `python/tuplex/dataset.py:162-199`).
   *
-  * `rows` carries the operator's *input* columns (what a resolver function
-  * receives) plus bookkeeping: `_g_rowid` (stable merge-in-order id),
-  * `_g_cls` (exception class name), `_g_msg`. `reapply` re-runs a resolver
-  * over matching rows and is defined only while this is the most recent
-  * operator — Tuplex resolvers bind to the immediately preceding op
-  * (`dataset.py:163-167`); any further transform retires the batch.
-  * `fuse` builds the FIRST resolve inside the operator's own scan (UDF ops
-  * and the csv source's parse): it returns the merged good frame and the
-  * still-failed rows, and is dropped once the batch's row set changes. */
+  * `rows` are the still-failed rows with their bookkeeping: `_g_rowid`
+  * (stable merge-in-order id), `_g_cls` (exception class name), `_g_msg`.
+  * `steps` are the handlers attached so far, in call order. `rebuild`
+  * plans the operator over its pristine input with a given handler chain
+  * and returns the (good, still-failed) frames; it is defined only while
+  * this is the most recent operator — Tuplex resolvers bind to the
+  * immediately preceding op (`dataset.py:163-167`); any further transform
+  * retires the batch. */
 private[api] final case class BadBatch(
-    opId: Int,
     rows: DataFrame,
-    reapply: Option[(AnyRef, DataFrame) => (DataFrame, DataFrame)],
-    fuse: Option[(String, AnyRef) => (DataFrame, DataFrame)] = None)
+    rebuild: Option[List[Step] => (DataFrame, DataFrame)],
+    steps: List[Step] = Nil)
 
 /** Immutable, lazily-evaluated pipeline node with Tuplex's operator
   * surface (SURVEY.md §2) re-expressed on Spark DataFrames.
@@ -34,6 +39,10 @@ private[api] final case class BadBatch(
   * the reference's normal-case/exception-path split
   * (`core/src/ee/local/LocalBackend.cc:957`, `ResolveTask.cc:268`) —
   * minus speculative compilation, which the JVM makes unnecessary.
+  * Every `resolve`/`ignore`, first or chained, extends the failing
+  * operator's handler chain, and the operator is re-planned with the whole
+  * chain inside its own scan — as the reference compiles one resolve path
+  * per stage with every resolver in it (`StageBuilder.cc:1105-1340`).
   * `collect()` merges resolved rows back in original row order via the
   * stable `_g_rowid`, matching `mergeExceptionsInOrder`
   * (`LocalBackend.cc:841-852`); order is intentionally not guaranteed
@@ -46,8 +55,7 @@ private[api] final case class BadBatch(
 final class DataSet private (
     val ctx: Context,
     private val good: DataFrame,
-    private val bad: List[BadBatch],
-    private val opId: Int) {
+    private val bad: List[BadBatch]) {
 
   import DataSet._
 
@@ -59,8 +67,8 @@ final class DataSet private (
   /** The public DataFrame view (no bookkeeping columns). */
   def toDF: DataFrame = good.drop(HiddenCols.toSeq: _*)
 
-  private def retired: List[BadBatch] = bad.map(_.copy(reapply = None, fuse = None))
-  private def next(df: DataFrame): DataSet = new DataSet(ctx, df, retired, opId + 1)
+  private def retired: List[BadBatch] = bad.map(_.copy(rebuild = None))
+  private def next(df: DataFrame): DataSet = new DataSet(ctx, df, retired)
   /** Rebuild row ids after an order-destroying op (join/agg/set op); a
     * stale per-expansion sub-id would misorder, so it goes too. */
   private def reid(df: DataFrame): DataFrame =
@@ -98,273 +106,160 @@ final class DataSet private (
 
   // ------------------------------------- failable UDF ops (error channel)
 
-  /** Try-wrapped UDF returning `(value, errClass, errMsg)`. Marked
-    * NONDETERMINISTIC on purpose (the function itself is pure): Catalyst
-    * freely duplicates deterministic expressions — predicate pushdown
-    * substitutes the UDF into every filter that references `_g_res`, and
-    * project collapsing inlines it per extracted field, so a throwing UDF
-    * was re-executed (with exception construction) up to 5× per row.
-    * The nondeterministic mark pins ONE evaluation per row in its own
-    * projection; filters above it reference the materialized attribute.
-    * Cost: predicates no longer migrate below the UDF projection — which
-    * also matches the reference's semantics, where the exception set is
-    * fixed by pipeline position, not plan-dependent. */
-  private def tryUdf[A: TypeTag, B: TypeTag](f: A => B) =
-    udf((a: A) =>
-      try (Option(f(a)), null: String, null: String)
-      catch { case e: Throwable => (None: Option[B], errName(e), String.valueOf(e.getMessage)) })
-      .asNondeterministic()
-
-  /** Composed try-resolve UDF: the op's function and its resolver fused
-    * into ONE closure (normal-case specialization, the reference's
-    * StageBuilder technique). A row the resolver repairs never
-    * materializes its error class/message into a Catalyst row and never
-    * pays a second ScalaUDF round-trip — the throw is caught and resolved
-    * inside the same invocation. Only rows that stay failed (non-matching
-    * class, or the resolver itself threw) encode error strings. */
-  private def tryResolveUdf[A: TypeTag, B: TypeTag](
-      f: A => B, cls: String, g: A => B) = {
-    val hit = clsHit(cls)
-    udf((a: A) =>
-      try (Option(f(a)), null: String, null: String)
-      catch {
-        case e: Throwable if hit(e) =>
-          try (Option(g(a)), null: String, null: String)
-          catch { case e2: Throwable =>
-            (None: Option[B], errName(e2), String.valueOf(e2.getMessage)) }
-        case e: Throwable =>
-          (None: Option[B], errName(e), String.valueOf(e.getMessage))
-      }).asNondeterministic() // see tryUdf: pin one evaluation per row
+  /** A failable operator: `build(steps)` plans it over this node's frame
+    * with the handler chain `steps` and returns (good, still-failed). The
+    * batch keeps `build`, so each later `resolve`/`ignore` re-plans the
+    * operator from the same input with the longer chain. */
+  private def failable(build: List[Step] => (DataFrame, DataFrame)): DataSet = {
+    val (ok, failed) = build(Nil)
+    new DataSet(ctx, ok, BadBatch(failed, Some(build)) :: retired)
   }
 
+  /** The op's function and its handler chain as ONE UDF returning
+    * `(value, errClass, errMsg)` ([[runChain]]): a row a resolver repairs
+    * never materializes its error class/message into a Catalyst row and
+    * never pays a second ScalaUDF round-trip (normal-case specialization,
+    * the reference's StageBuilder technique). Marked NONDETERMINISTIC on
+    * purpose (the function itself is pure): Catalyst freely duplicates
+    * deterministic expressions — predicate pushdown substitutes the UDF
+    * into every filter that references `_g_res`, and project collapsing
+    * inlines it per extracted field, so a throwing UDF was re-executed
+    * (with exception construction) up to 5× per row. The nondeterministic
+    * mark pins ONE evaluation per row in its own projection; filters above
+    * it reference the materialized attribute. Cost: predicates no longer
+    * migrate below the UDF projection — which also matches the reference's
+    * semantics, where the exception set is fixed by pipeline position, not
+    * plan-dependent. */
+  private def chainUdf[A: TypeTag, B: TypeTag](f: A => B, steps: List[Step]) =
+    udf((a: A) => runChain(f, steps, g => g.asInstanceOf[A => B](a)))
+      .asNondeterministic()
+
+  /** Two-argument [[chainUdf]]. */
+  private def chainUdf2[A1: TypeTag, A2: TypeTag, B: TypeTag](
+      f: (A1, A2) => B, steps: List[Step]) =
+    udf((a1: A1, a2: A2) => runChain(f, steps, g => g.asInstanceOf[(A1, A2) => B](a1, a2)))
+      .asNondeterministic()
+
   /** Split a frame that has a `_g_res = (value, cls, msg)` struct into
-    * (ok-with-column-set, bad-with-original-input) halves. */
+    * (ok-with-column-set, failed-with-original-input) halves; rows an
+    * ignore dropped are in neither. */
   private def split(tmp: DataFrame, name: String): (DataFrame, DataFrame) = {
     val ok = tmp.filter(col("_g_res._2").isNull)
       .withColumn(name, col("_g_res._1")).drop("_g_res")
-    val failed = tmp.filter(col("_g_res._2").isNotNull)
+    val failed = tmp.filter(col("_g_res._2") =!= Dropped)
       .withColumn(ErrCls, col("_g_res._2"))
       .withColumn(ErrMsg, col("_g_res._3"))
       .drop("_g_res")
     (ok, failed)
   }
 
-  private def failableColumnOp[A: TypeTag, B: TypeTag](
-      name: String, in: Column, f: A => B): DataSet = {
-    val u = tryUdf(f)
-    val tmp = good.withColumn("_g_res", u(in))
-    val (ok, failed) = split(tmp, name)
-    val reapply = (fn: AnyRef, rows: DataFrame) => {
-      val ug = tryUdf(fn.asInstanceOf[A => B])
-      split(rows.drop(ErrCls, ErrMsg).withColumn("_g_res", ug(in)), name)
-    }
-    // Single-scan resolve, COMPOSED (r14): one UDF whose closure runs the
-    // op's function and, on a matching throw, the resolver — replacing the
-    // previous two-UDF CaseWhen merge (plan nodes: 2 UDF evals + CASE
-    // projection + keep-filter → 1 UDF eval + null-filter). Built from
-    // `good`, not `tmp`: the op's own split plan is discarded when the
-    // fused path fires, so nothing evaluates twice.
-    val fuse = (cls: String, fn: AnyRef) =>
-      split(good.withColumn("_g_res",
-        tryResolveUdf(f, cls, fn.asInstanceOf[A => B]).apply(in)), name)
-    new DataSet(ctx, ok,
-      BadBatch(opId + 1, failed, Some(reapply), Some(fuse)) :: retired, opId + 1)
-  }
-
   /** `withColumn(column, ftor)` with per-row exception capture
     * (`dataset.py:201-229`). `in` selects the ftor's input column(s) —
     * pass a struct for multi-column UDFs. */
   def withColumnUdf[A: TypeTag, B: TypeTag](name: String, in: Column)(f: A => B): DataSet =
-    failableColumnOp(name, in, f)
+    failable(steps => split(good.withColumn("_g_res", chainUdf(f, steps).apply(in)), name))
 
   /** `mapColumn(column, ftor)` — in-place single-column transform with
     * exception capture (`dataset.py:231-260`). */
   def mapColumnUdf[A: TypeTag, B: TypeTag](name: String)(f: A => B): DataSet =
-    failableColumnOp(name, col(name), f)
+    withColumnUdf(name, col(name))(f)
 
   /** Two-argument variant of [[withColumnUdf]] for UDFs over two input
     * columns (scala UDFs receive struct inputs as Row, so explicit
     * arities are the type-safe route). */
   def withColumnUdf2[A1: TypeTag, A2: TypeTag, B: TypeTag](
-      name: String, in1: Column, in2: Column)(f: (A1, A2) => B): DataSet = {
-    def tryUdf2(g: (A1, A2) => B) = udf((a1: A1, a2: A2) =>
-      try (Option(g(a1, a2)), null: String, null: String)
-      catch { case e: Throwable => (None: Option[B], errName(e), String.valueOf(e.getMessage)) })
-      .asNondeterministic() // see tryUdf: pin one evaluation per row
-    def tryResolveUdf2(cls: String, g: (A1, A2) => B) = {
-      val hit = clsHit(cls)
-      udf((a1: A1, a2: A2) =>
-        try (Option(f(a1, a2)), null: String, null: String)
-        catch {
-          case e: Throwable if hit(e) =>
-            try (Option(g(a1, a2)), null: String, null: String)
-            catch { case e2: Throwable =>
-              (None: Option[B], errName(e2), String.valueOf(e2.getMessage)) }
-          case e: Throwable =>
-            (None: Option[B], errName(e), String.valueOf(e.getMessage))
-        }).asNondeterministic()
+      name: String, in1: Column, in2: Column)(f: (A1, A2) => B): DataSet =
+    failable(steps => split(good.withColumn("_g_res", chainUdf2(f, steps).apply(in1, in2)), name))
+
+  /** The one `mapPartitions` core of [[mapRows]] and [[flatMapRows]]
+    * (opaque lambda — Catalyst can't see into it, same as the reference's
+    * compiled UDFs). `body(steps)` maps rows of (`_g_in` = the visible
+    * input columns as a struct, row id, sub-id) to output rows of
+    * `outSchema`'s fields followed by `_g_in`, row id, sub-id, error class
+    * and message. */
+  private def rowOp(outSchema: StructType)(
+      body: List[Step] => Iterator[Row] => Iterator[Row]): DataSet = {
+    // error rows carry nulls in the out fields — the internal encoder must
+    // allow that even when the caller declared them non-nullable. Side
+    // effect: the visible output schema is nullable-widened too (standard
+    // Spark behavior for map-style operators).
+    val outNullable = outSchema.fields.toSeq.map(_.copy(nullable = true))
+    val full = StructType(outNullable ++ Seq(
+      StructField("_g_in", schema, nullable = false),
+      StructField(RowId, LongType, nullable = false),
+      StructField(SubId, LongType, nullable = false),
+      StructField(ErrCls, StringType, nullable = true),
+      StructField(ErrMsg, StringType, nullable = true)))
+    val enc = org.apache.spark.sql.Encoders.row(full)
+    // carry an upstream flatMap's per-expansion sub-id through (0 when
+    // absent) so a map after a flatMap keeps intra-expansion order
+    val withSub = if (good.columns.contains(SubId)) good else good.withColumn(SubId, lit(0L))
+    val pre = withSub.select(struct(columns.map(col): _*).as("_g_in"), col(RowId), col(SubId))
+    failable { steps =>
+      val mapped = pre.mapPartitions(body(steps))(enc)
+      val ok = mapped.filter(col(ErrCls).isNull)
+        .select(outSchema.fieldNames.map(col) ++ Seq(col(RowId), col(SubId)): _*)
+      val failed = mapped.filter(col(ErrCls) =!= Dropped)
+        .select(col("_g_in.*") +: Seq(col(RowId), col(SubId), col(ErrCls), col(ErrMsg)): _*)
+      (ok, failed)
     }
-    val tmp = good.withColumn("_g_res", tryUdf2(f)(in1, in2))
-    val (ok, failed) = split(tmp, name)
-    val reapply = (fn: AnyRef, rows: DataFrame) => {
-      val ug = tryUdf2(fn.asInstanceOf[(A1, A2) => B])
-      split(rows.drop(ErrCls, ErrMsg).withColumn("_g_res", ug(in1, in2)), name)
-    }
-    // composed single-UDF fused resolve — see failableColumnOp
-    val fuse = (cls: String, fn: AnyRef) =>
-      split(good.withColumn("_g_res",
-        tryResolveUdf2(cls, fn.asInstanceOf[(A1, A2) => B])(in1, in2)), name)
-    new DataSet(ctx, ok,
-      BadBatch(opId + 1, failed, Some(reapply), Some(fuse)) :: retired, opId + 1)
   }
 
   /** Full-row `map(ftor)` (`dataset.py:49-81`): arbitrary Row → Row
     * transform with a new output schema, per-row exception capture, and
     * resolver support. This is the reference's most general operator; it
-    * deliberately uses mapPartitions (opaque lambda — Catalyst can't see
-    * into it, same as the reference's compiled UDFs), so prefer the
-    * Column-based ops when the transform is expressible. */
+    * deliberately uses mapPartitions, so prefer the Column-based ops when
+    * the transform is expressible. */
   def mapRows(outSchema: StructType)(f: Row => Row): DataSet = {
-    val inSchema = schema
-    val inCols = columns
     val nOut = outSchema.length
-    // error rows carry nulls in the out fields — the internal encoder must
-    // allow that even when the caller declared them non-nullable. Side
-    // effect: the visible output schema is nullable-widened too (standard
-    // Spark behavior for map-style operators).
-    val outNullable = outSchema.fields.toSeq.map(_.copy(nullable = true))
-    val full = StructType(outNullable ++ Seq(
-      StructField("_g_in", inSchema, nullable = false),
-      StructField(RowId, LongType, nullable = false),
-      StructField(SubId, LongType, nullable = false),
-      StructField(ErrCls, StringType, nullable = true),
-      StructField(ErrMsg, StringType, nullable = true)))
-    val enc = org.apache.spark.sql.Encoders.row(full)
-    def run(g: Row => Row, src: DataFrame): (DataFrame, DataFrame) = {
-      // carry an upstream flatMap's per-expansion sub-id through (0 when
-      // absent) so a map after a flatMap keeps intra-expansion order
-      val withSub = if (src.columns.contains(SubId)) src
-        else src.withColumn(SubId, lit(0L))
-      val pre = withSub.select(struct(inCols.map(col): _*).as("_g_in"),
-        col(RowId), col(SubId))
-      val mapped = pre.mapPartitions { it =>
-        it.map { r =>
-          val in = r.getStruct(0); val id = r.getLong(1); val sub = r.getLong(2)
-          try {
-            val o = g(in)
-            Row.fromSeq(o.toSeq ++ Seq(in, id, sub, null, null))
-          } catch {
-            case e: Throwable =>
-              Row.fromSeq(Seq.fill[Any](nOut)(null) ++
-                Seq(in, id, sub, errName(e), String.valueOf(e.getMessage)))
-          }
-        }
-      }(enc)
-      val ok = mapped.filter(col(ErrCls).isNull)
-        .select(outSchema.fieldNames.map(col) ++ Seq(col(RowId), col(SubId)): _*)
-      val failed = mapped.filter(col(ErrCls).isNotNull)
-        .select(col("_g_in.*") +: Seq(col(RowId), col(SubId), col(ErrCls), col(ErrMsg)): _*)
-      (ok, failed)
-    }
-    val (ok, failed) = run(f, good)
-    val reapply = (fn: AnyRef, rows: DataFrame) =>
-      run(fn.asInstanceOf[Row => Row], rows.drop(ErrCls, ErrMsg))
-    new DataSet(ctx, ok,
-      BadBatch(opId + 1, failed, Some(reapply)) :: retired, opId + 1)
+    rowOp(outSchema)(steps => _.map { r =>
+      val in = r.getStruct(0)
+      val (out, cls, msg) = runChain(f, steps, g => g.asInstanceOf[Row => Row](in).toSeq)
+      // the parent's sub-id passes through unshifted
+      Row.fromSeq(out.getOrElse(Seq.fill[Any](nOut)(null)) ++
+        Seq(in, r.getLong(1), r.getLong(2), cls, msg))
+    })
   }
 
   /** Row → many rows with exception capture — UDTF-style superset (the
     * reference has no flatMap at all, SURVEY §2.9); same error-channel and
-    * resolver semantics as [[mapRows]]. */
+    * resolver semantics as [[mapRows]] (resolvers re-expand:
+    * `Row => IterableOnce[Row]`). */
   def flatMapRows(outSchema: StructType)(f: Row => IterableOnce[Row]): DataSet = {
-    val inSchema = schema
-    val inCols = columns
     val nOut = outSchema.length
-    // error rows carry nulls in the out fields — the internal encoder must
-    // allow that even when the caller declared them non-nullable. Side
-    // effect: the visible output schema is nullable-widened too (standard
-    // Spark behavior for map-style operators).
-    val outNullable = outSchema.fields.toSeq.map(_.copy(nullable = true))
-    val full = StructType(outNullable ++ Seq(
-      StructField("_g_in", inSchema, nullable = false),
-      StructField(RowId, LongType, nullable = false),
-      StructField(SubId, LongType, nullable = false),
-      StructField(ErrCls, StringType, nullable = true),
-      StructField(ErrMsg, StringType, nullable = true)))
-    val enc = org.apache.spark.sql.Encoders.row(full)
-    def run(g: Row => IterableOnce[Row], src: DataFrame): (DataFrame, DataFrame) = {
-      val withSub = if (src.columns.contains(SubId)) src
-        else src.withColumn(SubId, lit(0L))
-      val pre = withSub.select(struct(inCols.map(col): _*).as("_g_in"),
-        col(RowId), col(SubId))
-      val mapped = pre.mapPartitions { it =>
-        it.flatMap { r =>
-          val in = r.getStruct(0); val id = r.getLong(1); val parentSub = r.getLong(2)
-          // materialize inside the try: lazy iterators would throw outside
-          // the per-row exception scope. ONLY the user function is tried —
-          // the sort-key bounds checks below must fail loudly, not divert
-          // into the error channel as if the user's UDF threw.
-          val expanded =
-            try Right(g(in).iterator.toVector)
-            catch { case e: Throwable => Left(e) }
-          expanded match {
-            case Right(v) =>
-              // the per-expansion index is the secondary sort key — all
-              // expanded rows share the parent's row id, and Spark's sort
-              // gives no tie order. A nested flatMap composes the parent's
-              // sub-id lexicographically (20 bits per level).
-              require(v.size <= (1 << 20),
-                s"flatMapRows: more than ${1 << 20} expansions for one row")
-              require(parentSub < (1L << 42),
-                "flatMapRows: nesting too deep for ordered merge")
-              v.zipWithIndex.map { case (o, sub) =>
-                Row.fromSeq(o.toSeq ++ Seq(in, id, (parentSub << 20) | sub.toLong, null, null))
-              }
-            case Left(e) =>
-              // failed rows keep the PARENT's sub-id unshifted: on resolve
-              // the reapply uses it as parentSub again, so repaired
-              // expansions slot in exactly where the original would have
-              Seq(Row.fromSeq(Seq.fill[Any](nOut)(null) ++
-                Seq(in, id, parentSub, errName(e), String.valueOf(e.getMessage))))
+    rowOp(outSchema)(steps => _.flatMap { r =>
+      val in = r.getStruct(0); val id = r.getLong(1); val parentSub = r.getLong(2)
+      // materialize inside the chain: lazy iterators would throw outside
+      // the per-row exception scope. ONLY the user functions are tried —
+      // the sort-key bounds checks below must fail loudly, not divert
+      // into the error channel as if the user's UDF threw.
+      runChain(f, steps, g => g.asInstanceOf[Row => IterableOnce[Row]](in).iterator.toVector) match {
+        case (Some(v), _, _) =>
+          // the per-expansion index is the secondary sort key — all
+          // expanded rows share the parent's row id, and Spark's sort
+          // gives no tie order. A nested flatMap composes the parent's
+          // sub-id lexicographically (20 bits per level).
+          require(v.size <= (1 << 20),
+            s"flatMapRows: more than ${1 << 20} expansions for one row")
+          require(parentSub < (1L << 42),
+            "flatMapRows: nesting too deep for ordered merge")
+          v.zipWithIndex.map { case (o, sub) =>
+            Row.fromSeq(o.toSeq ++ Seq(in, id, (parentSub << 20) | sub.toLong, null, null))
           }
-        }
-      }(enc)
-      val ok = mapped.filter(col(ErrCls).isNull)
-        .select(outSchema.fieldNames.map(col) ++ Seq(col(RowId), col(SubId)): _*)
-      val failed = mapped.filter(col(ErrCls).isNotNull)
-        .select(col("_g_in.*") +: Seq(col(RowId), col(SubId), col(ErrCls), col(ErrMsg)): _*)
-      (ok, failed)
-    }
-    val (ok, failed) = run(f, good)
-    val reapply = (fn: AnyRef, rows: DataFrame) =>
-      run(fn.asInstanceOf[Row => IterableOnce[Row]], rows.drop(ErrCls, ErrMsg))
-    new DataSet(ctx, ok,
-      BadBatch(opId + 1, failed, Some(reapply)) :: retired, opId + 1)
+        case (_, cls, msg) =>
+          Seq(Row.fromSeq(Seq.fill[Any](nOut)(null) ++ Seq(in, id, parentSub, cls, msg)))
+      }
+    })
   }
 
   /** `filter(ftor)` with exception capture (`dataset.py:83-111`): rows
-    * where the predicate throws divert to the error channel. */
-  def filterUdf[A: TypeTag](in: Column)(f: A => Boolean): DataSet = {
-    val u = tryUdf(f)
-    val tmp = good.withColumn("_g_res", u(in))
-    val (ok0, failed) = split(tmp, "_g_keep")
-    val ok = ok0.filter(col("_g_keep")).drop("_g_keep")
-    val reapply = (fn: AnyRef, rows: DataFrame) => {
-      val ug = tryUdf(fn.asInstanceOf[A => Boolean])
-      val (rok, rbad) = split(rows.drop(ErrCls, ErrMsg).withColumn("_g_res", ug(in)), "_g_keep")
-      (rok.filter(col("_g_keep")).drop("_g_keep"), rbad.drop("_g_keep"))
+    * where the predicate throws divert to the error channel; a resolver
+    * supplies the predicate's value for the rows it repairs. */
+  def filterUdf[A: TypeTag](in: Column)(f: A => Boolean): DataSet =
+    failable { steps =>
+      val (ok, failed) = split(good.withColumn("_g_res", chainUdf(f, steps).apply(in)), "_g_keep")
+      (ok.filter(col("_g_keep")).drop("_g_keep"), failed)
     }
-    // composed single-UDF fused resolve — see failableColumnOp; the kept
-    // rows additionally need the (possibly resolver-supplied) predicate
-    // to be true
-    val fuse = (cls: String, fn: AnyRef) => {
-      val (ok2, failed2) = split(good.withColumn("_g_res",
-        tryResolveUdf(f, cls, fn.asInstanceOf[A => Boolean]).apply(in)), "_g_keep")
-      (ok2.filter(col("_g_keep")).drop("_g_keep"), failed2)
-    }
-    new DataSet(ctx, ok,
-      BadBatch(opId + 1, failed, Some(reapply), Some(fuse)) :: retired, opId + 1)
-  }
 
   // ------------------------------------- resolve / ignore (dataset.py §2.7)
 
@@ -373,62 +268,35 @@ final class DataSet private (
     * failing UDF got; it may itself throw (chaining into further
     * resolvers). Matching is by exact exception class name. */
   def resolve[A, B](errClass: Class[_ <: Throwable])(f: A => B): DataSet =
-    resolveName(errClass.getName)(f)
+    handle(Resolve(errClass.getName, f), "resolve")
 
   /** Resolve rows that failed with one specific [[GraftErr]] code — the
     * reference's native resolution granularity (resolvers bind to an
     * ExceptionCode, not a host-language class). `resolve(classOf[
     * GraftErr])` remains the catch-all over every code. */
   def resolveCode[A, B](code: Long)(f: A => B): DataSet =
-    resolveName(GraftErr.clsName(code))(f)
-
-  private def resolveName[A, B](cls: String)(f: A => B): DataSet = bad match {
-    // Pristine batch (first resolve after the failing op or csv parse):
-    // SINGLE-SCAN COMPOSED merge — op function (or parse) and resolver run
-    // in ONE projection (normal-case specialization), so the merged good
-    // frame is one plan over one pass of the input instead of
-    // `good ∪ re-executed(bad)`, which duplicates the whole upstream
-    // subtree (scans, joins) per resolver — and a repaired row never
-    // materializes error strings or pays a second ScalaUDF round-trip.
-    // Chained resolves/ignores mutate the batch and fall back to the union
-    // path below (fuse is only valid against the untouched split).
-    case head :: rest if head.fuse.isDefined =>
-      val (merged, newBad) = head.fuse.get(cls, f)
-      new DataSet(ctx, merged,
-        head.copy(rows = newBad, fuse = None) :: rest, opId)
-    case head :: rest if head.reapply.isDefined =>
-      val matching = head.rows.filter(clsMatch(col(ErrCls), cls))
-      val nonMatching = head.rows.filter(!clsMatch(col(ErrCls), cls))
-      val (ok, stillBad) = head.reapply.get(f, matching)
-      val merged = good.unionByName(ok.select(good.columns.map(col): _*))
-      new DataSet(ctx, merged,
-        head.copy(rows = nonMatching.unionByName(stillBad), fuse = None) :: rest, opId)
-    case _ =>
-      throw new IllegalStateException(
-        "resolve() must directly follow a UDF operator (or another resolve/ignore)")
-  }
+    handle(Resolve(GraftErr.clsName(code), f), "resolve")
 
   /** Silently drop rows that raised `errClass` in the preceding operator
     * (`dataset.py:319-344`). */
   def ignore(errClass: Class[_ <: Throwable]): DataSet =
-    ignoreName(errClass.getName)
+    handle(Ignore(errClass.getName), "ignore")
 
   /** Drop rows that failed with one specific [[GraftErr]] code. */
-  def ignoreCode(code: Long): DataSet = ignoreName(GraftErr.clsName(code))
+  def ignoreCode(code: Long): DataSet = handle(Ignore(GraftErr.clsName(code)), "ignore")
 
-  private def ignoreName(cls: String): DataSet = bad match {
-    // head.opId == opId ⇒ the batch belongs to the immediately preceding
-    // operator (incl. input parse errors, which carry no resolver reapply)
-    case head :: rest if head.opId == opId =>
-      // the batch's row set changes ⇒ a later fuse against the pristine
-      // split would resurrect the ignored rows; drop it (reapply stays
-      // valid — it operates on the filtered rows themselves)
-      new DataSet(ctx, good,
-        head.copy(rows = head.rows.filter(!clsMatch(col(ErrCls), cls)),
-          fuse = None) :: rest, opId)
+  /** Append `step` to the preceding operator's handler chain and re-plan
+    * that operator with the whole chain: ONE projection over ONE pass of
+    * its input, where a union of `good` and a re-executed `bad` would
+    * duplicate the whole upstream subtree (scans, joins) per handler. */
+  private def handle(step: Step, what: String): DataSet = bad match {
+    case head :: rest if head.rebuild.isDefined =>
+      val steps = head.steps :+ step
+      val (merged, failed) = head.rebuild.get(steps)
+      new DataSet(ctx, merged, BadBatch(failed, head.rebuild, steps) :: rest)
     case _ =>
       throw new IllegalStateException(
-        "ignore() must directly follow a UDF operator (or another resolve/ignore)")
+        s"$what() must directly follow a UDF operator (or another resolve/ignore)")
   }
 
   /** Exception-class → count of unresolved rows (`dataset.py:706-715`).
@@ -678,20 +546,51 @@ object DataSet {
     case _ => e.getClass.getName
   }
 
-  /** Closure-side analogue of [[clsMatch]] — same semantics, evaluated on
-    * the Throwable itself so a composed try-resolve UDF can route the
-    * exception without materializing the error-class string at all. */
-  private[api] def clsHit(cls: String): Throwable => Boolean =
-    e => (cls == GraftErr.ClassName && e.isInstanceOf[GraftErr]) ||
-      errName(e) == cls
+  private val GraftErrPrefix = GraftErr.ClassName + ":"
 
-  /** Match predicate over an error-class column: exact name, except the
-    * bare [[GraftErr]] class matches every code (prefix match) — so
+  /** Does a handler for class `cls` take a row failed with class `name`?
+    * Exact name, except the bare [[GraftErr]] class takes every code — so
     * `resolve(classOf[GraftErr])` is the catch-all and `resolveCode` the
     * precise form. */
-  private[api] def clsMatch(c: Column, cls: String): Column =
-    if (cls == GraftErr.ClassName) c.startsWith(GraftErr.ClassName + ":")
-    else c === cls
+  private def clsMatch(cls: String, name: String): Boolean =
+    name == cls || (cls == GraftErr.ClassName && name.startsWith(GraftErrPrefix))
+
+  /** Error class of a row an ignore dropped: it leaves both the good and
+    * the failed channel (no exception class has an empty name). */
+  private val Dropped = ""
+
+  /** One row through a failable operator and its handler chain: `call(fn)`
+    * applies `fn` — the operator's function `f` or a resolver — to the
+    * row's input. Returns `(Some(value), null, null)`, or `(None, class,
+    * message)` for a row that stays failed ([[Dropped]] as the class when
+    * an ignore took it). */
+  private def runChain[B](f: AnyRef, steps: List[Step],
+      call: AnyRef => B): (Option[B], String, String) =
+    try (Option(call(f)), null, null)
+    catch { case e: Throwable => walk(steps, errName(e), String.valueOf(e.getMessage), call) }
+
+  /** A failed row's way through the handler chain (the reference's
+    * resolve order, `ResolveTask.cc:248-300`): from the class and message
+    * the operator raised, each step in call order whose class matches the
+    * current one drops the row (ignore) or runs its resolver; a resolver
+    * that throws hands its own class and message to the steps after it. */
+  private def walk[B](steps: List[Step], cls0: String, msg0: String,
+      call: AnyRef => B): (Option[B], String, String) = {
+    var cls = cls0
+    var msg = msg0
+    var rest = steps
+    while (rest.nonEmpty) {
+      rest.head match {
+        case Ignore(c) if clsMatch(c, cls) => return (None, Dropped, null)
+        case Resolve(c, g) if clsMatch(c, cls) =>
+          try return (Option(call(g)), null, null)
+          catch { case e: Throwable => cls = errName(e); msg = String.valueOf(e.getMessage) }
+        case _ =>
+      }
+      rest = rest.tail
+    }
+    (None, cls, msg)
+  }
 
   private[api] val RowId = "_g_rowid"
   private[api] val SubId = "_g_subid"
@@ -701,7 +600,7 @@ object DataSet {
   private[api] val HiddenCols: Set[String] = Set(RowId, SubId, ErrCls, ErrMsg, RawLine)
 
   private[api] def fromDataFrame(ctx: Context, df: DataFrame): DataSet =
-    new DataSet(ctx, df.withColumn(RowId, monotonically_increasing_id()), Nil, 0)
+    new DataSet(ctx, df.withColumn(RowId, monotonically_increasing_id()), Nil)
 
   /** Corrupt-record column of a csv source's `from_csv` parse struct. */
   private[api] val CorruptCol = "_g_corrupt"
@@ -716,39 +615,41 @@ object DataSet {
     * `ResolveTask.cc:268`): the resolver gets a `Row` of string cells
     * re-parsed from the raw line under the relaxed all-string schema and
     * returns a row of the typed `schema` (or throws, chaining into further
-    * resolvers). The first `resolve` is FUSED into the same scan: a
-    * `CaseWhen` runs [[csvFixUdf]] only on rows whose corrupt column is
-    * set, and the result splits into ok/still-failed with the UDF ops'
-    * filters — no `Union`, no second scan and parse of the input. Still-
-    * failed rows keep [[RawLine]] and [[RowId]], so a chained resolver (the
-    * reapply, on the union path) retries from the original line and merges
-    * in file order. `extraNulls` (null-value strings beyond the first —
-    * Spark parses only one natively) are substituted on the good channel
-    * only — for typed columns a row whose cell holds a secondary null
-    * token cannot parse and diverts to the error channel instead. */
+    * handlers). Every `resolve`/`ignore`, first or chained, re-plans the
+    * same projection: a `CaseWhen` runs the whole handler chain
+    * ([[csvChainUdf]]) only on rows whose corrupt column is set, and the
+    * result splits into ok/still-failed with the UDF ops' filters — no
+    * `Union`, no second scan and parse of the input, repairs merge in file
+    * order. `extraNulls` (null-value strings beyond the first — Spark
+    * parses only one natively) are substituted on the good channel only —
+    * for typed columns a row whose cell holds a secondary null token cannot
+    * parse and diverts to the error channel instead. */
   private[api] def fromCsvParse(ctx: Context, parsed: DataFrame, schema: StructType,
       parseOpts: Map[String, String], extraNulls: Seq[String]): DataSet = {
     val p = col(Parsed)
     val corrupt = p.getField(CorruptCol)
     def cell(n: String): Column =
       extraNulls.foldLeft(p.getField(n))((c, nv) => when(c === nv, lit(null)).otherwise(c))
-    val good = parsed.filter(corrupt.isNull)
-      .select(schema.fieldNames.map(n => cell(n).as(n)) :+ col(RowId): _*)
-    val failed = parsed.filter(corrupt.isNotNull)
-      .select(schema.fieldNames.map(n => p.getField(n).as(n)) ++ Seq(col(RawLine),
-        col(RowId), lit(ParseErrorClass).as(ErrCls), corrupt.as(ErrMsg)): _*)
-    def fix(fn: AnyRef): Column =
-      csvFixUdf(schema, fn.asInstanceOf[Row => Row])(relaxedCells(schema, parseOpts))
-    val reapply = (fn: AnyRef, rows: DataFrame) =>
-      splitFixed(rows.withColumn(Fix, fix(fn)), schema, n => col(Fix).getField(n))
-    val fuse = (cls: String, fn: AnyRef) =>
-      if (cls != ParseErrorClass) (good, failed) // the resolver matches no parse error
-      else splitFixed(parsed.withColumn(Fix, when(corrupt.isNotNull, fix(fn))), schema,
-        n => when(corrupt.isNull, cell(n)).otherwise(col(Fix).getField(n)))
-    new DataSet(ctx, good, List(BadBatch(0, failed, Some(reapply), Some(fuse))), 0)
+    val build = (steps: List[Step]) => {
+      // with no handler the parse alone splits the rows: no UDF in the plan
+      val (src, value, cls, msg) =
+        if (steps.isEmpty)
+          (parsed, cell _, when(corrupt.isNotNull, lit(ParseErrorClass)), corrupt)
+        else {
+          val fix = col(Fix)
+          (parsed.withColumn(Fix, when(corrupt.isNotNull,
+              csvChainUdf(schema, steps)(relaxedCells(schema, parseOpts), corrupt))),
+            (n: String) => when(corrupt.isNull, cell(n)).otherwise(fix.getField(n)),
+            fix.getField(ErrCls), fix.getField(ErrMsg))
+        }
+      (src.filter(cls.isNull).select(schema.fieldNames.map(n => value(n).as(n)) :+ col(RowId): _*),
+        src.filter(cls =!= Dropped).select(col(RowId), cls.as(ErrCls), msg.as(ErrMsg)))
+    }
+    val (good, failed) = build(Nil)
+    new DataSet(ctx, good, List(BadBatch(failed, Some(build))))
   }
 
-  /** The [[csvFixUdf]] result column of a csv resolve. */
+  /** The [[csvChainUdf]] result column of a resolved csv source. */
   private val Fix = "_g_fix"
 
   /** The relaxed re-parse a csv resolver sees: every cell of the raw line
@@ -758,37 +659,23 @@ object DataSet {
       StructType(schema.fields.map(x => StructField(x.name, StringType, nullable = true))),
       parseOpts - "mode" - "columnNameOfCorruptRecord")
 
-  /** Try-UDF of a csv resolve: relaxed cells → the resolver's typed row
-    * plus null class/message, or null fields plus the resolver's own
-    * exception class/message (which replace the parse error's for matching
-    * and reporting). Nondeterministic like [[tryUdf]]: one evaluation per
-    * row, pinned in its projection. */
-  private def csvFixUdf(schema: StructType, f: Row => Row) = {
+  /** A csv source's handler chain as one UDF over (relaxed cells, parse
+    * error): [[walk]] from [[ParseErrorClass]] and that message; the
+    * result is the typed row a resolver returned, or null fields, plus
+    * the [[runChain]] class and message. Nondeterministic like the UDF
+    * ops' chains: one evaluation per row, pinned in its projection. */
+  private def csvChainUdf(schema: StructType, steps: List[Step]) = {
     val n = schema.length
     val out = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
       StructField(ErrCls, StringType, nullable = true),
       StructField(ErrMsg, StringType, nullable = true)))
-    udf(new org.apache.spark.sql.api.java.UDF1[Row, Row] {
-      def call(cells: Row): Row =
-        try Row.fromSeq(f(cells).toSeq ++ Seq(null, null))
-        catch { case e: Throwable =>
-          Row.fromSeq(Seq.fill[Any](n)(null) ++ Seq(errName(e), String.valueOf(e.getMessage)))
-        }
+    udf(new org.apache.spark.sql.api.java.UDF2[Row, String, Row] {
+      def call(cells: Row, parseError: String): Row = {
+        val (v, cls, msg) = walk(steps, ParseErrorClass, parseError,
+          g => g.asInstanceOf[Row => Row](cells).toSeq)
+        Row.fromSeq(v.getOrElse(Seq.fill[Any](n)(null)) ++ Seq(cls, msg))
+      }
     }, out).asNondeterministic()
-  }
-
-  /** Split a frame carrying the [[Fix]] column into the ok rows (`value`
-    * of each field, plus the row id) and the still-failed rows (raw line
-    * and row id kept, the resolver's class and message). */
-  private def splitFixed(fixed: DataFrame, schema: StructType,
-      value: String => Column): (DataFrame, DataFrame) = {
-    val fix = col(Fix)
-    val ok = fixed.filter(fix.getField(ErrCls).isNull)
-      .select(schema.fieldNames.map(n => value(n).as(n)) :+ col(RowId): _*)
-    val stillBad = fixed.filter(fix.getField(ErrCls).isNotNull)
-      .select(schema.fieldNames.map(n => fix.getField(n).as(n)) ++ Seq(col(RawLine),
-        col(RowId), fix.getField(ErrCls).as(ErrCls), fix.getField(ErrMsg).as(ErrMsg)): _*)
-    (ok, stillBad)
   }
 
   /** Exception class used for input parse failures (exact-name matched by

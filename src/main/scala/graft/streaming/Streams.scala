@@ -177,39 +177,17 @@ object Streams {
     // up-front batch planning and end-of-stream bookkeeping cost more
     // than processAllAvailable()'s poll. Default trigger + explicit
     // drain stays.
-    val prof = sys.env.contains("SPARK_GRAFT_STREAM_PROF")
-    def now() = System.nanoTime()
-    val t0 = now()
     val out = build(spark, root)
-    val t1 = now()
     val q = out.writeStream
       .outputMode(OutputMode.Append())
       .format("parquet").option("path", s"$root/data")
       .option("checkpointLocation", s"$root/chk")
       .start()
-    val t2 = now()
     q.processAllAvailable()
-    val t3 = now()
-    // Opt-in attribution (VERDICT r13 #3): name the micro-batch fixed
-    // costs — per-batch durationMs components from the query's own
-    // progress log plus the wall split around it — so the bench ratio's
-    // streaming-architecture floor is attributed, not asserted. Off by
-    // default: progress serialization is not free.
-    if (prof) {
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[streamprof] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs} stateRows=${p.stateOperators.map(_.numRowsTotal).sum}")
-      }
-    }
     q.stop()
-    val t4 = now()
     // readback with the KNOWN schema: skips the listing + footer
     // schema-inference job on every drained result
-    val res = spark0.read.schema(out.schema).parquet(s"$root/data")
-    if (prof) System.err.println(
-      f"[streamprof] build=${(t1 - t0) / 1e9}%.3fs start=${(t2 - t1) / 1e9}%.3fs " +
-        f"drain=${(t3 - t2) / 1e9}%.3fs stop=${(t4 - t3) / 1e9}%.3fs")
-    res
+    spark0.read.schema(out.schema).parquet(s"$root/data")
   }
 
   /** Tumbling-window aggregation over the stream: watermark + Append into
@@ -511,24 +489,28 @@ object Streams {
           cur.unionByName(
             fresh.join(cur.select(keyCols.map(col): _*), keyCols, "left_anti"))
         } else fresh
-        val tmp = s"$root/swap"
-        merged.coalesce(4).write.mode("overwrite").parquet(tmp)
-        // atomic-enough swap for a local dir; a table format's MERGE
-        // replaces this block wholesale in production. Files.move throws
-        // on failure — renameTo returns false silently (e.g. across
-        // filesystems), which would leave the table dir missing/stale and
-        // the NEXT batch would quietly rebuild from the wrong state.
-        val old = new java.io.File(s"$root/old")
-        if (tblDir.exists())
-          Files.move(tblDir.toPath, old.toPath)
-        Files.move(new java.io.File(tmp).toPath, tblDir.toPath)
-        if (old.exists()) new scala.reflect.io.Directory(old).deleteRecursively()
-        ()
+        swapIn(merged, root, tblDir)
       }
       .start()
     q.processAllAvailable()
     q.stop()
     spark.read.parquet(tbl).filter(col("event_type") =!= SentinelType)
+  }
+
+  /** Replace table directory `dir` with `df` (4 parquet parts): write to
+    * `root/swap`, move the current table to `root/old`, move the new one
+    * in, delete the old. Atomic enough for a local dir; a table format's
+    * MERGE replaces this wholesale in production. Files.move throws on
+    * failure — renameTo returns false silently (e.g. across filesystems),
+    * which would leave the table dir missing/stale and the NEXT batch
+    * would quietly rebuild from the wrong state. */
+  private def swapIn(df: DataFrame, root: String, dir: java.io.File): Unit = {
+    val tmp = s"$root/swap"
+    df.coalesce(4).write.mode("overwrite").parquet(tmp)
+    val old = new java.io.File(s"$root/old")
+    if (dir.exists()) Files.move(dir.toPath, old.toPath)
+    Files.move(new java.io.File(tmp).toPath, dir.toPath)
+    if (old.exists()) new scala.reflect.io.Directory(old).deleteRecursively(): Unit
   }
 
   /** Stateful per-user event counting via flatMapGroupsWithState in
@@ -682,13 +664,7 @@ object Streams {
           .withColumn("_n", sum(col("n_ops")).over(wAll))
           .where(col("_rn") === 1)
           .withColumn("n_ops", col("_n")).drop("_rn", "_n")
-        val tmp = s"$root/swap"
-        merged.coalesce(4).write.mode("overwrite").parquet(tmp)
-        val old = new java.io.File(s"$root/old")
-        if (tblDir.exists()) Files.move(tblDir.toPath, old.toPath)
-        Files.move(new java.io.File(tmp).toPath, tblDir.toPath)
-        if (old.exists()) new scala.reflect.io.Directory(old).deleteRecursively()
-        ()
+        swapIn(merged, root, tblDir)
       }
       .start()
     q.processAllAvailable()

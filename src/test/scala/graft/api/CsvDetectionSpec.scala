@@ -19,6 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a resolved csv reads its input once, with no `Union`, and a repeated
   *    q_csv_resolve call compiles no new codegen class. */
 class CsvDetectionSpec extends AnyFunSuite {
+  import CsvDetectionSpec.nodes
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -166,13 +167,6 @@ class CsvDetectionSpec extends AnyFunSuite {
 
   // ------------------------------------------- parse-error resolve: one scan
 
-  /** Every physical node, through adaptive plans and their query stages. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   private def dirtyCsv(shape: Seq[String]): String = {
     val dir = stage(Seq("in.csv" -> shape.mkString("", "\n", "\n")))
     s"$dir/in.csv"
@@ -238,5 +232,14 @@ class CsvDetectionSpec extends AnyFunSuite {
     assert(run() == warm)
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before,
       "the repeated call compiled new codegen classes")
+  }
+}
+
+object CsvDetectionSpec {
+  /** Every physical node, through adaptive plans and their query stages. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
   }
 }

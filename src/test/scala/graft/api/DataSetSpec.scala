@@ -54,6 +54,9 @@ class DataSetSpec extends AnyFunSuite {
     import spark.implicits._
     val ds = ctx.parallelize(Seq(-2, 0, 3, 7, 10), Seq("x"))
       .withColumnUdf[Int, Int]("a", col("x"))(x => 10 / x)                  // fails x=0
+      // a chained resolve whose steps both fire and leave x=0 failed as before
+      .resolve[Int, Int](classOf[ArithmeticException])(_ => throw new IllegalStateException("r1"))
+      .resolve[Int, Int](classOf[IllegalStateException])(_ => throw new ArithmeticException("r2"))
       .withColumnUdf[Int, Int]("b", col("x")) { x =>
         if (x < 0) throw new IllegalStateException("neg") else x + 1 }      // fails x=-2
       .withColumnUdf[Int, Int]("c", col("x")) { x =>

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Stackless code-classed errors (reference parity: ExceptionCodes.h i64
   * codes with no stack traces). Covers: zero-cost construction contract,
-  * per-code resolution (fused single-scan path AND chained union path),
-  * catch-all class resolution, per-code ignore, per-code exceptionCounts,
-  * and coexistence with plain JVM exceptions in one pipeline. */
+  * per-code resolution (first and chained resolves alike run as one
+  * handler chain inside the failing operator's scan), catch-all class
+  * resolution, per-code ignore, per-code exceptionCounts, and coexistence
+  * with plain JVM exceptions in one pipeline. */
 class GraftErrSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()

@@ -153,4 +153,31 @@ class ReferenceExceptionMatrixSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(out === Seq(1L, 2L, 99L, 3L, 4L))
   }
+
+  // Step order: each handler sees the class the row carries when the chain
+  // reaches it — an ignore never sees a class a LATER resolver throws, and
+  // an ignore AFTER a resolver sees what that resolver threw.
+  test("ignore(A) then a resolve(B) that throws A: the row stays failed as A") {
+    val ds = ctx.parallelize(Seq(1L, -2L, -3L, 4L), Seq("x"))
+      .mapColumnUdf[Long, Long]("x")(x =>
+        if (x == -2L) throw new ArithmeticException("a")
+        else if (x == -3L) throw new IllegalStateException("b")
+        else x)
+      .ignore(classOf[ArithmeticException])
+      .resolve[Long, Long](classOf[IllegalStateException])(_ =>
+        throw new ArithmeticException("from the resolver"))
+    assert(ds.collect().map(_.getLong(0)).toSeq === Seq(1L, 4L))
+    assert(ds.exceptionCounts === Map(classOf[ArithmeticException].getName -> 1L))
+  }
+
+  test("resolve(A) whose resolver throws B, then ignore(B): the row is dropped") {
+    val ds = ctx.parallelize(Seq(1L, -2L, -3L, 4L), Seq("x"))
+      .mapColumnUdf[Long, Long]("x")(x =>
+        if (x < 0L) throw new ArithmeticException("a") else x)
+      .resolve(classOf[ArithmeticException])((x: Long) =>
+        if (x == -3L) throw new IllegalStateException("b") else -x)
+      .ignore(classOf[IllegalStateException])
+    assert(ds.collect().map(_.getLong(0)).toSeq === Seq(1L, 2L, 4L))
+    assert(ds.exceptionCounts.isEmpty)
+  }
 }
