@@ -642,8 +642,14 @@ object DataSet {
             (n: String) => when(corrupt.isNull, cell(n)).otherwise(fix.getField(n)),
             fix.getField(ErrCls), fix.getField(ErrMsg))
         }
-      (src.filter(cls.isNull).select(schema.fieldNames.map(n => value(n).as(n)) :+ col(RowId): _*),
-        src.filter(cls =!= Dropped).select(col(RowId), cls.as(ErrCls), msg.as(ErrMsg)))
+      // Each channel filter is gated on the row id (a CASE, as in
+      // Par.filterOnce): the id stays referenced even when the caller
+      // prunes it, and its nondeterministic projection keeps the filter
+      // from being pushed below the parse — `from_csv` runs once a line.
+      def gated(pred: Column) = when(col(RowId) >= 0, pred).otherwise(false)
+      (src.filter(gated(cls.isNull))
+          .select(schema.fieldNames.map(n => value(n).as(n)) :+ col(RowId): _*),
+        src.filter(gated(cls =!= Dropped)).select(col(RowId), cls.as(ErrCls), msg.as(ErrMsg)))
     }
     val (good, failed) = build(Nil)
     new DataSet(ctx, good, List(BadBatch(failed, Some(build))))

@@ -777,6 +777,9 @@ object Dedup {
     * row (n_docs, sets_match) — n_docs keeps the oracle data-dependent. */
   def simhashRecallCheck(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
+    // built before the persist, so a rejected bound leaves nothing cached
+    val nBand = nearDupSimhash(df, idCol, textCol, maxHamming)
+      .agg(count(lit(1)).as("n_band"))
     val fp = simhashFingerprints(withMinParallelism(df), idCol, textCol)
       .toDF("_id", "_fp").persist()
     // ground truth: all-pairs Hamming over (id, 64-bit print) — 16 bytes a
@@ -786,8 +789,6 @@ object Dedup {
     val exact = a.join(broadcast(b), col("id_a") < col("id_b"))
       .filter(bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= maxHamming)
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val nBand = nearDupSimhash(df, idCol, textCol, maxHamming)
-      .agg(count(lit(1)).as("n_band"))
     val nDocs = fp.agg(count(lit(1)).as("n_docs"))
     graft.ops.Par.materializeThenRelease(
       nDocs.crossJoin(nExact).crossJoin(nBand)
@@ -795,28 +796,20 @@ object Dedup {
       fp) // bounds fp's persist to this call
   }
 
-  /** SimHash fingerprints + near-dup candidate pairs within Hamming
-    * distance `maxHamming` (banding the 64-bit print into 4 chunks). */
+  /** SimHash fingerprints: one (`idCol`, simhash) row per document, the
+    * 64-bit print of its tokens. */
   def simhashFingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
       TextFunctions.simhash64(TextFunctions.tokens(col(textCol))).as("simhash"))
 
+  /** Near-duplicate document pairs within Hamming distance `maxHamming`
+    * of their SimHash prints, through the lossless 4×16-bit band join
+    * ([[graft.similarity.HammingBand]]), which rejects `maxHamming` > 3.
+    * Output: (id_a, id_b, hamming), id_a < id_b. */
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     val fp = simhashFingerprints(withMinParallelism(df), idCol, textCol)
-    val banded = fp.select(col(idCol).as("_id"), col("simhash"), posexplode(
-      array((0 until 4).map(i =>
-        struct(lit(i).as("chunk"),
-          shiftrightunsigned(col("simhash"), i * 16).bitwiseAND(lit(0xFFFFL)).as("v"))): _*)))
-      .select(col("_id"), col("simhash"), col("col.chunk").as("_chunk"), col("col.v").as("_v"))
-    val a = banded.toDF("id_a", "sim_a", "chunk_a", "v_a")
-    val b = banded.toDF("id_b", "sim_b", "chunk_b", "v_b")
-    a.join(b, a("chunk_a") === b("chunk_b") && a("v_a") === b("v_b") &&
-        a("id_a") < b("id_b"))
-      .select(col("id_a"), col("id_b"), col("sim_a"), col("sim_b")).distinct()
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+    graft.similarity.HammingBand.pairs(fp, fp, maxHamming, selfJoin = true)
   }
 
   /** Exact-substring span statistics (the Lee et al. 2022 "Deduplicating

@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with
-  * a typed metadata struct, plus partition-batched decode/feature-extract
-  * plumbing.
+  * a typed metadata struct, plus decode/feature-extract kernels.
   *
-  * IMAGE decode is REAL: PNG/JPEG payloads are decoded with the JDK's
-  * `javax.imageio` (header-only reads for metadata, full decode for pixel
-  * access), batched inside `mapPartitions` — binary column in, typed
-  * values out, no driver materialization. AUDIO decode is REAL for
+  * Every payload kernel has one shape ([[mapPayloads]]): one map-only
+  * pass that hands each row's (id, payload bytes) to a per-row function
+  * and encodes what it emits against a schema fixed up front — binary
+  * column in, typed values out, no shuffle, no driver materialization,
+  * one payload held at a time. IMAGE decode is REAL: PNG/JPEG payloads
+  * are decoded with the JDK's `javax.imageio` (header-only reads for
+  * metadata, full decode for pixel access). AUDIO decode is REAL for
   * WAV/PCM (`parseWav`/[[wavProbe]]/[[wavDecimate]] — RIFF needs no
   * codec library). Compressed audio/VIDEO decode remains a DETERMINISTIC
   * STUB (no codec libraries in this container): features derive from
-  * payload bytes via a seeded hash mix, with the production shape —
-  * schema up front, bounded batches — kept real. */
+  * payload bytes via a seeded hash mix, through the same kernel shape. */
 object Multimodal {
 
   /** Typed metadata carried alongside every media payload. */
@@ -141,30 +142,35 @@ object Multimodal {
     df.withColumn("payload", enc(col(idCol).cast("long")))
   }
 
-  /** Batched REAL decode probe: (id, decoded width/height, pixel(0,0),
-    * pixel(w-1,h-1)) — full `ImageIO.read` per payload, batch-grouped like
-    * [[extractFeatures]]. Pixels mask to 24-bit RGB. */
-  def imageProbe(df: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 256): DataFrame = {
+  /** The one media kernel shape: select (`idCol` cast to long,
+    * `payloadCol`), then one pass over each partition that flat-maps
+    * every row through `f(id, bytes)` and encodes the rows it emits with
+    * `out`. Map-only (no shuffle), one payload in flight at a time, and
+    * output rows keep their input's in-partition order. */
+  private def mapPayloads(df: DataFrame, idCol: String, payloadCol: String,
+      out: StructType)(f: (Long, Array[Byte]) => IterableOnce[Row]): DataFrame =
+    df.select(col(idCol).cast("long"), col(payloadCol))
+      .mapPartitions(_.flatMap(r => f(r.getLong(0), r.getAs[Array[Byte]](1))))(
+        Encoders.row(out))
+
+  /** REAL decode probe: (id, decoded width/height, pixel(0,0),
+    * pixel(w-1,h-1)) — full `ImageIO.read` per payload, one map-only pass
+    * ([[mapPayloads]]). Pixels mask to 24-bit RGB. */
+  def imageProbe(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("p00", LongType),
       StructField("pwh", LongType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = readImage(r.getAs[Array[Byte]](1), r.getLong(0))
-          val w = img.getWidth
-          val h = img.getHeight
-          Row(r.getLong(0), w, h,
-            (img.getRGB(0, 0) & 0xFFFFFF).toLong,
-            (img.getRGB(w - 1, h - 1) & 0xFFFFFF).toLong)
-        }
-      }
-    }(Encoders.row(outSchema))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      val w = img.getWidth
+      val h = img.getHeight
+      Iterator.single(Row(id, w, h,
+        (img.getRGB(0, 0) & 0xFFFFFF).toLong,
+        (img.getRGB(w - 1, h - 1) & 0xFFFFFF).toLong))
+    }
   }
 
   /** REAL per-channel normalization stats: decode each payload and emit
@@ -172,83 +178,72 @@ object Multimodal {
     * dataset-level mean/std every vision-preproc pipeline computes before
     * training (global stats are one tiny grouped aggregation over these
     * per-image rows; the float mean/std derive outside the exact core).
-    * Bulk pixel fetch (one ColorModel pass), batched like
-    * [[extractFeatures]]. Output: (doc_id, n_px, sum_r, sum_g, sum_b). */
-  def imageChannelStats(df: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 256): DataFrame = {
+    * Bulk pixel fetch (one ColorModel pass), one map-only pass
+    * ([[mapPayloads]]). Output: (doc_id, n_px, sum_r, sum_g, sum_b). */
+  def imageChannelStats(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_px", LongType),
       StructField("sum_r", LongType),
       StructField("sum_g", LongType),
       StructField("sum_b", LongType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = readImage(r.getAs[Array[Byte]](1), r.getLong(0))
-          val w = img.getWidth; val h = img.getHeight
-          var sr = 0L; var sg = 0L; var sb = 0L
-          foreachPixelRow(img) { (_, buf, off) =>
-            var i = off
-            val end = off + w
-            while (i < end) {
-              val v = buf(i)
-              sr += (v >> 16) & 0xFF; sg += (v >> 8) & 0xFF; sb += v & 0xFF
-              i += 1
-            }
-          }
-          Row(r.getLong(0), w.toLong * h, sr, sg, sb)
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      val w = img.getWidth; val h = img.getHeight
+      var sr = 0L; var sg = 0L; var sb = 0L
+      foreachPixelRow(img) { (_, buf, off) =>
+        var i = off
+        val end = off + w
+        while (i < end) {
+          val v = buf(i)
+          sr += (v >> 16) & 0xFF; sg += (v >> 8) & 0xFF; sb += v & 0xFF
+          i += 1
         }
       }
-    }(Encoders.row(outSchema))
+      Iterator.single(Row(id, w.toLong * h, sr, sg, sb))
+    }
   }
 
   /** REAL image feature extraction: decode the payload with ImageIO and
     * emit per-grid-cell mean pixel values — the canonical cheap visual
     * feature (downsampled intensity map). Output: one row per (id, cell)
     * with the exact mean of the 24-bit RGB values whose pixel (x, y)
-    * falls in cell (y·grid/h, x·grid/w). Batched like [[extractFeatures]];
-    * sums stay < 2^53 so the double mean is exact and oracle-comparable. */
+    * falls in cell (y·grid/h, x·grid/w). One map-only pass
+    * ([[mapPayloads]]); sums stay < 2^53 so the double mean is exact and
+    * oracle-comparable. */
   def imageGridFeatures(df: DataFrame, idCol: String, payloadCol: String,
-      grid: Int = 4, batchSize: Int = 256): DataFrame = {
+      grid: Int = 4): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("cell", IntegerType),
       StructField("mean_val", DoubleType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val img = readImage(r.getAs[Array[Byte]](1), id)
-          val w = img.getWidth
-          val h = img.getHeight
-          val sums = new Array[Long](grid * grid)
-          val counts = new Array[Long](grid * grid)
-          // bulk/strided fetch: one ColorModel pass per row batch instead
-          // of per-pixel getRGB; memory-bounded on huge frames
-          foreachPixelRow(img) { (y, buf, off) =>
-            val rowCell = (y * grid / h) * grid
-            var x = 0
-            while (x < w) {
-              val c = rowCell + (x * grid / w)
-              sums(c) += (buf(off + x) & 0xFFFFFF).toLong
-              counts(c) += 1
-              x += 1
-            }
-          }
-          (0 until grid * grid).iterator.filter(counts(_) > 0).map(c =>
-            Row(id, c, sums(c).toDouble / counts(c)))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      val w = img.getWidth
+      val h = img.getHeight
+      val sums = new Array[Long](grid * grid)
+      val counts = new Array[Long](grid * grid)
+      // bulk/strided fetch: one ColorModel pass per row batch instead
+      // of per-pixel getRGB; memory-bounded on huge frames
+      foreachPixelRow(img) { (y, buf, off) =>
+        val rowCell = (y * grid / h) * grid
+        var x = 0
+        while (x < w) {
+          val c = rowCell + (x * grid / w)
+          sums(c) += (buf(off + x) & 0xFFFFFF).toLong
+          counts(c) += 1
+          x += 1
         }
       }
-    }(Encoders.row(outSchema))
+      (0 until grid * grid).iterator.filter(counts(_) > 0).map(c =>
+        Row(id, c, sums(c).toDouble / counts(c)))
+    }
   }
 
   /** REAL image resize: decode the payload with ImageIO, nearest-neighbor
     * resample to `w`×`h`, re-encode as PNG — the full
     * decode→transform→encode loop a thumbnailing / vision-preproc stage
-    * runs, batched like [[extractFeatures]]. Nearest-neighbor (source
+    * runs, in one map-only pass ([[mapPayloads]]). Nearest-neighbor (source
     * pixel at (x·srcW/w, y·srcH/h), integer floor division) is used
     * instead of Graphics2D scaling because its output is exactly
     * specified, so an oracle can recompute every output pixel from the
@@ -256,34 +251,28 @@ object Multimodal {
     * area/bilinear in production where exactness isn't contractual.
     * Output: (idCol, payload) with the resized PNG. */
   def imageResize(df: DataFrame, idCol: String, payloadCol: String,
-      w: Int, h: Int, batchSize: Int = 256): DataFrame = {
+      w: Int, h: Int): DataFrame = {
     require(w > 0 && h > 0, s"target dims must be positive, got ${w}x$h")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val img = readImage(r.getAs[Array[Byte]](1), id)
-          val sw = img.getWidth
-          val sh = img.getHeight
-          val out = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              out.setRGB(x, y, img.getRGB(x * sw / w, y * sh / h) & 0xFFFFFF)
-              x += 1
-            }
-            y += 1
-          }
-          Row(id, encodeImagePng(out))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      val sw = img.getWidth
+      val sh = img.getHeight
+      val out = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          out.setRGB(x, y, img.getRGB(x * sw / w, y * sh / h) & 0xFFFFFF)
+          x += 1
         }
+        y += 1
       }
-    }(Encoders.row(outSchema))
+      Iterator.single(Row(id, encodeImagePng(out)))
+    }
   }
 
   /** REAL image crop (+ optional horizontal flip): decode, copy the
@@ -294,39 +283,33 @@ object Multimodal {
     * can recompute every output pixel from the source formula and verify
     * the full decode→transform→encode→decode loop bit-exactly. Payloads
     * smaller than the crop window fail loudly (require) rather than
-    * emitting a silently-clamped region. Batched like [[imageResize]]. */
+    * emitting a silently-clamped region. One map-only pass like
+    * [[imageResize]]. */
   def imageCrop(df: DataFrame, idCol: String, payloadCol: String,
-      x0: Int, y0: Int, cw: Int, ch: Int, flipH: Boolean = false,
-      batchSize: Int = 256): DataFrame = {
+      x0: Int, y0: Int, cw: Int, ch: Int, flipH: Boolean = false): DataFrame = {
     require(x0 >= 0 && y0 >= 0 && cw > 0 && ch > 0,
       s"crop region must be non-negative with positive dims, got ($x0,$y0,$cw,$ch)")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val img = readImage(r.getAs[Array[Byte]](1), id)
-          require(x0 + cw <= img.getWidth && y0 + ch <= img.getHeight,
-            s"crop ($x0,$y0,$cw,$ch) exceeds ${img.getWidth}x${img.getHeight} of id $id")
-          val out = new java.awt.image.BufferedImage(
-            cw, ch, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < ch) {
-            var x = 0
-            while (x < cw) {
-              val sx = if (flipH) x0 + cw - 1 - x else x0 + x
-              out.setRGB(x, y, img.getRGB(sx, y0 + y) & 0xFFFFFF)
-              x += 1
-            }
-            y += 1
-          }
-          Row(id, encodeImagePng(out))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      require(x0 + cw <= img.getWidth && y0 + ch <= img.getHeight,
+        s"crop ($x0,$y0,$cw,$ch) exceeds ${img.getWidth}x${img.getHeight} of id $id")
+      val out = new java.awt.image.BufferedImage(
+        cw, ch, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < ch) {
+        var x = 0
+        while (x < cw) {
+          val sx = if (flipH) x0 + cw - 1 - x else x0 + x
+          out.setRGB(x, y, img.getRGB(sx, y0 + y) & 0xFFFFFF)
+          x += 1
         }
+        y += 1
       }
-    }(Encoders.row(outSchema))
+      Iterator.single(Row(id, encodeImagePng(out)))
+    }
   }
 
   // ======================= audio: REAL WAV/PCM ===========================
@@ -400,15 +383,15 @@ object Multimodal {
     (rate, samples)
   }
 
-  /** REAL batched audio decode + signal features over WAV payloads:
+  /** REAL audio decode + signal features over WAV payloads:
     * sample count / rate / integer duration, peak |amplitude|, energy
     * (Σ s² — exact in a long at any realistic clip length: 2³⁰ per
     * sample × 10⁷ samples ≪ 2⁶³), and the zero-crossing count (the
     * classic cheap voiced/unvoiced discriminator). ALL-INTEGER outputs →
     * bit-exact cross-engine; consumers derive RMS/ZCR-rate by dividing
-    * the exact numerators. Batched `mapPartitions` like the image path. */
-  def wavProbe(df: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 256): DataFrame = {
+    * the exact numerators. One map-only pass ([[mapPayloads]]) like the
+    * image path. */
+  def wavProbe(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("sample_rate", IntegerType),
@@ -417,26 +400,21 @@ object Multimodal {
       StructField("peak", LongType),
       StructField("sum_sq", LongType),
       StructField("zero_cross", LongType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val (rate, s) = parseWav(r.getAs[Array[Byte]](1))
-          var peak = 0L; var sumSq = 0L; var zc = 0L
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toLong
-            val a = math.abs(v)
-            if (a > peak) peak = a
-            sumSq += v * v
-            if (i > 0 && ((s(i - 1) < 0) != (v < 0))) zc += 1
-            i += 1
-          }
-          Row(r.getLong(0), rate, s.length.toLong,
-            s.length.toLong * 1000L / rate, peak, sumSq, zc)
-        }
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (rate, s) = parseWav(bytes)
+      var peak = 0L; var sumSq = 0L; var zc = 0L
+      var i = 0
+      while (i < s.length) {
+        val v = s(i).toLong
+        val a = math.abs(v)
+        if (a > peak) peak = a
+        sumSq += v * v
+        if (i > 0 && ((s(i - 1) < 0) != (v < 0))) zc += 1
+        i += 1
       }
-    }(Encoders.row(outSchema))
+      Iterator.single(Row(id, rate, s.length.toLong,
+        s.length.toLong * 1000L / rate, peak, sumSq, zc))
+    }
   }
 
   /** REAL audio QA gate: decode and report the exact integer clipping
@@ -444,10 +422,10 @@ object Multimodal {
     * nonzero-mean recording), and peak — the ingest checks an audio
     * corpus runs before any feature extraction. `ok` cross-multiplies
     * the clipping RATE against `maxClipPpm` (n_clipped·10⁶ ≤ ppm·n), so
-    * no division anywhere. Batched map-only decode like [[wavProbe]];
-    * zero shuffles at any corpus scale. */
+    * no division anywhere. Map-only decode like [[wavProbe]]; zero
+    * shuffles at any corpus scale. */
   def wavQuality(df: DataFrame, idCol: String, payloadCol: String,
-      clipAt: Long, maxClipPpm: Long, batchSize: Int = 256): DataFrame = {
+      clipAt: Long, maxClipPpm: Long): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_samples", LongType),
@@ -455,26 +433,21 @@ object Multimodal {
       StructField("peak", LongType),
       StructField("dc_sum", LongType),
       StructField("ok", BooleanType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val (_, s) = parseWav(r.getAs[Array[Byte]](1))
-          var peak = 0L; var clipped = 0L; var dc = 0L
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toLong
-            val a = math.abs(v)
-            if (a > peak) peak = a
-            if (a >= clipAt) clipped += 1
-            dc += v
-            i += 1
-          }
-          Row(r.getLong(0), s.length.toLong, clipped, peak, dc,
-            clipped * 1000000L <= maxClipPpm * s.length)
-        }
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (_, s) = parseWav(bytes)
+      var peak = 0L; var clipped = 0L; var dc = 0L
+      var i = 0
+      while (i < s.length) {
+        val v = s(i).toLong
+        val a = math.abs(v)
+        if (a > peak) peak = a
+        if (a >= clipAt) clipped += 1
+        dc += v
+        i += 1
       }
-    }(Encoders.row(outSchema))
+      Iterator.single(Row(id, s.length.toLong, clipped, peak, dc,
+        clipped * 1000000L <= maxClipPpm * s.length))
+    }
   }
 
   /** REAL audio downsample by integer decimation: keep every `factor`-th
@@ -484,35 +457,30 @@ object Multimodal {
     * exact and portable.) Payload in, payload out, so it composes with
     * [[wavProbe]] and round-trips through parquet binary columns. */
   def wavDecimate(df: DataFrame, idCol: String, payloadCol: String,
-      factor: Int, batchSize: Int = 256): DataFrame = {
+      factor: Int): DataFrame = {
     require(factor >= 1, s"decimation factor must be >= 1, got $factor")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val (rate, s) = parseWav(r.getAs[Array[Byte]](1))
-          val n = (s.length + factor - 1) / factor
-          val out = new Array[Short](n)
-          var i = 0
-          while (i < n) { out(i) = s(i * factor); i += 1 }
-          val bb = java.nio.ByteBuffer.allocate(44 + n * 2)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")); bb.putInt(36 + n * 2)
-          bb.put("WAVE".getBytes("US-ASCII"))
-          bb.put("fmt ".getBytes("US-ASCII")); bb.putInt(16)
-          bb.putShort(1); bb.putShort(1)
-          bb.putInt(rate / factor); bb.putInt(rate / factor * 2)
-          bb.putShort(2); bb.putShort(16)
-          bb.put("data".getBytes("US-ASCII")); bb.putInt(n * 2)
-          var j = 0
-          while (j < n) { bb.putShort(out(j)); j += 1 }
-          Row(r.getLong(0), bb.array())
-        }
-      }
-    }(Encoders.row(outSchema))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (rate, s) = parseWav(bytes)
+      val n = (s.length + factor - 1) / factor
+      val out = new Array[Short](n)
+      var i = 0
+      while (i < n) { out(i) = s(i * factor); i += 1 }
+      val bb = java.nio.ByteBuffer.allocate(44 + n * 2)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")); bb.putInt(36 + n * 2)
+      bb.put("WAVE".getBytes("US-ASCII"))
+      bb.put("fmt ".getBytes("US-ASCII")); bb.putInt(16)
+      bb.putShort(1); bb.putShort(1)
+      bb.putInt(rate / factor); bb.putInt(rate / factor * 2)
+      bb.putShort(2); bb.putShort(16)
+      bb.put("data".getBytes("US-ASCII")); bb.putInt(n * 2)
+      var j = 0
+      while (j < n) { bb.putShort(out(j)); j += 1 }
+      Iterator.single(Row(id, bb.array()))
+    }
   }
 
   // ================ video: REAL uncompressed AVI (DIB/BI_RGB) ============
@@ -668,14 +636,15 @@ object Multimodal {
     (w, h, decoded)
   }
 
-  /** REAL batched video decode + per-frame features: geometry, corner
-    * pixels, and the exact integer RGB-sum (Σ(r+g+b) over the frame —
-    * the cheap brightness signal). One output row per (video, frame);
-    * `stride` keeps every stride-th frame, the frame-sampling knob a
+  /** REAL video decode + per-frame features: geometry, corner pixels,
+    * and the exact integer RGB-sum (Σ(r+g+b) over the frame — the cheap
+    * brightness signal). One output row per (video, frame); `stride`
+    * keeps every stride-th frame, the frame-sampling knob a
     * vision-preproc pipeline uses to cut decode volume. ALL-INTEGER
-    * outputs → bit-exact cross-engine. Batched like the image path. */
+    * outputs → bit-exact cross-engine. One map-only pass
+    * ([[mapPayloads]]) like the image path. */
   def aviProbe(df: DataFrame, idCol: String, payloadCol: String,
-      stride: Int = 1, batchSize: Int = 64): DataFrame = {
+      stride: Int = 1): DataFrame = {
     require(stride >= 1, s"frame stride must be >= 1, got $stride")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -685,25 +654,19 @@ object Multimodal {
       StructField("p00", LongType),
       StructField("pwh", LongType),
       StructField("sum_rgb", LongType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val (w, h, frames) = parseAvi(r.getAs[Array[Byte]](1))
-          frames.iterator.zipWithIndex.filter(_._2 % stride == 0).map {
-            case (f, fi) =>
-              var s0 = 0L; var i = 0
-              while (i < f.length) {
-                val v = f(i)
-                s0 += ((v >> 16) & 0xFF) + ((v >> 8) & 0xFF) + (v & 0xFF)
-                i += 1
-              }
-              Row(r.getLong(0), fi / stride, w, h,
-                f(0).toLong, f(w * h - 1).toLong, s0)
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (w, h, frames) = parseAvi(bytes)
+      frames.iterator.zipWithIndex.filter(_._2 % stride == 0).map {
+        case (f, fi) =>
+          var s0 = 0L; var i = 0
+          while (i < f.length) {
+            val v = f(i)
+            s0 += ((v >> 16) & 0xFF) + ((v >> 8) & 0xFF) + (v & 0xFF)
+            i += 1
           }
-        }
+          Row(id, fi / stride, w, h, f(0).toLong, f(w * h - 1).toLong, s0)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** REAL shot-boundary (scene-cut) detection: decode consecutive frame
@@ -713,10 +676,10 @@ object Multimodal {
     * a blind stride. A pair is a cut when the MEAN per-pixel difference
     * reaches `thrPerPixel` (cross-multiplied: diff_sum >= thr·w·h, no
     * division). One output row per consecutive pair; all-integer →
-    * bit-exact cross-engine. Batched map-only pass like [[aviProbe]] —
-    * zero shuffles at any corpus scale. */
+    * bit-exact cross-engine. Map-only pass like [[aviProbe]] — zero
+    * shuffles at any corpus scale. */
   def aviSceneCuts(df: DataFrame, idCol: String, payloadCol: String,
-      thrPerPixel: Long, batchSize: Int = 64): DataFrame = {
+      thrPerPixel: Long): DataFrame = {
     require(thrPerPixel >= 0, s"threshold must be >= 0, got $thrPerPixel")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -724,27 +687,22 @@ object Multimodal {
       StructField("n_px", LongType),
       StructField("diff_sum", LongType),
       StructField("is_cut", BooleanType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val (w, h, frames) = parseAvi(r.getAs[Array[Byte]](1))
-          val nPx = w.toLong * h
-          (1 until frames.length).iterator.map { fi =>
-            val f0 = frames(fi - 1); val f1 = frames(fi)
-            var s0 = 0L; var i = 0
-            while (i < f1.length) {
-              val a = f0(i); val b = f1(i)
-              s0 += math.abs(((b >> 16) & 0xFF) - ((a >> 16) & 0xFF)) +
-                math.abs(((b >> 8) & 0xFF) - ((a >> 8) & 0xFF)) +
-                math.abs((b & 0xFF) - (a & 0xFF))
-              i += 1
-            }
-            Row(r.getLong(0), fi, nPx, s0, s0 >= thrPerPixel * nPx)
-          }
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (w, h, frames) = parseAvi(bytes)
+      val nPx = w.toLong * h
+      (1 until frames.length).iterator.map { fi =>
+        val f0 = frames(fi - 1); val f1 = frames(fi)
+        var s0 = 0L; var i = 0
+        while (i < f1.length) {
+          val a = f0(i); val b = f1(i)
+          s0 += math.abs(((b >> 16) & 0xFF) - ((a >> 16) & 0xFF)) +
+            math.abs(((b >> 8) & 0xFF) - ((a >> 8) & 0xFF)) +
+            math.abs((b & 0xFF) - (a & 0xFF))
+          i += 1
         }
+        Row(id, fi, nPx, s0, s0 >= thrPerPixel * nPx)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** REAL video frame-sampling transform: keep every `stride`-th frame
@@ -753,21 +711,16 @@ object Multimodal {
     * [[aviProbe]] and round-trips through parquet binary columns, the
     * [[wavDecimate]] pattern applied to video. */
   def aviFrameSample(df: DataFrame, idCol: String, payloadCol: String,
-      stride: Int, batchSize: Int = 64): DataFrame = {
+      stride: Int): DataFrame = {
     require(stride >= 1, s"frame stride must be >= 1, got $stride")
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("payload", BinaryType)))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val (w, h, frames) = parseAvi(r.getAs[Array[Byte]](1))
-          val kept = frames.indices.filter(_ % stride == 0).map(frames)
-          Row(r.getLong(0), encodeAviFrames(w, h, kept))
-        }
-      }
-    }(Encoders.row(outSchema))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      val (w, h, frames) = parseAvi(bytes)
+      val kept = frames.indices.filter(_ % stride == 0).map(frames)
+      Iterator.single(Row(id, encodeAviFrames(w, h, kept)))
+    }
   }
 
   /** STUB decoder: deterministic pseudo-features from payload bytes.
@@ -784,23 +737,16 @@ object Multimodal {
     out
   }
 
-  /** Partition-batched feature extraction: (id, payload) → (id, features).
-    * Batches of `batchSize` rows model the arrow-batch shape real decode
-    * UDFs want (amortized codec init per batch, bounded memory). */
+  /** Feature extraction: (id, payload) → (id, features), one map-only
+    * pass ([[mapPayloads]]) over the [[decodeStub]] decoder. */
   def extractFeatures(df: DataFrame, idCol: String, payloadCol: String,
-      dim: Int = 16, batchSize: Int = 256): DataFrame = {
+      dim: Int = 16): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("features", ArrayType(FloatType, containsNull = false))))
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // per-batch init point (codec contexts, model weights, …)
-        batch.iterator.map { r =>
-          Row(r.getLong(0), decodeStub(r.getAs[Array[Byte]](1), dim).toSeq)
-        }
-      }
-    }(Encoders.row(outSchema))
+    mapPayloads(df, idCol, payloadCol, outSchema) { (id, bytes) =>
+      Iterator.single(Row(id, decodeStub(bytes, dim).toSeq))
+    }
   }
 
   /** STUB image resize: a real codec would re-encode the payload to
@@ -841,74 +787,67 @@ object Multimodal {
     * no float rounding anywhere. Cells cover ≥1 pixel for any image ≥1×1
     * (ranges are clamped, so tiny images repeat pixels rather than
     * leaving cells empty). Output: (doc_id, dhash) with dhash LongType. */
-  def imageDHash(df: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 256): DataFrame = {
-    val pre = df.select(col(idCol).cast("long"), col(payloadCol))
-    pre.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = readImage(r.getAs[Array[Byte]](1), r.getLong(0))
-          val w = img.getWidth; val h = img.getHeight
-          val gw = 9; val gh = 8
-          // Bulk (small frames) or row-strided (huge frames) fetch via
-          // foreachPixelRow: per-pixel getRGB goes through the ColorModel
-          // dispatch on every call (PNGs decode to 3BYTE_BGR, not
-          // INT_RGB) — batch conversion + flat int reads either way.
-          // Cell bounds precomputed; row-major accumulation visits each
-          // row once per cell row whose CLAMPED range contains it, which
-          // reproduces the per-cell loops exactly (ranges only overlap
-          // when h < gh / w < gw — tiny clamped frames).
-          val sums = Array.ofDim[Long](gh, gw)
-          val cnts = Array.ofDim[Long](gh, gw)
-          val ys = Array.tabulate(gh) { cy =>
-            val y0 = cy * h / gh
-            (y0, math.min(math.max((cy + 1) * h / gh, y0 + 1), h))
-          }
-          val xs = Array.tabulate(gw) { cx =>
-            val x0 = cx * w / gw
-            (x0, math.min(math.max((cx + 1) * w / gw, x0 + 1), w))
-          }
-          foreachPixelRow(img) { (y, buf, off) =>
-            var cy = 0
-            while (cy < gh) {
-              if (y >= ys(cy)._1 && y < ys(cy)._2) {
-                var cx = 0
-                while (cx < gw) {
-                  var s0 = 0L; var n0 = 0L
-                  var x = xs(cx)._1
-                  while (x < xs(cx)._2) {
-                    val rgb = buf(off + x)
-                    // BT.601 luma ×1000 — integer, engine-identical
-                    s0 += 299L * ((rgb >> 16) & 0xFF) +
-                      587L * ((rgb >> 8) & 0xFF) + 114L * (rgb & 0xFF)
-                    n0 += 1
-                    x += 1
-                  }
-                  sums(cy)(cx) += s0; cnts(cy)(cx) += n0
-                  cx += 1
-                }
-              }
-              cy += 1
-            }
-          }
-          var hash = 0L; var bit = 0
-          var cy = 0
-          while (cy < gh) {
+  def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    mapPayloads(df, idCol, payloadCol, DHashSchema) { (id, bytes) =>
+      val img = readImage(bytes, id)
+      val w = img.getWidth; val h = img.getHeight
+      val gw = 9; val gh = 8
+      // Bulk (small frames) or row-strided (huge frames) fetch via
+      // foreachPixelRow: per-pixel getRGB goes through the ColorModel
+      // dispatch on every call (PNGs decode to 3BYTE_BGR, not
+      // INT_RGB) — batch conversion + flat int reads either way.
+      // Cell bounds precomputed; row-major accumulation visits each
+      // row once per cell row whose CLAMPED range contains it, which
+      // reproduces the per-cell loops exactly (ranges only overlap
+      // when h < gh / w < gw — tiny clamped frames).
+      val sums = Array.ofDim[Long](gh, gw)
+      val cnts = Array.ofDim[Long](gh, gw)
+      val ys = Array.tabulate(gh) { cy =>
+        val y0 = cy * h / gh
+        (y0, math.min(math.max((cy + 1) * h / gh, y0 + 1), h))
+      }
+      val xs = Array.tabulate(gw) { cx =>
+        val x0 = cx * w / gw
+        (x0, math.min(math.max((cx + 1) * w / gw, x0 + 1), w))
+      }
+      foreachPixelRow(img) { (y, buf, off) =>
+        var cy = 0
+        while (cy < gh) {
+          if (y >= ys(cy)._1 && y < ys(cy)._2) {
             var cx = 0
-            while (cx < gw - 1) {
-              // mean(cx) > mean(cx+1) without division: cross-multiply
-              if (sums(cy)(cx) * cnts(cy)(cx + 1) >
-                  sums(cy)(cx + 1) * cnts(cy)(cx)) hash |= 1L << bit
-              bit += 1
+            while (cx < gw) {
+              var s0 = 0L; var n0 = 0L
+              var x = xs(cx)._1
+              while (x < xs(cx)._2) {
+                val rgb = buf(off + x)
+                // BT.601 luma ×1000 — integer, engine-identical
+                s0 += 299L * ((rgb >> 16) & 0xFF) +
+                  587L * ((rgb >> 8) & 0xFF) + 114L * (rgb & 0xFF)
+                n0 += 1
+                x += 1
+              }
+              sums(cy)(cx) += s0; cnts(cy)(cx) += n0
               cx += 1
             }
-            cy += 1
           }
-          Row(r.getLong(0), hash)
+          cy += 1
         }
       }
-    }(Encoders.row(DHashSchema))
-  }
+      var hash = 0L; var bit = 0
+      var cy = 0
+      while (cy < gh) {
+        var cx = 0
+        while (cx < gw - 1) {
+          // mean(cx) > mean(cx+1) without division: cross-multiply
+          if (sums(cy)(cx) * cnts(cy)(cx + 1) >
+              sums(cy)(cx + 1) * cnts(cy)(cx)) hash |= 1L << bit
+          bit += 1
+          cx += 1
+        }
+        cy += 1
+      }
+      Iterator.single(Row(id, hash))
+    }
 
   /** The (doc_id, dhash) schema of [[imageDHash]] and of the index
     * [[buildImageHashIndex]] writes — passed to the index read so the
@@ -918,12 +857,11 @@ object Multimodal {
 
   /** Image near-duplicate pairs by dHash hamming distance — the visual
     * twin of the SimHash text path and the image-dedup stage of a
-    * training-data pipeline. Same lossless pigeonhole banding: for
-    * `maxHamming` ≤ 3, two 64-bit hashes within distance 3 must agree on
-    * at least one of the four 16-bit chunks, so candidates come from four
-    * chunk-keyed equi-joins (one shuffle on small integer keys — never an
-    * all-pairs compare) and the exact `bit_count(xor)` confirm runs on
-    * candidates only. The hash frame is persisted: both sides of the
+    * training-data pipeline, through the same lossless band join
+    * ([[graft.similarity.HammingBand]], `maxHamming` ≤ 3): candidates
+    * come from chunk-keyed equi-joins (one shuffle on small integer keys
+    * — never an all-pairs compare) and the exact `bit_count(xor)` confirm
+    * runs on candidates only. The hash frame is persisted: both sides of the
     * self-join read it, and exchange reuse shares only the payload scan
     * below the decode, so a lazy plan would decode every image twice.
     * That persist makes the call eager: the pairs are materialized and
@@ -939,24 +877,11 @@ object Multimodal {
     * hash cache releases eagerly. */
   private[graft] def imageNearDupDHash(df: DataFrame, idCol: String,
       payloadCol: String, maxHamming: Int, checkpoint: Boolean): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4x16-bit banding is lossless only for maxHamming <= 3, got $maxHamming")
-    val fp = imageDHash(df, idCol, payloadCol).persist()
-    val banded = fp.select(col("doc_id").as("_id"), col("dhash"), posexplode(
-      array((0 until 4).map(i =>
-        struct(lit(i).as("chunk"),
-          shiftrightunsigned(col("dhash"), i * 16).bitwiseAND(lit(0xFFFFL)).as("v"))): _*)))
-      .select(col("_id"), col("dhash"), col("col.chunk").as("_chunk"),
-        col("col.v").as("_v"))
-    val a = banded.toDF("id_a", "h_a", "chunk_a", "v_a")
-    val b = banded.toDF("id_b", "h_b", "chunk_b", "v_b")
-    val pairs = a.join(b, a("chunk_a") === b("chunk_b") && a("v_a") === b("v_b") &&
-        a("id_a") < b("id_b"))
-      .select(col("id_a"), col("id_b"), col("h_a"), col("h_b")).distinct()
-      .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    if (!checkpoint) { fp.unpersist(); return pairs }
+    val fp = imageDHash(df, idCol, payloadCol)
+    // built before the persist, so a rejected bound leaves nothing cached
+    val pairs = graft.similarity.HammingBand.pairs(fp, fp, maxHamming, selfJoin = true)
+    if (!checkpoint) return pairs
+    fp.persist()
     graft.ops.Par.materializeThenRelease(pairs, fp) // bounds fp's persist to this call
   }
 
@@ -970,33 +895,16 @@ object Multimodal {
     imageDHash(df, idCol, payloadCol).write.mode("overwrite").parquet(path)
 
   /** Probe a delta batch of images against a persisted hash index:
-    * decodes ONLY the delta, bands both sides into the lossless 4×16-bit
-    * chunks, equi-joins on chunk value, exact-hamming-confirms. Output:
+    * decodes ONLY the delta and runs the lossless 4×16-bit band join
+    * ([[graft.similarity.HammingBand]]) against the index. Output:
     * (probe_id, corpus_id, hamming) with hamming ≤ maxHamming — sides
     * are the caller's delta/corpus split, so no ordering filter. The
     * result is a lazy plan: the delta's hashes have one consumer, and
     * the index is read with its known schema, so the call runs no job. */
   def imageNearDupProbeIndexed(spark: SparkSession, path: String,
       delta: DataFrame, idCol: String, payloadCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4x16-bit banding is lossless only for maxHamming <= 3, got $maxHamming")
-    def banded(fp: DataFrame, id: String, h: String) =
-      fp.select(col("doc_id").as(id), col("dhash").as(h), posexplode(
-        array((0 until 4).map(i =>
-          struct(lit(i).as("chunk"),
-            shiftrightunsigned(col("dhash"), i * 16).bitwiseAND(lit(0xFFFFL)).as("v"))): _*)))
-        .select(col(id), col(h), col("col.chunk").as(s"_c_$id"),
-          col("col.v").as(s"_v_$id"))
-    val a = banded(imageDHash(delta, idCol, payloadCol), "probe_id", "h_a")
-    val b = banded(spark.read.schema(DHashSchema).parquet(path), "corpus_id", "h_b")
-    a.join(b,
-        col("_c_probe_id") === col("_c_corpus_id") &&
-          col("_v_probe_id") === col("_v_corpus_id"))
-      .select(col("probe_id"), col("corpus_id"), col("h_a"), col("h_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("probe_id", "corpus_id", "hamming")
-  }
+      maxHamming: Int = 3): DataFrame =
+    graft.similarity.HammingBand.pairs(imageDHash(delta, idCol, payloadCol),
+        spark.read.schema(DHashSchema).parquet(path), maxHamming, selfJoin = false)
+      .toDF("probe_id", "corpus_id", "hamming")
 }

@@ -19,9 +19,6 @@ import Tables.{dsum, oSum}
   * engines, so it never appears on a float output. */
 object CoverageOps {
 
-  private def tmpDir(prefix: String): String =
-    TempDirs.tempDir(prefix)
-
   /** Schema-evolution fixture dirs, staged once per source dir. */
   private val schemaEvoDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -34,7 +31,7 @@ object CoverageOps {
          |  ${oSum("l_extendedprice")} AS sum_price
          |FROM lineitem""".stripMargin) { (s, d) =>
       val ctx = new Context(s)
-      val out = tmpDir("graft_csv_rt") + "/lineitem"
+      val out = TempDirs.tempDir("graft_csv_rt") + "/lineitem"
       val li = Tables(s, d, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice")
       // Scale-adaptive part count (guide §2.2/§6): the fixed 4-part hint
@@ -76,7 +73,7 @@ object CoverageOps {
          |  ${oSum("l_extendedprice")} AS sum_price
          |FROM lineitem""".stripMargin) { (s, d) =>
       val ctx = new Context(s)
-      val out = tmpDir("graft_csv_gz") + "/lineitem"
+      val out = TempDirs.tempDir("graft_csv_gz") + "/lineitem"
       val li = Tables(s, d, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice")
       // gzip members are NOT splittable, so the member count IS the scan
@@ -100,7 +97,7 @@ object CoverageOps {
       s"""SELECT count(*) AS n, ${oSum("o_totalprice")} AS total
          |FROM orders""".stripMargin) { (s, d) =>
       val ctx = new Context(s)
-      val out = tmpDir("graft_orc_rt") + "/orders"
+      val out = TempDirs.tempDir("graft_orc_rt") + "/orders"
       ctx.fromDataFrame(Tables(s, d, "orders").select("o_orderkey", "o_totalprice"))
         .toorc(out)
       ctx.orc(out).toDF.agg(
@@ -116,7 +113,7 @@ object CoverageOps {
          |  count(DISTINCT o_orderpriority) AS n_prio
          |FROM orders""".stripMargin) { (s, d) =>
       val ctx = new Context(s)
-      val out = tmpDir("graft_json_rt") + "/orders"
+      val out = TempDirs.tempDir("graft_json_rt") + "/orders"
       ctx.fromDataFrame(Tables(s, d, "orders")
           .select("o_orderkey", "o_totalprice", "o_orderpriority"))
         .tojson(out, numParts = 4)
@@ -131,7 +128,7 @@ object CoverageOps {
       """SELECT count(*) AS n, sum(length(text)) AS total_chars
         |FROM documents""".stripMargin) { (s, d) =>
       val ctx = new Context(s)
-      val out = tmpDir("graft_text_rt") + "/docs"
+      val out = TempDirs.tempDir("graft_text_rt") + "/docs"
       Tables(s, d, "documents").select("text").write.mode("overwrite").text(out)
       ctx.text(s"$out/*.txt").toDF.agg(
         count(lit(1)).as("n"), sum(length(col("value"))).as("total_chars"))
@@ -262,7 +259,7 @@ object CoverageOps {
         |  CASE WHEN doc_id % 2 = 1 THEN lang END AS lang
         |FROM documents""".stripMargin) { (s, d) =>
       val dir = schemaEvoDirs.computeIfAbsent(d, _ => {
-        val w = tmpDir("graft_evo")
+        val w = TempDirs.tempDir("graft_evo")
         val docs = Tables(s, d, "documents")
         docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
           .write.mode("overwrite").parquet(s"$w/b0")

@@ -394,14 +394,6 @@ object Scale {
     out
   }
 
-  /** Batch MERGE-upsert: the lakehouse `MERGE INTO` semantics as one full
-    * outer join — matched keys take the update's columns, unmatched base
-    * rows persist, update-only keys insert; `action` labels each row
-    * (updated/inserted/kept) for audit sinks. Both sides shuffle once on
-    * the key (or zero times if pre-bucketed on it — [[writeBucketed]]);
-    * at scale this is exactly the shuffle a Delta/Iceberg MERGE pays,
-    * minus the transaction log. `base` and `updates` must share the
-    * schema; non-key columns are taken whole-row from the winning side. */
   /** Distributed 1-based row number over a TOTAL order given by
     * `orderCols` (a unique composite; sort-direction Columns like
     * `col("n").desc` are honored): range-repartition on the order
@@ -479,6 +471,14 @@ object Scale {
       .drop("_rn", opCol)
   }
 
+  /** Batch MERGE-upsert: the lakehouse `MERGE INTO` semantics as one full
+    * outer join — matched keys take the update's columns, unmatched base
+    * rows persist, update-only keys insert; `action` labels each row
+    * (updated/inserted/kept) for audit sinks. Both sides shuffle once on
+    * the key (or zero times if pre-bucketed on it — [[writeBucketed]]);
+    * at scale this is exactly the shuffle a Delta/Iceberg MERGE pays,
+    * minus the transaction log. `base` and `updates` must share the
+    * schema; non-key columns are taken whole-row from the winning side. */
   def mergeUpsert(base: DataFrame, updates: DataFrame, keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
     val dataCols = base.columns.filterNot(keyCols.contains).toSeq

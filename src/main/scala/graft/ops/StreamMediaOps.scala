@@ -8,47 +8,29 @@ import graft.streaming.Streams
 /** Registry entries for the multimodal-column and streaming surfaces. */
 object StreamMediaOps {
 
-  /** PNG payload fixture, staged ONCE per source dir: real pipelines read
-    * payloads from object storage — they don't re-encode them per query —
-    * so the fixture is materialized to parquet on first use and every
-    * query (and every bench pass) scans the binary column from disk. */
-  private val pngDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Media payload fixture of `kind` ("png", "wav" or "avi"), staged ONCE
+    * per (kind, source dir): real pipelines read payloads from object
+    * storage — they don't re-encode them per query — so the fixture is
+    * materialized to parquet on first use and every query (and every
+    * bench pass) scans the binary column from disk. */
+  private val fixtureDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private def fixture(s: org.apache.spark.sql.SparkSession, d: String, kind: String) = {
+    val p = fixtureDirs.computeIfAbsent((kind, d), _ => {
+      val w = TempDirs.tempDir(s"graft_$kind")
+      val ids = Tables(s, d, "documents").select("doc_id")
+      (kind match {
+        case "png" => Multimodal.withPngPayload(ids, "doc_id")
+        case "wav" => Multimodal.withWavPayload(ids, "doc_id")
+        case "avi" => Multimodal.withAviPayload(ids, "doc_id")
+      }).write.mode("overwrite").parquet(w)
+      w
+    })
+    s.read.parquet(p)
+  }
+
   /** Persisted image-hash index dirs, staged once per source dir. */
   private val imageIdxDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def pngFixture(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val p = pngDirs.computeIfAbsent(d, _ => {
-      val w = TempDirs.tempDir("graft_png")
-      Multimodal.withPngPayload(Tables(s, d, "documents").select("doc_id"), "doc_id")
-        .write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(p)
-  }
-
-  /** WAV payload fixture, staged once per source dir like [[pngFixture]]. */
-  private val wavDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def wavFixture(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val p = wavDirs.computeIfAbsent(d, _ => {
-      val w = TempDirs.tempDir("graft_wav")
-      Multimodal.withWavPayload(Tables(s, d, "documents").select("doc_id"), "doc_id")
-        .write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(p)
-  }
-
-  /** AVI payload fixture (uncompressed DIB frames), staged once per
-    * source dir like [[pngFixture]]. */
-  private val aviDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def aviFixture(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val p = aviDirs.computeIfAbsent(d, _ => {
-      val w = TempDirs.tempDir("graft_avi")
-      Multimodal.withAviPayload(Tables(s, d, "documents").select("doc_id"), "doc_id")
-        .write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(p)
-  }
 
   /** Oracle CTEs replaying the AVI fixture's pixel formula
     * pixel(x,y,f) = (seed + 31x + 17y + 73f) mod 2²⁴ for frames f
@@ -102,7 +84,7 @@ object StreamMediaOps {
     // probe walks the chunk list and reads the 16-bit PCM frames back.
     // peak/energy/zero-crossings are all-integer -> bit-exact.
     Q("q_audio_decode", wavOracle(stride = 1, rate = 8000)) { (s, d) =>
-      Multimodal.wavProbe(wavFixture(s, d), "doc_id", "payload")
+      Multimodal.wavProbe(fixture(s, d, "wav"), "doc_id", "payload")
     },
 
     // ---- REAL audio downsample: decimate 2x, re-emit valid WAV, probe ----
@@ -111,7 +93,7 @@ object StreamMediaOps {
     // only matches if the rewrite kept header and frames consistent.
     Q("q_audio_resample", wavOracle(stride = 2, rate = 4000)) { (s, d) =>
       Multimodal.wavProbe(
-        Multimodal.wavDecimate(wavFixture(s, d), "doc_id", "payload", factor = 2),
+        Multimodal.wavDecimate(fixture(s, d, "wav"), "doc_id", "payload", factor = 2),
         "doc_id", "payload")
     },
 
@@ -128,7 +110,7 @@ object StreamMediaOps {
         |  (doc_id * 2654435761 + (8 + doc_id % 24 - 1) * 31
         |    + (8 + doc_id % 16 - 1) * 17) % 16777216 AS pwh
         |FROM documents""".stripMargin) { (s, d) =>
-      Multimodal.imageProbe(pngFixture(s, d), "doc_id", "payload")
+      Multimodal.imageProbe(fixture(s, d, "png"), "doc_id", "payload")
     },
 
     // ---- REAL per-channel normalization stats ------------------------------
@@ -150,7 +132,7 @@ object StreamMediaOps {
         |  CAST(sum((v // 256) % 256) AS BIGINT) AS sum_g,
         |  CAST(sum(v % 256) AS BIGINT) AS sum_b
         |FROM p GROUP BY doc_id""".stripMargin) { (s, d) =>
-      Multimodal.imageChannelStats(pngFixture(s, d), "doc_id", "payload")
+      Multimodal.imageChannelStats(fixture(s, d, "png"), "doc_id", "payload")
     },
 
     // ---- REAL batched feature extraction over decoded pixels --------------
@@ -171,7 +153,7 @@ object StreamMediaOps {
         |SELECT doc_id, CAST(cell AS INT) AS cell,
         |  CAST(SUM(val) AS DOUBLE) / count(*) AS mean_val
         |FROM v GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      Multimodal.imageGridFeatures(pngFixture(s, d), "doc_id", "payload", grid = 4)
+      Multimodal.imageGridFeatures(fixture(s, d, "png"), "doc_id", "payload", grid = 4)
     },
 
     // ---- streaming tumbling-window agg == batch q_window_day --------------
@@ -428,7 +410,7 @@ object StreamMediaOps {
         |  (seed + 31 * ((11 * w) // 12) + 17 * ((9 * h) // 10)) % 16777216 AS pwh
         |FROM d""".stripMargin) { (s, d) =>
       Multimodal.imageProbe(
-        Multimodal.imageResize(pngFixture(s, d), "doc_id", "payload", w = 12, h = 10),
+        Multimodal.imageResize(fixture(s, d, "png"), "doc_id", "payload", w = 12, h = 10),
         "doc_id", "payload")
     },
 
@@ -442,7 +424,7 @@ object StreamMediaOps {
     // layout decode are sample-exact. Compressed video (H.264 etc.)
     // remains the labeled stub — that genuinely needs codec libraries.
     Q("q_video_decode", aviOracle(stride = 1)) { (s, d) =>
-      Multimodal.aviProbe(aviFixture(s, d), "doc_id", "payload")
+      Multimodal.aviProbe(fixture(s, d, "avi"), "doc_id", "payload")
     },
 
     // ---- REAL video frame sampling (decode → subsample → re-encode) -------
@@ -452,7 +434,7 @@ object StreamMediaOps {
     // volume, proven frame-exact by the stride-aware oracle replay.
     Q("q_video_sample", aviOracle(stride = 2)) { (s, d) =>
       Multimodal.aviProbe(
-        Multimodal.aviFrameSample(aviFixture(s, d), "doc_id", "payload", stride = 2),
+        Multimodal.aviFrameSample(fixture(s, d, "avi"), "doc_id", "payload", stride = 2),
         "doc_id", "payload")
     },
 
@@ -501,7 +483,7 @@ object StreamMediaOps {
         |      i -> a.bs[i] <> b.bs[i])) AS BIGINT) AS hamming
         |  FROM v a JOIN v b ON a.doc_id < b.doc_id)
         |SELECT id_a, id_b, hamming FROM p WHERE hamming <= 3""".stripMargin) { (s, d) =>
-      Multimodal.imageNearDupDHash(pngFixture(s, d), "doc_id", "payload",
+      Multimodal.imageNearDupDHash(fixture(s, d, "png"), "doc_id", "payload",
         maxHamming = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
     }.atScale("block-band-replay",
@@ -596,10 +578,10 @@ object StreamMediaOps {
       val path = imageIdxDirs.computeIfAbsent(d, _ => {
         val w = TempDirs.tempDir("graft_img_idx")
         Multimodal.buildImageHashIndex(
-          pngFixture(s, d).filter(col("doc_id") % 5 =!= 0), "doc_id", "payload", w)
+          fixture(s, d, "png").filter(col("doc_id") % 5 =!= 0), "doc_id", "payload", w)
         w
       })
-      val delta = pngFixture(s, d).filter(col("doc_id") % 5 === 0)
+      val delta = fixture(s, d, "png").filter(col("doc_id") % 5 === 0)
       Multimodal.imageNearDupProbeIndexed(s, path, delta, "doc_id", "payload",
           maxHamming = 3)
         .select(col("probe_id"), col("corpus_id"),
@@ -625,7 +607,7 @@ object StreamMediaOps {
         |  sum(CASE WHEN abs(v) >= 32700 THEN 1 ELSE 0 END) * 1000000
         |    <= 2000 * count(*) AS ok
         |FROM s GROUP BY doc_id""".stripMargin) { (s, d) =>
-      Multimodal.wavQuality(wavFixture(s, d), "doc_id", "payload",
+      Multimodal.wavQuality(fixture(s, d, "wav"), "doc_id", "payload",
         clipAt = 32700L, maxClipPpm = 2000L)
     },
 
@@ -656,7 +638,7 @@ object StreamMediaOps {
         |SELECT doc_id, frame_id, CAST(80 AS BIGINT) AS n_px, diff_sum,
         |  diff_sum >= 110 * 80 AS is_cut
         |FROM s""".stripMargin) { (s, d) =>
-      Multimodal.aviSceneCuts(aviFixture(s, d), "doc_id", "payload",
+      Multimodal.aviSceneCuts(fixture(s, d, "avi"), "doc_id", "payload",
         thrPerPixel = 110L)
     },
 
@@ -675,7 +657,7 @@ object StreamMediaOps {
         |  (doc_id * 2654435761 + 133) % 16777216 AS pwh
         |FROM documents""".stripMargin) { (s, d) =>
       Multimodal.imageProbe(
-        Multimodal.imageCrop(pngFixture(s, d), "doc_id", "payload",
+        Multimodal.imageCrop(fixture(s, d, "png"), "doc_id", "payload",
           x0 = 1, y0 = 2, cw = 6, ch = 5, flipH = true),
         "doc_id", "payload")
     }

@@ -116,6 +116,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(nd.contains((0L, 3L)))
   }
 
+  test("simhash near-dup rejects a Hamming bound its banding cannot keep lossless") {
+    // 4 flipped bits can touch all four 16-bit chunks, so a pair at
+    // distance 4 may share no chunk and never become a candidate
+    val e = intercept[IllegalArgumentException] {
+      Dedup.nearDupSimhash(docs, "doc_id", "text", maxHamming = 4)
+    }
+    assert(e.getMessage.contains("maxHamming <= 3"), e.getMessage)
+  }
+
   test("indexed delta near-dup equals the self-contained path") {
     import spark.implicits._
     val delta = Seq(

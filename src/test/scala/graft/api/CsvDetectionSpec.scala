@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    lines (built here independently from the files the test writes),
   *    for every csv shape the suite reads;
   *  - the call submits no Spark job;
+  *  - a csv read without a resolve parses each line once, even when its
+  *    row id is pruned;
   *  - a resolved csv reads its input once, with no `Union`, and a repeated
   *    q_csv_resolve call compiles no new codegen class. */
 class CsvDetectionSpec extends AnyFunSuite {
@@ -189,6 +191,17 @@ class CsvDetectionSpec extends AnyFunSuite {
       s"input scanned more than once:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[UnionExec]),
       s"resolve planned a Union:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("a csv read through toDF with its row id pruned parses each line once") {
+    import org.apache.spark.sql.catalyst.expressions.CsvToStructs
+    val path = dirtyCsv(Seq("0,0", "1,USD10", "2,20"))
+    val df = typed(new Context(spark), path).toDF
+    val plan = df.queryExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case c: CsvToStructs => c }))
+    assert(parses.length == 1, s"from_csv planned ${parses.length} times:\n$plan")
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((0L, 0L), (2L, 20L)))
   }
 
   test("rows the fused resolver throws on carry its class; a chained resolver repairs them in order") {
