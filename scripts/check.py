@@ -6,13 +6,11 @@ Reads verifyOutDir/oracle_sql.json (written by graft.Verify), runs each SQL
 in DuckDB against the sfDir parquet tables, and exact-compares with the
 parquet results Verify wrote (columns sorted by name, rows sorted).
 
-Writes a correctness record at recordPath (default CORRECTNESS_local_<round>.json,
-round from GRAFT_ROUND env (default: the Round.scala id),
-in the cwd) in the DRIVER'S per-query schema:
-    {"<query>": {"rows_match": bool, "schema_match": bool,
-                 "hash_match": bool, "err": null|str}, ...}
-so the committed local artifact is drop-in comparable with the official
-CORRECTNESS_r{N}.json even when the driver's own leg comes back empty.
+Writes its run record at recordPath (default records/check_<sfName>.json
+under the cwd): the git head, whether the tree was dirty, the sf dir, and
+per query {"rows_match": bool, "schema_match": bool, "hash_match": bool,
+"err": null|str}. A rerun overwrites it; git keeps the history. Exits 1
+when any query does not match.
 This is a dev-side tool only — the shipped library is pure Scala/Spark.
 """
 import hashlib
@@ -43,28 +41,22 @@ def frame_hash(df):
         df.to_csv(index=False, float_format="%.12g").encode()).hexdigest()
 
 
-def _round_id():
-    """Round id from env, else DERIVED like graft.Round: max round over
-    the driver's committed official artifacts (BENCH_rNN.json /
-    CORRECTNESS_rNN.json at the repo root) + 1 (VERDICT r12 #1: the
-    hand-bumped Round.scala constant was stale at the start of two
-    consecutive rounds; deriving from repo state needs zero edits)."""
-    rid = os.environ.get("SPARK_GRAFT_ROUND") or os.environ.get("GRAFT_ROUND")
-    if rid:
-        return rid
-    import re
+def _git(*args):
+    """Output of a git command in this checkout, None when git cannot answer."""
+    import subprocess
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [int(m.group(1)) for f in os.listdir(repo)
-              if (m := re.match(r"^(?:BENCH|CORRECTNESS)_r(\d+)\.json$", f))]
-    return f"r{max(rounds) + 1}" if rounds else "r1"
+    try:
+        return subprocess.run(["git", *args], cwd=repo, capture_output=True,
+                              text=True, check=True).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
 
 
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
-    round_id = _round_id()
-    record_path = sys.argv[3] if len(sys.argv) > 3 else (
-        "CORRECTNESS_local_%s.json" % round_id)
+    record_path = sys.argv[3] if len(sys.argv) > 3 else os.path.join(
+        "records", "check_%s.json" % os.path.basename(os.path.normpath(sfdir)))
 
     def fresh_con():
         # fresh connection per query: a fatal DuckDB error on one oracle
@@ -179,8 +171,13 @@ def main():
         except AssertionError as e:
             print(f"FAIL {name}: value mismatch\n  {str(e)[:500]}")
             n_fail += 1
+    os.makedirs(os.path.dirname(record_path) or ".", exist_ok=True)
     with open(record_path, "w") as f:
-        json.dump(record, f, indent=1, sort_keys=True)
+        json.dump({"head": _git("rev-parse", "HEAD"),
+                   "dirty": bool(_git("status", "--porcelain",
+                                      "--untracked-files=no")),
+                   "sf": sfdir, "queries": record},
+                  f, indent=1, sort_keys=True)
     n_ok = len(oracle) - n_fail
     print(f"\n{n_ok}/{len(oracle)} oracle queries match -> {record_path}")
     sys.exit(1 if n_fail else 0)

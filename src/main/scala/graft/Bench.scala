@@ -1,56 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.TimeUnit
+import java.nio.file.Files
 
-/** Benchmark main (driver contract): one warmup pass over every registry
-  * query (JIT, codegen cache, file-index warm — mirrors the reference's
-  * warmup-then-measure methodology, sigmod21-reproducibility/README.md:164),
-  * then two measured passes keeping the per-query MINIMUM (steady state;
-  * GC/JIT jitter on a 32-thread local JVM otherwise dominates sub-second
-  * queries).
+/** Benchmark main: one warmup pass over every registry query (JIT,
+  * codegen cache, file-index warm — the reference's warmup-then-measure
+  * methodology, sigmod21-reproducibility/README.md:164), then two measured
+  * passes keeping each query's faster one (GC/JIT jitter otherwise
+  * dominates sub-second queries). Each query is timed through a full
+  * no-op write of its result, the plan Verify checks: `count()` would let
+  * Catalyst prune the UDF and projection work out of the timed plan.
   *
-  * Output contract (round-2 lesson: BENCH_r02.json parsed=null because the
-  * stdout line embedding all 79 per-query timings was ~2.1 KB — larger than
-  * the driver's 2000-char stdout tail capture — and sbt printed "[success]
-  * Total time…" after it): the FULL per-query map is written to bench.json
-  * in the working directory; stdout gets ONE COMPACT line (metric/value/
-  * unit/sf + a dozen headline query timings, ~450 chars, well inside the
-  * tail window), bare — no logger prefix (build.sbt sets StdoutOutput and
-  * showSuccess:=false; log4j2.properties keeps Spark on stderr) — because
-  * the driver json-parses the LAST line of captured stdout. */
+  * Writes one run record, `records/bench_<sfName>.json` (see
+  * [[RunRecord]]): per query `status`, `secs` and `layers` ([[Metrics]],
+  * with codegen compile count and time, from the kept pass), plus the
+  * host's `calibration_sec`. Prints the record's path. */
 object Bench {
 
-  /** Merge-preserving record write: top-level JSON fields present in the
-    * EXISTING round record but not in the fresh Bench output survive the
-    * rewrite. `scripts/baseline_bench.py` merges its falsifiability data
-    * (`oracle_secs`/`oracle_ratio`/`oracle_scaling`/`oracle_note`) into
-    * `BENCH_local_<round>.json` AFTER a bench run; a later Bench rerun
-    * wrote the record wholesale and wiped them (VERDICT r8 #1). Bench owns
-    * only the fields it emits; everything else is someone else's data.
-    * Only fields Bench NEVER emits are preserved — a key Bench owns but
-    * omitted this run (e.g. `stream_tier_degraded` on a healthy rerun)
-    * must not be resurrected from a stale record. Malformed/non-object
-    * existing content falls back to the fresh line.
-    *
-    * Staleness guard (VERDICT r11 #1, refined per ADVICE r12):
-    * staleness is CODE identity, not timing identity — this host's bench
-    * totals swing ±13% at fixed code (BENCH_noise_r12.json), so a value
-    * tolerance either drops valid blocks on every same-head rerun (2%)
-    * or misses the real r11 failure (r10→r11 was +13.5%). So
-    * `scripts/baseline_bench.py` now stamps `oracle_engine_head` = the
-    * git HEAD its ratios were measured on: same head ⇒ the ratios still
-    * describe THIS code and merge forward (the engine-secs provenance
-    * stays recorded in `oracle_engine_value`); different head ⇒ dropped,
-    * re-run baseline_bench. Legacy records without a head stamp (and
-    * runs where HEAD cannot be resolved) fall back to the r12 rule:
-    * drop when the stamped `oracle_engine_value` differs from the fresh
-    * total by more than 2%. */
-  private[graft] val ownedKeys: Set[String] = Set(
-    "metric", "value", "unit", "queries", "sf", "cpus", "calibration_sec",
-    "calibration_interval", "calibration_mc_sec", "calibration_mc_interval",
-    "stream_attribution", "stream_tier_degraded")
   /** Resolved git HEAD of `root` (follows one level of `ref:`), None when
     * not a git checkout — no `git` subprocess, the two files are enough. */
   private[graft] def gitHead(root: java.io.File): Option[String] =
@@ -75,13 +41,9 @@ object Bench {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Is the working tree dirty (tracked files differ from HEAD)? ADVICE
-    * r14: `gitHead` alone reports the clean commit even when the tree
-    * carries uncommitted engine edits (the normal dev loop), so a Bench
-    * rerun on a dirty tree would match an old clean stamp and merge
-    * forward oracle ratios that no longer describe the modified engine.
-    * False when git cannot answer — an unprovable dirtiness must not
-    * drop valid blocks on hosts without git. */
+  /** Is the working tree dirty (tracked files differ from HEAD)? `gitHead`
+    * alone names the clean commit even when the tree carries uncommitted
+    * engine edits. False when git cannot answer. */
   private[graft] def gitDirty(root: java.io.File): Boolean =
     try {
       val p = new ProcessBuilder("git", "status", "--porcelain",
@@ -90,124 +52,6 @@ object Bench {
         java.nio.charset.StandardCharsets.UTF_8)
       p.waitFor() == 0 && out.trim.nonEmpty
     } catch { case scala.util.control.NonFatal(_) => false }
-
-  /** Do the two commits differ on ENGINE code (src/, build.sbt,
-    * project/)? None when git cannot answer (not a checkout, git missing,
-    * unknown commit) — the caller must treat None as "assume they do".
-    * This is VERDICT r13 #1's fix: the driver's end-of-round snapshot
-    * commit is artifact-only, so ratios stamped one or two doc commits
-    * earlier still describe the same engine and should merge forward. */
-  private[graft] def engineCodeDiffers(root: java.io.File)(
-      a: String, b: String): Option[Boolean] =
-    try {
-      val p = new ProcessBuilder("git", "diff", "--name-only", a, b)
-        .directory(root).redirectErrorStream(false).start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (p.waitFor() != 0) None
-      else Some(out.linesIterator.exists(l =>
-        l.startsWith("src/") || l.startsWith("build.sbt") || l.startsWith("project/")))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Staleness decision for the existing record's oracle_* blocks, pulled
-    * out for spec-ability. Stale when:
-    *   - the stamped SF dir differs from the fresh run's (ADVICE r13:
-    *     same-head rerun against different data),
-    *   - the stamped core count differs from the fresh run's (VERDICT
-    *     r14 #5: a post-snapshot c8 rerun silently described a different
-    *     machine width than the committed 32-core sweep),
-    *   - the stamp is "-dirty" (measured on an uncommitted tree — there
-    *     is no commit to compare against, ADVICE r13),
-    *   - heads differ AND the intervening diff touches engine code (or
-    *     git cannot prove it doesn't),
-    *   - legacy record without a head stamp: the r12 2% value rule. */
-  private[graft] def oracleStale(headStamp: Option[String],
-      sfStamp: Option[String], currentHead: Option[String],
-      freshSf: Option[String], legacyValueStale: => Boolean,
-      codeDiffers: (String, String) => Option[Boolean],
-      cpusStamp: Option[String] = None,
-      freshCpus: Option[String] = None): Boolean = {
-    val sfMismatch = (sfStamp, freshSf) match {
-      case (Some(a), Some(b)) => a != b
-      case _ => false
-    }
-    val cpusMismatch = (cpusStamp, freshCpus) match {
-      case (Some(a), Some(b)) => a != b
-      case _ => false
-    }
-    sfMismatch || cpusMismatch || ((headStamp, currentHead) match {
-      case (Some(stamp), _) if stamp.endsWith("-dirty") => true
-      case (Some(stamp), Some(cur)) =>
-        stamp != cur && codeDiffers(stamp, cur).getOrElse(true)
-      case _ => legacyValueStale
-    })
-  }
-
-  private[graft] def mergePreserving(fresh: String, existing: Option[String],
-      currentHead: Option[String] = None,
-      codeDiffers: (String, String) => Option[Boolean] = (_, _) => None): String =
-    existing match {
-      case None => fresh
-      case Some(old) =>
-        try {
-          import com.fasterxml.jackson.databind.ObjectMapper
-          import com.fasterxml.jackson.databind.node.ObjectNode
-          val m = new ObjectMapper()
-          val fn = m.readTree(fresh)
-          val on = m.readTree(old)
-          if (!fn.isObject || !on.isObject) fresh
-          else {
-            val tgt = fn.asInstanceOf[ObjectNode]
-            val headStamp = Option(on.get("oracle_engine_head")).map(_.asText())
-            val sfStamp = Option(on.get("oracle_engine_sf")).map(_.asText())
-            val freshSf = Option(fn.get("sf")).map(_.asText())
-            val cpusStamp = Option(on.get("oracle_engine_cpus")).map(_.asText())
-            val freshCpus = Option(fn.get("cpus")).map(_.asText())
-            val oracleStale = this.oracleStale(headStamp, sfStamp, currentHead,
-              freshSf,
-              legacyValueStale = on.has("oracle_engine_value") && {
-                val stamp = on.get("oracle_engine_value").asDouble(Double.NaN)
-                val freshTotal =
-                  if (fn.has("value")) fn.get("value").asDouble(Double.NaN) else Double.NaN
-                !(stamp.isNaN || freshTotal.isNaN) &&
-                  math.abs(stamp - freshTotal) > 0.02 * math.max(stamp, freshTotal)
-              },
-              codeDiffers, cpusStamp, freshCpus)
-            if (oracleStale) System.err.println(
-              "[bench] existing oracle_* blocks were measured on a different " +
-              "run of different code (head/value stamp mismatch) — dropped; " +
-              "re-run scripts/baseline_bench.py on this head")
-            on.properties().forEach { e =>
-              if (!tgt.has(e.getKey) && !ownedKeys.contains(e.getKey) &&
-                  !(oracleStale && e.getKey.startsWith("oracle_")))
-                tgt.set[ObjectNode](e.getKey, e.getValue): Unit
-            }
-            m.writeValueAsString(tgt)
-          }
-        } catch { case scala.util.control.NonFatal(_) => fresh }
-    }
-
-  /** Per-query attribution for the concurrent stream tier. When the tier
-    * is COMPLETE (pool drained in time and every query succeeded), each
-    * query's concurrent span is scaled so the tier sums to the measured
-    * wall — overlapping spans would otherwise double-count machine time,
-    * equal-split would erase real per-query differences. When ANY query
-    * failed or the pool timed out, scaling would inflate the survivors
-    * with the failures' machine time (ADVICE r8): emit RAW concurrent
-    * spans instead and flag the tier degraded. Returns (per-query secs
-    * with -1 for failed/missing, degraded). */
-  private[graft] def attributeTier(spans: Map[String, Double], wall: Double,
-      poolDrained: Boolean): (Map[String, Double], Boolean) = {
-    val ok = spans.filter(_._2 >= 0)
-    val degraded = !poolDrained || ok.size != spans.size
-    val okSum = ok.values.sum
-    val out = spans.map { case (n, s) =>
-      n -> (if (s < 0) -1.0
-            else if (degraded || okSum <= 0) s
-            else s * wall / okSum)
-    }
-    (out, degraded)
-  }
 
   /** SPARK_GRAFT_ONLY parsing shared by Bench and Verify: names are
     * trimmed and empties dropped — VERDICT r11 #4: an untrimmed
@@ -235,12 +79,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run — an iteration aid; the
-    // driver never sets it, so official runs always measure everything.
-    // Names are TRIMMED and unknown names are a LOUD failure (VERDICT r11
-    // #4: a stray space or typo silently dropped q_ann_lsh from a judge's
-    // filtered run — a solo protocol must never silently measure less
-    // than it was asked to).
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (an iteration aid; the
+    // record's `only` field says so). Unknown names fail loudly before
+    // anything runs: a solo protocol must never silently measure less
+    // than it was asked to.
     val only = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val unknown = unknownOnly(only)
     if (unknown.nonEmpty) {
@@ -257,94 +99,25 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
       .filterNot(n => only.isEmpty && SparkEntry.validationOnly(n))
-    // per-query timeout + job-group cancel (shared harness): a hanging
-    // query must not stall the whole benchmark
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      val r = QueryRunner.timed(spark, name) {
-        SparkEntry.queries(name)(spark, sfDir).count(): Unit
-      } match {
-        case Right(_) => (System.nanoTime() - t0) / 1e9
-        case Left(why) =>
-          System.err.println(s"[bench] $name failed: $why")
-          -1.0
+    val metrics = Metrics.attach(spark, codegen = true)
+
+    /** One timed run of `name` through a full no-op write of its result. */
+    def once(name: String): Metrics.Run = {
+      val run = metrics.timed(name) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
       }
-      // Per-query isolation, OUTSIDE the timed region: queries that build
-      // persisted intermediates (gram sets, LSH signatures, survivor
-      // slices) must not leave them resident to pressure every later
-      // query's storage memory — with 88 sequential queries per pass the
-      // leak compounds and timings drift with registry SIZE, not query
-      // cost (the round-3 q_dedup_ngram "regression" shape).
+      run.result.swap.foreach(why => System.err.println(s"[bench] $name failed: $why"))
+      // Per-query isolation, outside the timed region: a query's
+      // persisted intermediates must not pressure every later query's
+      // storage memory.
       spark.sqlContext.clearCache()
-      r
+      run
     }
 
-    // Streaming tier: 16 independent micro-batch drains whose per-query
-    // cost is ~85% fixed start/drain floor (measured rounds 5-7; the
-    // per-query knobs — state partitions, trigger choice, RAM scratch,
-    // known-schema readback — are exhausted). The floors OVERLAP when the
-    // queries drain concurrently (each owns its cloned session, scratch
-    // and checkpoint dirs; Verify has run them concurrently since round
-    // 4), so the tier runs through a shared pool and the tier's WALL
-    // CLOCK is the honest cost of computing all 16 answers. Per-query
-    // attribution: each query's concurrent span, scaled so the tier sums
-    // to the tier wall (overlapping spans would otherwise double-count
-    // machine time; equal-split would erase real per-query differences).
-    val (streamNames, batchNames) = names.partition(_.startsWith("q_stream_"))
-    // Pool width: 16 (= the tier size, fully concurrent) beat 8 by ~20%
-    // in the round-9 A/B at sf0.1 (7.03 s → 5.59 s tier wall, same host:
-    // the drains are floor-dominated, not core-bound, so width 8 just
-    // serializes two waves of floors). Recorded in PLAN_r9.md.
-    val streamPar = sys.env.getOrElse("SPARK_GRAFT_STREAM_PAR", "16").toInt
-    // Degradation is flagged from the MEASURED passes only: the record's
-    // stream_attribution describes the spans actually emitted, and a
-    // warmup-only degradation must not mislabel healthy measured spans
-    // as raw/unscaled (ADVICE r9 — the old sticky-across-warmup flag did).
-    var tierDegraded = false
-    def streamTier(measured: Boolean): Map[String, Double] = {
-      if (streamNames.isEmpty) return Map.empty
-      val wall0 = System.nanoTime()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(streamPar,
-        (r: Runnable) => { val t = new Thread(r, "graft-bench-stream"); t.setDaemon(true); t })
-      val spans = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-      streamNames.foreach { name =>
-        pool.submit(new Runnable { def run(): Unit = {
-          val t0 = System.nanoTime()
-          QueryRunner.timed(spark, name) {
-            SparkEntry.queries(name)(spark, sfDir).count(): Unit
-          } match {
-            case Right(_) => spans.put(name, (System.nanoTime() - t0) / 1e9): Unit
-            case Left(why) =>
-              System.err.println(s"[bench] $name failed: $why")
-              spans.put(name, -1.0): Unit
-          }
-        }})
-      }
-      pool.shutdown()
-      val drained = pool.awaitTermination(30, TimeUnit.MINUTES)
-      if (!drained) System.err.println("[bench] stream tier pool TIMED OUT")
-      // cache isolation once per tier (inside `once` it would evict
-      // concurrent queries' working sets mid-flight)
-      spark.sqlContext.clearCache()
-      val wall = (System.nanoTime() - wall0) / 1e9
-      val raw = streamNames
-        .map(n => n -> Option(spans.get(n)).getOrElse(-1.0)).toMap
-      val (out, degraded) = attributeTier(raw, wall, drained)
-      if (degraded && measured) tierDegraded = true
-      if (degraded && !measured)
-        System.err.println("[bench] stream tier degraded during WARMUP " +
-          "(not recorded; measured passes flag their own state)")
-      out
-    }
-
-    // Host-speed calibration constant: one fixed single-thread CPU loop
-    // (xorshift64 mix, 4e8 steps) — a machine-speed yardstick emitted
-    // with every run. A SINGLE end-of-run sample proved misleading for
-    // round-over-round normalization (r10: it flipped a −3.6% raw move
-    // into a +21% "normalized regression" after crediting r9 with −28%),
-    // so the run now samples BEFORE / BETWEEN-PASSES / AFTER and reports
-    // the interval — a wide interval means the host was not quiet and
-    // per-query diffs that round should not be normalized linearly.
+    // Host-speed yardstick: one fixed single-thread CPU loop (xorshift64
+    // mix, 4e8 steps), sampled before, between and after the measured
+    // passes; the record keeps the median.
     def calibrate(): Double = {
       def one(): Double = {
         val t0 = System.nanoTime()
@@ -358,120 +131,23 @@ object Bench {
       math.min(one(), one())
     }
 
-    // Multi-core calibration probe (VERDICT r11 #1): the single-thread
-    // xorshift read FASTER in a window where 32-core query walls rose
-    // ~13% — one saturated core is blind to all-cores contention and
-    // thermal/turbo budgets. This runs the SAME loop on every core at
-    // once (1/8 the per-thread steps — the probe must stay cheap) and
-    // reports the WALL for all threads to finish; a multi-core slowdown
-    // the single-thread probe misses shows up here directly.
-    def calibrateMc(): Double = {
-      val nThreads = Runtime.getRuntime.availableProcessors()
-      def one(): Double = {
-        val t0 = System.nanoTime()
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-        val acc = new java.util.concurrent.atomic.AtomicLong()
-        (0 until nThreads).foreach { t =>
-          pool.submit(new Runnable { def run(): Unit = {
-            var x = 88172645463325252L + t; var a = 0L; var i = 0L
-            while (i < 50000000L) {
-              x ^= x << 13; x ^= x >>> 7; x ^= x << 17; a += x; i += 1
-            }
-            acc.addAndGet(a): Unit
-          }})
-        }
-        pool.shutdown()
-        pool.awaitTermination(10, TimeUnit.MINUTES): Unit
-        if (acc.get() == 42L) System.err.print("") // keep the loops live
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(one(), one())
-    }
-
-    batchNames.foreach(once); streamTier(measured = false) // warmup (discarded)
+    names.foreach(once) // warmup (discarded)
     val calibBefore = calibrate()
-    val calibMcBefore = calibrateMc()
-    // two measured passes, keep the per-query minimum: JIT/GC jitter on a
-    // 32-thread local JVM otherwise dominates sub-second queries
-    val pass1 = {
-      spark.sqlContext.clearCache()
-      batchNames.map(n => n -> once(n)).toMap ++ streamTier(measured = true)
-    }
+    val pass1 = names.map(once)
     val calibMid = calibrate()
-    val calibMcMid = calibrateMc()
-    val pass2 = {
-      spark.sqlContext.clearCache()
-      batchNames.map(n => n -> once(n)).toMap ++ streamTier(measured = true)
-    }
-    val passes = Seq(pass1, pass2)
-    val results = names.map { n =>
-      val ts = passes.map(_(n)).filter(_ >= 0)
-      n -> (if (ts.isEmpty) -1.0 else ts.min)
-    }
+    val pass2 = names.map(once)
+    val calib = Seq(calibBefore, calibMid, calibrate()).sorted.apply(1)
 
-    val calibAfter = calibrate()
-    val calibMcAfter = calibrateMc()
-    val calibs = Seq(calibBefore, calibMid, calibAfter).sorted
-    val calib = calibs(1) // median — the single number kept for back-compat
-    val calibsMc = Seq(calibMcBefore, calibMcMid, calibMcAfter).sorted
-
-    // locale-proof fixed-point formatting (Double.toString never emits a
-    // comma decimal separator, unlike f"" under non-ROOT default locales)
-    def f3(v: Double): String = (math.rint(v * 1000) / 1000).toString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val attribution =
-      if (tierDegraded) "DEGRADED tier (failure/timeout): raw concurrent spans, machine time under-counted"
-      else "concurrent tier, spans scaled to tier wall"
-    val degradedTag = if (tierDegraded) ""","stream_tier_degraded":true""" else ""
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":"$cpus","calibration_sec":${f3(calib)},"calibration_interval":[${f3(calibs.head)},${f3(calibs(1))},${f3(calibs(2))}],"calibration_mc_sec":${f3(calibsMc(1))},"calibration_mc_interval":[${f3(calibsMc.head)},${f3(calibsMc(1))},${f3(calibsMc(2))}],"stream_attribution":"$attribution"$degradedTag}"""
-    // filtered iteration runs must not clobber the official artifact
-    val benchFile = if (only.isDefined) "bench_partial.json" else "bench.json"
-    Files.writeString(Paths.get(benchFile), full + "\n")
-    // Round-stamped repo-root copy of the FULL per-query map (the official
-    // BENCH_rN tail keeps only the compact headline line): auditors and
-    // regression diffs need per-query numbers without git archaeology.
-    // Merge-preserving: fields other tools merged into the record (the
-    // baseline_bench falsifiability data) survive a rerun.
-    val benchRecord = Paths.get(
-      if (only.isDefined) s"${System.getProperty("user.dir")}/bench_partial.json"
-      else s"${System.getProperty("user.dir")}/BENCH_local_${Round.id}.json"
-    ).toAbsolutePath
-    if (only.isEmpty) {
-      val existing =
-        if (Files.exists(benchRecord)) Some(Files.readString(benchRecord)) else None
-      val root = new java.io.File(System.getProperty("user.dir"))
-      // a dirty tree is not the committed head: suffix the current head so
-      // the merge guard can never match a clean stamp against modified
-      // engine code (ADVICE r14; codeDiffers fails on the suffixed id and
-      // the guard correctly assumes a diff)
-      val head = gitHead(root).map(h => if (gitDirty(root)) h + "-dirty" else h)
-      Files.writeString(benchRecord,
-        mergePreserving(full, existing, head, engineCodeDiffers(root)) + "\n")
-    }
-    // Compact stdout line: BASELINE.md's headline workloads only (TPC-H
-    // Q1/Q6/Q19, the three golden pipelines, dedup/ANN/stream/csv). MUST
-    // stay well under the driver's 2000-char tail; the full map is in
-    // bench.json.
-    val headline = Seq(
-      "q1_agg", "q6_filter_agg", "q19_join_filter", "q_pipeline_golden",
-      "q_zillow_golden", "q_flights_golden", "q_corpus_golden",
-      "q_dedup_minhash", "q_dedup_ngram", "q_dedup_embed_lsh",
-      "q_ann_bruteforce", "q_stream_window", "q_csv_roundtrip")
-    val rmap = results.toMap
-    val hqs = headline.filter(rmap.contains)
-      .map(k => "\"" + k + "\":" + f3(rmap(k))).mkString("{", ",", "}")
-    // `partial` flags filtered runs: bench_record then points at the
-    // filtered subset, not the full per-query map (ADVICE r7).
-    val partialTag = if (only.isDefined) ""","partial":true""" else ""
-    val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$hqs,"sf":"$sfDir","calibration_sec":${f3(calib)},"bench_record":"$benchRecord"$partialTag}"""
+    // each query's faster successful pass; a query that failed twice
+    // keeps its second failure
+    val queries = names.zip(pass1.zip(pass2)).map { case (n, (a, b)) =>
+      val kept = Seq(a, b).filter(_.result.isRight).minByOption(_.secs).getOrElse(b)
+      n -> Map("status" -> kept.result.fold(identity, _ => "ok"),
+        "secs" -> kept.secs, "layers" -> kept.layers)
+    }.toMap
+    val record = new RunRecord("bench", sfDir, cpus, only)
+    record.write(Seq("calibration_sec" -> calib), queries)
     spark.stop()
-    // Last line of stdout, after spark.stop() so nothing interleaves
-    // (build.sbt showSuccess:=false keeps sbt from printing after us).
-    println(line)
-    System.out.flush()
+    println(record.path)
   }
 }

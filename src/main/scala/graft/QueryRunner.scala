@@ -39,6 +39,8 @@ object QueryRunner {
         spark.sparkContext.cancelJobGroup(name)
         Left("timeout")
       case e: Throwable =>
-        Left(s"error: ${e.getMessage}")
+        // Throwable.toString names the class, so a message-less exception
+        // (a bare NullPointerException) is not recorded as "error: null"
+        Left(s"error: $e")
     }
 }

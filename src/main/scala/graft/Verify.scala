@@ -1,48 +1,32 @@
 package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 import scala.collection.mutable
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each `SparkEntry.queries` result lands as
+  * `<outDir>/<name>.parquet`, next to `oracle_sql.json` and
+  * `scale_oracle_sql.json` for the DuckDB compare in `scripts/check.py`.
+  * The oracle files are written first, so a run killed midway still
+  * leaves them.
   *
-  * Robustness contract (round-1 lesson: CORRECTNESS_r01.json came back
-  * empty despite a local 59/59 pass): oracle_sql.json is written FIRST so
-  * a timeout-kill mid-run still leaves the oracle inputs; per-query status
-  * is flushed to verify_status.json after EVERY query; the final stdout
-  * line is a bare JSON summary (StdoutOutput + stderr-only log4j keep it
-  * clean for the driver's parser).
+  * Queries run concurrently through a fixed pool (default 8,
+  * `SPARK_GRAFT_VERIFY_PAR` overrides): Spark's scheduler interleaves
+  * independent jobs on one local[N] context, and the known-slow tier is
+  * submitted first to shorten the makespan. Each query runs under
+  * QueryRunner's job group and timeout, so one hang costs its slot, not
+  * the run.
   *
-  * Round-4 lesson: CORRECTNESS_r01..03 were all `{}` while BENCH_r03
-  * parsed, pointing at the verify leg's WALL CLOCK (88 sequential queries
-  * ≈ 8 min incl. compile). Queries now run CONCURRENTLY through a fixed
-  * pool (default 8, `SPARK_GRAFT_VERIFY_PAR` overrides): Spark's scheduler
-  * interleaves independent jobs on one local[N] context, every query
-  * writes its own output dir, and the known-slow tier is submitted first
-  * to minimize makespan. Per-query isolation is unchanged — each runs
-  * under QueryRunner's job-group + timeout, so one hang costs its slot,
-  * not the run.
-  *
-  * Round-6 levers (five consecutive `{}` official artifacts, stdout
-  * contract proven clean — assume the driver never reaches/parses this
-  * entry point the way we expect, and leave evidence either way):
-  *   - `graft.SparkEntry` now has a `main` delegating here (covers a
-  *     driver invoking `runMain graft.SparkEntry`).
-  *   - every argv/env resolution and per-query status line is ALSO
-  *     appended to `<outDir>/verify_trace.log`, so a killed run leaves a
-  *     post-mortem on disk even if stderr is discarded.
-  *   - after the parquet dump, Verify SELF-CHECKS: it re-reads each
-  *     written parquet, computes a deterministic canonical hash
-  *     ([[ResultHash]]), compares against the committed expected-hash
-  *     resource for this scale factor (generated by a run that
-  *     scripts/check.py verified 274/274 against DuckDB), and writes
-  *     `<outDir>/CORRECTNESS.json` in the driver's exact per-query schema
-  *     `{rows_match, schema_match, hash_match, err}` — a complete,
-  *     self-contained correctness record requiring no DuckDB at runtime.
-  *     Fresh hashes also land in `<outDir>/verify_hashes.tsv` (the file
-  *     you copy into src/main/resources/graft/ to regenerate expecteds
-  *     after a data drop). */
+  * Verify also self-checks: it hashes each written parquet
+  * ([[ResultHash]]) and compares it with the committed expected-hash
+  * resource for the data drop (generated by a run that `scripts/check.py`
+  * verified against DuckDB). Fresh hashes land in
+  * `<outDir>/verify_hashes.tsv`, the file to copy into
+  * src/main/resources/graft/ to regenerate the expecteds after a data
+  * drop. The run record, `records/verify_<sfName>.json` ([[RunRecord]]),
+  * is rewritten after every query: per query `status`, `secs`, `rows`,
+  * `hash_match` and `layers` ([[Metrics]]). The process exits 1 when any
+  * query fails, times out, is left pending or mismatches its hash. */
 object Verify {
 
   /** Slow tier from bench history, submitted first so the pool's tail is
@@ -129,31 +113,13 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    // LENIENT argv: an exact-arity destructure would die in a MatchError
-    // before anything is written if the driver ever passes an extra flag
-    // or omits an arg — precisely the silent empty-artifact shape.
-    // First two args win; missing ones fall back to env/defaults, and
-    // the resolved paths are echoed to stderr for the post-mortem.
+    // Lenient argv: the first two args win, missing ones fall back to
+    // env/defaults, and the resolved paths are echoed to stderr.
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val outDir = args.lift(1).getOrElse("/tmp/graft_verify")
     new java.io.File(outDir).mkdirs()
-
-    // Post-mortem trail ON DISK: stderr may be discarded by the harness,
-    // the trace file inside outDir survives a kill.
-    val tracePath = Paths.get(s"$outDir/verify_trace.log")
-    Files.deleteIfExists(tracePath)
-    val traceLock = new Object
-    def trace(line: String): Unit = traceLock.synchronized {
-      System.err.println(line)
-      Files.writeString(tracePath, line + "\n",
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    }
-    trace(s"[verify] argv=${args.mkString("[", ",", "]")} -> sfDir=$sfDir outDir=$outDir")
-    trace(s"[verify] env SPARK_GRAFT_SF_DIR=${sys.env.get("SPARK_GRAFT_SF_DIR")} " +
-      s"SPARK_GRAFT_CPUS=${sys.env.get("SPARK_GRAFT_CPUS")} " +
-      s"SPARK_GRAFT_VERIFY_PAR=${sys.env.get("SPARK_GRAFT_VERIFY_PAR")} " +
-      s"cwd=${System.getProperty("user.dir")}")
+    System.err.println(s"[verify] sfDir=$sfDir outDir=$outDir")
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
@@ -165,24 +131,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run — an iteration aid like
-    // Bench's; the driver never sets it, so official runs dump everything.
-    // Names are TRIMMED and unknown names fail loudly BEFORE any query
-    // runs (VERDICT r11 #4: silent drops hide a query from a solo
-    // protocol — the run must measure exactly what it was asked to).
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run, as in Bench; unknown
+    // names fail loudly before any query runs.
     val only = Bench.parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val unknownOnly = Bench.unknownOnly(only)
     if (unknownOnly.nonEmpty) {
@@ -190,99 +140,46 @@ object Verify {
         s"[verify] SPARK_GRAFT_ONLY names not in the registry: ${unknownOnly.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
+    val json = RunRecord.json
 
-    // Oracle SQL first: it is pure metadata, and the driver needs it even
+    // Oracle SQL first: it is pure metadata, and the compare needs it even
     // if a later query hangs and the process is killed.
-    val oracleJson = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
-
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json.writeValueAsString(SparkEntry.oracleSql.filter(x => wanted(x._1))))
     // Scale-point oracle variants (tractable equivalents of the quadratic
     // ground truths — scripts/check.py swaps them in under
     // GRAFT_SCALE_ORACLES=1 for sf1+ gates; never used at graded scales)
-    val scaleJson = SparkEntry.registry
-      .filter(x => x.scaleOracle.isDefined && only.forall(_.contains(x.name)))
-      .map { x =>
-        val so = x.scaleOracle.get
-        s"${q(x.name)}: {${q("method")}: ${q(so.method)}, ${q("sql")}: ${q(so.sql)}}"
-      }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/scale_oracle_sql.json"), scaleJson)
+    Files.writeString(Paths.get(s"$outDir/scale_oracle_sql.json"),
+      json.writeValueAsString(SparkEntry.registry
+        .filter(x => x.scaleOracle.isDefined && wanted(x.name))
+        .map(x => x.name -> Map("method" -> x.scaleOracle.get.method,
+          "sql" -> x.scaleOracle.get.sql)).toMap))
 
-    val all = SparkEntry.queries
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+    val all = SparkEntry.queries.filter(x => wanted(x._1))
     val order = slowFirst.filter(all.contains) ++
       all.keys.toSeq.filterNot(slowFirst.contains).sorted
 
     val fingerprint = dataFingerprint(sfDir)
     val expected = expectedFor(sfDir, Some(fingerprint))
-    trace(s"[verify] expected-hash resource for $sfDir: ${expected.size} entries " +
-      s"(data fingerprint $fingerprint)")
+    System.err.println(s"[verify] expected-hash resource for $sfDir: " +
+      s"${expected.size} entries (data fingerprint $fingerprint)")
 
-    // Repo-root record path: cwd is the sbt project root under every
-    // launch mode the driver uses (sbt runMain from /root/repo). Under
-    // SPARK_GRAFT_ONLY iteration runs, divert to /tmp so a filtered run
-    // can never clobber the round's full record.
-    // sf0.01 (the driver's grading scale) owns the bare round name; other
-    // scales get a suffix so a dual-scale session can't clobber it.
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    val scaleTag = if (sfName == "sf0.01") "" else s"_${sfName.replace(".", "")}"
-    val repoRecord = Paths.get(
-      if (only.isDefined) s"/tmp/CORRECTNESS_partial_${Round.id}$scaleTag.json"
-      else s"${System.getProperty("user.dir")}/CORRECTNESS_local_${Round.id}$scaleTag.json"
-    ).toAbsolutePath
-    trace(s"[verify] repo-root correctness record: $repoRecord")
-
-    val status = mutable.LinkedHashMap.empty[String, String]
+    val record = new RunRecord("verify", sfDir, cpus, only)
+    val metrics = Metrics.attach(spark, codegen = false)
+    val entries = mutable.Map.empty[String, Map[String, Any]]
     // (rows, sortedCols, hash) per completed query
-    val fresh = mutable.LinkedHashMap.empty[String, (Long, String, String)]
-    order.foreach(status(_) = "pending")
-    val lock = new Object
+    val fresh = mutable.Map.empty[String, (Long, String, String)]
+    order.foreach(entries(_) = Map("status" -> "pending"))
     def flush(): Unit = {
-      val body = status.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/verify_status.json"), body)
-      // Self-contained correctness record in the driver's per-query
-      // schema. Only queries that finished AND have a committed expected
-      // hash appear — an entry asserts a real comparison, never a
-      // fabricated pass (a run against an unknown data drop writes `{}`,
-      // which honestly reads "nothing verified"); failed queries with an
-      // expected entry report all-false with the error. verify_status.json
-      // remains the completeness record for every query.
-      val rec = status.toSeq
-        .filter { case (name, st) => st != "pending" && expected.contains(name) }
-        .sortBy(_._1)
-        .map { case (name, st) =>
-          val entry = (st, fresh.get(name), expected(name)) match {
-            case (s, _, _) if s != "ok" =>
-              s"""{"rows_match": false, "schema_match": false, "hash_match": false, "err": ${q(s)}}"""
-            case (_, Some((rows, cols, hash)), (erows, ecols, ehash)) =>
-              s"""{"rows_match": ${rows == erows}, "schema_match": ${cols == ecols}, "hash_match": ${hash == ehash}, "err": null}"""
-            case _ =>
-              s"""{"rows_match": false, "schema_match": false, "hash_match": false, "err": "result hash unavailable"}"""
-          }
-          s"${q(name)}: $entry"
-        }.mkString("{", ", ", "}")
-      Files.writeString(Paths.get(s"$outDir/CORRECTNESS.json"), rec)
-      // Round-7 lever (official artifact empty six rounds running): the
-      // SAME driver-schema record also lands at the REPO ROOT under a
-      // round-stamped name, and the final stdout JSON advertises its
-      // absolute path — so any parser of the stdout line can find a
-      // complete correctness record without knowing outDir.
-      Files.writeString(repoRecord, rec)
-      // name-sorted so expected-hash regenerations diff minimally (the
-      // completion-order write churned ~290 lines per regen for 15 adds)
+      record.write(Nil, entries.toMap)
+      // name-sorted so expected-hash regenerations diff minimally
       val tsv = fresh.toSeq.sortBy(_._1).map { case (name, (rows, cols, hash)) =>
         s"$name\t$rows\t$cols\t$hash"
       }.mkString(s"#fingerprint=$fingerprint\n", "\n", "\n")
       Files.writeString(Paths.get(s"$outDir/verify_hashes.tsv"), tsv)
     }
-    def record(name: String, st: String,
-        h: Option[(Long, String, String)]): Unit = lock.synchronized {
-      status(name) = st
-      h.foreach(fresh(name) = _)
-      flush()
-    }
+    flush()
 
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").toInt
     val pool = Executors.newFixedThreadPool(par, (r: Runnable) => {
@@ -292,21 +189,19 @@ object Verify {
       val fn = all(name)
       pool.submit(new Runnable {
         def run(): Unit = {
-          val t0 = System.nanoTime()
           // AtomicReference: QueryRunner runs the body on ITS pool and
           // this thread reads after Await — on the timeout path the
           // abandoned body may still be writing concurrently, so the
-          // read needs a happens-before edge (a captured plain var lifts
-          // to a NON-volatile ObjectRef), and the value is only TRUSTED
-          // when the query finished ok (a timed-out query must not count
-          // as hash-verified even if its zombie body completed later).
+          // read needs a happens-before edge, and the value is only
+          // TRUSTED when the query finished ok (a timed-out query must
+          // not count as hash-verified even if its zombie body completed
+          // later).
           val hashed = new java.util.concurrent.atomic.AtomicReference[
             Option[(Long, String, String)]](None)
-          val st = QueryRunner.timed(spark, name) {
-            // Contract: the result must land at outDir/<name>.parquet. Spark
-            // can only write a directory, so write to a scratch dir and move
-            // the single coalesced part file to the exact path (readable by
-            // any parquet reader, no glob needed).
+          val run = metrics.timed(name) {
+            // The result must land at outDir/<name>.parquet. Spark can
+            // only write a directory, so write to a scratch dir and move
+            // the single coalesced part file to the exact path.
             val tmp = s"$outDir/.tmp_$name"
             fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(tmp)
             val part = new java.io.File(tmp).listFiles()
@@ -317,54 +212,44 @@ object Verify {
             Files.move(part.toPath, dest)
             new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
             // Self-check hash over the WRITTEN file (exactly what the
-            // driver's DuckDB leg reads) — one tiny extra scan at sf0.01.
+            // DuckDB compare reads) — one tiny extra scan at sf0.01.
             hashed.set(Some(ResultHash.of(spark.read.parquet(dest.toString))))
-          } match {
-            case Right(_) => "ok"
-            case Left(why) => why
           }
-          // One status line per query to stderr AND the trace file
-          // (stdout stays a single JSON summary line for the driver's
-          // parser) — a killed run still leaves a per-query post-mortem.
-          val secs = (System.nanoTime() - t0) / 1e9
+          val st = run.result.fold(identity, _ => "ok")
           val trusted = if (st == "ok") hashed.get() else None
-          val mark = trusted.flatMap { case (r, c, h) =>
-            expected.get(name).map { case (er, ec, eh) =>
-              if (r == er && c == ec && h == eh) " hash=ok" else " hash=MISMATCH"
-            }
-          }.getOrElse("")
-          trace(f"[verify] $name%-28s $st%-8s ${secs}%6.1fs$mark")
-          record(name, st, trusted)
+          val hashMatch = trusted.flatMap(h => expected.get(name).map(_ == h))
+          val mark = hashMatch.fold("")(m => if (m) " hash=ok" else " hash=MISMATCH")
+          System.err.println(f"[verify] $name%-28s $st%-8s ${run.secs}%6.1fs$mark")
+          entries.synchronized {
+            entries(name) = Map("status" -> st, "secs" -> run.secs,
+              "rows" -> trusted.map(_._1), "hash_match" -> hashMatch,
+              "layers" -> run.layers)
+            trusted.foreach(fresh(name) = _)
+            flush()
+          }
         }
       })
     }
     pool.shutdown()
-    // Drain ceiling: typical full-registry wall is ~45 s at sf0.01
-    // (8 workers) and every query already carries its own job-group
-    // timeout, so a pool that hasn't drained well past that is a genuine
-    // hang — fail fast INSIDE the driver's round budget (the old 60-min
-    // ceiling exceeded it, turning a hang into an empty artifact). The
-    // ceiling scales with the per-query timeout: staged-scale solo runs
-    // (SPARK_GRAFT_QUERY_TIMEOUT=1800 at sf10e) were being cut off at a
-    // hard-coded 10 min BELOW their own query budget.
-    pool.awaitTermination(
+    // Drain ceiling: every query carries its own job-group timeout, so a
+    // pool that has not drained well past it is a genuine hang.
+    val drained = pool.awaitTermination(
       math.max(600L, 2L * QueryRunner.DefaultTimeoutSec), TimeUnit.SECONDS)
-    // Per-query persisted frames (LSH signatures, CC labels, …) are NOT
-    // dropped mid-run anymore — a global clearCache would evict a
-    // concurrent query's working set. At verify SF the accumulated
-    // storage is tiny and MEMORY_AND_DISK spills anyway.
-    spark.sqlContext.clearCache()
-    val nOk = status.valuesIterator.count(_ == "ok")
-    val nHashOk = fresh.count { case (name, (r, c, h)) =>
-      expected.get(name).exists { case (er, ec, eh) => r == er && c == ec && h == eh }
-    }
-    // denominator = queries RUN that have a committed expected entry
-    // (under SPARK_GRAFT_ONLY the full resource size would mislead)
-    val nExpectedRun = order.count(expected.contains)
-    trace(s"[verify] done: ok=$nOk/${status.size} selfcheck=$nHashOk/$nExpectedRun")
     spark.stop()
-    println(s"""{"verify_ok":$nOk,"verify_total":${status.size},"selfcheck_ok":$nHashOk,"selfcheck_expected":$nExpectedRun,"out":"$outDir","correctness_record":"$repoRecord"}""")
+    val (failed, mismatched, nHashOk) = entries.synchronized {
+      (entries.collect { case (n, e) if e("status") != "ok" => n }.toSeq.sorted,
+        fresh.collect { case (n, h) if expected.get(n).exists(_ != h) => n }.toSeq.sorted,
+        fresh.count { case (n, h) => expected.get(n).contains(h) })
+    }
+    System.err.println(s"[verify] done: ok=${order.size - failed.size}/${order.size} " +
+      s"hash_ok=$nHashOk/${order.count(expected.contains)}")
+    if (!drained) System.err.println("[verify] pool did not drain in time")
+    if (failed.nonEmpty) System.err.println(s"[verify] not ok: ${failed.mkString(", ")}")
+    if (mismatched.nonEmpty)
+      System.err.println(s"[verify] hash=MISMATCH: ${mismatched.mkString(", ")}")
+    println(record.path)
     System.out.flush()
+    if (!drained || failed.nonEmpty || mismatched.nonEmpty) sys.exit(1)
   }
 }
 

@@ -441,7 +441,7 @@ object Dedup {
     * candidates grow as `tables · n² / 2^bits`, so any constant `bits`
     * is quadratic in the corpus (measured: the 4-bit/24-table pin held
     * 1.7 s at 2 k vectors and 23 s at 20 k — 856 MB of candidate-pair
-    * shuffle with 12 GB of spill, PLAN_r10.md). Sizing rule:
+    * shuffle with 12 GB of spill, 2686cb5:PLAN_r10.md). Sizing rule:
     *  - `bits` targets ~16 random vectors per bucket (`ceil(log2(n/16))`,
     *    clamped to [4,16]) — each extra bit halves random collisions
     *    while costing only `1/p₁` more tables, a net `2·p₁ > 1` win per

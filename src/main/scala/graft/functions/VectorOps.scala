@@ -63,7 +63,7 @@ object VectorUtil {
     * with auto-sized banding (hundreds of tables at corpus scale) the
     * per-call formulation spent seconds of DRIVER time analyzing and
     * codegen-ing hundreds of expressions per query (measured ~7 s of the
-    * q_dedup_embed_lsh wall at the sf1 point, PLAN_r10.md). */
+    * q_dedup_embed_lsh wall at the sf1 point, 2686cb5:PLAN_r10.md). */
   def hyperSigs(v: ArrayData, planes: Array[Array[Array[Double]]]): ArrayData = {
     val out = new Array[Long](planes.length)
     var t = 0
@@ -98,7 +98,7 @@ object VectorUtil {
     *    smaller cid (the struct's `-cid` max).
     * At production k ≈ √n the HOF stack is the measured wall (k=450
     * at 200k vectors: ~400 s of interpreted per-centroid HOF evals,
-    * BENCH_semdedup_ab_r12.json); one fused reference-array loop is the
+    * 2686cb5:BENCH_semdedup_ab_r12.json); one fused reference-array loop is the
     * same flops without the interpreter. */
   def centroidArgmax(v: ArrayData, cids: Array[Long],
       cents: Array[Array[Double]], centNorms: Array[Double]): Long = {

@@ -116,7 +116,7 @@ object MiningOps {
       // node-sized, and an eager local checkpoint materializes it exactly
       // once; both broadcast builds then read the checkpoint blocks
       // (guide §2.4 "two operations keyed the same way can share one
-      // exchange"; plans/r15/q_assoc_rules_after.txt — one itemCnt
+      // exchange"; 2686cb5:plans/r15/q_assoc_rules_after.txt — one itemCnt
       // subtree, two RDDScans of it).
       val itemCnt = arr.select(explode(col("items")).as("item"))
         .groupBy("item").agg(count(lit(1)).as("cnt"))

@@ -48,7 +48,7 @@ object Scale {
     * the single-range fast path. An A/B of the stricter alternative —
     * falling back to the session width whenever a Generate/Join is
     * present — cost the nine rank-device queries 10–22% at sf0.1 for no
-    * correctness gain (PLAN_r9.md). */
+    * correctness gain (2686cb5:PLAN_r9.md). */
   private[graft] def sizedRangePartitions(df: DataFrame, explicit: Int,
       targetBytes: Long = 64L << 20): Int = {
     if (explicit > 0) explicit

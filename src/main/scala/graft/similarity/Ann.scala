@@ -455,7 +455,8 @@ object Ann {
     * point, where depth 50 (n/4 at the 200-vector sf0.01 gate that
     * tuned it) dropped the per-query recall gate from pass to 0/8 at a
     * 20k-vector corpus. Auto depth = n/4 of the SCORED row count —
-    * measured on the clustered fixture with `graft.Prof ann` (m=8,
+    * measured on the clustered fixture with the `Prof ann` PQ recall
+    * sweep of commit 2686cb5 (m=8,
     * ksub=32, 20k vectors: recall@5 = 0.225 at depth 50, 0.95 at
     * 1000 ≈ n/20, 1.000 at 5000 = n/4 — and n/4 is exactly the
     * historical tuning point, so the constant is scale-stable) —

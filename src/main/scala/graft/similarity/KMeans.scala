@@ -47,7 +47,7 @@ object KMeans {
     * bit-exact with [[argmaxCosHof]] — spec'd): the per-centroid HOF
     * struct-max was the measured wall of the whole operator at
     * production k ≈ √n (k=450 at 200k vectors: ~400 s of interpreted
-    * per-centroid evals, BENCH_semdedup_ab_r12.json). */
+    * per-centroid evals, 2686cb5:BENCH_semdedup_ab_r12.json). */
   private def argmaxCos(vec: Column, cents: Seq[(Long, Array[Double])]): Column =
     org.apache.spark.sql.GraftBridge.column(graft.functions.CentroidArgmax(
       org.apache.spark.sql.GraftBridge.expression(vec),

@@ -2,227 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the two honesty devices in the bench harness (no Spark session —
-  * both are pure functions, extracted exactly so they can be spec'd):
-  *
-  *  - [[Bench.mergePreserving]]: a Bench rerun must not wipe the
-  *    falsifiability fields `scripts/baseline_bench.py` merged into the
-  *    round record (VERDICT r8 #1 — the driver's rerun clobbered
-  *    `oracle_secs`/`oracle_ratio`/`oracle_scaling` out of the working
-  *    tree; only the committed copy survived).
-  *  - [[Bench.attributeTier]]: the stream tier's per-query attributions
-  *    must sum to the measured tier wall when the tier is healthy, and
-  *    must fall back to RAW concurrent spans (machine time under-counted,
-  *    flagged degraded) when any query failed or the pool timed out —
-  *    scaling would otherwise inflate the survivors with the failures'
-  *    machine time (ADVICE r8). */
+/** The pure helpers behind the Bench and Verify run records (no Spark
+  * session): the `SPARK_GRAFT_ONLY` filter and the git `head`/`dirty`
+  * stamps every record carries. */
 class BenchRecordSpec extends AnyFunSuite {
-
-  private val fresh =
-    """{"metric":"total","value":10.5,"unit":"sec","queries":{"q1_agg":0.3},"sf":"/x","calibration_sec":0.77,"stream_attribution":"concurrent tier, spans scaled to tier wall"}"""
-
-  test("mergePreserving keeps foreign top-level fields from the old record") {
-    val old =
-      """{"metric":"total","value":99.0,"queries":{"q1_agg":9.9},"oracle_secs":{"q1_agg":0.06},"oracle_ratio":{"q1_agg":5.2},"oracle_scaling":{"q1_agg":{"sf0.1":5.2}},"oracle_note":"n"}"""
-    val merged = Bench.mergePreserving(fresh, Some(old))
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(merged)
-    // fresh fields win
-    assert(m.get("value").asDouble() === 10.5)
-    assert(m.get("queries").get("q1_agg").asDouble() === 0.3)
-    // foreign fields survive
-    assert(m.get("oracle_secs").get("q1_agg").asDouble() === 0.06)
-    assert(m.get("oracle_ratio").get("q1_agg").asDouble() === 5.2)
-    assert(m.get("oracle_scaling").get("q1_agg").get("sf0.1").asDouble() === 5.2)
-    assert(m.get("oracle_note").asText() === "n")
-    // still one line of valid JSON (records are diffed line-wise)
-    assert(!merged.contains("\n"))
-  }
-
-  test("mergePreserving does not resurrect stale Bench-owned keys") {
-    val old = """{"value":1.0,"stream_tier_degraded":true,"oracle_note":"n"}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old)))
-    assert(!m.has("stream_tier_degraded")) // healthy rerun stays healthy
-    assert(m.has("oracle_note"))
-  }
-
-  test("mergePreserving REFUSES oracle blocks stamped for a different run") {
-    // the r11 failure: Round.id was stale, so the official r11 rerun
-    // merged r10's oracle_ratio/oracle_scaling (stamped
-    // oracle_engine_value=144.2) onto r11's 176.7 s timings — a
-    // self-inconsistent record. The stamp now gates the merge.
-    val old =
-      """{"value":155.7,"oracle_engine_value":144.2,"oracle_ratio":{"q1_agg":5.2},"oracle_scaling":{"q1_agg":{"sf0.1":5.2}},"oracle_secs":{"q1_agg":0.06},"oracle_note":"n","foreign_other":"kept"}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old))) // fresh value=10.5
-    assert(!m.has("oracle_ratio") && !m.has("oracle_scaling") &&
-      !m.has("oracle_secs") && !m.has("oracle_note") &&
-      !m.has("oracle_engine_value"),
-      "stale oracle blocks must be dropped, not merged forward")
-    assert(m.get("foreign_other").asText() === "kept",
-      "non-oracle foreign fields still survive")
-  }
-
-  test("mergePreserving keeps oracle blocks stamped for THIS run (within 2%)") {
-    val old =
-      """{"value":10.4,"oracle_engine_value":10.45,"oracle_ratio":{"q1_agg":5.2},"oracle_note":"n"}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old))) // fresh value=10.5
-    assert(m.get("oracle_ratio").get("q1_agg").asDouble() === 5.2)
-    assert(m.get("oracle_engine_value").asDouble() === 10.45)
-  }
-
-  test("head-stamped oracle blocks survive a same-head rerun at ANY timing drift") {
-    // ADVICE r12: the 2% value rule dropped valid blocks on every rerun
-    // (this host's fixed-code window is ±13%) — staleness is CODE
-    // identity. Same head, value 30% off: keep.
-    val old =
-      """{"value":8.0,"oracle_engine_value":8.0,"oracle_engine_head":"abc123","oracle_ratio":{"q1_agg":5.2}}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old), Some("abc123")))
-    assert(m.get("oracle_ratio").get("q1_agg").asDouble() === 5.2)
-    assert(m.get("oracle_engine_head").asText() === "abc123")
-  }
-
-  test("head-stamped oracle blocks are dropped on a DIFFERENT head, even at equal timings") {
-    val old =
-      """{"value":10.5,"oracle_engine_value":10.5,"oracle_engine_head":"abc123","oracle_ratio":{"q1_agg":5.2},"foreign_other":"kept"}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old), Some("def456")))
-    assert(!m.has("oracle_ratio") && !m.has("oracle_engine_head"),
-      "different code head => ratios describe other code, must drop")
-    assert(m.get("foreign_other").asText() === "kept")
-  }
-
-  test("head stamp without a resolvable current head falls back to the value rule") {
-    val old =
-      """{"value":155.7,"oracle_engine_value":144.2,"oracle_engine_head":"abc123","oracle_ratio":{"q1_agg":5.2}}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh, Some(old), None)) // fresh value=10.5
-    assert(!m.has("oracle_ratio"), "no head to compare => the 2% value rule decides")
-  }
-
-  test("oracleStale: a -dirty stamp never matches (ADVICE r13 a)") {
-    // measured on an uncommitted tree — no commit to compare against
-    assert(Bench.oracleStale(Some("abc123-dirty"), None, Some("abc123"),
-      None, legacyValueStale = false, (_, _) => Some(false)))
-  }
-
-  test("oracleStale: SF-dir mismatch is stale even on the same head (ADVICE r13 b)") {
-    assert(Bench.oracleStale(Some("abc123"), Some("/root/testdata/sf0.1"),
-      Some("abc123"), Some("/root/testdata/sf0.01"),
-      legacyValueStale = false, (_, _) => Some(false)))
-    // same sf dir: not stale
-    assert(!Bench.oracleStale(Some("abc123"), Some("/x"), Some("abc123"),
-      Some("/x"), legacyValueStale = false, (_, _) => Some(false)))
-  }
-
-  test("oracleStale: cpus mismatch is stale even on the same head (VERDICT r14 #5)") {
-    assert(Bench.oracleStale(Some("abc123"), Some("/x"), Some("abc123"),
-      Some("/x"), legacyValueStale = false, (_, _) => Some(false),
-      cpusStamp = Some("32"), freshCpus = Some("8")))
-    // same cpus: not stale
-    assert(!Bench.oracleStale(Some("abc123"), Some("/x"), Some("abc123"),
-      Some("/x"), legacyValueStale = false, (_, _) => Some(false),
-      cpusStamp = Some("32"), freshCpus = Some("32")))
-    // legacy record without a cpus stamp: cpus cannot decide
-    assert(!Bench.oracleStale(Some("abc123"), Some("/x"), Some("abc123"),
-      Some("/x"), legacyValueStale = false, (_, _) => Some(false),
-      cpusStamp = None, freshCpus = Some("8")))
-  }
-
-  test("mergePreserving drops oracle blocks when the record's cpus stamp mismatches") {
-    val freshC8 =
-      """{"metric":"total","value":10.5,"queries":{"q1_agg":0.3},"sf":"/x","cpus":"8"}"""
-    val old =
-      """{"value":10.5,"cpus":"32","oracle_engine_head":"abc123","oracle_engine_sf":"/x","oracle_engine_cpus":"32","oracle_ratio":{"q1_agg":5.2},"foreign_other":"kept"}"""
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(freshC8, Some(old), Some("abc123")))
-    assert(!m.has("oracle_ratio") && !m.has("oracle_engine_cpus"),
-      "ratios measured at 32 cores must not describe an 8-core record")
-    assert(m.get("foreign_other").asText() === "kept")
-    // and the stamp ROUND-TRIPS when cpus match: same record at cpus=32
-    val fresh32 = freshC8.replace("\"cpus\":\"8\"", "\"cpus\":\"32\"")
-    val kept = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Bench.mergePreserving(fresh32, Some(old), Some("abc123")))
-    assert(kept.get("oracle_ratio").get("q1_agg").asDouble() === 5.2)
-    assert(kept.get("oracle_engine_cpus").asText() === "32")
-  }
 
   test("gitDirty answers false on garbage roots instead of throwing") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dirty_spec").toFile
     assert(!Bench.gitDirty(dir)) // not a repo: git fails => unprovable => clean
   }
 
-  test("oracleStale: head moved by artifact-only commits keeps ratios (VERDICT r13 #1)") {
-    // the r13 end-of-round failure: ratios stamped three DOC commits before
-    // the snapshot head were dropped; when git proves the intervening diff
-    // touches no engine code, the ratios still describe this engine.
-    assert(!Bench.oracleStale(Some("abc123"), None, Some("def456"),
-      None, legacyValueStale = false, (_, _) => Some(false)))
-    // engine code differs => stale
-    assert(Bench.oracleStale(Some("abc123"), None, Some("def456"),
-      None, legacyValueStale = false, (_, _) => Some(true)))
-    // git cannot answer (unknown commit) => assume differs => stale
-    assert(Bench.oracleStale(Some("abc123"), None, Some("def456"),
-      None, legacyValueStale = false, (_, _) => None))
-  }
-
-  test("engineCodeDiffers: HEAD vs HEAD is a provable no-diff on this checkout") {
-    val root = new java.io.File(System.getProperty("user.dir"))
-    val head = Bench.gitHead(root)
-    assume(head.isDefined)
-    assert(Bench.engineCodeDiffers(root)(head.get, head.get) === Some(false))
-    // garbage commit: git fails, caller must assume a diff
-    assert(Bench.engineCodeDiffers(root)("not-a-commit", head.get) === None)
-  }
-
   test("gitHead resolves this checkout to a 40-hex commit") {
     val head = Bench.gitHead(new java.io.File("."))
     assert(head.exists(_.matches("[0-9a-f]{40}")), s"got $head")
-  }
-
-  test("Round.derive warns on r1 in a non-repo-root cwd, stays quiet at a real root") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_round_cwd").toFile
-    val err = new java.io.ByteArrayOutputStream()
-    Console.withErr(new java.io.PrintStream(err)) {
-      assert(Round.derive(dir) === "r1")
-    }
-    assert(err.toString.contains("not the repo root"),
-      "r1 derived away from the repo root must be loud (VERDICT r13 #3)")
-    // a bare-but-genuine repo root (has the source tree) derives r1 silently
-    assert(new java.io.File(dir, "src/main/scala/graft").mkdirs())
-    val err2 = new java.io.ByteArrayOutputStream()
-    Console.withErr(new java.io.PrintStream(err2)) {
-      assert(Round.derive(dir) === "r1")
-    }
-    assert(err2.toString.isEmpty, "genuine bare repo root must stay quiet")
-  }
-
-  test("Round.derive: id = max committed official artifact + 1 (the r11 lag case)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_round_spec").toFile
-    Console.withErr(new java.io.PrintStream(new java.io.ByteArrayOutputStream())) {
-      assert(Round.derive(dir) === "r1") // bare tree
-    }
-    java.nio.file.Files.writeString(dir.toPath.resolve("BENCH_r09.json"), "{}")
-    java.nio.file.Files.writeString(dir.toPath.resolve("CORRECTNESS_r12.json"), "{}")
-    java.nio.file.Files.writeString(dir.toPath.resolve("BENCH_local_r99.json"), "{}")
-    java.nio.file.Files.writeString(dir.toPath.resolve("bench.json"), "{}")
-    // r12 is the newest OFFICIAL artifact; local/bench files don't count
-    assert(Round.derive(dir) === "r13")
-  }
-
-  test("Round.id on this repo is strictly past every committed official artifact") {
-    val root = new java.io.File(System.getProperty("user.dir"))
-    val stamped = Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      .flatMap(f => Round.artifactPattern.findFirstMatchIn(f.getName)
-        .map(_.group(1).toInt))
-    val raw = Round.id.stripPrefix("r")
-    assume(raw.nonEmpty && raw.forall(_.isDigit)) // non-numeric env override
-    val cur = raw.toInt
-    assert(stamped.isEmpty || cur > stamped.max,
-      s"Round.id=${Round.id} lags the newest official artifact r${stamped.max} — " +
-        "an official rerun would overwrite the PRIOR round's record (the r11 failure)")
   }
 
   test("SPARK_GRAFT_ONLY parsing trims names; unknown names are flagged") {
@@ -233,35 +25,5 @@ class BenchRecordSpec extends AnyFunSuite {
     val typo = Bench.parseOnly(Some("q1_agg,q_no_such_query"))
     assert(Bench.unknownOnly(typo) === Set("q_no_such_query"))
     assert(Bench.unknownOnly(None) === Set.empty)
-  }
-
-  test("mergePreserving survives absent/garbage existing records") {
-    assert(Bench.mergePreserving(fresh, None) === fresh)
-    assert(Bench.mergePreserving(fresh, Some("not json {")) === fresh)
-    assert(Bench.mergePreserving(fresh, Some("[1,2]")) === fresh)
-  }
-
-  test("healthy tier: attributions sum to the measured wall, ratios preserved") {
-    val spans = Map("q_stream_a" -> 2.0, "q_stream_b" -> 4.0, "q_stream_c" -> 6.0)
-    val (out, degraded) = Bench.attributeTier(spans, wall = 3.0, poolDrained = true)
-    assert(!degraded)
-    assert(math.abs(out.values.sum - 3.0) < 1e-9, "attributions must sum to the tier wall")
-    // relative per-query differences survive the scaling
-    assert(math.abs(out("q_stream_b") / out("q_stream_a") - 2.0) < 1e-9)
-  }
-
-  test("degraded tier (a failure): raw spans, no inflation of survivors") {
-    val spans = Map("q_stream_a" -> 2.0, "q_stream_b" -> -1.0)
-    val (out, degraded) = Bench.attributeTier(spans, wall = 5.0, poolDrained = true)
-    assert(degraded)
-    assert(out("q_stream_a") === 2.0) // raw span, NOT 5.0
-    assert(out("q_stream_b") === -1.0)
-  }
-
-  test("degraded tier (pool timeout): flagged even when all spans succeeded") {
-    val spans = Map("q_stream_a" -> 2.0)
-    val (out, degraded) = Bench.attributeTier(spans, wall = 9.0, poolDrained = false)
-    assert(degraded)
-    assert(out("q_stream_a") === 2.0)
   }
 }

@@ -26,7 +26,6 @@ class BroadcastAuditSpec extends AnyFunSuite {
 
   // file -> audited broadcast( call-site count (comment lines excluded)
   private val audited: Map[String, Int] = Map(
-    "graft/Prof.scala" -> 1, // profiling anchor table, rows = #anchors (bounded)
     "graft/ops/AnalyticsOps.scala" -> 5, // enum-keyed segment sizes + 1-row scalars
     "graft/ops/ClusterOps.scala" -> 2, // k centroids (bounded model state)
     "graft/ops/CorpusOps.scala" -> 3, // 1-row scalars + bounded mix table

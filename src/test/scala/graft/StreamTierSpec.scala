@@ -5,14 +5,11 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tier-honesty spec for the concurrent stream tier (VERDICT r8 #4):
-  * Bench and Verify drain the `q_stream_*` queries through a shared pool
-  * because their cost is ~85% fixed start/drain floor. The attribution
-  * math is spec'd in BenchRecordSpec; THIS spec guards the semantic half
-  * — running stream queries concurrently must produce exactly the
-  * answers a sequential run produces (each query owns a cloned session
-  * and scratch/checkpoint dirs; a shared-state leak between concurrent
-  * drains would show up here as a row diff). */
+/** Concurrent stream drains give sequential answers. `graft.Verify` runs
+  * the registry through an 8-wide pool, so several `q_stream_*` drains
+  * overlap on one SparkContext. Each query owns a cloned session and its
+  * scratch and checkpoint dirs; a shared-state leak between concurrent
+  * drains would show up here as a row diff. */
 class StreamTierSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
