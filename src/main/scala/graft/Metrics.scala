@@ -12,10 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * SparkListener attributes every job, and the stages and tasks of that
   * job, to the query that started it, so the counters stay per query
   * under Verify's concurrent pool. [[timed]] runs a query through
-  * `QueryRunner.timed` and tags the query's thread with the query name.
-  * Attribution goes by that tag, not by the job group `QueryRunner.timed`
-  * sets: a stream drain's micro-batch jobs run under StreamExecution's
-  * own job group (its run id), but they inherit the tag. The layer names
+  * `QueryRunner.timed`, which tags the query's jobs with
+  * `QueryRunner.jobTag`. Attribution goes by that tag, not by the job
+  * group `QueryRunner.timed` also sets: a stream drain's micro-batch jobs
+  * run under StreamExecution's own job group (its run id), but they
+  * inherit the tag. The layer names
   * are `BENCHMARK.json`'s `per_layer` names.
   *
   * With `codegen = true` each query also gets the JVM-wide codegen
@@ -75,13 +76,10 @@ final class Metrics private (spark: SparkSession, codegen: Boolean)
     * its outcome, its wall in seconds and its layer counters. The
     * listener bus is drained after the wall is taken. */
   def timed(name: String)(body: => Unit): Metrics.Run = {
-    val tag = s"graft-query-$name"
+    val tag = QueryRunner.jobTag(name)
     val a = new Acc
     running.put(tag, a)
-    val result = QueryRunner.timed(spark, name) {
-      spark.sparkContext.addJobTag(tag)
-      try body finally spark.sparkContext.removeJobTag(tag)
-    }
+    val result = QueryRunner.timed(spark, name)(body)
     val secs = (System.nanoTime() - a.startNs) / 1e9
     val endMs = System.currentTimeMillis()
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - a.compiles0

@@ -39,10 +39,10 @@ object PipelineOps {
     * the raw sf fixtures are UNclustered random vectors (no coarse
     * quantizer can probe few cells there), so each vector is mixed with
     * its (vec_id % 8) anchor — 8 real clusters (in-cluster cos ≈ 0.9,
-    * cross ≈ 0) derived from the same table; recallAtK recomputes ground
-    * truth on the SAME transformed vectors in-Spark, so the oracle
-    * booleans stay exact. */
-  private def clusteredEmb(s: org.apache.spark.sql.SparkSession,
+    * cross ≈ 0) derived from the same table; the gate's ground truth
+    * ([[annTruth]]) is computed on the SAME transformed vectors in-Spark,
+    * so the oracle booleans stay exact. */
+  private[graft] def clusteredEmb(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val emb0 = Tables(s, d, "embeddings").select("vec_id", "embedding")
     val anchors = emb0.filter(col("vec_id") < 8)
@@ -1000,10 +1000,10 @@ object PipelineOps {
     // cells — so the gate runs on a CLUSTERED fixture derived
     // deterministically from the same table: each vector is mixed with its
     // cluster anchor (vec_id % 8, anchors = vecs 0..7), giving 8 real
-    // clusters (in-cluster cos ≈ 0.9, cross ≈ 0). recallAtK recomputes the
+    // clusters (in-cluster cos ≈ 0.9, cross ≈ 0). annTruth computes the
     // brute-force ground truth on the SAME transformed vectors in-Spark,
-    // so the oracle booleans stay exact. The trained k-means quantizer
-    // (Ann.trainCentroids) then passes at nProbe=4 of 16 — the realistic
+    // so the oracle booleans stay exact. Ann's trained spherical k-means
+    // quantizer then passes at nProbe=4 of 16 — the realistic
     // probe ratio for clustered embeddings.
     Q("q_ann_ivf",
       "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 8") { (s, d) =>

@@ -1,28 +1,40 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CosineSim, HyperplaneSig, NearestCells, TopKByScore}
+import graft.functions.{CosineSim, HyperplaneSigs, NearestCells, TopKByScore}
 import graft.ops.Par
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
-  * Scale design: brute force is the exact baseline — a broadcast of the
-  * (small) query set against the corpus scan, cosine evaluated by a native
-  * codegen expression, top-k per query via a bounded partial aggregate
-  * (only ≤k rows per partition per query ever reach the shuffle). The
-  * LSH variant prunes the corpus with random-hyperplane sign buckets so
-  * the per-query work drops from O(corpus) to O(bucket); IVF-style
-  * coarse quantization would slot into the same bucket-join shape.
+  * Every top-k entry point has one shape: a candidate generator, a score
+  * per (query, candidate) pair, then [[rankTopK]], whose bounded partial
+  * aggregate lets only ≤k rows per partition per query reach the shuffle.
+  * The query set is small by contract and is broadcast; the corpus
+  * streams once. The generators are brute force (every corpus row), IVF
+  * cells (the rows of each query's `nProbe` nearest trained cells), LSH
+  * bands (rows sharing a hyperplane signature with the query in any
+  * table), PQ/ADC (a shortlist ranked by compressed-code scores) and IVF×PQ
+  * (that shortlist drawn from the probed cells only). Exact paths score
+  * cosine at the candidate join; the PQ paths [[rerank]] their shortlist
+  * by exact cosine. The IVF centroids and PQ codebooks come from one
+  * seeded k-means trainer ([[kmeans]]), and the persisted indexes read
+  * them back through one loader ([[loadModel]]).
   */
 object Ann {
 
-  /** Normalize the vector column to `array<float>` (no-op when already
-    * float) so callers with `array<double>` embeddings keep working. */
-  private def asFloatVec(df: DataFrame, c: String): DataFrame =
-    df.withColumn(c, col(c).cast("array<float>"))
+  /** `df`'s two columns renamed to (`id`, `vec`), the vector cast to
+    * `array<float>` (a no-op when already float) so callers with
+    * `array<double>` embeddings keep working. */
+  private def vecs(df: DataFrame, id: String, vec: String): DataFrame =
+    df.toDF(id, vec).withColumn(vec, col(vec).cast("array<float>"))
+
+  private def queryVecs(df: DataFrame): DataFrame = vecs(df, "query_id", "q_vec")
+
+  private def corpusVecs(df: DataFrame): DataFrame = vecs(df, "neighbor_id", "c_vec")
 
   /** Cosine similarity of two float-array columns, accumulated in double
     * (sequential fold → deterministic; native codegen expression). */
@@ -30,134 +42,173 @@ object Ann {
     GraftBridge.column(CosineSim(
       GraftBridge.expression(a), GraftBridge.expression(b)))
 
+  /** The exact score of a candidate pair carrying both vectors. */
+  private def pairCos: Column = cosine(col("q_vec"), col("c_vec"))
+
   /** Exact top-k neighbors for each query vector (brute force).
-    * `queries`/`corpus`: (id, vec). Output: (query_id, neighbor_id, rank,
+    * `queries`/`corpus`: (id, vec). Output: (query_id, rank, neighbor_id,
     * cos). Broadcast the query side — at 100 TB the corpus streams once. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec"))
-    val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(scored, k)
+    val q = broadcast(queryVecs(queries))
+    val c = Par.ensureMin(corpusVecs(corpus))
+    rankTopK(q.join(c, col("query_id") =!= col("neighbor_id")), pairCos, k)
   }
 
-  /** Random-hyperplane signature: one bit per plane = sign of dot(v, h).
-    * Planes are generated once on the driver (seeded) and shipped with the
-    * plan; the per-row work is one fused native loop. */
-  def lshSignature(vec: Column, dim: Int, nBits: Int = 16, seed: Long = 42L): Column =
-    GraftBridge.column(HyperplaneSig(GraftBridge.expression(vec), dim, nBits, seed))
-
-  /** All `nTables` signatures at once (table t seeded `seed + t`) — one
-    * expression for the whole banding instead of a per-table array();
-    * bit-identical to `nTables` [[lshSignature]] calls but without the
-    * driver-side analysis/codegen cost of hundreds of expressions. */
+  /** All `nTables` random-hyperplane signatures at once (table t seeded
+    * `seed + t`, one bit per plane = sign of dot(v, h)) — one expression
+    * for the whole banding, bit-identical to `nTables` separate
+    * `HyperplaneSig` expressions but without the driver-side
+    * analysis/codegen cost of hundreds of them. */
   def lshSignatures(vec: Column, dim: Int, nBits: Int, nTables: Int,
       seed: Long): Column =
-    GraftBridge.column(graft.functions.HyperplaneSigs(
+    GraftBridge.column(HyperplaneSigs(
       GraftBridge.expression(vec), dim, nBits, nTables, seed))
 
-  /** Spherical k-means quantizer trained on a bounded, deterministic
-    * sample of the corpus — the IVF "model fit". Sample = the first
-    * min(max(32·k, 256), 4096) vectors in xxhash64(id, seed) order (a
-    * seeded pseudo-random draw that needs no sort of the full corpus at
-    * scale: at 100 TB this becomes a TABLESAMPLE + top-N). Init is
-    * seeded k-means++ and assignment is by cosine (matching
-    * [[NearestCells]]); centroids are renormalized means; an emptied
-    * cell deterministically reseeds from the worst-assigned point. All
-    * driver-side arithmetic is sequential, so the model — and every
-    * query built on it — is bit-deterministic for a given (corpus, seed). */
-  private def trainCentroids(c: DataFrame, nCells: Int, seed: Long,
+  /** A coarse quantizer: cell ids and their centroids. */
+  private final case class Cells(ids: Array[Long], cents: Array[Array[Double]]) {
+    /** The ids of the `n` cells nearest `vec` by cosine, nearest first —
+      * a shuffle-free native map, the centroids shipped with the plan. */
+    def nearest(vec: Column, n: Int): Column =
+      GraftBridge.column(NearestCells(GraftBridge.expression(vec), ids, cents, n))
+
+    def cell(vec: Column): Column = element_at(nearest(vec, 1), 1)
+  }
+
+  /** The bounded, deterministic training sample of a `k`-centre fit: the
+    * first min(max(32·k, 256), 4096) corpus vectors in xxhash64(id, seed)
+    * order — a seeded pseudo-random draw that needs no sort of the full
+    * corpus at scale (at 100 TB this becomes a TABLESAMPLE + top-N). */
+  private def trainingSample(c: DataFrame, k: Int, seed: Long): Array[Array[Double]] =
+    c.orderBy(xxhash64(col("neighbor_id"), lit(seed)).asc, col("neighbor_id").asc)
+      .limit(math.min(math.max(k * 32, 256), 4096)).collect()
+      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+
+  /** Seeded k-means++ init plus `iters` Lloyd steps over `sample`, in one
+    * of two geometries. `spherical`: the points are unit-normalised, the
+    * distance is −dot (cosine, matching [[NearestCells]]), the k-means++
+    * weight is max(0, 1 + d)² and a centre is the unit sum of its
+    * members. Otherwise the distance is squared L2, the weight d and a
+    * centre the members' mean. Argmin is strict <, so ties keep the lowest
+    * index, and each emptied cell reseeds from the next worst-assigned
+    * point (one reseed point shared by several empty cells would leave
+    * permanently duplicate centres). All arithmetic is sequential, so the
+    * model — and every answer built on it — is bit-deterministic for a
+    * given (sample, seed). */
+  private def kmeans(sample: Array[Array[Double]], k: Int,
+      rnd: scala.util.Random, spherical: Boolean,
       iters: Int = 10): Array[Array[Double]] = {
     def unit(v: Array[Double]): Array[Double] = {
       var n = 0.0; var i = 0
       while (i < v.length) { n += v(i) * v(i); i += 1 }
       if (n == 0.0) v else { val s = 1.0 / math.sqrt(n); v.map(_ * s) }
     }
-    def dot(a: Array[Double], b: Array[Double]): Double = {
+    def dist(a: Array[Double], b: Array[Double]): Double = {
       val d = math.min(a.length, b.length)
       var s = 0.0; var i = 0
-      while (i < d) { s += a(i) * b(i); i += 1 }
-      s
+      if (spherical) { while (i < d) { s += a(i) * b(i); i += 1 }; -s }
+      else { while (i < d) { val t = a(i) - b(i); s += t * t; i += 1 }; s }
     }
-    val sampleN = math.min(math.max(nCells * 32, 256), 4096)
-    val pts = c.orderBy(xxhash64(col("neighbor_id"), lit(seed)).asc,
-        col("neighbor_id").asc).limit(sampleN).collect()
-      .map(r => unit(r.getSeq[Float](1).map(_.toDouble).toArray))
-    val kk = math.min(nCells, pts.length)
-    val rnd = new scala.util.Random(seed)
-    // k-means++ (cosine distance = 1 - dot on unit vectors)
+    val pts = if (spherical) sample.map(unit) else sample
     val centers = scala.collection.mutable.ArrayBuffer(pts(rnd.nextInt(pts.length)))
-    while (centers.length < kk) {
-      val d2 = pts.map(p => {
-        val best = centers.map(dot(p, _)).max
-        val dd = math.max(0.0, 1.0 - best); dd * dd
-      })
-      val total = d2.sum
+    while (centers.length < math.min(k, pts.length)) {
+      val w = pts.map { p =>
+        val d = centers.map(dist(p, _)).min
+        if (spherical) { val s = math.max(0.0, 1.0 + d); s * s } else d
+      }
+      val total = w.sum
       if (total == 0.0) centers += pts(rnd.nextInt(pts.length))
       else {
         var r = rnd.nextDouble() * total; var i = 0
-        while (i < d2.length - 1 && r >= d2(i)) { r -= d2(i); i += 1 }
+        while (i < w.length - 1 && r >= w(i)) { r -= w(i); i += 1 }
         centers += pts(i)
       }
     }
     var cents = centers.toArray
-    var it = 0
-    while (it < iters) {
-      val assign = pts.map(p => {
-        var best = 0; var bs = Double.MinValue; var ci = 0
+    for (_ <- 0 until iters) {
+      val assign = pts.map { p =>
+        var best = 0; var bd = Double.MaxValue; var ci = 0
         while (ci < cents.length) {
-          val s = dot(p, cents(ci)); if (s > bs) { bs = s; best = ci }; ci += 1
+          val d = dist(p, cents(ci)); if (d < bd) { bd = d; best = ci }; ci += 1
         }
         best
-      })
-      // worst-assigned points in order, each consumed by ONE empty cell —
-      // reseeding several empties with the same point would leave
-      // permanently duplicate centroids
-      val worstOrder = pts.indices.sortBy(i => dot(pts(i), cents(assign(i)))).iterator
+      }
+      val worstOrder = pts.indices.sortBy(i => -dist(pts(i), cents(assign(i)))).iterator
       cents = Array.tabulate(cents.length) { ci =>
         val members = pts.indices.filter(assign(_) == ci)
         if (members.isEmpty) pts(worstOrder.next())
         else {
-          val m = new Array[Double](pts(members.head).length)
+          val sum = new Array[Double](pts(members.head).length)
           members.foreach { i =>
             val p = pts(i); var j = 0
-            while (j < m.length && j < p.length) { m(j) += p(j); j += 1 }
+            while (j < sum.length && j < p.length) { sum(j) += p(j); j += 1 }
           }
-          unit(m)
+          if (spherical) unit(sum) else sum.map(_ / members.length)
         }
       }
-      it += 1
     }
     cents
   }
 
+  /** The IVF "model fit": `nCells` spherical k-means centroids, seeded
+    * `seed`, fitted once on the driver like k-means centers. */
+  private def trainCells(c: DataFrame, nCells: Int, seed: Long): Cells = {
+    val cents = kmeans(trainingSample(c, nCells, seed), nCells,
+      new scala.util.Random(seed), spherical = true)
+    Cells(Array.tabulate(cents.length)(_.toLong), cents)
+  }
+
+  /** Per-subspace PQ codebooks: the vector is split into `m` contiguous
+    * subvectors and each subspace gets `ksub` centroids from a Euclidean
+    * k-means seeded `seed·31 + s`. Returns cb(s)(j) = centroid j of
+    * subspace s. */
+  private def trainPqCodebooks(c: DataFrame, dim: Int, m: Int, ksub: Int,
+      seed: Long): Array[Array[Array[Double]]] = {
+    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
+    val dsub = dim / m
+    val pts = trainingSample(c, ksub, seed)
+    Array.tabulate(m) { s0 =>
+      kmeans(pts.map(_.slice(s0 * dsub, (s0 + 1) * dsub)), ksub,
+        new scala.util.Random(seed * 31 + s0), spherical = false)
+    }
+  }
+
+  /** Reads a persisted model table (`keys`…, `centroid`) back to the
+    * driver: its vectors grouped by the first key and ordered by all keys,
+    * one (key, vectors) entry per group in key order. */
+  private def loadModel(spark: SparkSession, path: String,
+      keys: String*): Array[(Long, Array[Array[Double]])] =
+    spark.read.parquet(path).select((keys :+ "centroid").map(col): _*)
+      .orderBy(keys.map(col): _*).collect()
+      .groupBy(_.getAs[Number](0).longValue).toArray.sortBy(_._1)
+      .map { case (key, rows) => key -> rows.map(_.getSeq[Double](keys.length).toArray) }
+
+  private def loadCells(spark: SparkSession, indexPath: String): Cells = {
+    val model = loadModel(spark, s"$indexPath/centroids", "cell_id")
+    Cells(model.map(_._1), model.map(_._2.head))
+  }
+
+  /** IVF candidates: each query's `nProbe` nearest cells joined to the
+    * corpus rows (`cellC`, with `cell_id`) assigned to them. Pairs are
+    * unique (one cell per corpus row, `nProbe` distinct cells per query),
+    * so no distinct is needed. */
+  private def ivfPairs(cells: Cells, q: DataFrame, cellC: DataFrame,
+      nProbe: Int): DataFrame =
+    broadcast(q.withColumn("cell_id", explode(cells.nearest(col("q_vec"), nProbe))))
+      .join(cellC, Seq("cell_id"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+
   /** IVF approximate top-k: coarse-quantize the corpus against `nCells`
-    * TRAINED centroids (spherical k-means on a bounded deterministic
-    * sample — see `trainCentroids`), then each query probes only its
-    * `nProbe` nearest cells. The centroids are the quantizer "model":
-    * fit once on the driver (like k-means centers) and shipped with the
-    * plan, so cell assignment is a shuffle-free native map over the
-    * corpus scan — no crossJoin, no window. At 100 TB the assignment is
-    * computed once and persisted/bucketed by cell so queries touch
-    * ~nProbe/nCells of the data. */
+    * trained centroids ([[trainCells]]), then each query probes only its
+    * `nProbe` nearest cells. Cell assignment is a shuffle-free native map
+    * over the corpus scan — no crossJoin, no window. At 100 TB the
+    * assignment is computed once and persisted by cell
+    * ([[buildIvfIndex]]) so queries touch ~nProbe/nCells of the data. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
-    val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
-    val cents = trainCentroids(c, nCells, seed)
-    val cellIds = Array.tabulate(cents.length)(_.toLong)
-    def nearest(vec: Column, n: Int) = GraftBridge.column(
-      NearestCells(GraftBridge.expression(vec), cellIds, cents, n))
-    val cellC = c.withColumn("cell_id", element_at(nearest(col("c_vec"), 1), 1))
-    val cellQ = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec")
-      .withColumn("cell_id", explode(nearest(col("q_vec"), nProbe))))
-    // pairs are unique (1 cell per corpus vector, nProbe distinct cells per
-    // query) — no distinct needed
-    val scored = cellQ.join(cellC, Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(scored, k)
+    val c = Par.ensureMin(corpusVecs(corpus))
+    val cells = trainCells(c, nCells, seed)
+    rankTopK(ivfPairs(cells, queryVecs(queries),
+      c.withColumn("cell_id", cells.cell(col("c_vec"))), nProbe), pairCos, k)
   }
 
   /** Build and PERSIST an IVF index at `path`: the trained centroids as a
@@ -169,23 +220,21 @@ object Ann {
     * build-once/probe-many split as `Dedup.buildCorpusIndex`). */
   def buildIvfIndex(corpus: DataFrame, path: String, nCells: Int = 16,
       seed: Long = 42L): Unit = {
-    val c = asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec")
-    val cents = trainCentroids(c, nCells, seed)
+    val c = corpusVecs(corpus)
+    val cells = trainCells(c, nCells, seed)
     val spark = corpus.sparkSession
     import spark.implicits._
-    cents.zipWithIndex.toSeq.map { case (v, i) => (i.toLong, v.toSeq) }
+    cells.ids.zip(cells.cents).toSeq.map { case (i, v) => (i, v.toSeq) }
       .toDF("cell_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val cellIds = Array.tabulate(cents.length)(_.toLong)
-    def nearest(vec: Column, n: Int) = GraftBridge.column(
-      NearestCells(GraftBridge.expression(vec), cellIds, cents, n))
     Par.ensureMin(c)
-      .withColumn("cell_id", element_at(nearest(col("c_vec"), 1), 1))
+      .withColumn("cell_id", cells.cell(col("c_vec")))
       .write.mode("overwrite").partitionBy("cell_id").parquet(s"$path/corpus")
   }
 
   /** Append a delta of vectors into a persisted IVF index, writing the
     * merged index to `outPath` (versioned — refuses to write in place,
+    * under any spelling of the same path on any Hadoop filesystem,
     * mirroring the dedup index contract: a reader mid-probe must never
     * see a half-merged layout). The quantizer is NOT refit: delta
     * vectors are assigned with the EXISTING centroids — the production
@@ -196,26 +245,19 @@ object Ann {
     * metadata-only append into the cell partitions. */
   def mergeIvfIndex(spark: SparkSession, indexPath: String, delta: DataFrame,
       outPath: String): Unit = {
-    require(normPath(outPath) != normPath(indexPath),
+    val conf = spark.sessionState.newHadoopConf()
+    def qualified(p: String) = { val hp = new Path(p); hp.getFileSystem(conf).makeQualified(hp) }
+    require(qualified(outPath) != qualified(indexPath),
       "write the merged index to a NEW path (versioned), never in place")
-    val centRows = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cell_id").collect()
-    val cellIds = centRows.map(_.getLong(0))
-    val cents = centRows.map(_.getSeq[Double](1).toArray)
-    def nearest(vec: Column, n: Int) = GraftBridge.column(
-      NearestCells(GraftBridge.expression(vec), cellIds, cents, n))
+    val cells = loadCells(spark, indexPath)
     spark.read.parquet(s"$indexPath/centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$outPath/centroids")
-    val d = asFloatVec(delta.toDF("neighbor_id", "c_vec"), "c_vec")
-      .withColumn("cell_id", element_at(nearest(col("c_vec"), 1), 1))
+    val d = corpusVecs(delta).withColumn("cell_id", cells.cell(col("c_vec")))
     spark.read.parquet(s"$indexPath/corpus")
       .withColumn("cell_id", col("cell_id").cast("long"))
       .unionByName(d)
       .write.mode("overwrite").partitionBy("cell_id").parquet(s"$outPath/corpus")
   }
-
-  private def normPath(p: String): String =
-    new java.io.File(p).getAbsolutePath.replaceAll("/+$", "")
 
   /** Probe a persisted IVF index built by [[buildIvfIndex]]: rehydrate the
     * centroid model (k rows), broadcast the probe cells, and join against
@@ -225,82 +267,53 @@ object Ann {
     * parameters (asserted by ClusterSpec). */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int = 4): DataFrame = {
-    val centRows = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell_id").collect()
-    val cellIds = centRows.map(_.getLong(0))
-    val cents = centRows.map(_.getSeq[Double](1).toArray)
-    def nearest(vec: Column, n: Int) = GraftBridge.column(
-      NearestCells(GraftBridge.expression(vec), cellIds, cents, n))
-    val cellQ = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec")
-      .withColumn("cell_id", explode(nearest(col("q_vec"), nProbe))))
     val c = spark.read.parquet(s"$path/corpus")
       .withColumn("cell_id", col("cell_id").cast("long"))
-    val scored = cellQ.join(c, Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(scored, k)
+    rankTopK(ivfPairs(loadCells(spark, path), queryVecs(queries), c, nProbe), pairCos, k)
   }
 
   /** Approximate top-k via multi-table hyperplane LSH (AND within a table,
     * OR across tables — same construction as embedding near-dup): a corpus
     * vector is a candidate when it shares ANY table's `bits`-bit signature
-    * with the query; candidates are reranked by exact cosine. Per-neighbor
-    * recall at angular similarity p = 1-(1-p^bits)^tables, so recall is
-    * tuned by `tables` without growing bucket sizes. The banded corpus is
-    * (id, table, sig) — 16 bytes a row, `tables`× replicated — and the
-    * candidate join touches only matching buckets, never the cross
-    * product; vectors are joined back ONLY for the candidate rerank.
-    * (The previous single-table multi-probe variant measured recall ≈ 0
-    * on the sf0.01 corpus — 1-bit probes cannot rescue a 12-bit AND.)
+    * with the query. Per-neighbor recall at angular similarity p =
+    * 1-(1-p^bits)^tables, so recall is tuned by `tables` without growing
+    * bucket sizes. (The previous single-table multi-probe variant measured
+    * recall ≈ 0 on the sf0.01 corpus — 1-bit probes cannot rescue a 12-bit
+    * AND.)
     *
-    * NOTE — the corpus vectors are persisted because both the banded
-    * candidate join and the rerank join read them, and the two shuffle
-    * differently, so exchange reuse cannot share them. The persist must
-    * not outlive the call, so the result (at most k rows per query) is
-    * materialized and the persist released before returning
-    * ([[Par.materializeThenRelease]]); nothing needs a manual release. */
+    * NOTE — a lazy plan in one corpus pass: both sides are banded from one
+    * fused [[lshSignatures]] expression, and each band row carries its
+    * vector and its whole signature array, so exact cosine is scored at
+    * the (table, sig) join against the broadcast queries. A pair that
+    * collides in several tables is kept only at the first table where the
+    * two signature arrays agree, so no distinct shuffle and no second join
+    * back to the corpus vectors are needed. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       bits: Int = 4, tables: Int = 24, seed: Long = 42L): DataFrame = {
-    val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
-      .persist()
-    def banded(df: DataFrame, vecCol: String) =
-      df.select(col("*"), posexplode(array((0 until tables).map(t =>
-          lshSignature(col(vecCol), dim, bits, seed + t)): _*)))
-        .withColumnRenamed("pos", "_table").withColumnRenamed("col", "_sig")
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec"))
-    val cands = banded(q.select("query_id", "q_vec"), "q_vec")
-      .select(col("query_id"), col("_table"), col("_sig"))
-      .join(banded(c.select("neighbor_id", "c_vec"), "c_vec")
-        .select(col("neighbor_id"), col("_table"), col("_sig")),
+    // posexplode_outer: the optimizer infers a non-empty filter for an
+    // inner explode and pushes it below the projection, which evaluates
+    // the signatures three times a row; the one extra row a null vector
+    // gets has a null key and joins nothing
+    def banded(df: DataFrame, vec: String, sigs: String) =
+      df.withColumn(sigs, lshSignatures(col(vec), dim, bits, tables, seed))
+        .select(col("*"), posexplode_outer(col(sigs)).as(Seq("_table", "_sig")))
+    val pairs = broadcast(banded(queryVecs(queries), "q_vec", "q_sigs"))
+      .join(banded(Par.ensureMin(corpusVecs(corpus)), "c_vec", "c_sigs"),
         Seq("_table", "_sig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cands
-      .join(broadcast(q), Seq("query_id"))
-      .join(c, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    Par.materializeThenRelease(rankTopK(scored, k), c) // bounds c's persist to this call
+      .filter(col("query_id") =!= col("neighbor_id") &&
+        array_position(zip_with(col("q_sigs"), col("c_sigs"), _ === _), true) ===
+          col("_table") + 1)
+    rankTopK(pairs, pairCos, k)
   }
 
-  /** Recall gate for an approximate top-k result: per query, does `approx`
-    * recover at least ceil(minRecall·k') of the exact brute-force top-k
-    * (k' = the query's true neighbor count, ≤ k)? Output: (query_id,
-    * recall_ok) — deterministic (seeded hashes, exact ground truth), so a
-    * DuckDB oracle can assert every query id is `true`. Ground truth is
-    * re-computed here (all-pairs over the query sample) — the validation
-    * pattern for a 100 TB corpus is exactly this with a sampled query set,
-    * mirroring the reference's validate-across-configs tier
-    * (benchmarks/zillow/Z1/validate_all.py). */
-  def recallAtK(corpus: DataFrame, queries: DataFrame, k: Int,
-      approx: DataFrame, minRecall: Double): DataFrame =
-    recallAtKFrom(bruteForceTopK(corpus, queries, k), approx, minRecall)
-
-  /** [[recallAtK]] against a PRE-COMPUTED exact top-k (query_id,
-    * neighbor_id[, …]) — the amortized validation shape: ground truth for
-    * a sampled query set is computed once per corpus snapshot and reused
-    * across every index/config evaluation, so each gate costs a
+  /** Recall gate for an approximate top-k result against a PRE-COMPUTED
+    * exact top-k (query_id, neighbor_id[, …]): per query, does `approx`
+    * recover at least ceil(minRecall·k') of the exact top-k (k' = the
+    * query's true neighbor count, ≤ k)? Output: (query_id, recall_ok) —
+    * deterministic, so a DuckDB oracle can assert every query id is
+    * `true`. The amortized validation shape: ground truth for a sampled
+    * query set is computed once per corpus snapshot and reused across
+    * every index/config evaluation, so each gate costs a
     * ground-truth-sized join (k rows per query), not an all-pairs scan. */
   def recallAtKFrom(exact0: DataFrame, approx: DataFrame,
       minRecall: Double): DataFrame = {
@@ -315,13 +328,14 @@ object Ann {
           ceil(col("n_true") * minRecall)).as("recall_ok"))
   }
 
-  /** Rank the scored candidates to (query_id, rank, neighbor_id, cos).
-    * Long ids go through the native bounded top-k aggregate: map-side
-    * partial aggregation reduces every partition to ≤k entries per query
-    * BEFORE the shuffle, where a row_number window would shuffle the whole
-    * scored set. Other id types fall back to the window. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+  /** Score the candidate `pairs` by `score` and rank them to (query_id,
+    * rank, neighbor_id, cos). Long ids go through the native bounded top-k
+    * aggregate: map-side partial aggregation reduces every partition to ≤k
+    * entries per query BEFORE the shuffle, where a row_number window would
+    * shuffle the whole scored set. Other id types fall back to the window. */
+  private def rankTopK(pairs: DataFrame, score: Column, k: Int): DataFrame = {
     import org.apache.spark.sql.types.LongType
+    val scored = pairs.select(col("query_id"), col("neighbor_id"), score.as("cos"))
     if (scored.schema("neighbor_id").dataType == LongType) {
       val agg = GraftBridge.column(TopKByScore(
         GraftBridge.expression(col("cos")),
@@ -338,6 +352,15 @@ object Ann {
     }
   }
 
+  /** The exact refine of an approximate shortlist (query_id, neighbor_id):
+    * join the query vectors `q` (query_id, q_vec) and the corpus vectors
+    * `c` (neighbor_id, c_vec) back — k·|queries| point lookups — and keep
+    * each query's top k by exact cosine. */
+  private def rerank(shortlist: DataFrame, q: DataFrame, c: DataFrame,
+      k: Int): DataFrame =
+    rankTopK(shortlist.select("query_id", "neighbor_id")
+      .join(broadcast(q), "query_id").join(c, "neighbor_id"), pairCos, k)
+
   /** Symmetric per-vector int8 quantization — the storage/bandwidth lever
     * for a 100 TB embedding corpus (4× smaller than float32, and integer
     * dot products downstream). q = floor(x·(127/maxabs) + 0.5), so the
@@ -347,7 +370,7 @@ object Ann {
     * once as 127.0/maxabs, then multiplied; operand order matters and is
     * part of the contract). Output: (vec_id, maxabs, qvec array<int>). */
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    asFloatVec(df.select(col(idCol).as("vec_id"), col(vecCol).as("_vec")), "_vec")
+    vecs(df.select(col(idCol), col(vecCol)), "vec_id", "_vec")
       .withColumn("maxabs",
         array_max(transform(col("_vec"), x => abs(x.cast("double")))))
       .withColumn("qvec", when(col("maxabs") === 0.0,
@@ -371,79 +394,8 @@ object Ann {
       .toDF("neighbor_id", "c_max", "c_q"))
     val dotInt = expr(
       "aggregate(zip_with(q_q, c_q, (a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)")
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dotInt.cast("double") * (col("q_max") / 127.0) * (col("c_max") / 127.0))
-          .as("cos"))
-    rankTopK(scored, k)
-  }
-
-  /** Per-subspace PQ codebooks: the vector is split into `m` contiguous
-    * subvectors and each subspace gets `ksub` centroids from a EUCLIDEAN
-    * k-means on the same bounded deterministic sample as
-    * `trainCentroids` (xxhash64-ordered limit — no full-corpus sort at
-    * scale). All driver arithmetic is sequential with deterministic
-    * tie-breaks (strict < keeps the lowest index), so codebooks — and
-    * every code derived from them — are bit-stable for a (corpus, seed).
-    * Returns cb(s)(j) = centroid j of subspace s. */
-  private[graft] def trainPqCodebooks(c: DataFrame, dim: Int, m: Int,
-      ksub: Int, seed: Long, iters: Int = 10): Array[Array[Array[Double]]] = {
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val dsub = dim / m
-    val sampleN = math.min(math.max(ksub * 32, 256), 4096)
-    val pts = c.orderBy(xxhash64(col("neighbor_id"), lit(seed)).asc,
-        col("neighbor_id").asc).limit(sampleN).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    Array.tabulate(m) { s0 =>
-      val sub = pts.map(_.slice(s0 * dsub, (s0 + 1) * dsub))
-      def l2(a: Array[Double], b: Array[Double]): Double = {
-        var d = 0.0; var i = 0
-        while (i < dsub) { val t = a(i) - b(i); d += t * t; i += 1 }
-        d
-      }
-      val kk = math.min(ksub, sub.length)
-      val rnd = new scala.util.Random(seed * 31 + s0)
-      val centers = scala.collection.mutable.ArrayBuffer(sub(rnd.nextInt(sub.length)))
-      while (centers.length < kk) {
-        val d2 = sub.map(p => centers.map(l2(p, _)).min)
-        val total = d2.sum
-        if (total == 0.0) centers += sub(rnd.nextInt(sub.length))
-        else {
-          var r = rnd.nextDouble() * total; var i = 0
-          while (i < d2.length - 1 && r >= d2(i)) { r -= d2(i); i += 1 }
-          centers += sub(i)
-        }
-      }
-      var cents = centers.toArray
-      var it = 0
-      while (it < iters) {
-        val assign = sub.map { p =>
-          var best = 0; var bd = Double.MaxValue; var ci = 0
-          while (ci < cents.length) {
-            val d0 = l2(p, cents(ci)); if (d0 < bd) { bd = d0; best = ci }; ci += 1
-          }
-          best
-        }
-        // distinct worst-assigned reseeds (same rationale as trainCentroids:
-        // one shared reseed point would duplicate codewords permanently)
-        val worstOrder = sub.indices
-          .sortBy(i => -l2(sub(i), cents(assign(i)))).iterator
-        cents = Array.tabulate(cents.length) { ci =>
-          val members = sub.indices.filter(assign(_) == ci)
-          if (members.isEmpty) sub(worstOrder.next())
-          else {
-            val mvec = new Array[Double](dsub)
-            members.foreach { i =>
-              val p = sub(i); var j = 0
-              while (j < dsub) { mvec(j) += p(j); j += 1 }
-            }
-            mvec.map(_ / members.length)
-          }
-        }
-        it += 1
-      }
-      cents
-    }
+    rankTopK(q.join(c, col("query_id") =!= col("neighbor_id")),
+      dotInt.cast("double") * (col("q_max") / 127.0) * (col("c_max") / 127.0), k)
   }
 
   /** PQ re-rank shortlist depth. A FIXED depth is a scale cliff: the
@@ -495,19 +447,23 @@ object Ann {
     * split) and composes with IVF cells for IVF-PQ. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       m: Int = 8, ksub: Int = 16, seed: Long = 42L): DataFrame = {
-    val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
+    val c = Par.ensureMin(corpusVecs(corpus))
     val cb = trainPqCodebooks(c, dim, m, ksub, seed)
-    val coded = c.select(col("neighbor_id"), pqEncode(cb, col("c_vec")).as("codes"))
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec")
-      .select(col("query_id"), pqLut(cb, col("q_vec")).as("lut")))
-    val scored = q.join(coded, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), pqAdcScore(cb.length).as("cos"))
-    rankTopK(scored, k)
+    adcTopK(cb, queryVecs(queries),
+      c.select(col("neighbor_id"), pqEncode(cb, col("c_vec")).as("codes")), k)
   }
 
-  /** PQ building blocks shared by [[pqTopK]] and [[ivfPqTopK]]: codebook
-    * literal arrays ship with the plan; encode/LUT/score are codegen'd
-    * higher-order functions (no UDFs, no driver loops at query time). */
+  /** The ADC shortlist of every query (query_id, q_vec) over a code table
+    * (neighbor_id, codes): the queries' lookup tables broadcast against
+    * one scan of the codes. */
+  private def adcTopK(cb: Array[Array[Array[Double]]], q: DataFrame,
+      coded: DataFrame, k: Int): DataFrame =
+    rankTopK(broadcast(q.select(col("query_id"), pqLut(cb, col("q_vec")).as("lut")))
+      .join(coded, col("query_id") =!= col("neighbor_id")), pqAdcScore(cb.length), k)
+
+  /** PQ building blocks shared by the PQ paths: codebook literal arrays
+    * ship with the plan; encode/LUT/score are codegen'd higher-order
+    * functions (no UDFs, no driver loops at query time). */
   private def pqCbLit(cb: Array[Array[Array[Double]]], s0: Int): Column =
     array(cb(s0).map(row => array(row.map(lit): _*)): _*)
 
@@ -571,32 +527,20 @@ object Ann {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       nCells: Int = 16, nProbe: Int = 4, m: Int = 8, ksub: Int = 32,
       candidates: Int = 0, seed: Long = 42L): DataFrame = {
-    val c = Par.ensureMin(asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec"))
+    val c = Par.ensureMin(corpusVecs(corpus))
     // shortlist depth scales with the PROBED row count (nProbe/nCells of
     // the corpus) — see autoCandidates for why fixed depth is a cliff
     val cand = autoCandidates(candidates, k,
       () => c.count() * nProbe / nCells)
-    val cents = trainCentroids(c, nCells, seed)
-    val cellIds = Array.tabulate(cents.length)(_.toLong)
-    def nearest(vec: Column, n: Int) = GraftBridge.column(
-      NearestCells(GraftBridge.expression(vec), cellIds, cents, n))
+    val cells = trainCells(c, nCells, seed)
     val cb = trainPqCodebooks(c, dim, m, ksub, seed)
-    val coded = c.select(col("neighbor_id"),
-      element_at(nearest(col("c_vec"), 1), 1).as("cell_id"),
+    val coded = c.select(col("neighbor_id"), cells.cell(col("c_vec")).as("cell_id"),
       pqEncode(cb, col("c_vec")).as("codes"))
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec")
-      .select(col("query_id"), pqLut(cb, col("q_vec")).as("lut"),
-        explode(nearest(col("q_vec"), nProbe)).as("cell_id")))
-    val scored = q.join(coded, Seq("cell_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), pqAdcScore(m).as("cos"))
-    val shortlist = rankTopK(scored, cand)
-      .select("query_id", "neighbor_id")
-    val qv = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec"))
-    val rescored = shortlist.join(qv, "query_id").join(c, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(rescored, k)
+    val q = queryVecs(queries)
+    val shortlist = rankTopK(
+      ivfPairs(cells, q.withColumn("lut", pqLut(cb, col("q_vec"))), coded, nProbe),
+      pqAdcScore(m), cand)
+    rerank(shortlist, q, c, k)
   }
 
   /** PQ candidate generation + EXACT re-rank — the production PQ recipe:
@@ -615,14 +559,8 @@ object Ann {
       seed: Long = 42L): DataFrame = {
     val cand = autoCandidates(candidates, k,
       () => corpus.count())
-    val shortlist = pqTopK(corpus, queries, cand, dim, m, ksub, seed)
-      .select("query_id", "neighbor_id")
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec"))
-    val c = asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec")
-    val rescored = shortlist.join(q, "query_id").join(c, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(rescored, k)
+    rerank(pqTopK(corpus, queries, cand, dim, m, ksub, seed),
+      queryVecs(queries), corpusVecs(corpus), k)
   }
 
   /** Build and PERSIST a PQ index at `path`: the trained codebooks as a
@@ -636,7 +574,7 @@ object Ann {
     * tables are bucketed on the id so the re-rank fetch is co-located. */
   def buildPqIndex(corpus: DataFrame, path: String, dim: Int, m: Int = 8,
       ksub: Int = 32, seed: Long = 42L): Unit = {
-    val c = asFloatVec(corpus.toDF("neighbor_id", "c_vec"), "c_vec")
+    val c = corpusVecs(corpus)
     val cb = trainPqCodebooks(c, dim, m, ksub, seed)
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -661,28 +599,10 @@ object Ann {
       k: Int, candidates: Int = 0): DataFrame = {
     val cand = autoCandidates(candidates, k,
       () => spark.read.parquet(s"$path/codes").count())
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .orderBy("subspace", "codeword").collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val ksub = rows.map(_.getInt(1)).max + 1
-    val cb = Array.tabulate(m, ksub) { (s0, j) =>
-      rows.find(r => r.getInt(0) == s0 && r.getInt(1) == j).get
-        .getSeq[Double](2).toArray
-    }
-    val q = broadcast(asFloatVec(queries.toDF("query_id", "q_vec"), "q_vec")
-      .select(col("query_id"), col("q_vec"), pqLut(cb, col("q_vec")).as("lut")))
-    val coded = spark.read.parquet(s"$path/codes")
-    val scored = q.select(col("query_id"), col("lut"))
-      .join(coded, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), pqAdcScore(m).as("cos"))
-    val shortlist = rankTopK(scored, cand).select("query_id", "neighbor_id")
-    val vecs = spark.read.parquet(s"$path/vectors")
-    val rescored = shortlist
-      .join(q.select(col("query_id"), col("q_vec")), "query_id")
-      .join(vecs, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec")).as("cos"))
-    rankTopK(rescored, k)
+    val cb = loadModel(spark, s"$path/codebooks", "subspace", "codeword").map(_._2)
+    val q = queryVecs(queries)
+    rerank(adcTopK(cb, q, spark.read.parquet(s"$path/codes"), cand),
+      q, spark.read.parquet(s"$path/vectors"), k)
   }
 
   /** Overlap gate for int8 ANN: |top-k(int8) ∩ top-k(float)| ≥ minOverlap

@@ -97,7 +97,7 @@ object KMeans {
     * md5(id-as-string) digest (id tie-break) — a deterministic
     * pseudo-random draw that needs no dense/contiguous id space (`id < k`
     * silently under-seeds any real corpus) and costs one bounded top-k
-    * collect (k rows — the [[Ann]] trainCentroids model-fit license); at
+    * collect (k rows — the [[Ann]] quantizer model-fit license); at
     * 100 TB the top-k runs as a partial-agg, never a full sort. One exact
     * Lloyd update, final assignment. Output: (idCol, cluster). Empty
     * clusters keep their seed centroid. */

@@ -47,7 +47,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "graft/text/Corpus.scala" -> 2, // benchmark gram set (eval-sized) + frequent lines
     "graft/text/Retrieval.scala" -> 5, // df table/postings (vocab-bounded) + scalars
     "graft/dedup/Dedup.scala" -> 2, // 2 capped exact-pair sides
-    "graft/similarity/Ann.scala" -> 11, // query side of ANN probes (queries << corpus by contract)
+    "graft/similarity/Ann.scala" -> 6, // query side of ANN probes (queries << corpus by contract)
     "graft/NaturalScale.scala" -> 3 // sampled-gate tables: rows = n/mod, bounded by the sampling modulus
   )
 

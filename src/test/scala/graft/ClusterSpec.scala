@@ -317,9 +317,10 @@ class ClusterSpec extends AnyFunSuite {
       k = 4, nProbe = 8)
     assert(probe.filter(col("neighbor_id") % 3 === 0).count() > 0,
       "delta vectors must be probe-visible after the merge")
-    intercept[IllegalArgumentException] {
-      Ann.mergeIvfIndex(spark, p1, delta, p1)
-    }
+    for (same <- Seq(p1, s"file://$p1", s"$p1/../${new java.io.File(p1).getName}"))
+      intercept[IllegalArgumentException] {
+        Ann.mergeIvfIndex(spark, p1, delta, same)
+      }
   }
 
   test("semdedup: no kept pair within a cluster reaches the threshold, " +

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
-import graft.similarity.KMeans
+import graft.similarity.{Ann, KMeans}
 
-/** The near-dup entry points return lazy plans: the call itself submits
+/** The near-dup entry points and LSH top-k return lazy plans: the call itself submits
   * no Spark job (apart from the bounded sizing/model-fit jobs named per
   * case), the returned plan holds no checkpointed `LogicalRDD`, and the
   * SQL cache manager is empty both after the call and after the action. */
@@ -129,5 +129,11 @@ class LazyEntrySpec extends AnyFunSuite {
       Multimodal.imageNearDupProbeIndexed(spark, idx, delta, "doc_id", "payload"))
     assert(rows.forall(r => r.getLong(0) % 5 == 0 && r.getLong(1) % 5 != 0 &&
       r.getInt(2) <= 3))
+  }
+
+  test("LSH top-k submits no job before the action") {
+    val rows = checkLazy("lshTopK", 0)(Ann.lshTopK(vecs, vecs.limit(2), k = 2, dim = 4))
+    assert(rows.exists(r => r.getLong(0) == 0L && r.getInt(1) == 1 && r.getLong(2) == 1L),
+      rows.mkString(";"))
   }
 }
