@@ -427,17 +427,15 @@ object AnalyticsOps {
         .as("community_size"))
   }
 
-  /** Top-8 co-purchase affinity edge set, memoized per data dir as an
+  /** Top-8 co-purchase affinity edge set, [[Staged]] per data dir as an
     * eager local checkpoint: q_triangle and q_clustering_coeff run the
     * same lineitem group-collect + per-node window to build it, so the
     * second query (and every warmed bench pass) reads the edge-sized
     * checkpoint blocks instead of re-scanning the fact table — the
-    * bridgeCache pattern (GraphOps.scala:94). Keyed by application id so
-    * an entry never outlives the context that built it. */
-  private val affinityCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * `GraphOps.tradeBridge` pattern. Keyed by application id so an entry
+    * never outlives the context that built it. */
   private def affinityEdges(s: SparkSession, d: String): DataFrame =
-    affinityCache.computeIfAbsent(s"${s.sparkContext.applicationId}|$d", _ => {
+    Staged.once(("affinity_edges", s.sparkContext.applicationId, d)) {
       val co = lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
@@ -449,7 +447,7 @@ object AnalyticsOps {
         .agg(count(lit(1)).as("w"))
       topKAffinity(co, k = 8)
         .localCheckpoint(true) // memo read by four graph queries and every pass
-    })
+    }
 
   /** Per-node triangle counts. Edges must arrive oriented low-id →
     * high-id, so each triangle a<b<c is enumerated exactly once by the

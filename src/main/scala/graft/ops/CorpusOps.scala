@@ -32,10 +32,6 @@ object CorpusOps {
   private val MixRates: Seq[(String, Double)] =
     (0 until 20).map(i => s"src$i" -> (if (i < 4) 1.0 else if (i < 12) 0.5 else 0.125))
 
-  /** Versioned index dirs for q_dedup_index_update, staged once per dir. */
-  private val indexUpdateDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Exact all-pairs cross-set Jaccard (3-word shingles, j ≥ 0.8) of the
     * %10=0 "delta" against the %10≠0 "corpus" — shared by q_dedup_delta
     * and q_dedup_index_update (probing the append-merged index must give
@@ -174,10 +170,6 @@ object CorpusOps {
           .as("overlap_ppm"))
     Par.materializeThenRelease(out, hs) // bounds hs's persist to this call
   }
-
-  /** Versioned index dirs for q_winnow_index, staged once per dir. */
-  private val winnowIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   val all: Seq[Q] = Seq(
 
@@ -479,16 +471,14 @@ object CorpusOps {
     // is exactly q_dedup_delta's oracle.
     Q("q_dedup_index_update", DeltaOracle) { (s, d) =>
       val docs = SynthText.docs(s, d)
-      val path = indexUpdateDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_idxup")
+      val path = Staged.dir(d, "graft_idxup") { w =>
         graft.dedup.Dedup.buildCorpusIndex(
           docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5),
           "doc_id", "text", s"$w/v1", k = 3, numHashes = 64, bands = 32)
         graft.dedup.Dedup.updateCorpusIndex(
           docs.filter(col("doc_id") % 10 === 5), s"$w/v1", s"$w/v2",
           "doc_id", "text", k = 3, numHashes = 64, bands = 32)
-        w
-      })
+      }
       graft.dedup.Dedup.nearDupDeltaIndexed(
         docs.filter(col("doc_id") % 10 === 0), s"$path/v2",
         "doc_id", "text", threshold = 0.8, k = 3, numHashes = 64, bands = 32)
@@ -1386,13 +1376,11 @@ object CorpusOps {
          |FROM p JOIN sz sd ON delta_id = sd.doc_id
          |       JOIN sz sc ON corpus_id = sc.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables(s, d, "documents")
-      val path = winnowIndexDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_widx")
+      val index = Staged.dir(d, "graft_widx") { w =>
         buildWinnowIndex(docs.filter(col("doc_id") % 10 =!= 0), s"$w/v1",
           dfCap = 20L)
-        s"$w/v1"
-      })
-      winnowProbeIndexed(docs.filter(col("doc_id") % 10 === 0), path,
+      }
+      winnowProbeIndexed(docs.filter(col("doc_id") % 10 === 0), s"$index/v1",
         minShared = 3L)
     },
 

@@ -19,10 +19,6 @@ import Tables.{dsum, oSum}
   * engines, so it never appears on a float output. */
 object CoverageOps {
 
-  /** Schema-evolution fixture dirs, staged once per source dir. */
-  private val schemaEvoDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val all: Seq[Q] = Seq(
 
     // ---- tocsv + csv source round-trip (dataset.py:500; context.py:288) ---
@@ -258,15 +254,13 @@ object CoverageOps {
       """SELECT doc_id, text,
         |  CASE WHEN doc_id % 2 = 1 THEN lang END AS lang
         |FROM documents""".stripMargin) { (s, d) =>
-      val dir = schemaEvoDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_evo")
+      val dir = Staged.dir(d, "graft_evo") { w =>
         val docs = Tables(s, d, "documents")
         docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
           .write.mode("overwrite").parquet(s"$w/b0")
         docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text", "lang")
           .write.mode("overwrite").parquet(s"$w/b1")
-        w
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(s"$dir/b0", s"$dir/b1")
         .select("doc_id", "text", "lang")
     },

@@ -42,25 +42,18 @@ object FeatureOps {
   private def hexUniform(h: String, modulus: Long): String =
     Tables.hexUniform(h, modulus)
 
-  // Aggregate STATE for q_incr_agg, staged once per source dir: the
-  // grouped (cnt, fixed-point sum) partials over the base partition
-  // (o_orderdate < 1997-01-01), written to parquet exactly once. The
-  // incremental query then reads THIS state + scans only the delta —
-  // which is the operator's whole point: at 100 TB the base is never
-  // re-aggregated when a day of new data lands.
-  private val aggStateDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def aggState(s: SparkSession, d: String): DataFrame = {
-    val p = aggStateDirs.computeIfAbsent(d, _ => {
-      val w = TempDirs.tempDir("graft_aggstate")
+  // Aggregate STATE for q_incr_agg, Staged per source dir: the grouped
+  // (cnt, fixed-point sum) partials over the base partition
+  // (o_orderdate < 1997-01-01). The incremental query then reads THIS
+  // state + scans only the delta — which is the operator's whole point:
+  // at 100 TB the base is never re-aggregated when a day of new data lands.
+  private def aggState(s: SparkSession, d: String): DataFrame =
+    Staged.table(s, d, "graft_aggstate") {
       orders(s, d)
         .filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("cnt"), sum(fp4(col("o_totalprice"))).as("s_fp"))
-        .write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(p)
-  }
+    }
 
   val all: Seq[Q] = Seq(
 

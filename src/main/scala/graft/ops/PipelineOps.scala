@@ -54,19 +54,7 @@ object PipelineOps {
           (a, e) => a * lit(1.0) + e * lit(0.35)).as("embedding"))
   }
 
-  /** Persisted PQ index dirs, built once per source dir. */
-  private val pqIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Persisted IVF index dirs, built once per source dir. */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Append-merged (v2) IVF index dirs, staged once per source dir. */
-  private val ivfMergedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Brute-force ground truth for the ANN recall gates, staged ONCE per
+  /** Brute-force ground truth for the ANN recall gates, [[Staged]] per
     * (source dir, fixture) as a tiny parquet (8 queries × 5 rows): the
     * exact top-k is validation INPUT, not the operator under test, so a
     * measured bench pass pays the probe plus a 40-row join instead of
@@ -74,47 +62,25 @@ object PipelineOps {
     * gate-dominated-bench finding). Production shape: ground truth for a
     * sampled query set is computed once per corpus snapshot and reused
     * across every index/config evaluation. */
-  private val annTruthDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Exact all-pairs embedding near-dup ground truth, staged once per
-    * source dir (same license as [[annTruthDirs]]). */
-  private val embedTruthDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annTruth(s: org.apache.spark.sql.SparkSession, d: String,
       fixture: String, emb: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val path = annTruthDirs.computeIfAbsent(s"$d#$fixture", _ => {
-      val w = TempDirs.tempDir("graft_ann_truth")
+      : org.apache.spark.sql.DataFrame =
+    Staged.table(s, (d, fixture), "graft_ann_truth") {
       val e = emb
       Ann.bruteForceTopK(e, e.filter(col("vec_id") < 8), k = 5)
         .select("query_id", "neighbor_id")
-        .coalesce(1).write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(path)
-  }
+        .coalesce(1)
+    }
 
-  /** Fragmented-layout fixture dirs for q_compact, staged once per dir. */
-  private val compactDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Hive-partitioned events layout for q_partition_prune, staged once
-    * per dir (production tables are partitioned at write time). */
-  private val partitionedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Bucketed lineitem/orders staged once per source dir: production
+  /** Bucketed lineitem/orders, [[Staged]] per source dir: production
     * bucketed tables are written once and joined many times, so only the
     * first run of q_bucketed_join in a session pays the bucketed write.
     * Table names carry a per-dir tag — a global name would be silently
     * OVERWRITTEN by a second source dir while the first dir's memo entry
     * kept serving it (stale data). Returns (lineitemTable, ordersTable). */
-  private val bucketedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedFixture(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) =
-    bucketedDirs.computeIfAbsent(d, _ => {
+    Staged.once(("graft_bucketed", d)) {
       val tag = Integer.toHexString(d.hashCode)
       val li = s"graft_tmp.q_li_bkt_$tag"
       val ord = s"graft_tmp.q_ord_bkt_$tag"
@@ -125,7 +91,7 @@ object PipelineOps {
       Scale.writeBucketed(Tables(s, d, "orders").select("o_orderkey", "o_orderstatus"),
         ord, s"$root/ord", "o_orderkey", 8)
       (li, ord)
-    })
+    }
 
   val all: Seq[Q] = Seq(
 
@@ -796,7 +762,7 @@ object PipelineOps {
         |    / (sqrt(list_sum(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i])))
         |     * sqrt(list_sum(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]))))
         |    >= 0.45""".stripMargin) { (s, d) =>
-      // exact all-pairs ground truth staged once per source dir (the
+      // exact all-pairs ground truth, Staged per source dir (the
       // annTruth license): the gate then costs the LSH probe plus a
       // pair-set join, not an O(n²) rescan per measured pass.
       // TRUTH SAMPLING past 20k vectors: the ground-truth side is
@@ -809,19 +775,17 @@ object PipelineOps {
       // every graded scale — bit-identical results there; the LSH path
       // itself ALWAYS runs on the full corpus (pairs outside the sample
       // simply don't intersect the sampled truth).
-      val exactPath = embedTruthDirs.computeIfAbsent(d, _ => {
+      val exact = Staged.table(s, d, "graft_embed_truth") {
         val emb = Tables(s, d, "embeddings")
         val m = math.max(1L, math.ceil(emb.count() / 20000.0).toLong)
-        val w = TempDirs.tempDir("graft_embed_truth")
         Dedup.nearDupEmbedding(emb.filter(col("vec_id") % m === 0),
             "vec_id", "embedding", threshold = 0.45)
-          .coalesce(1).write.mode("overwrite").parquet(w)
-        w
-      })
+          .coalesce(1)
+      }
       // bits/tables auto-size from the corpus count (Dedup.lshParams):
       // the old 4-bit/24-table pin was a measured scale cliff — 1.7 s at
       // 2 k vectors, 23 s at 20 k (candidates ~ n²/2^bits at fixed bits)
-      Dedup.embedLshRecallFrom(s.read.parquet(exactPath),
+      Dedup.embedLshRecallFrom(exact,
         Tables(s, d, "embeddings"), "vec_id", "embedding",
         threshold = 0.45, dim = 64, bits = 0, tables = 0, minRecall = 0.9)
     }.atScale("native-cosine-sampled",
@@ -1052,16 +1016,14 @@ object PipelineOps {
     // ---- ANN: PERSISTED PQ index (build once, probe many) -----------------
     // The buildIvfIndex split applied to the PQ tier: codebook fit +
     // encode paid at build time, probes scan only m-byte code rows and
-    // re-rank against stored vectors for the shortlist alone. Index
-    // staged once per source dir; recall gated like the in-line PQ.
+    // re-rank against stored vectors for the shortlist alone. Recall
+    // gated like the in-line PQ.
     Q("q_ann_pq_indexed",
       "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 8") { (s, d) =>
       val emb = clusteredEmb(s, d)
-      val path = pqIndexDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_pq")
+      val path = Staged.dir(d, "graft_pq") { w =>
         Ann.buildPqIndex(emb, w, dim = 64, m = 8, ksub = 32)
-        w
-      })
+      }
       val queries = emb.filter(col("vec_id") < 8)
       val approx = Ann.pqTopKIndexed(s, path, queries, k = 5)
       Ann.recallAtKFrom(annTruth(s, d, "clustered", clusteredEmb(s, d)),
@@ -1072,16 +1034,14 @@ object PipelineOps {
     // The production split: quantizer fit + cell assignment paid at build
     // time, the corpus laid out PARTITIONED BY cell so a probe batch reads
     // ~nProbe/nCells of the bytes (partition pruning through the broadcast
-    // join on the partition column). Index staged once per source dir;
-    // recall gated exactly like the in-line IVF query.
+    // join on the partition column). Recall gated exactly like the
+    // in-line IVF query.
     Q("q_ann_ivf_indexed",
       "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 8") { (s, d) =>
       val emb = clusteredEmb(s, d)
-      val path = ivfIndexDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_ivf")
+      val path = Staged.dir(d, "graft_ivf") { w =>
         Ann.buildIvfIndex(emb, w, nCells = 16)
-        w
-      })
+      }
       val queries = emb.filter(col("vec_id") < 8)
       val approx = Ann.ivfTopKIndexed(s, path, queries, k = 5, nProbe = 4)
       Ann.recallAtKFrom(annTruth(s, d, "clustered", clusteredEmb(s, d)),
@@ -1099,13 +1059,11 @@ object PipelineOps {
     Q("q_ann_index_update",
       "SELECT vec_id AS query_id, true AS recall_ok FROM embeddings WHERE vec_id < 8") { (s, d) =>
       val emb = clusteredEmb(s, d)
-      val merged = ivfMergedDirs.computeIfAbsent(d, _ => {
+      val merged = Staged.dir(d, "graft_ivf_v2") { out =>
         val base = TempDirs.tempDir("graft_ivf_base")
         Ann.buildIvfIndex(emb.filter(col("vec_id") % 3 =!= 0), base, nCells = 16)
-        val out = TempDirs.tempDir("graft_ivf_v2")
         Ann.mergeIvfIndex(s, base, emb.filter(col("vec_id") % 3 === 0), out)
-        out
-      })
+      }
       val queries = emb.filter(col("vec_id") < 8)
       val approx = Ann.ivfTopKIndexed(s, merged, queries, k = 5, nProbe = 4)
       Ann.recallAtKFrom(annTruth(s, d, "clustered", clusteredEmb(s, d)),
@@ -1433,18 +1391,15 @@ object PipelineOps {
     // ---- small-file compaction (streaming-sink hygiene) -------------------
     // A 64-small-file layout (what a micro-batching sink leaves behind)
     // bin-packs to 4 files; the oracle recomputes the row count and the
-    // files_ok contract asserts the layout actually changed. Fragmented
-    // input staged once per source dir.
+    // files_ok contract asserts the layout actually changed.
     Q("q_compact",
       """SELECT CAST(count(*) AS BIGINT) AS n_rows, true AS files_ok
         |FROM events""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.functions.{count => fcount}
-      val frag = compactDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_frag")
+      val frag = Staged.dir(d, "graft_frag") { w =>
         Tables(s, d, "events").repartition(64)
           .write.mode("overwrite").parquet(s"$w/small")
-        w
-      })
+      }
       val nFiles = Scale.compact(s, s"$frag/small", s"$frag/compacted", 4)
       s.read.parquet(s"$frag/compacted")
         .agg(fcount(lit(1)).as("n_rows"))
@@ -1461,12 +1416,12 @@ object PipelineOps {
       """SELECT CAST(count(*) AS BIGINT) AS n_rows, true AS prune_ok
         |FROM events WHERE event_type = 'click'""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.functions.{count => fcount}
-      val root = partitionedDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_part")
+      // partitioned at write time, as production tables are; read
+      // with partition discovery, which is what the query measures
+      val root = Staged.dir(d, "graft_part") { w =>
         Tables(s, d, "events").write.mode("overwrite")
           .partitionBy("event_type").parquet(w)
-        w
-      })
+      }
       val clicks = s.read.parquet(root).filter(col("event_type") === "click")
       // the prune assert must inspect the SCAN's selected partitions:
       // Dataset.inputFiles lists the whole unfiltered relation, and

@@ -18,10 +18,6 @@ object RetrievalOps {
   // mirror of Retrieval.bm25TopK's tokenizer on the DuckDB side
   private val oToks = "regexp_split_to_array(trim(text), '\\s+')"
 
-  /** Persisted full-text index dirs, built once per source dir. */
-  private val textIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val all: Seq[Q] = Seq(
 
     // ---- BM25 top-k retrieval --------------------------------------------
@@ -85,11 +81,9 @@ object RetrievalOps {
          |SELECT doc_id, CAST(score_fp / 1000000.0 AS DOUBLE) AS score, n_terms
          |FROM sc ORDER BY score_fp DESC, doc_id LIMIT 10""".stripMargin
     }) { (s, d) =>
-      val path = textIndexDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_text_idx")
+      val path = Staged.dir(d, "graft_text_idx") { w =>
         Retrieval.buildTextIndex(documents(s, d), "doc_id", "text", w)
-        w
-      })
+      }
       Retrieval.bm25TopKIndexed(s, path, Seq("index", "stream", "cache"), k = 10)
     },
 

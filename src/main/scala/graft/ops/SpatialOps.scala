@@ -109,10 +109,6 @@ object SpatialOps {
       .where(col("d2") <= r * r)
   }
 
-  /** Grid index dirs, staged once per source dir (ivfIndexDirs pattern). */
-  private val gridIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val all: Seq[Q] = Seq(
 
     // ---- radius join: suppliers within r of each customer -----------------
@@ -238,11 +234,9 @@ object SpatialOps {
          |FROM f GROUP BY cid""".stripMargin
     }) { (s, d) =>
       val r = 20000L
-      val path = gridIndexDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_grid_idx")
+      val path = Staged.dir(d, "graft_grid_idx") { w =>
         buildGridIndex(points(supplier(s, d), "s_suppkey", "lid"), r, w)
-        w
-      })
+      }
       val delta = points(
         customer(s, d).filter(col("c_custkey") % 7 === 0), "c_custkey", "lid")
       probeGridIndex(s, path, delta, r)

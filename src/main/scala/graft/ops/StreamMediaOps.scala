@@ -8,29 +8,19 @@ import graft.streaming.Streams
 /** Registry entries for the multimodal-column and streaming surfaces. */
 object StreamMediaOps {
 
-  /** Media payload fixture of `kind` ("png", "wav" or "avi"), staged ONCE
-    * per (kind, source dir): real pipelines read payloads from object
-    * storage — they don't re-encode them per query — so the fixture is
-    * materialized to parquet on first use and every query (and every
-    * bench pass) scans the binary column from disk. */
-  private val fixtureDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def fixture(s: org.apache.spark.sql.SparkSession, d: String, kind: String) = {
-    val p = fixtureDirs.computeIfAbsent((kind, d), _ => {
-      val w = TempDirs.tempDir(s"graft_$kind")
+  /** Media payload fixture of `kind` ("png", "wav" or "avi"),
+    * [[Staged]] per source dir: real pipelines read payloads from object
+    * storage — they don't re-encode them per query — so every query (and
+    * every bench pass) scans the binary column from disk. */
+  private def fixture(s: org.apache.spark.sql.SparkSession, d: String, kind: String) =
+    Staged.table(s, d, s"graft_$kind") {
       val ids = Tables(s, d, "documents").select("doc_id")
-      (kind match {
+      kind match {
         case "png" => Multimodal.withPngPayload(ids, "doc_id")
         case "wav" => Multimodal.withWavPayload(ids, "doc_id")
         case "avi" => Multimodal.withAviPayload(ids, "doc_id")
-      }).write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(p)
-  }
-
-  /** Persisted image-hash index dirs, staged once per source dir. */
-  private val imageIdxDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+      }
+    }
 
   /** Oracle CTEs replaying the AVI fixture's pixel formula
     * pixel(x,y,f) = (seed + 31x + 17y + 73f) mod 2²⁴ for frames f
@@ -575,12 +565,10 @@ object StreamMediaOps {
         |      i -> a.bs[i] <> b.bs[i])) AS BIGINT) AS hamming
         |  FROM v a JOIN v b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0)
         |SELECT probe_id, corpus_id, hamming FROM p WHERE hamming <= 3""".stripMargin) { (s, d) =>
-      val path = imageIdxDirs.computeIfAbsent(d, _ => {
-        val w = TempDirs.tempDir("graft_img_idx")
+      val path = Staged.dir(d, "graft_img_idx") { w =>
         Multimodal.buildImageHashIndex(
           fixture(s, d, "png").filter(col("doc_id") % 5 =!= 0), "doc_id", "payload", w)
-        w
-      })
+      }
       val delta = fixture(s, d, "png").filter(col("doc_id") % 5 === 0)
       Multimodal.imageNearDupProbeIndexed(s, path, delta, "doc_id", "payload",
           maxHamming = 3)

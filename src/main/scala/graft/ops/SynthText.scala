@@ -107,31 +107,22 @@ object SynthText {
     s"$ajoin($xform($xform($xform($seqf(1, $n), i -> $hashAt), h -> $u), u -> $word), ' ')"
   }
 
-  /** Staged corpus dirs, one per source dir per JVM: the generator runs
-    * ~40 md5+digit extractions per word, and several consumers evaluate
-    * the docs frame more than once per query (both sides of a delta
-    * join, clean+dirty ER legs) — staging to parquet once per session
-    * makes generation a fixed setup cost and every query a columnar
-    * read, exactly how a real corpus would exist as data. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The synthetic corpus as a Spark frame: (doc_id, text). `doc_id`
     * comes from the documents table so both engines share the id set;
-    * the scale salt is a 1-row lineitem count broadcast-cross-joined in
-    * (a one-off scan at staging time, not a per-query cost). */
-  def docs(s: SparkSession, d: String): DataFrame = {
-    val path = stagedDirs.computeIfAbsent(d, _ => {
-      val w = TempDirs.tempDir("graft_synth_text")
+    * the scale salt is a 1-row lineitem count broadcast-cross-joined in.
+    * The generator runs ~40 md5+digit extractions per word, and several
+    * consumers evaluate the docs frame more than once per query (both
+    * sides of a delta join, clean+dirty ER legs), so the corpus is
+    * [[Staged]] to parquet per source dir: generation is a fixed setup
+    * cost and every query a columnar read, exactly how a real corpus
+    * would exist as data. */
+  def docs(s: SparkSession, d: String): DataFrame =
+    Staged.table(s, d, "graft_synth_text") {
       Tables(s, d, "documents")
         .crossJoin(Tables(s, d, "lineitem").agg(count(lit(1)).as("salt")))
         .select(col("doc_id"), expr(textExpr("spark")).as("text"))
         .repartition(8)
-        .write.mode("overwrite").parquet(w)
-      w
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** DuckDB CTE body regenerating the identical corpus: splice as
     * `WITH sdocs AS (<this>), ...` and read FROM sdocs. */

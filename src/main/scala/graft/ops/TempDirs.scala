@@ -1,25 +1,24 @@
 package graft.ops
 
-/** Self-cleaning temp dirs for query fixture staging: every fixture a
-  * query entry writes under java.io.tmpdir is registered here and
-  * recursively deleted on JVM exit — a long-lived host running repeated
-  * Bench/Verify JVMs otherwise accumulates them unboundedly (found
-  * live: six 1.7 GB zillow input fixtures from one afternoon of sf100
-  * draws drove the disk to 95% and killed a staging job). In-process
-  * fixture caches (e.g. ZillowOps.listingsDirs) keep working — the
-  * hook runs at JVM exit, never between queries. */
+import java.nio.file.{Files, Path, Paths}
+
+/** Self-cleaning temp dirs: every dir graft creates for fixtures,
+  * indexes, stream scratch or sinks is created here and recursively
+  * deleted on JVM exit. A long-lived host running repeated Bench/Verify
+  * JVMs otherwise accumulates them unboundedly (found live: six 1.7 GB
+  * zillow input fixtures from one afternoon of sf100 draws drove the
+  * disk to 95% and killed a staging job). [[Staged]] memos keep working:
+  * the hook runs at JVM exit, never between queries. */
 object TempDirs {
 
-  private val dirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   private lazy val installHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       dirs.forEach(p => delete(p))
     }, "graft-tempdir-cleanup"))
 
-  private def delete(p: java.nio.file.Path): Unit = try {
-    import java.nio.file.Files
+  private def delete(p: Path): Unit = try {
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder()).forEach { q =>
@@ -28,11 +27,16 @@ object TempDirs {
     }
   } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Create a tracked temp dir; recursively deleted at JVM exit. */
-  def tempDir(prefix: String): String = {
+  /** Create a tracked temp dir under java.io.tmpdir. */
+  def tempDir(prefix: String): String =
+    tempDir(Paths.get(System.getProperty("java.io.tmpdir")), prefix).toString
+
+  /** Create a tracked temp dir under `parent`, creating `parent` if absent. */
+  def tempDir(parent: Path, prefix: String): Path = {
     installHook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+    Files.createDirectories(parent)
+    val p = Files.createTempDirectory(parent, prefix)
     dirs.add(p)
-    p.toString
+    p
   }
 }

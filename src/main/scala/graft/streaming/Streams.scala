@@ -38,24 +38,16 @@ object Streams {
     val pick = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
       .orElse(Some("/dev/shm").filter(p => new java.io.File(p).canWrite))
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    val base = Paths.get(pick, "graft_stream_scratch")
-    Files.createDirectories(base)
     // PER-JVM subdirectory: concurrent graft JVMs (sbt test beside a
-    // Verify run) must not share a deletable root — a shared root's
-    // shutdown hook would destroy the other JVM's live checkpoints and
-    // staged inputs.
-    val d = Files.createTempDirectory(base, "jvm_")
-    // RAM-backed scratch is precious: reclaim THIS JVM's subtree on exit
-    // (staged inputs are memoized for the session, so cleanup must not
-    // happen earlier; per-query sinks are read back lazily by callers).
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try new scala.reflect.io.Directory(d.toFile).deleteRecursively(): Unit
-      catch { case _: Throwable => () }))
-    d
+    // Verify run) must not share a deletable root. RAM-backed scratch is
+    // precious, so TempDirs reclaims this JVM's subtree on exit (staged
+    // inputs are memoized for the session, so not earlier; per-query
+    // sinks are read back lazily by callers).
+    graft.ops.TempDirs.tempDir(Paths.get(pick, "graft_stream_scratch"), "jvm_")
   }
 
   private def scratchDir(prefix: String): java.nio.file.Path =
-    Files.createTempDirectory(scratchRoot, prefix)
+    graft.ops.TempDirs.tempDir(scratchRoot, prefix)
 
   /** Group key / event_type marking the watermark-advancing sentinel. */
   private val SentinelType = "_g_sentinel"
@@ -72,30 +64,22 @@ object Streams {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Staged watch dirs, memoized per (source dir, replays): the staging
-    * work — copying the events file `replays` times plus writing the
-    * sentinel parquet — is identical for every query over the same
-    * source, so the second and later streaming queries (and every
-    * measured bench pass after warmup) reuse the directory instead of
-    * re-staging. The watch dir is append-only input from the stream's
-    * point of view, so sharing it across concurrent queries is safe —
-    * each query owns its separate checkpoint/output dirs. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
-  /** Stage the events file plus the sentinel row into a (memoized) watch
-    * directory and return the bounded file-source stream over it, with
-    * `ts` rebuilt as a proper timestamp. `replays` > 1 stages the file
-    * that many times — the at-least-once redelivery simulation the
-    * streaming dedup query de-duplicates. */
+  /** Stage the events file plus the sentinel row into a watch directory,
+    * [[graft.ops.Staged]] per (source dir, replays), and return the
+    * bounded file-source stream over it, with `ts` rebuilt as a proper
+    * timestamp. `replays` > 1 stages the file that many times — the
+    * at-least-once redelivery simulation the streaming dedup query
+    * de-duplicates. The watch dir is append-only input from the stream's
+    * point of view, so concurrent queries share it; each query owns its
+    * separate checkpoint/output dirs. */
   private def stagedEventStream(spark: SparkSession, dir: String,
       replays: Int = 1, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val watch = stagedDirs.computeIfAbsent((dir, replays), _ => {
+    val watch = graft.ops.Staged.once(("graft_stream_in", dir, replays)) {
       val w = scratchDir("graft_stream_in")
       // One normalizing rewrite instead of a raw file copy: the source
       // parquet's ts flavor varies by data drop (nanos vs micros — see
       // Tables.events), so stage µs-longs and every downstream stream
-      // reads one uniform schema. Memoized per (dir, replays).
+      // reads one uniform schema.
       val ev = graft.ops.Tables.events(spark, dir)
         .withColumn("ts", unix_micros(col("ts"))).coalesce(1)
       (1 to replays).foreach(_ => ev.write.mode("append").parquet(w.toString))
@@ -104,7 +88,7 @@ object Streams {
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("append").parquet(w.toString)
       w.toString
-    })
+    }
     val reader = spark.readStream.schema(eventsRawSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(watch)
@@ -609,12 +593,6 @@ object Streams {
     counts.filter(col("user_id") =!= -1L)
   }
 
-  /** Staged CDC-log segments, memoized per source dir: the events table
-    * ts-range-split into 4 files so the change log really replays as
-    * several temporal micro-batches. */
-  private val cdcAssets =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Streaming CDC apply — [[graft.ops.Scale.applyCdcLog]] run as a
     * foreachBatch sink: the events stream is read as a change log
     * (op = delete for event_id % 10 = 9, upsert otherwise, replayed in
@@ -632,18 +610,20 @@ object Streams {
   def cdcApplyStream(spark0: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = drainSession(spark0, statePartitions = 8)
-    val watch = cdcAssets.computeIfAbsent(dir, _ => {
+    // the CDC log: the events table ts-range-split into 4 files so it
+    // really replays as several temporal micro-batches, staged once per
+    // source dir with its schema
+    val (watch, logSchema) = graft.ops.Staged.once(("graft_cdc_in", dir)) {
       val w = scratchDir("graft_cdc_in").toString
       graft.ops.Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts"),
           col("event_type"), col("value"))
         .repartitionByRange(4, col("ts"))
         .write.mode("overwrite").parquet(w)
-      w
-    })
+      (w, s.read.parquet(w).schema)
+    }
     val root = scratchDir("graft_cdc_run").toString
     val tbl = s"$root/table"
-    val logSchema = s.read.parquet(watch).schema
     val q = s.readStream.schema(logSchema)
       .option("maxFilesPerTrigger", 1).parquet(watch)
       .writeStream
@@ -674,12 +654,6 @@ object Streams {
         col("value").as("last_value"), col("n_ops"), col("ts").as("last_us"))
   }
 
-  /** Memoized per source dir: the corpus dedup index (built ONCE over the
-    * doc_id % 3 ≠ 0 "existing corpus") and the staged document stream
-    * (4 doc_id-ranged files so several micro-batches really execute). */
-  private val ingestAssets =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Streaming ingest with INDEX-BACKED exact dedup — the composition the
     * persisted dedup index exists for: documents arrive as micro-batches,
     * each batch probes the corpus index ([[graft.dedup.Dedup.exactDeltaIndexed]]
@@ -700,7 +674,10 @@ object Streams {
   def dedupIngestStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
     val s = drainSession(spark, statePartitions = 8)
-    val (idxPath, watch) = ingestAssets.computeIfAbsent(dir, _ => {
+    // staged once per source dir: the corpus dedup index over the
+    // doc_id % 3 ≠ 0 "existing corpus", and the document stream in 4
+    // doc_id-ranged files so several micro-batches really execute
+    val (idxPath, watch, docSchema) = graft.ops.Staged.once(("graft_ingest", dir)) {
       val idx = scratchDir("graft_ingest_idx").toString
       val docs = s.read.parquet(s"$dir/documents.parquet")
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 3 =!= 0),
@@ -708,11 +685,10 @@ object Streams {
       val w = scratchDir("graft_ingest_in").toString
       docs.repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(w)
-      (idx, w)
-    })
+      (idx, w, s.read.parquet(w).schema)
+    }
     val root = scratchDir("graft_ingest_run").toString
     val tbl = s"$root/table"
-    val docSchema = s.read.parquet(watch).schema
     val q = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(watch)
       .writeStream

@@ -7,12 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
+import graft.ops.SynthText
 import graft.similarity.{Ann, KMeans}
 
 /** The near-dup entry points and LSH top-k return lazy plans: the call itself submits
   * no Spark job (apart from the bounded sizing/model-fit jobs named per
   * case), the returned plan holds no checkpointed `LogicalRDD`, and the
-  * SQL cache manager is empty both after the call and after the action. */
+  * SQL cache manager is empty both after the call and after the action.
+  * A staged fixture, once staged, is read back without a job. */
 class LazyEntrySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -129,6 +131,21 @@ class LazyEntrySpec extends AnyFunSuite {
       Multimodal.imageNearDupProbeIndexed(spark, idx, delta, "doc_id", "payload"))
     assert(rows.forall(r => r.getLong(0) % 5 == 0 && r.getLong(1) % 5 != 0 &&
       r.getInt(2) <= 3))
+  }
+
+  test("a staged fixture reads back with no job: SynthText.docs and the media builds") {
+    import spark.implicits._
+    // the two tables the corpus and the media fixtures are derived from
+    val dir = java.nio.file.Files.createTempDirectory("graft_lazy_src").toString
+    (0L until 20L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    (0L until 30L).toDF("l_orderkey").write.parquet(s"$dir/lineitem.parquet")
+    val builds = Seq[(String, () => DataFrame)](
+      "SynthText.docs" -> (() => SynthText.docs(spark, dir)),
+      "q_audio_decode" -> (() => SparkEntry.queries("q_audio_decode")(spark, dir)),
+      "q_multimodal_meta" -> (() => SparkEntry.queries("q_multimodal_meta")(spark, dir)))
+    // the first call stages; the second only reads back
+    val again = builds.map { case (name, build) => build(); name -> jobsOf(build())._2 }
+    assert(again.forall(_._2 == 0), s"jobs submitted by a second call: $again")
   }
 
   test("LSH top-k submits no job before the action") {

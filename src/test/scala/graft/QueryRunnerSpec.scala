@@ -76,4 +76,34 @@ class QueryRunnerSpec extends AnyFunSuite {
       spark.streams.active.foreach(_.stop())
     }
   }
+
+  test("a job a timed-out query starts after its deadline is cancelled") {
+    val name = "late-start"
+    val tag = QueryRunner.jobTag(name)
+    val slow = udf { (x: Long) => Thread.sleep(50); x }
+    val tagged = ConcurrentHashMap.newKeySet[Int]()
+    val running = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) { tagged.add(e.jobId); running.add(e.jobId) }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId): Unit
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      // the body sleeps past its 1 s deadline, then starts one 200-row
+      // task at 50 ms a row: ~10 s of work
+      val r = QueryRunner.timed(spark, name, timeoutSec = 1) {
+        Thread.sleep(2000)
+        spark.range(0, 200, 1, 1).select(slow(col("id")))
+          .write.format("noop").mode("overwrite").save()
+      }
+      assert(r == Left("timeout"))
+      val deadline = System.nanoTime() + 5000000000L
+      while ((tagged.isEmpty || !running.isEmpty) && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(!tagged.isEmpty, "the late job never started")
+      assert(running.isEmpty, s"jobs still running 5 s after the timeout: $running")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
 }

@@ -220,6 +220,53 @@ class ScaleSpec extends AnyFunSuite {
     assert(Scale.pathBytes(spark, s"$dir/missing") == 0L)
   }
 
+  test("fanOutScan parity: the fanned-out and the as-is scan give identical rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fanout").toString
+    spark.range(0, 3000).select(col("id"), (col("id") % 13).as("k"),
+        concat(lit("t"), col("id")).as("s"))
+      .coalesce(1).write.parquet(s"$dir/t")
+    // one file, one row group: a one-task scan
+    val scan = spark.read.parquet(s"$dir/t")
+    val target = spark.sparkContext.defaultParallelism
+    assert(scan.rdd.getNumPartitions == 1 && target > 1)
+    val fanned = Scale.fanOutScan(scan)
+    assert(fanned.rdd.getNumPartitions == target, "the fan-out side was not taken")
+    // the as-is side: a scan already at the target width passes through
+    val wide = scan.repartition(target)
+    assert(Scale.fanOutScan(wide) eq wide)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(fanned) == rows(scan))
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("t"), max("s").as("m"))
+    assert(rows(agg(fanned)) == rows(agg(scan)))
+  }
+
+  test("sink part counts parity: known stats and the unknown sentinel write identical rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_parity").toString
+    spark.range(0, 5000).select(col("id"), (col("id") % 7).as("k"))
+      .coalesce(1).write.parquet(s"$dir/in")
+    val known = spark.read.parquet(s"$dir/in")
+    // the same rows behind an RDD leaf: the optimizer reports the sentinel
+    val unknown = spark.createDataFrame(known.rdd, known.schema)
+    assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes > (BigInt(1) << 50))
+    def written(df: org.apache.spark.sql.DataFrame, parts: Int, at: String) = {
+      df.repartition(parts).write.option("compression", "gzip").csv(s"$dir/$at")
+      val files = new java.io.File(s"$dir/$at").listFiles().count(_.getName.endsWith(".csv.gz"))
+      assert(files == parts, s"$at: $files parts, want $parts")
+      spark.read.schema(known.schema).csv(s"$dir/$at").collect().map(_.toString).sorted.toSeq
+    }
+    val sides = Seq[(String, org.apache.spark.sql.DataFrame => Int)](
+      "sinkParts" -> (df => Scale.sinkParts(df, floor = 1)),
+      "unsplittableParts" -> (df => Scale.unsplittableParts(df)))
+    for ((name, parts) <- sides) {
+      val (pk, pu) = (parts(known), parts(unknown))
+      assert(written(known, pk, s"$name-known") == written(unknown, pu, s"$name-unknown"))
+    }
+    // the sink sizing really differs between the two sides
+    assert(Scale.sinkParts(known, floor = 1) == 1 &&
+      Scale.sinkParts(unknown, floor = 1) == spark.sparkContext.defaultParallelism)
+  }
+
   test("mergeUpsert: updates win, inserts land, NULL data columns stay honest") {
     import spark.implicits._
     val base = Seq((1L, Some("a")), (2L, Some("b")), (3L, None: Option[String]))

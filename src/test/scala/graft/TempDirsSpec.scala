@@ -24,7 +24,7 @@ class TempDirsSpec extends AnyFunSuite {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val offenders = walk(new java.io.File("src/main/scala/graft/ops"))
+    val offenders = walk(new java.io.File("src/main/scala/graft"))
       .filter { f =>
         scala.io.Source.fromFile(f, "UTF-8").getLines()
           .map(_.trim)
@@ -34,7 +34,7 @@ class TempDirsSpec extends AnyFunSuite {
       .map(_.getName)
       .filterNot(_ == "TempDirs.scala")
     assert(offenders.isEmpty,
-      s"raw createTempDirectory in ops (leaks across JVMs — route " +
+      s"raw createTempDirectory in src/main (leaks across JVMs — route " +
         s"through TempDirs.tempDir): ${offenders.mkString(", ")}")
   }
 }
