@@ -64,9 +64,6 @@ object Dedup {
     GraftBridge.column(SortedIntersectCount(
       GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  private def withMinParallelism(df: DataFrame): DataFrame =
-    graft.ops.Par.ensureMin(df)
-
   /** Serialized form of a sketch Bloom filter, for embedding as a plan
     * literal (the same bytes `BloomFilter.readFrom` accepts). */
   private def bloomBytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
@@ -113,7 +110,7 @@ object Dedup {
     // every document would be shingled TWICE while materializing the
     // persist (the q_corpus_golden pushdown lesson, Par.filterOnce)
     graft.ops.Par.filterOnce(
-        withMinParallelism(df)
+        graft.ops.Par.ensureMin(df)
           .select(col(idCol).as("_id"), gramHashes(col(textCol)).as("_sh")),
         size(col("_sh")) > 0)
       .withColumn("_sig", minhashSigOfHashes(col("_sh"), numHashes))
@@ -429,7 +426,7 @@ object Dedup {
   def nearDupEmbedding(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val fv = col(vecCol).cast("array<float>")
-    val a = withMinParallelism(df.select(col(idCol).as("id_a"), fv.as("_va")))
+    val a = graft.ops.Par.ensureMin(df.select(col(idCol).as("id_a"), fv.as("_va")))
     val b = df.select(col(idCol).as("id_b"), fv.as("_vb"))
     a.join(broadcast(b), col("id_a") < col("id_b"))
       .filter(graft.similarity.Ann.cosine(col("_va"), col("_vb")) >= threshold)
@@ -493,7 +490,7 @@ object Dedup {
     graft.similarity.PairConfirm.requireIntegralId(df, idCol)
     // hyperplane signatures read null elements as 0 too, so one
     // coalesced vector feeds both the signatures and the confirm
-    val vecs = withMinParallelism(df.select(col(idCol).as("_id"),
+    val vecs = graft.ops.Par.ensureMin(df.select(col(idCol).as("_id"),
       transform(col(vecCol).cast("array<float>"), x => coalesce(x, lit(0f))).as("_v")))
     val (useBits, useTables) =
       if (bits > 0 && tables > 0) (bits, tables)
@@ -696,7 +693,7 @@ object Dedup {
   def textTopKSim(df: DataFrame, idCol: String, textCol: String, k: Int,
       kShingle: Int = 3, maxDf: Long = Long.MaxValue): DataFrame = {
     val docs = graft.ops.Par.filterOnce(
-        withMinParallelism(df)
+        graft.ops.Par.ensureMin(df)
           .select(col(idCol).as("_id"),
             shingleHashes(col(textCol), kShingle).as("_sh")),
         size(col("_sh")) > 0)
@@ -744,7 +741,7 @@ object Dedup {
     require(num > 0 && den > 0 && num <= den,
       s"threshold must be a fraction in (0,1], got $num/$den")
     val docs = graft.ops.Par.filterOnce(
-        withMinParallelism(df)
+        graft.ops.Par.ensureMin(df)
           .select(col(idCol).as("_id"),
             shingleHashes(col(textCol), kShingle).as("_sh")),
         size(col("_sh")) > 0)
@@ -780,7 +777,7 @@ object Dedup {
     // built before the persist, so a rejected bound leaves nothing cached
     val nBand = nearDupSimhash(df, idCol, textCol, maxHamming)
       .agg(count(lit(1)).as("n_band"))
-    val fp = simhashFingerprints(withMinParallelism(df), idCol, textCol)
+    val fp = simhashFingerprints(graft.ops.Par.ensureMin(df), idCol, textCol)
       .toDF("_id", "_fp").persist()
     // ground truth: all-pairs Hamming over (id, 64-bit print) — 16 bytes a
     // row, broadcast-NLJ on purpose; this is the labeled ground-truth side
@@ -808,7 +805,7 @@ object Dedup {
     * Output: (id_a, id_b, hamming), id_a < id_b. */
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val fp = simhashFingerprints(withMinParallelism(df), idCol, textCol)
+    val fp = simhashFingerprints(graft.ops.Par.ensureMin(df), idCol, textCol)
     graft.similarity.HammingBand.pairs(fp, fp, maxHamming, selfJoin = true)
   }
 

@@ -1457,12 +1457,13 @@ object PipelineOps {
       s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       Tables(s2, d, "events").write.mode("overwrite")
         .partitionBy("event_type").parquet(root)
-      def listing(skip: String) = {
-        val fs = new java.io.File(root).listFiles().toSeq
-          .filter(f => f.isDirectory && !f.getName.contains(skip))
-        fs.flatMap(dir => dir.listFiles().toSeq.map(f =>
-          f.getPath -> f.lastModified())).sortBy(_._1)
-      }
+      val rootPath = new org.apache.hadoop.fs.Path(root)
+      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def listing(skip: String) =
+        fs.listStatus(rootPath).toSeq
+          .filter(d => d.isDirectory && !d.getPath.getName.contains(skip))
+          .flatMap(d => fs.listStatus(d.getPath).toSeq.map(f =>
+            f.getPath.toString -> f.getModificationTime)).sortBy(_._1)
       val before = listing("event_type=click")
       // the backfill: rewrite ONLY the click partition, corrected values
       s2.read.parquet(root).filter(col("event_type") === "click")

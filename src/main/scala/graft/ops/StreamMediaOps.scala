@@ -212,9 +212,9 @@ object StreamMediaOps {
       s"""SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
          |  count(*) AS n, ${Tables.oSum("value")} AS total
          |FROM events GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      Streams.windowedAggRocksDb(s, d, "1 day", Seq(
+      Streams.runWindowedAgg(s, d, "1 day", Seq(
           "n" -> count(lit(1)),
-          "total" -> Tables.dsum(col("value"))))
+          "total" -> Tables.dsum(col("value"))), rocksDbState = true)
         .select(to_date(col("window.start")).as("day"), col("event_type"),
           col("n"), col("total"))
     },

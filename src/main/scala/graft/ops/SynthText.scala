@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *     the MinHash cut;
   *   - cross-group similarity is the head-word floor (~0.1).
   *
-  * Everything is the md5-hex-digit integer device (the `feistelSlot`
+  * Everything is the md5-hex-digit integer device (the `feistelRound`
   * pattern): both engines evaluate the IDENTICAL arithmetic text modulo
   * `div` vs `//`, `STRING` vs `VARCHAR`, `shiftleft` vs `<<`, and the
   * transform/sequence spellings — so the DuckDB oracle regenerates the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,31 +37,51 @@ object TrainPrepOps {
   private def rfp(c: Column): Column =
     floor(c.cast("double") * 100d + lit(0.5d)).cast("long")
 
-  /** Three-round Feistel permutation slot over a 4^k domain: the id is
-    * split into 2 half-width words on `h` (= 2^k, a column), each round
-    * adds an md5-derived round key of the right half mod h (modular-add
-    * Feistel — a bijection per round, engine-neutral spelling, no XOR
-    * dialect drift) and swaps. `engine` only switches the string-cast
-    * keyword and integer-division spelling; every arithmetic op is
-    * otherwise the identical text both engines evaluate bit-identically
-    * (the hexUniform device, applied to a permutation). */
-  private def feistelSlot(engine: String, id: String, epoch: String): String = {
+  /** One round of a three-round Feistel permutation slot over a 4^k
+    * domain: the id is split into 2 half-width words on `h` (= 2^k, a
+    * column), each round adds an md5-derived round key of the right half
+    * mod h (modular-add Feistel — a bijection per round, engine-neutral
+    * spelling, no XOR dialect drift) and swaps. Returns round `round`'s
+    * md5 over the right half `r`, and the new right half over that md5
+    * and the left half `l`. `engine` only switches the string-cast
+    * keyword; every arithmetic op is otherwise the identical text both
+    * engines evaluate bit-identically (the hexUniform device, applied to
+    * a permutation). */
+  private def feistelRound(engine: String, epoch: String, round: Int,
+      l: String, r: String): (String, String => String) = {
     val vc = if (engine == "duck") "VARCHAR" else "STRING"
-    def idiv(a: String, b: String) =
-      if (engine == "duck") s"(($a) // ($b))" else s"(($a) div ($b))"
-    var l = idiv(id, "h")
+    val hh = s"md5('ep' || CAST($epoch AS $vc) || ':' || CAST($round AS $vc) || ':' || CAST($r AS $vc))"
+    def f(h: String) = (1 to 6)
+      .map(i => s"(instr('0123456789abcdef', substr($h, $i, 1)) - 1) * ${math.pow(16, 6 - i).toLong}")
+      .mkString("((", " + ", ") % h)")
+    (hh, h => s"((($l) + ${f(h)}) % h)")
+  }
+
+  /** The DuckDB oracle's slot: the three rounds nested into one string. */
+  private def feistelSlotDuck(id: String, epoch: String): String = {
+    var l = s"(($id) // (h))"
     var r = s"(($id) % h)"
     for (round <- 0 until 3) {
-      val hh = s"md5('ep' || CAST($epoch AS $vc) || ':' || CAST($round AS $vc) || ':' || CAST($r AS $vc))"
-      val f = (1 to 6)
-        .map(i => s"(instr('0123456789abcdef', substr($hh, $i, 1)) - 1) * ${math.pow(16, 6 - i).toLong}")
-        .mkString("((", " + ", ") % h)")
-      val lp = s"((($l) + $f) % h)"
+      val (hh, rightHalf) = feistelRound("duck", epoch, round, l, r)
       l = r
-      r = lp
+      r = rightHalf(hh)
     }
     s"(($l) * h + $r)"
   }
+
+  /** The same slot on Spark as `slot`, one projection per round: the
+    * round's md5 is a column of its own, so each round plans one md5 and
+    * the expression grows linearly in rounds. Nested into one string,
+    * each round repeats the previous rounds' text once per hex digit it
+    * reads: a 50k-character expression with 306 md5 calls that the driver
+    * parses, analyzes and optimizes on every call. `df` carries `h`. */
+  private def feistelSlotSpark(df: DataFrame, id: String, epoch: String): DataFrame =
+    (0 until 3).foldLeft(df.withColumns(Map(
+        "_l" -> expr(s"(($id) div (h))"), "_r" -> expr(s"(($id) % h)")))) { (d, round) =>
+      val (hh, rightHalf) = feistelRound("spark", epoch, round, "_l", "_r")
+      d.withColumn("_h", expr(hh))
+        .withColumns(Map("_l" -> col("_r"), "_r" -> expr(rightHalf("_h"))))
+    }.withColumn("slot", expr("_l * h + _r")).drop("_l", "_r", "_h")
 
   /** Half-width 2^k such that ids < 4^k: the explicit comparison chain
     * both engines evaluate identically (no float log at the power
@@ -288,7 +308,7 @@ object TrainPrepOps {
     // rounds keyed by the md5-ppm device. TrainPrepSpec proves
     // bijectivity (n distinct slots per epoch, all < h²).
     Q("q_epoch_shuffle", {
-      val slot = feistelSlot("duck", "doc_id", "epoch")
+      val slot = feistelSlotDuck("doc_id", "epoch")
       s"""WITH nn AS (SELECT ${halfWidthCase("max(doc_id) + 1")} AS h
          |  FROM documents),
          |de AS (SELECT doc_id, epoch, h
@@ -301,10 +321,10 @@ object TrainPrepOps {
       val docs = Tables(s, d, "documents").select(col("doc_id"))
       val hRow = broadcast(
         docs.agg(expr(halfWidthCase("max(doc_id) + 1")).as("h")))
-      docs.crossJoin(hRow)
-        .withColumn("epoch", explode(array(lit(0), lit(1), lit(2))))
+      feistelSlotSpark(docs.crossJoin(hRow)
+          .withColumn("epoch", explode(array(lit(0), lit(1), lit(2)))), "doc_id", "epoch")
         .select(col("doc_id"), col("epoch").cast("long").as("epoch"),
-          expr(feistelSlot("spark", "doc_id", "epoch")).cast("long").as("slot"))
+          col("slot").cast("long").as("slot"))
     },
 
     // ---- semantic decontamination vs a held-out eval set ------------------

@@ -1,18 +1,23 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (capability superset — the reference has
   * no streams, SURVEY §0). Streams the events table and produces the same
   * answers as the batch path, in the shape that scales: watermarked
   * event-time state, Append output, and a FILE sink — never a driver-side
-  * memory sink, never Complete mode (round-1 verdict item #4).
+  * memory sink, never Complete mode.
+  *
+  * Every query is one [[drain]]: a stream over a [[watched]] dir, run on
+  * a [[drainSession]] into a parquet sink ([[runToParquet]]), a
+  * merge-into-table or an append log ([[BatchTable]]), and read back with
+  * the schema it was written with.
   *
   * Finite-stream mechanics: Append mode only emits a window/group once
   * the watermark passes it, and the watermark only advances with new
@@ -43,57 +48,55 @@ object Streams {
     // precious, so TempDirs reclaims this JVM's subtree on exit (staged
     // inputs are memoized for the session, so not earlier; per-query
     // sinks are read back lazily by callers).
-    graft.ops.TempDirs.tempDir(Paths.get(pick, "graft_stream_scratch"), "jvm_")
+    graft.ops.TempDirs.tempDir(java.nio.file.Paths.get(pick, "graft_stream_scratch"), "jvm_")
   }
 
-  private def scratchDir(prefix: String): java.nio.file.Path =
-    graft.ops.TempDirs.tempDir(scratchRoot, prefix)
+  private def scratchDir(prefix: String): String =
+    graft.ops.TempDirs.tempDir(scratchRoot, prefix).toString
 
   /** Group key / event_type marking the watermark-advancing sentinel. */
   private val SentinelType = "_g_sentinel"
   private val SentinelUs = 4102444800L * 1000000L // 2100-01-01T00:00Z, µs
 
-  /** Events schema as a *stream* source: staging normalizes ts to
-    * µs-since-epoch longs (whatever the source parquet's timestamp
-    * flavor — see graft.ops.Tables.events) and the stream rebuilds. */
-  private val eventsRawSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
+  /** A bounded file-source stream over a watch dir that `stage` fills
+    * once per `key` ([[graft.ops.Staged]]). The dir's schema is read from
+    * its footers at staging time, so every later stream opens with it and
+    * infers nothing. The watch dir is append-only input from the stream's
+    * point of view, so concurrent queries share it; each drain owns its
+    * own checkpoint and output dirs. `maxFilesPerTrigger` turns each
+    * staged file into a micro-batch of its own. Returns the stream and
+    * `stage`'s value. */
+  private def watched[T](s: SparkSession, key: Any, prefix: String,
+      maxFilesPerTrigger: Option[Int] = None)(stage: String => T): (DataFrame, T) = {
+    val (watch, schema, staged) = graft.ops.Staged.once(key) {
+      val w = scratchDir(prefix)
+      val t = stage(w)
+      (w, s.read.parquet(w).schema, t)
+    }
+    val reader = s.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    (reader.parquet(watch), staged)
+  }
 
-  /** Stage the events file plus the sentinel row into a watch directory,
-    * [[graft.ops.Staged]] per (source dir, replays), and return the
-    * bounded file-source stream over it, with `ts` rebuilt as a proper
-    * timestamp. `replays` > 1 stages the file that many times — the
-    * at-least-once redelivery simulation the streaming dedup query
-    * de-duplicates. The watch dir is append-only input from the stream's
-    * point of view, so concurrent queries share it; each query owns its
-    * separate checkpoint/output dirs. */
-  private def stagedEventStream(spark: SparkSession, dir: String,
-      replays: Int = 1, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val watch = graft.ops.Staged.once(("graft_stream_in", dir, replays)) {
-      val w = scratchDir("graft_stream_in")
-      // One normalizing rewrite instead of a raw file copy: the source
-      // parquet's ts flavor varies by data drop (nanos vs micros — see
-      // Tables.events), so stage µs-longs and every downstream stream
-      // reads one uniform schema.
-      val ev = graft.ops.Tables.events(spark, dir)
+  /** The events table plus the sentinel row as a [[watched]] stream per
+    * (source dir, replays), with `ts` rebuilt as a proper timestamp.
+    * `replays` > 1 stages the file that many times — the at-least-once
+    * redelivery the dedup and upsert drains de-duplicate. */
+  private def stagedEventStream(s: SparkSession, dir: String,
+      replays: Int = 1, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    watched(s, ("graft_stream_in", dir, replays), "graft_stream_in",
+        maxFilesPerTrigger) { w =>
+      // staged as µs-since-epoch longs: the source parquet's ts flavor
+      // varies by data drop (nanos vs micros — see Tables.events), the
+      // staged schema does not
+      val ev = graft.ops.Tables.events(s, dir)
         .withColumn("ts", unix_micros(col("ts"))).coalesce(1)
-      (1 to replays).foreach(_ => ev.write.mode("append").parquet(w.toString))
-      import spark.implicits._
+      (1 to replays).foreach(_ => ev.write.mode("append").parquet(w))
+      import s.implicits._
       Seq((-1L, SentinelUs, -1L, SentinelType, 0.0, null: String))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(w.toString)
-      w.toString
-    }
-    val reader = spark.readStream.schema(eventsRawSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(watch)
-      .withColumn("ts", timestamp_micros(col("ts")))
-  }
+        .coalesce(1).write.mode("append").parquet(w)
+    }._1.withColumn("ts", timestamp_micros(col("ts")))
 
   /** Cloned sessions the drains run on, one per (parent session, state
     * partitions, RocksDB state store, flush batch needed). Each is created
@@ -135,58 +138,127 @@ object Streams {
     })
   }
 
-  /** Drain `q` into a parquet file sink and read the result back, on the
-    * [[drainSession]] for (`statePartitions`, `rocksDbState`, `flush`).
-    * Each state partition costs a store instance + commit + checkpoint
-    * files EVERY batch (including no-data flush batches), so a
-    * low-cardinality grouping (e.g. window × event_type) should not pay
-    * for the session-wide shuffle width. Round-5's warmed A/B favored 8
-    * over 2 — but that predated the RAM-backed scratch (round 6): with
-    * checkpoint fsyncs no longer the bottleneck, the per-partition fixed
-    * cost (a state store instance + sink file PER BATCH each) dominates
-    * at these keyspaces, and the warmed JIT-steady re-measure now favors
-    * 2 (window-agg shape: 1.35 s at 8 → 1.06 s at 2 per query; the
-    * no-data flush batch and sink commit shrink with the file count).
-    * At production keyspaces this sizes UP with state volume; the knob
-    * is per-query for exactly that reason. */
+  /** The one drain. `run` gets the [[drainSession]] for (`statePartitions`,
+    * `rocksDbState`, `flush`) and a fresh scratch root named by `prefix`;
+    * it builds the stream, configures its sink, and says how to read the
+    * drained result back. The drain puts the checkpoint under the root,
+    * starts the query, processes all available input, stops it and
+    * returns that read-back. The default trigger with
+    * `processAllAvailable()` is the bounded drain: `Trigger.AvailableNow()`
+    * with `awaitTermination()` measured slower, because its up-front batch
+    * planning and end-of-stream bookkeeping cost more than the poll. */
+  private def drain[T](spark0: SparkSession, prefix: String, statePartitions: Int,
+      rocksDbState: Boolean = false, flush: Boolean = true)(
+      run: (SparkSession, String) => (DataStreamWriter[Row], () => T)): T = {
+    val root = scratchDir(prefix)
+    val (sink, result) = run(drainSession(spark0, statePartitions, rocksDbState, flush), root)
+    val q = sink.option("checkpointLocation", s"$root/chk").start()
+    try q.processAllAvailable() finally q.stop()
+    result()
+  }
+
+  /** [[drain]] `build`'s stream in Append mode into a parquet file sink
+    * and read the result back with the stream's schema, so no listing and
+    * footer-inference job runs per drained result. Each state partition
+    * costs a store instance, a commit and checkpoint files on EVERY batch
+    * (no-data flush batches included), so `statePartitions` is per query:
+    * a low-cardinality grouping (window × event_type) runs on 2, not on
+    * the session-wide shuffle width; at production keyspaces it sizes up
+    * with state volume. */
   private def runToParquet(spark0: SparkSession, statePartitions: Int,
       rocksDbState: Boolean = false, flush: Boolean = true)(
-      build: (SparkSession, String) => DataFrame): DataFrame = {
-    val root = scratchDir("graft_stream_out").toString
-    val spark = drainSession(spark0, statePartitions, rocksDbState, flush)
-    // Trigger choice was A/B-measured (round 6): Trigger.AvailableNow()
-    // + awaitTermination — the obvious "bounded drain" candidate — was
-    // ~8% SLOWER over the 15-query stream tier at sf0.1 (27.3 s vs
-    // 25.1 s isolated; answers identical, selfcheck-hash-verified): its
-    // up-front batch planning and end-of-stream bookkeeping cost more
-    // than processAllAvailable()'s poll. Default trigger + explicit
-    // drain stays.
-    val out = build(spark, root)
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet").option("path", s"$root/data")
-      .option("checkpointLocation", s"$root/chk")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    // readback with the KNOWN schema: skips the listing + footer
-    // schema-inference job on every drained result
-    spark0.read.schema(out.schema).parquet(s"$root/data")
+      build: SparkSession => DataFrame): DataFrame =
+    drain(spark0, "graft_stream_out", statePartitions, rocksDbState, flush) { (s, root) =>
+      val out = build(s)
+      (out.writeStream.outputMode(OutputMode.Append())
+        .format("parquet").option("path", s"$root/data"),
+        () => spark0.read.schema(out.schema).parquet(s"$root/data"))
+    }
+
+  /** The parquet table at `root/table` that a foreachBatch drain writes:
+    * [[merge]] (upsert, CDC) or [[append]] (the ingest log). Every step
+    * goes through the table path's own Hadoop `FileSystem`, so the table
+    * can live on any store Hadoop resolves, and every read uses the schema
+    * the table was last written with, so no read runs a footer-inference
+    * job. One writer per table: the drain's foreachBatch. */
+  private[graft] final class BatchTable(root: String) {
+    private val path = new Path(root, "table")
+    @volatile private var schema: StructType = _
+
+    private def fs(s: SparkSession) = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+
+    /** The table as last written; None before the first write. */
+    def current(s: SparkSession): Option[DataFrame] =
+      if (fs(s).exists(path)) Some(s.read.schema(schema).parquet(path.toString)) else None
+
+    /** The table as last written; throws if nothing was written. */
+    def read(s: SparkSession): DataFrame = current(s).getOrElse(
+      throw new IllegalStateException(s"no batch was written to $path"))
+
+    /** Appends `df` as one more file: O(batch) per batch, the
+      * log-structured write. */
+    def append(df: DataFrame): Unit = {
+      df.coalesce(1).write.mode("append").parquet(path.toString)
+      schema = df.schema
+    }
+
+    /** Replaces the table with `f(batch, current)` in 4 parts: write
+      * `root/swap`, rename the table to `root/old` and the swap to the
+      * table, delete the old. Atomic enough for one writer; a table
+      * format's MERGE replaces this wholesale in production. Hadoop's
+      * `rename` returns false instead of throwing, and moves its source
+      * INTO a destination directory that exists; either would leave the
+      * table missing or stale, and the next batch would quietly merge into
+      * the wrong state. So a rename only targets a path that does not
+      * exist, and a failed one throws. */
+    def merge(s: SparkSession, batch: DataFrame)(
+        f: (DataFrame, Option[DataFrame]) => DataFrame): Unit = {
+      val merged = f(batch, current(s))
+      val swap = new Path(root, "swap")
+      val old = new Path(root, "old")
+      merged.coalesce(4).write.mode("overwrite").parquet(swap.toString)
+      val fs = this.fs(s)
+      def rename(from: Path, to: Path): Unit =
+        if (fs.exists(to) || !fs.rename(from, to))
+          throw new java.io.IOException(s"could not rename $from to $to")
+      if (fs.exists(path)) rename(path, old)
+      rename(swap, path)
+      fs.delete(old, true)
+      schema = merged.schema
+    }
   }
+
+  /** [[drain]] `source` through foreachBatch into a [[BatchTable]]: each
+    * micro-batch is merged into the current table by `f` and swapped in,
+    * and the final table is read back. State lives in the TABLE, not the
+    * stream: no watermark, no state store, restart-safe via the
+    * checkpoint's batch ids. */
+  private def mergeStream(spark0: SparkSession, prefix: String)(
+      source: SparkSession => DataFrame)(
+      f: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
+    drain(spark0, prefix, statePartitions = 8) { (s, root) =>
+      val table = new BatchTable(root)
+      (source(s).writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        table.merge(s, batch)(f)
+      }, () => table.read(spark0))
+    }
 
   /** Tumbling-window aggregation over the stream: watermark + Append into
     * a parquet sink — bounded state (windows drop once the watermark
     * passes), nothing driver-side. Returns the finalized result table.
-    * `aggs` maps output column name → aggregate over the window group. */
+    * `aggs` maps output column name → aggregate over the window group.
+    * `rocksDbState` keeps the state in RocksDB, the provider a large
+    * deployment runs (state spills to local disk with incremental
+    * checkpoints instead of living on the executor heap): the same plan
+    * and answers on the production backend. */
   def runWindowedAgg(spark: SparkSession, dir: String, windowDur: String,
-      aggs: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+      aggs: Seq[(String, Column)], rocksDbState: Boolean = false): DataFrame =
+    runToParquet(spark, statePartitions = 2, rocksDbState) { s =>
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), windowDur), col("event_type"))
         .agg(aggs.head._2.as(aggs.head._1),
           aggs.tail.map { case (n, c) => c.as(n) }: _*)
-
     }.filter(col("event_type") =!= SentinelType)
 
   /** SLIDING window aggregation over the stream: 1-hour windows sliding
@@ -197,7 +269,7 @@ object Streams {
     * watermark; Spark assigns all 4 windows per row in one pass without
     * materializing an explode. Output keys are (window_start, type). */
   def slidingWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+    runToParquet(spark, statePartitions = 2) { s =>
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour", "15 minutes"),
@@ -208,7 +280,6 @@ object Streams {
         .select(col("event_type"),
           unix_micros(col("window.start")).as("win_start"),
           col("n"), col("v_fp"))
-
     }.filter(col("event_type") =!= SentinelType)
 
   /** CHAINED streaming window aggregations — two stateful operators in
@@ -226,7 +297,7 @@ object Streams {
     * hour — a value only the chained shape can produce, so the oracle
     * match proves BOTH layers ran. */
   def chainedWindowedAgg(spark: SparkSession, dir: String): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+    runToParquet(spark, statePartitions = 2) { s =>
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 minute"), col("event_type"))
@@ -237,7 +308,6 @@ object Streams {
         .select(col("event_type"),
           unix_micros(col("window.start")).as("hour_start"),
           col("n_events"), col("n_minutes"))
-
     }.filter(col("event_type") =!= SentinelType)
 
   /** Gap-based SESSION-window aggregation over the stream — the streaming
@@ -252,7 +322,7 @@ object Streams {
     * session_start, session_end, n_events) in epoch micros. */
   def sessionWindowAgg(spark: SparkSession, dir: String,
       gap: String): DataFrame =
-    runToParquet(spark, statePartitions = 4) { (s, _) =>
+    runToParquet(spark, statePartitions = 4) { s =>
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), gap), col("user_id"))
@@ -261,7 +331,6 @@ object Streams {
           max(unix_micros(col("ts"))).as("session_end"))
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events"))
-
     }.filter(col("user_id") =!= -1L)
 
   /** Streaming exact dedup under an event-time watermark. The dedup key is
@@ -276,11 +345,10 @@ object Streams {
     * batch: one micro-batch per drain of the staged input. */
   def dedupStream(spark: SparkSession, dir: String, keyCols: Seq[String],
       watermark: String = "1 day", replays: Int = 1): DataFrame =
-    runToParquet(spark, statePartitions = 2, flush = false) { (s, _) =>
+    runToParquet(spark, statePartitions = 2, flush = false) { s =>
       stagedEventStream(s, dir, replays)
         .withWatermark("ts", watermark)
         .dropDuplicates(keyCols :+ "ts")
-
     }.filter(col("event_type") =!= SentinelType)
 
   /** Watermark-BOUNDED time-agnostic dedup — the scale-correct form of
@@ -298,29 +366,10 @@ object Streams {
   def dedupWithinWatermarkStream(spark: SparkSession, dir: String,
       keyCols: Seq[String], watermark: String = "1 day",
       replays: Int = 2): DataFrame =
-    runToParquet(spark, statePartitions = 2, flush = false) { (s, _) =>
+    runToParquet(spark, statePartitions = 2, flush = false) { s =>
       stagedEventStream(s, dir, replays)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keyCols)
-
-    }.filter(col("event_type") =!= SentinelType)
-
-  /** Watermarked windowed aggregation with the ROCKSDB state store — the
-    * configuration a 100 TB deployment actually runs (state spills to
-    * local disk with incremental checkpointing instead of living on the
-    * executor heap). Identical plan and answers to the default-provider
-    * window agg; what's under test is that the whole state machinery —
-    * watermark advance, window finalization, Append emission — behaves
-    * identically on the production backend. */
-  def windowedAggRocksDb(spark: SparkSession, dir: String, windowDur: String,
-      aggs: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
-    runToParquet(spark, statePartitions = 2, rocksDbState = true) { (s, _) =>
-      stagedEventStream(s, dir)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), windowDur), col("event_type"))
-        .agg(aggs.head._2.as(aggs.head._1),
-          aggs.tail.map { case (n, c) => c.as(n) }: _*)
-
     }.filter(col("event_type") =!= SentinelType)
 
   /** Stream-static join + windowed aggregate: the event stream enriches
@@ -334,167 +383,99 @@ object Streams {
     * nothing) then drops the sentinel row. */
   def streamStaticWindowedAgg(spark: SparkSession, dir: String,
       dim: DataFrame, streamKey: String, dimKey: String, dimCol: String,
-      windowDur: String, aggs: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
-    runToParquet(spark, statePartitions = 2) { (s, _) =>
+      windowDur: String, aggs: Seq[(String, Column)]): DataFrame =
+    runToParquet(spark, statePartitions = 2) { s =>
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
         .join(broadcast(dim), col(streamKey) === col(dimKey), "inner")
         .groupBy(window(col("ts"), windowDur), col(dimCol))
         .agg(aggs.head._2.as(aggs.head._1),
           aggs.tail.map { case (n, c) => c.as(n) }: _*)
-
     }
 
-  /** Stream-stream inner join: two event streams join on `event_id`
-    * within a ±`band` EVENT-TIME range; both sides carry watermarks and
-    * the range condition bounds how long either side's rows wait in the
-    * join state, so state retires as the watermark advances — the only
-    * shape at which a stream×stream join survives unbounded input. The
-    * sentinel pair joins itself (same id, same ts) and is filtered by id
-    * after the drain. Output: (event_id, event_type, value). */
-  def streamStreamJoin(spark: SparkSession, dir: String,
-      band: String = "1 minute"): DataFrame =
-    // A stream-stream join keeps FOUR state stores per partition
-    // (left/right × keyToNumValues/keyWithIndexToValue), so per-partition
-    // fixed cost scales 4× faster in partition count than single-store
-    // operators — it sized down to 4 before single-store ops did, and the
-    // round-6 RAM-scratch retune takes both to 2 at this keyspace.
-    runToParquet(spark, statePartitions = 4) { (s, _) =>
-      val l = stagedEventStream(s, dir)
-        .select(col("event_id").as("l_id"), col("ts").as("l_ts"),
-          col("event_type"))
-        .withWatermark("l_ts", "0 seconds")
-      val r = stagedEventStream(s, dir)
-        .select(col("event_id").as("r_id"), col("ts").as("r_ts"),
-          col("value"))
-        .withWatermark("r_ts", "0 seconds")
-      l.join(r, expr(
+  /** The one stream-stream join: two replays of the event stream join on
+    * `event_id` within a ±`band` EVENT-TIME range, `how` = inner, left_outer
+    * or full_outer. Both sides carry watermarks and the range condition
+    * bounds how long either side's rows wait in the join state, so state
+    * retires as the watermark advances — the only shape at which a
+    * stream×stream join survives unbounded input; an outer side's
+    * unmatched rows emit with NULLs once the watermark passes their time +
+    * band. `keepLeft`/`keepRight` filter each side by its id, and the
+    * `-1` sentinel is always kept: Catalyst pushes a non-event-time
+    * predicate below the EventTimeWatermark node, so a filter that drops
+    * the sentinel drops it BEFORE the watermark sees it, the global
+    * watermark stalls at the max real event time, and every unmatched row
+    * in the last `band` of the stream stays in state forever. The
+    * sentinel instead joins its own twin and is dropped after the drain.
+    * It runs on 4 state partitions, not the window drains' 2: at 2 the
+    * stream queries measured slower at sf0.1, because the join's batch
+    * work (two source scans, one key per event, four state stores per
+    * partition for left/right × keyToNumValues/keyWithIndexToValue) wants
+    * the width. Output: (event_id, event_type, value). */
+  private def bandJoin(spark: SparkSession, dir: String, band: String,
+      how: String, keepLeft: Column => Column = _ => lit(true),
+      keepRight: Column => Column = _ => lit(true)): DataFrame =
+    runToParquet(spark, statePartitions = 4) { s =>
+      def side(p: String, payload: String, keep: Column => Column) = {
+        val id = col(s"${p}_id")
+        stagedEventStream(s, dir)
+          .select(col("event_id").as(s"${p}_id"), col("ts").as(s"${p}_ts"),
+            col(payload))
+          .withWatermark(s"${p}_ts", "0 seconds")
+          .filter(keep(id) || id === -1L)
+      }
+      side("l", "event_type", keepLeft).join(side("r", "value", keepRight), expr(
           s"""l_id = r_id AND
              |r_ts >= l_ts - interval $band AND
-             |r_ts <= l_ts + interval $band""".stripMargin))
-        .select(col("l_id").as("event_id"), col("event_type"), col("value"))
-
-    }.filter(col("event_id") =!= -1L)
-
-  /** Stream-stream LEFT OUTER join: like [[streamStreamJoin]] but
-    * unmatched left rows EMIT WITH NULLS once the right watermark passes
-    * their event time + band — the only point an outer result is safe to
-    * finalize on unbounded input (a row can't be declared unmatched while
-    * late matches could still arrive). The right side keeps only even
-    * event ids, so odd ids exercise the null-emission path. The right
-    * filter must KEEP the sentinel row (`-1`): Catalyst pushes a
-    * non-event-time predicate below the EventTimeWatermark node, so a
-    * filter that drops the sentinel drops it BEFORE the watermark sees
-    * it — the global watermark then stalls at the max real event time
-    * and every unmatched row inside the last `band` of the stream is
-    * held in state forever (observed: exactly the final odd-id row
-    * missing). The sentinel instead joins its own twin and is dropped
-    * after the drain. */
-  def streamStreamLeftJoin(spark: SparkSession, dir: String,
-      band: String = "1 minute"): DataFrame =
-    runToParquet(spark, statePartitions = 4) { (s, _) =>
-      val l = stagedEventStream(s, dir)
-        .select(col("event_id").as("l_id"), col("ts").as("l_ts"),
-          col("event_type"))
-        .withWatermark("l_ts", "0 seconds")
-      val r = stagedEventStream(s, dir)
-        .select(col("event_id").as("r_id"), col("ts").as("r_ts"),
-          col("value"))
-        .withWatermark("r_ts", "0 seconds")
-        .filter(col("r_id") % 2 === 0 || col("r_id") === -1L)
-      l.join(r, expr(
-          s"""l_id = r_id AND
-             |r_ts >= l_ts - interval $band AND
-             |r_ts <= l_ts + interval $band""".stripMargin), "left_outer")
-        .select(col("l_id").as("event_id"), col("event_type"), col("value"))
-
-    }.filter(col("event_id") =!= -1L)
-
-  /** Stream-stream FULL OUTER join — completes the streaming join family:
-    * rows unmatched on EITHER side emit with NULLs for the other side's
-    * columns once the watermark passes their time + band (the same
-    * finalization rule as [[streamStreamLeftJoin]], now applied
-    * symmetrically: Spark holds both sides' state until the global
-    * watermark proves no in-band partner can still arrive). The side
-    * filters (left keeps ids with `id % 3 != 0`, right keeps even ids)
-    * make all three emission paths non-empty on the fixture: matched
-    * (even, not div-3), left-only (odd, not div-3), right-only (div-6).
-    * Both filters KEEP the `-1` sentinel — the watermark-stall gotcha
-    * documented on the left join applies to each side here. */
-  def streamStreamFullJoin(spark: SparkSession, dir: String,
-      band: String = "1 minute"): DataFrame =
-    runToParquet(spark, statePartitions = 4) { (s, _) =>
-      val l = stagedEventStream(s, dir)
-        .select(col("event_id").as("l_id"), col("ts").as("l_ts"),
-          col("event_type"))
-        .withWatermark("l_ts", "0 seconds")
-        .filter(col("l_id") % 3 =!= 0 || col("l_id") === -1L)
-      val r = stagedEventStream(s, dir)
-        .select(col("event_id").as("r_id"), col("ts").as("r_ts"),
-          col("value"))
-        .withWatermark("r_ts", "0 seconds")
-        .filter(col("r_id") % 2 === 0 || col("r_id") === -1L)
-      l.join(r, expr(
-          s"""l_id = r_id AND
-             |r_ts >= l_ts - interval $band AND
-             |r_ts <= l_ts + interval $band""".stripMargin), "full_outer")
+             |r_ts <= l_ts + interval $band""".stripMargin), how)
         .select(coalesce(col("l_id"), col("r_id")).as("event_id"),
           col("event_type"), col("value"))
-
     }.filter(col("event_id") =!= -1L)
+
+  /** Stream-stream inner [[bandJoin]]: every event pairs with its twin. */
+  def streamStreamJoin(spark: SparkSession, dir: String,
+      band: String = "1 minute"): DataFrame =
+    bandJoin(spark, dir, band, "inner")
+
+  /** Stream-stream LEFT OUTER [[bandJoin]]: the right side keeps only even
+    * event ids, so odd ids exercise the null-emission path. */
+  def streamStreamLeftJoin(spark: SparkSession, dir: String,
+      band: String = "1 minute"): DataFrame =
+    bandJoin(spark, dir, band, "left_outer", keepRight = _ % 2 === 0)
+
+  /** Stream-stream FULL OUTER [[bandJoin]]: the left side keeps ids with
+    * `id % 3 != 0`, the right side even ids, so all three emission paths
+    * are non-empty on the fixture: matched (even, not div-3), left-only
+    * (odd, not div-3), right-only (div-6). */
+  def streamStreamFullJoin(spark: SparkSession, dir: String,
+      band: String = "1 minute"): DataFrame =
+    bandJoin(spark, dir, band, "full_outer",
+      keepLeft = _ % 3 =!= 0, keepRight = _ % 2 === 0)
 
   /** Streaming UPSERT via foreachBatch — the production pattern for
     * "merge this stream into a table": each micro-batch deduplicates
     * itself on `keyCols`, then merges into the target table keeping
     * existing rows on key conflict (idempotent under at-least-once
-    * redelivery, which `replays = 2` simulates; `maxFilesPerTrigger = 1`
+    * redelivery, which `replays = 2` simulates; one file per trigger
     * forces real multi-batch execution so the merge actually exercises
-    * the conflict path). The merge here is read-union-dedup-rewrite over
-    * a parquet dir with an atomic directory swap — the honest plain-file
-    * emulation; at scale the foreachBatch body is the SAME and only the
-    * final write becomes a transactional MERGE / partition overwrite on a
-    * table format (Delta/Iceberg). State lives in the TABLE, not the
-    * stream: no watermark, no state store, restart-safe via the
-    * checkpoint's batch ids. */
+    * the conflict path). The merge is read-union-dedup-rewrite over a
+    * parquet dir with a directory swap ([[BatchTable.merge]]) — the
+    * honest plain-file emulation; at scale the foreachBatch body is the
+    * SAME and only the final write becomes a transactional MERGE /
+    * partition overwrite on a table format (Delta/Iceberg). */
   def upsertStream(spark: SparkSession, dir: String, keyCols: Seq[String],
-      replays: Int = 2): DataFrame = {
-    val root = scratchDir("graft_stream_upsert").toString
-    val tbl = s"$root/table"
-    val s = drainSession(spark, statePartitions = 8)
-    val src = stagedEventStream(s, dir, replays, maxFilesPerTrigger = Some(1))
-    val q = src.writeStream
-      .option("checkpointLocation", s"$root/chk")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val fresh = batch.dropDuplicates(keyCols)
-        val tblDir = new java.io.File(tbl)
-        val merged = if (tblDir.exists()) {
-          val cur = s.read.parquet(tbl)
-          // keep-existing merge: current rows win on key conflict
-          cur.unionByName(
-            fresh.join(cur.select(keyCols.map(col): _*), keyCols, "left_anti"))
-        } else fresh
-        swapIn(merged, root, tblDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.read.parquet(tbl).filter(col("event_type") =!= SentinelType)
-  }
+      replays: Int = 2): DataFrame =
+    mergeStream(spark, "graft_stream_upsert")(
+      stagedEventStream(_, dir, replays, maxFilesPerTrigger = Some(1)))(
+      upsertMerge(keyCols)).filter(col("event_type") =!= SentinelType)
 
-  /** Replace table directory `dir` with `df` (4 parquet parts): write to
-    * `root/swap`, move the current table to `root/old`, move the new one
-    * in, delete the old. Atomic enough for a local dir; a table format's
-    * MERGE replaces this wholesale in production. Files.move throws on
-    * failure — renameTo returns false silently (e.g. across filesystems),
-    * which would leave the table dir missing/stale and the NEXT batch
-    * would quietly rebuild from the wrong state. */
-  private def swapIn(df: DataFrame, root: String, dir: java.io.File): Unit = {
-    val tmp = s"$root/swap"
-    df.coalesce(4).write.mode("overwrite").parquet(tmp)
-    val old = new java.io.File(s"$root/old")
-    if (dir.exists()) Files.move(dir.toPath, old.toPath)
-    Files.move(new java.io.File(tmp).toPath, dir.toPath)
-    if (old.exists()) new scala.reflect.io.Directory(old).deleteRecursively(): Unit
+  /** [[upsertStream]]'s merge: the batch deduplicated on `keyCols`, with
+    * current rows winning on key conflict. */
+  private[graft] def upsertMerge(keyCols: Seq[String])(batch: DataFrame,
+      current: Option[DataFrame]): DataFrame = {
+    val fresh = batch.dropDuplicates(keyCols)
+    current.fold(fresh)(cur =>
+      cur.unionByName(fresh.join(cur.select(keyCols.map(col): _*), keyCols, "left_anti")))
   }
 
   /** Stateful per-user event counting via flatMapGroupsWithState in
@@ -503,8 +484,8 @@ object Streams {
     * exactly once and the state is dropped — the bounded-state shape for
     * custom per-key aggregation at scale (vs mapGroupsWithState + Update,
     * which cannot feed a file sink and never retires state). */
-  def userEventCounts(spark: SparkSession, dir: String): DataFrame = {
-    val counts = runToParquet(spark, statePartitions = 2) { (s, _) =>
+  def userEventCounts(spark: SparkSession, dir: String): DataFrame =
+    runToParquet(spark, statePartitions = 2) { s =>
       import s.implicits._
       stagedEventStream(s, dir)
         .withWatermark("ts", "0 seconds")
@@ -531,10 +512,7 @@ object Streams {
             }
         }
         .toDF("user_id", "n_events")
-
-    }
-    counts.filter(col("user_id") =!= -1L)
-  }
+    }.filter(col("user_id") =!= -1L)
 
   /** The same bounded per-user count on Spark 4's `transformWithState` —
     * the arbitrary-state API that supersedes (flat)MapGroupsWithState:
@@ -549,8 +527,8 @@ object Streams {
     * emits once and the state clears. Timers are ADDITIVE here (unlike
     * setTimeoutTimestamp, which replaces), so the previous timer is
     * deleted explicitly — the one behavioral trap in the migration. */
-  def userEventCountsTws(spark: SparkSession, dir: String): DataFrame = {
-    val counts = runToParquet(spark, statePartitions = 2, rocksDbState = true) { (s, _) =>
+  def userEventCountsTws(spark: SparkSession, dir: String): DataFrame =
+    runToParquet(spark, statePartitions = 2, rocksDbState = true) { s =>
       import s.implicits._
       import org.apache.spark.sql.streaming.{StatefulProcessor, TTLConfig, TimeMode, TimerValues, ExpiredTimerInfo, ValueState}
       val processor = new StatefulProcessor[Long, (Long, java.sql.Timestamp), (Long, Long)] {
@@ -588,70 +566,48 @@ object Streams {
         .groupByKey(_._1)
         .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append())
         .toDF("user_id", "n_events")
-
-    }
-    counts.filter(col("user_id") =!= -1L)
-  }
+    }.filter(col("user_id") =!= -1L)
 
   /** Streaming CDC apply — [[graft.ops.Scale.applyCdcLog]] run as a
     * foreachBatch sink: the events stream is read as a change log
     * (op = delete for event_id % 10 = 9, upsert otherwise, replayed in
     * ts-segments), and each micro-batch merges into a compacted
-    * last-writer-wins table. The table keeps per key the WINNING row
-    * (by (ts, event_id)), its op — deletes stay as TOMBSTONES so a
-    * pre-delete upsert in a later batch cannot resurrect what a
-    * mid-log delete killed, while a post-delete upsert does — and the
-    * accumulated op count, so the final state is independent of batch
-    * boundaries (which is what makes the batch-mode oracle exact).
-    * At scale the foreachBatch body is the standard Debezium/Delta CDC
-    * sink MERGE; state lives in the table, no watermark, no state
-    * store. Output: (user_id, last_type, last_value, n_ops, last_us)
-    * for keys whose final op is an upsert. */
-  def cdcApplyStream(spark0: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val s = drainSession(spark0, statePartitions = 8)
-    // the CDC log: the events table ts-range-split into 4 files so it
-    // really replays as several temporal micro-batches, staged once per
-    // source dir with its schema
-    val (watch, logSchema) = graft.ops.Staged.once(("graft_cdc_in", dir)) {
-      val w = scratchDir("graft_cdc_in").toString
-      graft.ops.Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts"),
-          col("event_type"), col("value"))
-        .repartitionByRange(4, col("ts"))
-        .write.mode("overwrite").parquet(w)
-      (w, s.read.parquet(w).schema)
-    }
-    val root = scratchDir("graft_cdc_run").toString
-    val tbl = s"$root/table"
-    val q = s.readStream.schema(logSchema)
-      .option("maxFilesPerTrigger", 1).parquet(watch)
-      .writeStream
-      .option("checkpointLocation", s"$root/chk")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch
-          .withColumn("op",
-            when(col("event_id") % 10 === 9, "D").otherwise("U"))
-          .withColumn("n_ops", lit(1L))
-        val tblDir = new java.io.File(tbl)
-        val all =
-          if (tblDir.exists()) s.read.parquet(tbl).unionByName(b) else b
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts").desc, col("event_id").desc)
-        val wAll = Window.partitionBy("user_id")
-        val merged = all
-          .withColumn("_rn", row_number().over(w))
-          .withColumn("_n", sum(col("n_ops")).over(wAll))
-          .where(col("_rn") === 1)
-          .withColumn("n_ops", col("_n")).drop("_rn", "_n")
-        swapIn(merged, root, tblDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark0.read.parquet(tbl).where(col("op") =!= "D")
+    * last-writer-wins table ([[cdcMerge]]). At scale the foreachBatch
+    * body is the standard Debezium/Delta CDC sink MERGE. Output:
+    * (user_id, last_type, last_value, n_ops, last_us) for keys whose
+    * final op is an upsert. */
+  def cdcApplyStream(spark0: SparkSession, dir: String): DataFrame =
+    mergeStream(spark0, "graft_cdc_run") { s =>
+      // the CDC log: the events table ts-range-split into 4 files, so it
+      // really replays as several temporal micro-batches
+      watched(s, ("graft_cdc_in", dir), "graft_cdc_in", maxFilesPerTrigger = Some(1)) { w =>
+        graft.ops.Tables.events(s, dir)
+          .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts"),
+            col("event_type"), col("value"))
+          .repartitionByRange(4, col("ts"))
+          .write.mode("overwrite").parquet(w)
+      }._1
+    }(cdcMerge).where(col("op") =!= "D")
       .select(col("user_id"), col("event_type").as("last_type"),
         col("value").as("last_value"), col("n_ops"), col("ts").as("last_us"))
+
+  /** [[cdcApplyStream]]'s merge. The table keeps per key the WINNING row
+    * (by (ts, event_id)), its op — deletes stay as TOMBSTONES so a
+    * pre-delete upsert in a later batch cannot resurrect what a mid-log
+    * delete killed, while a post-delete upsert does — and the accumulated
+    * op count, so the final state is independent of batch boundaries
+    * (which is what makes the batch-mode oracle exact). */
+  private[graft] def cdcMerge(batch: DataFrame, current: Option[DataFrame]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val b = batch
+      .withColumn("op", when(col("event_id") % 10 === 9, "D").otherwise("U"))
+      .withColumn("n_ops", lit(1L))
+    val w = Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
+    current.fold(b)(_.unionByName(b))
+      .withColumn("_rn", row_number().over(w))
+      .withColumn("_n", sum(col("n_ops")).over(Window.partitionBy("user_id")))
+      .where(col("_rn") === 1)
+      .withColumn("n_ops", col("_n")).drop("_rn", "_n")
   }
 
   /** Streaming ingest with INDEX-BACKED exact dedup — the composition the
@@ -673,42 +629,34 @@ object Streams {
     * new document. */
   def dedupIngestStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
-    val s = drainSession(spark, statePartitions = 8)
-    // staged once per source dir: the corpus dedup index over the
-    // doc_id % 3 ≠ 0 "existing corpus", and the document stream in 4
-    // doc_id-ranged files so several micro-batches really execute
-    val (idxPath, watch, docSchema) = graft.ops.Staged.once(("graft_ingest", dir)) {
-      val idx = scratchDir("graft_ingest_idx").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        "doc_id", "text", idx)
-      val w = scratchDir("graft_ingest_in").toString
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(w)
-      (idx, w, s.read.parquet(w).schema)
-    }
-    val root = scratchDir("graft_ingest_run").toString
-    val tbl = s"$root/table"
-    val q = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 1).parquet(watch)
-      .writeStream
-      .option("checkpointLocation", s"$root/chk")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    drain(spark, "graft_ingest_run", statePartitions = 8) { (s, root) =>
+      // staged once per source dir: the corpus dedup index over the
+      // doc_id % 3 ≠ 0 "existing corpus", and the document stream in 4
+      // doc_id-ranged files so several micro-batches really execute
+      val (docs, idxPath) = watched(s, ("graft_ingest", dir), "graft_ingest_in",
+          maxFilesPerTrigger = Some(1)) { w =>
+        val idx = scratchDir("graft_ingest_idx")
+        val all = s.read.parquet(s"$dir/documents.parquet")
+        Dedup.buildCorpusIndex(all.filter(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", idx)
+        all.repartitionByRange(4, col("doc_id"))
+          .write.mode("overwrite").parquet(w)
+        idx
+      }
+      val log = new BatchTable(root)
+      (docs.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
         val dupIds = Dedup.exactDeltaIndexed(batch, idxPath, "doc_id", "text")
-        batch
+        log.append(batch
           .withColumn("content_hash",
             md5(Dedup.normalizeText(col("text")).cast("binary")))
           .join(dupIds.select("doc_id"), Seq("doc_id"), "left_anti")
-          .select("doc_id", "content_hash")
-          .coalesce(1).write.mode("append").parquet(tbl)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    // one compaction after the drain: min doc_id per content hash over
-    // the whole append log — within-stream duplicates collapse here
-    spark.read.parquet(tbl)
-      .groupBy("content_hash").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "content_hash")
+          .select("doc_id", "content_hash"))
+      }, () =>
+        // one compaction after the drain: min doc_id per content hash over
+        // the whole append log — within-stream duplicates collapse here
+        log.read(spark)
+          .groupBy("content_hash").agg(min(col("doc_id")).as("doc_id"))
+          .select("doc_id", "content_hash"))
+    }
   }
 }

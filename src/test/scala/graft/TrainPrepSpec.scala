@@ -173,6 +173,14 @@ class TrainPrepSpec extends AnyFunSuite {
     assert(moved > ids.size * 9 / 10, s"only $moved of ${ids.size} moved")
   }
 
+  test("q_epoch_shuffle plans one md5 per Feistel round") {
+    val plan = byName("q_epoch_shuffle")(spark, dir).queryExecution.optimizedPlan
+    val md5s = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case m: org.apache.spark.sql.catalyst.expressions.Md5 => m })
+    val n = md5s.size
+    assert(n == 3, s"$n Md5 expressions in the optimized plan")
+  }
+
   test("q_decontaminate_embed equals brute-force eval-set max-cosine flagging") {
     import spark.implicits._
     val got = byName("q_decontaminate_embed")(spark, dir)
